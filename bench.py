@@ -220,81 +220,6 @@ def _headline_passes(
     return totals
 
 
-def _previous_round_ref(repo: Path) -> str | None:
-    """The previous round's HEAD: the parent of the commit that added the
-    newest TRACKED BENCH_r*.json (the driver commits each round's
-    artifacts in one commit right after the builder's last commit, so
-    `that^` is the exact tree the previous round's bench measured).
-    Newest-first fallback across older bench files matters (ADVICE round
-    13): the newest artifact is often still UNTRACKED when the drift
-    check fires — `git log -- <untracked>` resolves nothing, and without
-    the fallback the differential silently skipped exactly when drift
-    was detected."""
-    import subprocess
-
-    for bench in sorted(repo.glob("BENCH_r*.json"), reverse=True):
-        out = subprocess.run(
-            ["git", "-C", str(repo), "log", "-n1", "--format=%H", "--",
-             bench.name],
-            capture_output=True,
-            text=True,
-        )
-        commit = out.stdout.strip()
-        if out.returncode == 0 and commit:
-            return f"{commit}^"
-    return None
-
-
-def _bench_ref(repo: Path, ref: str) -> dict | None:
-    """Bench ``ref`` in a SCRATCH GIT WORKTREE on this same host, minutes
-    apart from the main measurement — the drift adjudication protocol the
-    r11/r12 judges ran by hand (memory: bench-host-drift). Returns the
-    parsed JSON line, or None if the ref can't be built/run. The child
-    process gets BENCH_NO_DIFFERENTIAL=1 so a differential can never
-    recurse."""
-    import subprocess
-    import tempfile
-
-    wt = tempfile.mkdtemp(prefix="bench_diff_")
-    try:
-        add = subprocess.run(
-            ["git", "-C", str(repo), "worktree", "add", "--detach", wt, ref],
-            capture_output=True,
-            text=True,
-        )
-        if add.returncode != 0:
-            return None
-        env = dict(os.environ, BENCH_NO_DIFFERENTIAL="1")
-        run = subprocess.run(
-            [sys.executable, "bench.py"],
-            cwd=wt,
-            env=env,
-            capture_output=True,
-            text=True,
-            timeout=3600,
-        )
-        for line in reversed(run.stdout.strip().splitlines()):
-            try:
-                return json.loads(line)
-            except json.JSONDecodeError:
-                continue
-        return None
-    except Exception:
-        return None
-    finally:
-        subprocess.run(
-            ["git", "-C", str(repo), "worktree", "remove", "--force", wt],
-            capture_output=True,
-        )
-
-
-# Current headline median > this factor × the previous round's RECORDED
-# median ⇒ bench the previous round's HEAD side-by-side and embed both
-# numbers, so the artifact self-adjudicates host drift vs regression
-# (r12 verdict item 7; judged drift band: hosts measured up to ~1.5×).
-_DRIFT_BAND = 1.25
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from time_series_spark_spark.session import get_spark
@@ -340,51 +265,6 @@ def main() -> None:
         "heavy_tail_total": round(sum(heavy.values()), 4),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-
-    # Self-adjudicating drift differential (r12 verdict item 7): when the
-    # headline median exceeds the drift band vs the previous round's
-    # RECORDED median — or when forced with `--differential <ref>` — bench
-    # the previous round's HEAD in a scratch worktree on this same host
-    # and embed its numbers, so the artifact itself separates host drift
-    # (both inflate together) from a real regression (only ours inflates).
-    repo = Path(__file__).resolve().parent
-    ref = None
-    if "--differential" in sys.argv:
-        i = sys.argv.index("--differential")
-        ref = (
-            sys.argv[i + 1]
-            if len(sys.argv) > i + 1
-            else _previous_round_ref(repo)
-        )
-    elif not os.environ.get("BENCH_NO_DIFFERENTIAL"):
-        prev_files = sorted(repo.glob("BENCH_r*.json"))
-        if prev_files:
-            prev = json.loads(prev_files[-1].read_text())
-            prev_med = prev.get("headline_pass_median", prev.get("value"))
-            if prev_med and med > _DRIFT_BAND * float(prev_med):
-                ref = _previous_round_ref(repo)
-                if ref is None:
-                    # drift detected but no tracked bench resolves a ref —
-                    # record that the adjudication was ATTEMPTED instead
-                    # of silently omitting the key (ADVICE round 13)
-                    record["differential"] = {
-                        "ref": None,
-                        "reason": "drift detected but no prior round ref "
-                        "resolvable from tracked BENCH_r*.json files",
-                    }
-    if ref:
-        spark.stop()  # free the JVM before the child builds its own
-        prev_run = _bench_ref(repo, ref)
-        record["differential"] = {
-            "ref": ref,
-            "value": prev_run.get("value") if prev_run else None,
-            "headline_pass_median": (
-                prev_run.get("headline_pass_median") if prev_run else None
-            ),
-            "loadavg_1m_end": (
-                prev_run.get("loadavg_1m_end") if prev_run else None
-            ),
-        }
 
     print(json.dumps(record))
 

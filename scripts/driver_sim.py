@@ -8,8 +8,8 @@ Usage:
     python scripts/driver_sim.py [sf_dir]     # default /root/testdata/sf0.01
 
 Prints one line per failure and a final `SWEEP <dir>: N/M ok ... BAD=[...]`.
-The per-round pre-vet protocol (COVERAGE.md) is: green at sf0.01 AND
-sf0.1 before any rotation cohort faces the external driver.
+Run it green at sf0.01 AND sf0.1 before a change that touches query code
+is handed on.
 """
 
 from __future__ import annotations

@@ -28,7 +28,7 @@ def main() -> None:
         "expressible; each names its pytest evidence in the doc). "
         "Generated by `scripts/gen_catalog.py` — do not edit by hand. "
         "NOTE: listing order here is alphabetical per module; the "
-        "REGISTRY's own order is rotation-managed (see COVERAGE.md).",
+        "REGISTRY's own order is registration order.",
         "",
     ]
     for mod in sorted(by_module):

@@ -1,17 +1,17 @@
-"""Round-14 measurement harness (optimization guide §1: measure first).
+"""Per-query measurement harness: plans, timings, job and stage counts.
 
 For every query named on the command line (default: bench.py's HEADLINE +
 HEAVY_TAIL), builds the DataFrame once, captures ``explain("formatted")``
-to ``plans/r15/<name>_<tag>.txt``, then times it with the noop sink
+to ``plans/profile/<name>_<tag>.txt``, then times it with the noop sink
 (guide §1.4 — computes every column, no driver materialization) AND with
 ``toPandas()`` (the bench's timed action, kept for comparability), and
 counts Spark jobs/stages per run via the status tracker.
 
 Usage:
-    python scripts/profile_r15.py [--tag before|after] [--runs 3] [name ...]
+    python scripts/profile_queries.py [--tag before|after] [--runs 3] [name ...]
 
 Writes one JSON line per query to stdout and a summary to
-``plans/r15/profile_<tag>.json``.
+``plans/profile/profile_<tag>.json``.
 """
 
 from __future__ import annotations
@@ -47,9 +47,9 @@ def main() -> None:
     names = args or (_bench.HEADLINE + _bench.HEAVY_TAIL)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    spark = get_spark("profile_r15")
+    spark = get_spark("profile")
     spark.sparkContext.setLogLevel("ERROR")
-    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "r15"
+    plans_dir = Path(__file__).resolve().parent.parent / "plans" / "profile"
     plans_dir.mkdir(parents=True, exist_ok=True)
 
     tracker = spark.sparkContext.statusTracker()

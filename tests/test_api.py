@@ -66,3 +66,31 @@ def test_training_pipeline_funnel_monotone(spark):
     # 5 languages × 2000-token budget bounds the final stage
     assert pdf.n_tokens.iloc[-1] <= 5 * 2000
     assert (pdf.n_shards_final == 16).all()
+
+
+def test_local_df_propagates_non_conversion_errors(spark, monkeypatch):
+    """Only conversion errors fall back to the row path; any other failure
+    on the pandas route is real and must surface."""
+    import pandas as pd
+    import pytest
+
+    from time_series_spark_spark.session import local_df
+
+    create = spark.createDataFrame
+
+    def fake_create(data, *args, **kwargs):
+        if isinstance(data, pd.DataFrame):
+            raise RuntimeError("boom")
+        return create(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", fake_create)
+    with pytest.raises(RuntimeError, match="boom"):
+        local_df(spark, [(1, "a")], "k long, v string")
+
+
+def test_local_df_generator_falls_back_with_same_rows(spark):
+    from time_series_spark_spark.session import local_df
+
+    rows = [(1, "a"), (2, None), (3, "c")]
+    got = local_df(spark, (r for r in rows), "k long, v string").collect()
+    assert [tuple(r) for r in got] == rows

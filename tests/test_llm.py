@@ -691,6 +691,13 @@ def test_lm_perplexity_separates_gibberish(spark, docs):
     assert out[900001] * 2 < out[900002], out
 
 
+def test_lm_scores_reject_width_below_two(docs):
+    from time_series_spark_spark.operators.llm import char_ngram_lm_scores
+
+    with pytest.raises(ValueError, match="n >= 2"):
+        char_ngram_lm_scores(docs, docs, n=1)
+
+
 # ---------------------------------------------------------------------------
 # K3 product quantization
 # ---------------------------------------------------------------------------

@@ -198,6 +198,17 @@ def test_rollup_cascade_reuses_exchanges(spark):
     assert plan.count("ReusedExchange") >= 2
 
 
+def test_lm_second_count_join_reuses_broadcast(spark):
+    """K6b: both gram widths share one count table, so the (n-1)-gram
+    join's broadcast subtree is byte-identical to the n-gram join's and
+    resolves to a ReusedExchange — the model is built and broadcast once."""
+    df = _df(spark, "docs_lm_perplexity")
+    df.collect()  # AQE exchange reuse materializes at runtime
+    plan = executed_plan(df)
+    assert "isFinalPlan=true" in plan
+    assert re.search(r"ReusedExchange .*, BroadcastExchange", plan), plan
+
+
 def test_analytics_single_shuffle_shapes(spark):
     """OHLC / TWA / streaks each reduce to ONE hash exchange: the window
     pass (where present) and the aggregation share the same key

@@ -1205,7 +1205,8 @@ def char_ngram_lm_scores(
     stands in for KenLM, which is unavailable and non-distributable).
 
     ``P(c_i | ctx) = (C(ctx·c_i) + k) / (C(ctx) + k·V)`` with V the
-    trained character-vocabulary size; ``ppl = exp(−mean log P)``. Docs
+    trained character-vocabulary size; ``ppl = exp(−mean log P)``.
+    ``n >= 2``: the context is the preceding ``n − 1`` characters. Docs
     shorter than ``n`` chars have no prediction positions and are
     absent from the output (both engines).
 
@@ -1218,15 +1219,20 @@ def char_ngram_lm_scores(
     its per-doc partial sums (one hash agg keyed ``id_col``).
     Everything is codegen; the only Python is this function body.
     """
-    def grams(frame: DataFrame, width: int, out: str, *extra: str) -> DataFrame:
+    if n < 2:
+        raise ValueError(f"char_ngram_lm_scores needs n >= 2, got n={n}")
+
+    def gram_array(width: int) -> str:
         # positions 1..len-width+1, substring in codegen
-        e = (
+        return (
             f"CASE WHEN length(__txt) >= {width} THEN "
             f"transform(sequence(1, length(__txt) - {width} + 1), "
             f"i -> substring(__txt, i, {width})) ELSE array() END"
         )
+
+    def grams(frame: DataFrame, width: int, out: str, *extra: str) -> DataFrame:
         return frame.select(
-            *extra, F.explode(F.expr(e)).alias(out)
+            *extra, F.explode(F.expr(gram_array(width))).alias(out)
         )
 
     from time_series_spark_spark.operators.packed import fan_out
@@ -1247,15 +1253,7 @@ def char_ngram_lm_scores(
     # subtrees stop canonicalizing equal and every join rebuilds the
     # explode. Keying by g alone keeps both broadcast subtrees
     # byte-identical, which is what makes the reuse fire.)
-    both_widths = (
-        f"concat("
-        f"CASE WHEN length(__txt) >= {n} THEN "
-        f"transform(sequence(1, length(__txt) - {n} + 1), "
-        f"i -> substring(__txt, i, {n})) ELSE array() END, "
-        f"CASE WHEN length(__txt) >= {n - 1} THEN "
-        f"transform(sequence(1, length(__txt) - {n - 1} + 1), "
-        f"i -> substring(__txt, i, {n - 1})) ELSE array() END)"
-    )
+    both_widths = f"concat({gram_array(n)}, {gram_array(n - 1)})"
     counts = (
         tr.select(F.explode(F.expr(both_widths)).alias("g"))
         .groupBy("g")

@@ -78,8 +78,11 @@ def local_df(spark: SparkSession, rows, schema) -> "DataFrame":
     driver transfers"). Routing the same rows through a pandas frame
     produces a ``LocalRelation`` (no cluster job at all on collect).
     Values and dtypes are unchanged — the driver's dtype-strict oracle
-    sweep is the regression net. Any conversion surprise (exotic nested
-    types, resolution mismatches) falls back to the exact old path.
+    sweep is the regression net. A conversion error (exotic nested types,
+    resolution mismatches — Arrow's and PySpark's conversion errors
+    subclass ``TypeError``/``ValueError``/``NotImplementedError``), or
+    non-list input, falls back to the exact old path; anything else is a
+    real failure and propagates.
     """
     import pandas as pd
     from pyspark.sql import types as T
@@ -97,7 +100,7 @@ def local_df(spark: SparkSession, rows, schema) -> "DataFrame":
         data = [tuple(r) for r in rows]
         pdf = pd.DataFrame(data, columns=names, dtype=object)
         return spark.createDataFrame(pdf, struct)
-    except Exception:
+    except (TypeError, ValueError, NotImplementedError):
         return spark.createDataFrame(rows, schema)
 
 
@@ -105,22 +108,22 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def get_spark(
-    app_name: str = "time-series-spark-spark",
-    master: str | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
-) -> SparkSession:
-    """Build (or reuse) a SparkSession with the engine's required config."""
-    cpus = default_parallelism()
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+def _engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The runtime-settable engine configs, shared by ``get_spark`` (as
+    builder ``.config``) and ``ensure_engine_conf`` (as ``spark.conf.set``).
+    Static configs (master, driver memory, UI) live in ``get_spark`` only.
+    """
+    return {
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+        "spark.sql.session.timeZone": "UTC",
+        # An externally-built session keeps Spark's default 200 shuffle
+        # partitions, which at test scale is pure task overhead; AQE
+        # coalescing makes the generous-but-bounded value safe either way.
+        "spark.sql.shuffle.partitions": str(
+            shuffle_partitions or default_parallelism()
+        ),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
         # File-split sizing: Spark's maxSplitBytes = min(maxPartitionBytes,
         # max(openCostInBytes, totalBytes/defaultParallelism)). With the
         # 4 MB default openCost, a mid-size compute-heavy input (the 100x
@@ -129,8 +132,8 @@ def get_spark(
         # for n-gram explodes and Arrow UDFs. 1 MB keeps splits aligned to
         # bytesPerCore until files are genuinely small. (Measured: the
         # 100x docs_lm_perplexity scan went 14 -> 32 tasks.)
-        .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        "spark.sql.files.openCostInBytes": str(1024 * 1024),
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
         # 64k-row Arrow batches (default 10k): the engine's Python-stage
         # rows are narrow numerics (guide §4.2 — "raise it for narrow
         # numeric data"), and the packed mapper pays a concat + boundary
@@ -141,11 +144,25 @@ def get_spark(
         # (document text) stays bounded by Spark 4's byte-based cap,
         # spark.sql.execution.arrow.maxBytesPerBatch (64 MB default),
         # which applies first.
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
+    }
+
+
+def get_spark(
+    app_name: str = "time-series-spark-spark",
+    master: str | None = None,
+    shuffle_partitions: int | None = None,
+    extra_conf: dict[str, str] | None = None,
+) -> SparkSession:
+    """Build (or reuse) a SparkSession with the engine's required config."""
+    builder = (
+        SparkSession.builder.appName(app_name)
+        .master(master or f"local[{default_parallelism()}]")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {**_engine_conf(shuffle_partitions), **(extra_conf or {})}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     ship_package(spark)
@@ -155,25 +172,9 @@ def get_spark(
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine configs to an externally-built
     session (the driver hands us its own SparkSession in ``entry()``).
-
-    ``nanosAsLong`` is session-settable at runtime in Spark 4; timezone and
-    AQE likewise. Static configs (driver memory) can't change here.
+    Static configs (driver memory) can't change here.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    # runtime-settable: an externally-built session keeps Spark's default
-    # 200 shuffle partitions, which at test scale is pure task overhead;
-    # AQE coalescing makes the generous-but-bounded value safe either way
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(default_parallelism())
-    )
-    # see get_spark: scan-stage parallelism for mid-size compute-heavy
-    # files (runtime-settable, applies to the driver's own session too)
-    spark.conf.set("spark.sql.files.openCostInBytes", str(1024 * 1024))
-    # see get_spark: 64k-row Arrow batches for the narrow numeric
-    # Python-stage rows; wide rows stay bounded by maxBytesPerBatch
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
+    for k, v in _engine_conf().items():
+        spark.conf.set(k, v)
     ship_package(spark)
     return spark
