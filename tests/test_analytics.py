@@ -198,6 +198,44 @@ def test_lttb_keeps_extreme_point(spark):
     assert out.value.max() == 500.0
 
 
+
+def test_lttb_batch_matches_per_series_reference():
+    """lttb_batch's keep-mask selects exactly _lttb_one's indices for
+    every series of a packed batch: lengths n_out−1, n_out, n_out+1,
+    short and mid series, and one 2000-point series whose buckets are
+    wider than 8, where the centroid sums' order starts to matter. Its
+    three-level values on a 0.1 grid make near-tied triangle areas; for
+    this seed a sequentially summed centroid (np.add.reduceat or a
+    running sum) picks a different point than the loop's slice mean."""
+    from time_series_spark_spark.operators.analytics import (
+        _lttb_one,
+        lttb_batch,
+    )
+
+    rng = np.random.default_rng(17)
+    n_out = 24
+    lens = [n_out - 1, n_out, n_out + 1, 3, 1, 50, 7, 97, n_out + 2]
+    t_parts, v_parts = [], []
+    for n in lens:
+        t_parts.append(np.cumsum(rng.integers(1, 10**6, size=n)).astype(float))
+        v = rng.normal(size=n) * 10.0 ** rng.integers(-3, 6)
+        v[rng.random(n) < 0.1] = 0.0  # ties in the triangle areas
+        v_parts.append(v)
+    t_parts.insert(6, np.arange(2000) * 0.1)
+    v_parts.insert(6, np.random.default_rng(68).integers(0, 3, 2000) * 0.1)
+    lens.insert(6, 2000)
+    t, v = np.concatenate(t_parts), np.concatenate(v_parts)
+    ends = np.cumsum(lens)
+    starts = ends - np.asarray(lens)
+    want = np.zeros(len(t), dtype=bool)
+    for s, e in zip(starts, ends):
+        want[_lttb_one(t[s:e], v[s:e], n_out) + s] = True
+    got = lttb_batch(t, v, starts, ends, n_out)
+    assert got.dtype == bool
+    np.testing.assert_array_equal(got, want)
+    for s, e in zip(starts, ends):
+        assert got[s:e].sum() == min(e - s, n_out)
+
 def test_seasonal_decompose_recovers_pure_weekly_signal(spark):
     # y = 100 + phase pattern, zero noise → trend = 100 + pattern mean,
     # resid = 0 everywhere, y = trend + seasonal + resid exactly

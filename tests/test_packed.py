@@ -121,3 +121,37 @@ def test_key_slices_matches_pandas_groupby():
     one = pd.DataFrame({"k": [5] * 4, "v": range(4)})
     starts, ends = key_slices(one, ["k"])
     assert starts.tolist() == [0] and ends.tolist() == [4]
+
+
+def test_split_estimate_follows_min_partition_num(spark):
+    """estimated_splits divides the scan bytes as Spark's maxSplitBytes
+    does: by spark.sql.files.minPartitionNum when set, else by
+    spark.sql.leafNodeDefaultParallelism, else by the default
+    parallelism. With a 1-byte open cost and 8 MB of Range stats the
+    split count is exactly that divisor."""
+    from time_series_spark_spark.operators.packed import estimated_splits
+
+    df = spark.range(1_000_000)  # sizeInBytes = 8 B x rows
+    keys = (
+        "spark.sql.files.openCostInBytes",
+        "spark.sql.files.minPartitionNum",
+        "spark.sql.leafNodeDefaultParallelism",
+    )
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        spark.conf.set("spark.sql.files.openCostInBytes", "1")
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", "7")
+        spark.conf.set("spark.sql.files.minPartitionNum", "5")
+        assert estimated_splits(df) == 5
+        spark.conf.set("spark.sql.files.minPartitionNum", "13")
+        assert estimated_splits(df) == 13
+        spark.conf.unset("spark.sql.files.minPartitionNum")
+        assert estimated_splits(df) == 7
+        spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+        assert estimated_splits(df) == spark.sparkContext.defaultParallelism
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

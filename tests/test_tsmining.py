@@ -642,6 +642,105 @@ def test_hurst_sparse_scatter_matches_dense(spark):
     pd.testing.assert_frame_equal(want, got)
 
 
+
+def _ragged(series):
+    """Sparse packed-batch encoding of dense series: (idx, v, starts,
+    ends, n) with only the non-zero cells, as hurst_rs_ragged takes."""
+    idx, v, lens = [], [], []
+    for x in series:
+        nz = np.flatnonzero(x)
+        idx.append(nz)
+        v.append(x[nz])
+        lens.append(len(nz))
+    ends = np.cumsum(lens)
+    return (
+        np.concatenate(idx).astype(np.int64),
+        np.concatenate(v).astype(np.float64),
+        ends - np.asarray(lens),
+        ends,
+        np.array([len(x) for x in series], dtype=np.int64),
+    )
+
+
+def _assert_hurst_matches_reference(series, min_len=32):
+    from time_series_spark_spark.operators.tsmining import (
+        _hurst_rs_one,
+        hurst_rs_ragged,
+    )
+
+    h, r2, n_scales = hurst_rs_ragged(*_ragged(series), min_len)
+    kept = 0
+    for j, x in enumerate(series):
+        want = (
+            _hurst_rs_one(x) if len(x) >= min_len
+            else (float("nan"), float("nan"), 0)
+        )
+        # the reference path drops series below min_len or with a
+        # non-finite fit; the batch path must drop exactly the same
+        assert np.isfinite(h[j]) == np.isfinite(want[0]), j
+        if not np.isfinite(want[0]):
+            continue
+        kept += 1
+        assert n_scales[j] == want[2], j
+        assert abs(h[j] - want[0]) <= 1e-12, (j, h[j], want[0])
+        assert abs(r2[j] - want[1]) <= 1e-12, (j, r2[j], want[1])
+    return kept
+
+
+def test_hurst_rs_batch_matches_per_series_reference_on_ragged_batch():
+    """hurst_rs_ragged/hurst_rs_batch vs the per-series _hurst_rs_one on
+    a ragged batch: lengths below, at and above min_len (one length per
+    series, so every length group is its own batch), a sparse batch with
+    two grid lengths, a constant series and a series with one valid R/S
+    scale (both dropped by both paths)."""
+    rng = np.random.default_rng(3)
+    series = [rng.normal(size=n) for n in (8, 31, 32, 33, 64, 100, 257)]
+    series += [np.cumsum(rng.normal(size=300)) for _ in range(3)]
+    # sparse rows: two grid lengths, ~85% zeros, some all-zero blocks
+    for n in (720, 720, 720, 500, 500):
+        series.append(rng.normal(size=n) * (rng.random(n) < 0.15))
+    series.append(np.full(128, 3.0))  # constant: no S > 0 block anywhere
+    # n = 48 → scales 8, 16; every 8-block constant, one 16-block not
+    series.append(np.r_[np.zeros(40), np.ones(8)])
+    series.append(np.zeros(64))  # all zeros: no cells in the batch at all
+    kept = _assert_hurst_matches_reference(series)
+    assert kept == len(series) - 5  # 8, 31, constant, one-scale, zeros
+
+
+def test_hurst_rs_batch_chunks_beyond_the_dense_block_cap():
+    """A batch of one length whose dense block exceeds
+    HURST_CHUNK_DOUBLES is split into chunks with the same results."""
+    from time_series_spark_spark.operators.tsmining import HURST_CHUNK_DOUBLES
+
+    n = 4096
+    k = HURST_CHUNK_DOUBLES // n + 3
+    rng = np.random.default_rng(5)
+    base = rng.normal(size=(8, n)) * (rng.random((8, n)) < 0.3)
+    series = [base[j % 8] * (1 + j) for j in range(k)]
+    assert _assert_hurst_matches_reference(series) == k
+
+
+def test_hurst_rs_batch_single_length_shapes():
+    """hurst_rs_batch on a (k, n) block equals the reference row by row,
+    including n too short for any scale (all NaN, 0 scales)."""
+    from time_series_spark_spark.operators.tsmining import (
+        _hurst_rs_one,
+        hurst_rs_batch,
+    )
+
+    rng = np.random.default_rng(9)
+    for n in (10, 16, 17, 40, 513):
+        V = rng.normal(size=(6, n))
+        V[2] = 1.0
+        h, r2, n_scales = hurst_rs_batch(V)
+        for j in range(6):
+            wh, wr2, wn = _hurst_rs_one(V[j])
+            assert n_scales[j] == wn
+            if np.isfinite(wh):
+                assert abs(h[j] - wh) <= 1e-12 and abs(r2[j] - wr2) <= 1e-12
+            else:
+                assert np.isnan(h[j]) and np.isnan(r2[j])
+
 def test_silhouette_report_laws_and_planted_two_clusters(spark):
     """N5b: silhouette ∈ [-1,1] everywhere; on a corpus of two planted
     shape families (ramps vs sines) the k=2 silhouette must be high and

@@ -28,18 +28,14 @@ from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
 def shuffle_parallelism(df: DataFrame) -> int:
     """The session's shuffle-partition count (scale-adaptive: session.py
     sizes it to the machine locally, 2-3x total cores on a cluster)."""
-    try:
-        return int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
-    except Exception:
-        return df.sparkSession.sparkContext.defaultParallelism
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def pin_partitions(df: DataFrame, *keys: str) -> DataFrame:
@@ -71,33 +67,41 @@ def fan_out(df: DataFrame, factor: int = 1) -> DataFrame:
     input row fans out into many downstream rows (bounded explodes).
     """
     p = shuffle_parallelism(df) * max(factor, 1)
+    have = estimated_splits(df)
+    if have is None or 2 * have >= p:
+        return df
+    return df.repartition(p)
+
+
+def estimated_splits(df: DataFrame) -> int | None:
+    """Input-split count of ``df``'s scan, ESTIMATED from optimizer stats
+    with Spark's own ``FilePartition.maxSplitBytes`` formula — NOT
+    ``df.rdd.getNumPartitions()``, which physical-plans the subtree and
+    enumerates file splits on the driver at every query build (a
+    driver-side planning cost per build on big tables). Verified to
+    agree with the RDD probe on every ``fan_out`` input shape at bench
+    scale, at ~5-8x lower build cost. The bytes-per-core divisor is
+    ``spark.sql.files.minPartitionNum``, else
+    ``spark.sql.leafNodeDefaultParallelism``, else the default
+    parallelism, as in Spark. None when the stats are unreachable."""
+    spark = df.sparkSession
+    cores = int(
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
     try:
-        # Split-count ESTIMATE from optimizer stats using Spark's own
-        # maxSplitBytes formula — NOT ``df.rdd.getNumPartitions()``,
-        # which physical-plans the subtree and enumerates file splits
-        # on the driver at every query build (round-14 verdict item:
-        # driver-side planning cost per build on big tables). Verified
-        # to agree with the RDD probe on every fan_out input shape at
-        # bench scale, at ~5-8x lower build cost.
         size = int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
-        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        conf = spark._jsparkSession.sessionState().conf()
         split = min(
             int(conf.filesMaxPartitionBytes()),
-            max(
-                int(conf.filesOpenCostInBytes()),
-                size
-                // max(df.sparkSession.sparkContext.defaultParallelism, 1)
-                + 1,
-            ),
+            max(int(conf.filesOpenCostInBytes()), size // max(cores, 1) + 1),
         )
-        have = max(1, (size + split - 1) // max(split, 1))
-    except Exception:
-        return df
-    if 2 * have >= p:
-        return df
-    return df.repartition(p)
+    except (AttributeError, Py4JError):  # no JVM handles (e.g. Connect)
+        return None
+    return max(1, (size + split - 1) // max(split, 1))
 
 
 def key_slices(

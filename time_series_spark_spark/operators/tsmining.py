@@ -1226,6 +1226,125 @@ def _hurst_rs_one(x: np.ndarray, min_w: int = 8) -> tuple[float, float, int]:
     return float(h), r2, len(ws)
 
 
+# Most cells of one dense (series × length) block the batch Hurst path
+# holds at once (16 MiB of doubles): series sharing a length are stacked
+# ``HURST_CHUNK_DOUBLES // n`` at a time (one series when it alone is
+# longer), so memory does not grow with the batch's series count.
+HURST_CHUNK_DOUBLES = 1 << 21
+
+
+def hurst_rs_batch(
+    V: np.ndarray, min_w: int = 8
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`_hurst_rs_one` for the k rows of ``V`` (k, n) — series
+    sharing one length — in one pass per scale instead of one per series.
+
+    Each scale reshapes the rows to (k, n//w, w) blocks; the R/S mean
+    over the blocks with S > 0 is a masked sum over a count, and the
+    log-log fit is a closed-form OLS slope and r² over each series' own
+    valid scales (``np.polyfit`` fits one series at a time). Returns
+    ``(hurst, fit_r2, n_scales)``; hurst and fit_r2 are NaN where fewer
+    than 2 scales are valid. Agrees with the per-series reference to
+    ~1e-15 (pinned by test at 1e-12)."""
+    k, n = V.shape
+    log_w, log_rs, valid = [], [], []
+    w = min_w
+    while w <= n // 2:
+        nb = n // w
+        blocks = V[:, : nb * w].reshape(k, nb, w)
+        dev = blocks - blocks.mean(axis=2, keepdims=True)
+        s = np.sqrt((dev * dev).mean(axis=2))  # blocks.std(axis=2)
+        y = np.cumsum(dev, axis=2)
+        r = y.max(axis=2) - y.min(axis=2)
+        ok = s > 0
+        cnt = ok.sum(axis=1)
+        rs = np.where(ok, r / np.where(ok, s, 1.0), 0.0).sum(axis=1)
+        log_w.append(np.log(float(w)))
+        log_rs.append(np.log(np.where(cnt > 0, rs / np.maximum(cnt, 1), 1.0)))
+        valid.append(cnt > 0)
+        w *= 2
+    if not log_w:
+        nan = np.full(k, np.nan)
+        return nan, nan.copy(), np.zeros(k, dtype=np.int64)
+    x = np.array(log_w)
+    Y = np.stack(log_rs, axis=1)
+    M = np.stack(valid, axis=1)
+    n_scales = M.sum(axis=1)
+    c = np.maximum(n_scales, 1)
+    xbar = (M * x).sum(axis=1) / c
+    ybar = np.where(M, Y, 0.0).sum(axis=1) / c
+    dx = np.where(M, x - xbar[:, None], 0.0)
+    dy = np.where(M, Y - ybar[:, None], 0.0)
+    sxx = (dx * dx).sum(axis=1)
+    ss_tot = (dy * dy).sum(axis=1)
+    fit = n_scales >= 2
+    h = np.where(fit, (dx * dy).sum(axis=1) / np.where(fit, sxx, 1.0), np.nan)
+    b0 = ybar - h * xbar
+    res = np.where(M, Y - (h[:, None] * x + b0[:, None]), 0.0)
+    ss_res = (res * res).sum(axis=1)
+    r2 = np.where(
+        ss_tot > 0, 1.0 - ss_res / np.where(ss_tot > 0, ss_tot, 1.0), 1.0
+    )
+    return h, np.where(fit, r2, np.nan), n_scales
+
+
+def hurst_rs_ragged(
+    idx: np.ndarray,
+    v: np.ndarray,
+    starts: np.ndarray,
+    ends: np.ndarray,
+    n: np.ndarray,
+    min_len: int,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Hurst R/S for every series of a packed batch. Series j is the
+    length-``n[j]`` zero vector with ``v[starts[j]:ends[j]]`` at
+    positions ``idx[starts[j]:ends[j]]`` (a dense series is positions
+    0..n-1). Series of one length are scattered into (k, n) chunks of at
+    most ``HURST_CHUNK_DOUBLES`` cells for :func:`hurst_rs_batch`.
+    Returns ``(hurst, fit_r2, n_scales)`` per series; series shorter than
+    ``min_len`` get NaN and 0 scales."""
+    m = len(starts)
+    h = np.full(m, np.nan)
+    r2 = np.full(m, np.nan)
+    n_scales = np.zeros(m, dtype=np.int64)
+    lens = ends - starts
+    for length in np.unique(n[n >= min_len]):
+        members = np.flatnonzero(n == length)
+        step = max(1, HURST_CHUNK_DOUBLES // max(int(length), 1))
+        for c0 in range(0, len(members), step):
+            part = members[c0 : c0 + step]
+            cnt = lens[part]
+            seg = np.cumsum(cnt) - cnt
+            src = np.arange(int(cnt.sum())) + np.repeat(starts[part] - seg, cnt)
+            V = np.zeros((len(part), int(length)))
+            V[np.repeat(np.arange(len(part)), cnt), idx[src]] = v[src]
+            h[part], r2[part], n_scales[part] = hurst_rs_batch(V)
+    return h, r2, n_scales
+
+
+def _hurst_frame(
+    pdf: pd.DataFrame,
+    keys: list[str],
+    starts: np.ndarray,
+    ends: np.ndarray,
+    idx: np.ndarray,
+    v: np.ndarray,
+    n: np.ndarray,
+    min_len: int,
+) -> pd.DataFrame:
+    """One output row per series of ``pdf`` with a finite Hurst fit
+    (arguments as :func:`hurst_rs_ragged`)."""
+    h, r2, n_scales = hurst_rs_ragged(idx, v, starts, ends, n, min_len)
+    ok = np.flatnonzero(np.isfinite(h))
+    out = {k: pdf[k].to_numpy()[starts[ok]] for k in keys}
+    out["n_points"] = n[ok].astype(np.int64)
+    # Python's correctly rounded round(), not np.round's scaled rint
+    out["hurst"] = [round(float(x), 4) for x in h[ok]]
+    out["fit_r2"] = [round(float(x), 4) for x in r2[ok]]
+    out["n_scales"] = n_scales[ok]
+    return pd.DataFrame(out)
+
+
 def hurst_rs(
     df: DataFrame,
     keys: list[str],
@@ -1237,10 +1356,11 @@ def hurst_rs(
     H ≈ 0.5 for iid noise, > 0.5 persistent/trending, < 0.5
     anti-persistent/mean-reverting — the long-memory diagnostic that
     tells a forecaster whether momentum features carry signal. Packed
-    grouped map: thousands of series per Arrow batch, O(n log n) numpy
-    per series, embarrassingly parallel across keys (the F48/K-mining
-    shape). Series shorter than ``min_len`` are skipped (too few R/S
-    scales for a meaningful log-log fit)."""
+    grouped map: thousands of series per Arrow batch, one
+    :func:`hurst_rs_batch` pass per series length in the batch,
+    embarrassingly parallel across keys (the F48/K-mining shape). Series
+    shorter than ``min_len`` are skipped (too few R/S scales for a
+    meaningful log-log fit)."""
     in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
@@ -1248,24 +1368,10 @@ def hurst_rs(
         from time_series_spark_spark.operators.packed import key_slices
 
         starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        v_all = pdf[value].to_numpy(dtype=np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            v = v_all[s:e]
-            if len(v) < min_len:
-                continue
-            h, r2, n_scales = _hurst_rs_one(v)
-            if not np.isfinite(h):
-                continue
-            rows.append(
-                (*(a[s] for a in karrs), len(v),
-                 round(h, 4), round(r2, 4), n_scales)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "n_points", "hurst", "fit_r2", "n_scales"],
-        )
+        lens = ends - starts
+        pos = np.arange(len(pdf)) - np.repeat(starts, lens)
+        v = pdf[value].to_numpy(dtype=np.float64)
+        return _hurst_frame(pdf, keys, starts, ends, pos, v, lens, min_len)
 
     return packed_grouped_map(
         df.select(*keys, ts, value),
@@ -1287,8 +1393,8 @@ def hurst_rs_sparse(
 ) -> DataFrame:
     """``hurst_rs`` over a SPARSE encoding of a dense zero-filled series:
     each row is one non-zero grid cell (``idx`` ∈ [0, n), ``n_col`` the
-    per-key grid length), and the dense vector is scattered into a numpy
-    zeros array inside the Arrow stage. Identical output to running
+    per-key grid length), and the dense vectors are scattered into numpy
+    zeros inside the Arrow stage. Identical output to running
     ``hurst_rs`` on the materialized dense frame, but the grid explode,
     the dense left join, and the dense-row shuffle/sort/Arrow transfer
     never happen — only the non-zero cells move (11× fewer rows for the
@@ -1300,27 +1406,15 @@ def hurst_rs_sparse(
         from time_series_spark_spark.operators.packed import key_slices
 
         starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        n_all = pdf[n_col].to_numpy(dtype=np.int64)
-        idx_all = pdf[idx].to_numpy(dtype=np.int64)
-        v_all = pdf[value].to_numpy(dtype=np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            n = int(n_all[s])
-            if n < min_len:
-                continue
-            v = np.zeros(n, dtype=np.float64)
-            v[idx_all[s:e]] = v_all[s:e]
-            h, r2, n_scales = _hurst_rs_one(v)
-            if not np.isfinite(h):
-                continue
-            rows.append(
-                (*(a[s] for a in karrs), n,
-                 round(h, 4), round(r2, 4), n_scales)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "n_points", "hurst", "fit_r2", "n_scales"],
+        return _hurst_frame(
+            pdf,
+            keys,
+            starts,
+            ends,
+            pdf[idx].to_numpy(dtype=np.int64),
+            pdf[value].to_numpy(dtype=np.float64),
+            pdf[n_col].to_numpy(dtype=np.int64)[starts],
+            min_len,
         )
 
     return packed_grouped_map(

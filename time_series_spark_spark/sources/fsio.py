@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import posixpath
 import re
+import uuid
 
 
 class TableFS:
@@ -105,7 +106,7 @@ class TableFS:
     def write_json_atomic(
         self, obj: dict, *rel: str, if_absent: bool = False
     ) -> None:
-        """Publish a small JSON file atomically: write ``<name>.tmp`` then
+        """Publish a small JSON file atomically: write ``<name>.<hex>.tmp`` then
         move over the final name — rename(2) on local/HDFS (atomic; the
         commit protocol), copy-delete on object stores (NOT atomic there:
         swap in a conditional put, see module docstring).
@@ -124,7 +125,9 @@ class TableFS:
         from pyarrow import fs as pafs
 
         final = self.path(*rel)
-        tmp = final + ".tmp"
+        # one staging name per writer: racing writers of one version
+        # must not write, link or delete each other's staging file
+        tmp = f"{final}.{uuid.uuid4().hex}.tmp"
         with self.fs.open_output_stream(tmp) as f:
             f.write(json.dumps(obj).encode("utf-8"))
         if not if_absent:
