@@ -5,6 +5,7 @@ maxFilesPerTrigger=1) for the stateful paths."""
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
@@ -91,6 +92,104 @@ def test_stateful_totals_multibatch(spark, batch_events, chunked_dir):
     )
     exp = batch_events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     assert final.exceptAll(exp).count() == 0 and exp.exceptAll(final).count() == 0
+
+
+@pytest.mark.parametrize(
+    "master, local",
+    [
+        ("local", True),
+        ("local[4]", True),
+        ("local-cluster[2,1,1024]", True),
+        ("yarn", False),
+        ("spark://host:7077", False),
+    ],
+)
+def test_engine_conf_sets_checkpoint_manager_for_local_masters_only(
+    master, local
+):
+    from time_series_spark_spark.session import (
+        _LOCAL_CHECKPOINT_FILE_MANAGER,
+        _engine_conf,
+    )
+
+    conf = _engine_conf(master)
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert (key in conf) is local
+    if local:
+        assert conf[key] == _LOCAL_CHECKPOINT_FILE_MANAGER
+
+
+def test_stateful_totals_resume_from_checkpoint(
+    spark, batch_events, chunked_dir, tmp_path
+):
+    """A restart restores the per-user state: replaying the first file,
+    then the rest on the same checkpoint, equals one full replay and the
+    batch totals. The session runs on a ``local`` master, so the second
+    run reads state from delta files the FileSystem-based checkpoint
+    manager wrote."""
+    import os
+    import shutil
+
+    from time_series_spark_spark.session import _LOCAL_CHECKPOINT_FILE_MANAGER
+
+    assert (
+        spark.conf.get("spark.sql.streaming.checkpointFileManagerClass")
+        == _LOCAL_CHECKPOINT_FILE_MANAGER
+    )
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+    def replay(src, ck):
+        sdf = (
+            spark.readStream.schema(
+                "event_id long, ts long, user_id long, event_type string, "
+                "value double, props string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        )
+        # foreachBatch: the memory sink refuses to resume in update mode
+        batches = []
+        q = (
+            stateful_user_totals(sdf)
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ck)
+            .foreachBatch(lambda df, _: batches.append(df.toPandas()))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return pd.concat(batches)
+
+    def final(pdf):
+        last = pdf.loc[pdf.groupby("user_id")["n_events"].idxmax()]
+        return {
+            int(u): (int(n), round(float(t), 2))
+            for u, n, t in zip(last.user_id, last.n_events, last.total_value)
+        }
+
+    chunks = sorted(f for f in os.listdir(chunked_dir) if f.endswith(".parquet"))
+    src, ck = tmp_path / "arriving", str(tmp_path / "ck")
+    src.mkdir()
+    shutil.copy(os.path.join(chunked_dir, chunks[0]), src)
+    first = replay(str(src), ck)
+    for f in chunks[1:]:
+        shutil.copy(os.path.join(chunked_dir, f), src)
+    second = replay(str(src), ck)
+
+    assert any(
+        f.endswith(".delta") for _, _, fs in os.walk(os.path.join(ck, "state"))
+        for f in fs
+    )
+    # users seen in both runs: their second-run totals carry restored state
+    assert set(first.user_id) & set(second.user_id)
+    resumed = final(pd.concat([first, second]))
+    full = final(replay(chunked_dir, str(tmp_path / "ck_full")))
+    exp = batch_events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("total_value"),
+    ).toPandas()
+    assert resumed == full == final(exp)
 
 
 def test_foreach_batch_sink_roundtrip(spark, batch_events, tmp_path):

@@ -2,10 +2,14 @@
 re-parsing unchanged archives but still observe real changes (the only
 event the upstream unconditional re-read exists for)."""
 
+import ast
 import os
+import subprocess
+import sys
 import time
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pytest
 
@@ -77,3 +81,67 @@ def test_install_is_idempotent(patched):
 def test_not_installed_in_plain_driver_process():
     # this pytest process is not a pyspark worker
     assert not zipcache.in_pyspark_worker()
+
+
+_REPO = Path(__file__).resolve().parent.parent
+
+_LOAD_IN_WORKER = """
+import pickle, sys, zipimport
+assert not any(m.startswith("time_series_spark_spark") for m in sys.modules)
+fn = pickle.loads(sys.stdin.buffer.read())
+assert type(fn).__name__ == "function" and fn(20) == 21
+guard = zipimport.zipimporter.invalidate_caches
+print(guard.__module__ + "." + guard.__qualname__)
+"""
+
+
+def _unpickle_in_worker(payload: bytes) -> str:
+    env = {
+        **os.environ,
+        "PYTHON_WORKER_FACTORY_SECRET": "test",
+        "PYTHONPATH": str(_REPO),
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _LOAD_IN_WORKER],
+        input=payload,
+        env=env,
+        capture_output=True,
+        check=True,
+    )
+    return out.stdout.decode().strip()
+
+
+def test_unpickling_wrapped_closure_installs_guard_in_worker():
+    from pyspark import cloudpickle
+
+    k = 1
+
+    def update(x):  # a closure, pickled by value like the stream updates
+        return x + k
+
+    guard = "time_series_spark_spark.zipcache._guarded_invalidate_caches"
+    assert _unpickle_in_worker(cloudpickle.dumps(zipcache.on_worker(update))) == guard
+    # control: the bare closure never imports the package
+    assert _unpickle_in_worker(cloudpickle.dumps(update)) == (
+        "zipimport.zipimporter.invalidate_caches"
+    )
+
+
+def test_every_stateful_update_is_wrapped():
+    tree = ast.parse(
+        (_REPO / "time_series_spark_spark/streaming/jobs.py").read_text()
+    )
+    first_args = [
+        node.args[0]
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "applyInPandasWithState"
+    ]
+    assert len(first_args) == 6
+    for arg in first_args:
+        assert (
+            isinstance(arg, ast.Call)
+            and isinstance(arg.func, ast.Name)
+            and arg.func.id == "on_worker"
+        ), ast.dump(arg)

@@ -900,11 +900,15 @@ def purchase_attribution_time_decay(
     # The pre-join exchange keys the SLIM touch stream on user BEFORE the
     # purchase×touch pair blowup (guide §2.3 "shuffle fewer bytes": ~2.8×
     # fewer rows than the post-join pid exchange it replaces at sf0.1, and
-    # the gap grows with lookback density at scale). The broadcast hash
-    # join propagates hashpartitioning(s_uid) through the key equivalence
-    # p_uid = s_uid, so the per-purchase windows — re-keyed (p_uid, pid),
-    # an identical grouping since pid determines p_uid — ride this one
-    # exchange and the pair rows are never shuffled on pid at all.
+    # the gap grows with lookback density at scale). The join is keyed on
+    # that user partitioning, so the per-purchase windows — re-keyed
+    # (p_uid, pid), an identical grouping since pid determines p_uid —
+    # need no exchange of their own and the pair rows are never shuffled
+    # on pid at all. The purchases carry no broadcast hint: they grow
+    # with the data, so Spark broadcasts them only while their estimated
+    # (or, under AQE, measured) size is under the broadcast threshold,
+    # and a sort-merge join on the same user key carries the same
+    # partitioning otherwise.
     s = pin_partitions(
         ev.filter(F.col("event_type") != "purchase").select(
             F.col("user_id").alias("s_uid"),
@@ -914,7 +918,7 @@ def purchase_attribution_time_decay(
         ),
         "s_uid",
     )
-    touches = F.broadcast(p).join(
+    touches = p.join(
         s,
         (F.col("s_uid") == F.col("p_uid"))
         & (F.col("s_ts") <= F.col("p_ts"))

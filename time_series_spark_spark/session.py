@@ -13,6 +13,17 @@ Centralizes every config the engine depends on (SURVEY.md §0.2, §4.2):
   ``spark.sql.shuffle.partitions`` generously and let AQE coalesce.
 - Arrow enabled — every pandas UDF / applyInPandas path (the forecaster,
   EWMA, as-of cogroup) rides Arrow record batches.
+- ``spark.sql.streaming.checkpointFileManagerClass`` set to
+  ``FileSystemBasedCheckpointFileManager``, for ``local*`` masters only.
+  Spark's default manager works through Hadoop ``FileContext``, whose
+  rename and existence checks on ``file:`` paths call
+  ``getFileLinkStatus``; without libhadoop, Hadoop answers that by forking
+  a ``readlink`` process (2053 in one ``perfbench`` ``stream_replay``
+  run, 5 with this manager). On a local disk both managers end in the
+  same ``rename(2)``, and Spark falls back to this class by itself where
+  ``FileContext`` is missing. Cluster masters keep the default: their
+  checkpoints live on HDFS or object stores, where ``FileContext`` gives
+  the atomic overwrite-rename and spawns no process.
 
 At 100 TB the same builder applies; only ``master``/``shuffle_partitions``
 change (cluster manager sets master; shuffle partitions ≈ 2-3× total cores).
@@ -108,12 +119,21 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def _engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
-    """The runtime-settable engine configs, shared by ``get_spark`` (as
-    builder ``.config``) and ``ensure_engine_conf`` (as ``spark.conf.set``).
-    Static configs (master, driver memory, UI) live in ``get_spark`` only.
+_LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _engine_conf(
+    master: str, shuffle_partitions: int | None = None
+) -> dict[str, str]:
+    """The runtime-settable engine configs for a session on ``master``,
+    shared by ``get_spark`` (as builder ``.config``) and
+    ``ensure_engine_conf`` (as ``spark.conf.set``). Static configs (master,
+    driver memory, UI) live in ``get_spark`` only.
     """
-    return {
+    conf = {
         "spark.sql.legacy.parquet.nanosAsLong": "true",
         "spark.sql.session.timeZone": "UTC",
         # An externally-built session keeps Spark's default 200 shuffle
@@ -146,6 +166,11 @@ def _engine_conf(shuffle_partitions: int | None = None) -> dict[str, str]:
         # which applies first.
         "spark.sql.execution.arrow.maxRecordsPerBatch": "65536",
     }
+    if master.startswith("local"):
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = (
+            _LOCAL_CHECKPOINT_FILE_MANAGER
+        )
+    return conf
 
 
 def get_spark(
@@ -155,13 +180,14 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's required config."""
+    master = master or f"local[{default_parallelism()}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{default_parallelism()}]")
+        .master(master)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    conf = {**_engine_conf(shuffle_partitions), **(extra_conf or {})}
+    conf = {**_engine_conf(master, shuffle_partitions), **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -174,7 +200,7 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     session (the driver hands us its own SparkSession in ``entry()``).
     Static configs (driver memory) can't change here.
     """
-    for k, v in _engine_conf().items():
+    for k, v in _engine_conf(spark.sparkContext.master).items():
         spark.conf.set(k, v)
     ship_package(spark)
     return spark

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from time_series_spark_spark.zipcache import on_worker
+
 EVENTS_SCHEMA_NANOS = (
     "event_id long, ts long, user_id long, event_type string, "
     "value double, props string"
@@ -143,7 +145,7 @@ def stateful_user_totals(sdf: DataFrame) -> DataFrame:
         )
 
     return sdf.groupBy("user_id").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "update",
@@ -202,7 +204,7 @@ def stateful_anomaly_flags(sdf: DataFrame, z_thresh: float = 3.0) -> DataFrame:
         )
 
     return sdf.groupBy("user_id").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "append",
@@ -262,7 +264,7 @@ def stateful_page_hinkley(
         )
 
     return sdf.groupBy("event_type").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "append",
@@ -875,7 +877,7 @@ def stateful_debounce(
         )
 
     return sdf.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "append",
@@ -944,7 +946,7 @@ def stateful_heavy_hitters(
         )
 
     return sdf.groupBy("event_type").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "append",
@@ -1097,7 +1099,7 @@ def stateful_token_bucket(
         )
 
     return sdf.groupBy("user_id").applyInPandasWithState(
-        update,
+        on_worker(update),
         output_schema,
         state_schema,
         "append",
