@@ -1601,3 +1601,22 @@ def test_farthest_point_sample_guards(spark):
         [(7, [float("nan")])], "vec_id long, embedding array<double>"
     )
     assert farthest_point_sample(bad, k=3) == []
+
+
+
+@pytest.mark.parametrize(
+    "error", [ConnectionRefusedError(), ValueError("bug")], ids=["gateway_gone", "bug"]
+)
+def test_persist_replacing_swallows_only_a_gone_context(monkeypatch, error):
+    from unittest import mock
+
+    from time_series_spark_spark.operators import llm
+
+    prev, new = mock.Mock(), mock.Mock()
+    prev.unpersist.side_effect = error
+    monkeypatch.setattr(llm, "_PERSISTED", {"t": prev})
+    if isinstance(error, ValueError):
+        with pytest.raises(ValueError):
+            llm._persist_replacing("t", new)
+    else:
+        assert llm._persist_replacing("t", new) is new.persist.return_value

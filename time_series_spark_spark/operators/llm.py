@@ -28,6 +28,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -52,21 +53,13 @@ def _persist_replacing(tag: str, df: DataFrame) -> DataFrame:
     if prev is not None:
         try:
             prev.unpersist()
-        except Exception:
-            pass  # session/context already gone
+        except (Py4JError, OSError):
+            # the context is stopped (Py4JJavaError) or the gateway is gone
+            # (ConnectionRefusedError): nothing is cached any more
+            pass
     out = df.persist()
     _PERSISTED[tag] = out
     return out
-
-
-def release_cached() -> None:
-    """Unpersist every frame this module still holds (call at teardown)."""
-    for tag in list(_PERSISTED):
-        prev = _PERSISTED.pop(tag)
-        try:
-            prev.unpersist()
-        except Exception:
-            pass
 
 # --------------------------------------------------------------------------
 # text normalization / tokenization

@@ -24,6 +24,11 @@ Centralizes every config the engine depends on (SURVEY.md §0.2, §4.2):
   ``FileContext`` is missing. Cluster masters keep the default: their
   checkpoints live on HDFS or object stores, where ``FileContext`` gives
   the atomic overwrite-rename and spawns no process.
+- ``spark.python.daemon.module=time_series_spark_spark.workerd`` and
+  ``spark.executorEnv.PYTHONPATH=<package zip>``, static confs for
+  ``local*`` masters only: the daemon installs the ``zipcache`` guard
+  before it forks, so every Python worker has it, user closures included.
+  Cluster executors lack the driver's zip path and keep Spark's daemon.
 
 At 100 TB the same builder applies; only ``master``/``shuffle_partitions``
 change (cluster manager sets master; shuffle partitions ≈ 2-3× total cores).
@@ -187,6 +192,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.python.daemon.module", "time_series_spark_spark.workerd"
+        ).config("spark.executorEnv.PYTHONPATH", _package_zip())
     conf = {**_engine_conf(master, shuffle_partitions), **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)

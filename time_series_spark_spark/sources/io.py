@@ -17,22 +17,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one test-corpus table; normalize ``events.ts`` to TimestampType.
+    """Read one test-corpus table; normalize ``events.ts`` to TimestampType."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    if table == "events":
+        df = events_ts_to_timestamp(df)
+    return df
+
+
+def events_ts_to_timestamp(df: DataFrame) -> DataFrame:
+    """Normalize an events frame's ``ts`` to session-tz TimestampType, for
+    the batch scan (``load``) and the file stream
+    (``streaming.jobs.read_events_stream``) alike.
 
     The corpus has shipped ``events.ts`` under two physical types, and both
     must land as session-tz TimestampType (LTZ — ``unix_micros`` et al.
@@ -47,25 +44,12 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
       TIMESTAMP_NTZ. Cast to TimestampType — value-preserving because the
       session timezone is pinned to UTC (see ``session.get_spark``).
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
-    if table == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose all tables as temp views so ``spark.sql`` queries can run."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
 def read_csv(

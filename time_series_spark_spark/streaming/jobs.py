@@ -21,14 +21,16 @@ swap in a ``StatefulProcessor`` when protobuf is available.
 
 from __future__ import annotations
 
+import functools
 import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from time_series_spark_spark.zipcache import on_worker
+from time_series_spark_spark.sources.io import events_ts_to_timestamp
 
 EVENTS_SCHEMA_NANOS = (
     "event_id long, ts long, user_id long, event_type string, "
@@ -66,9 +68,8 @@ def read_events_stream(
 
     A file stream source needs its schema declared up front, so probe the
     physical ``ts`` type with a one-footer batch read (driver-only, no
-    data scan) and pick the matching schema + shim: raw-nanos long →
-    ``timestamp_micros(ts div 1000)``; timestamp[us] (NTZ) → cast to LTZ
-    (value-preserving under the pinned UTC session timezone)."""
+    data scan), declare the matching schema, and convert ``ts`` with
+    ``sources.io.events_ts_to_timestamp``."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src_dir = _stream_source_dir(sf_dir)
     probe = dict(spark.read.parquet(src_dir).dtypes).get("ts")
@@ -78,10 +79,7 @@ def read_events_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    sdf = reader.parquet(src_dir)
-    if nanos:
-        return sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return sdf.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events_ts_to_timestamp(reader.parquet(src_dir))
 
 
 def hourly_counts(sdf: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -125,31 +123,68 @@ def dedup_stream(sdf: DataFrame, watermark: str = "1 hour") -> DataFrame:
     return sdf.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
+# The applyInPandasWithState updates are module-level functions (parameters
+# bound with functools.partial): they pickle by reference, so a worker that
+# loads one imports this package, whose __init__ installs the zipcache guard.
+
+
+def _user_totals_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+    n, total = state.get if state.exists else (0, 0.0)
+    for pdf in pdfs:
+        n += len(pdf)
+        total += float(pdf["value"].sum())
+    state.update((n, total))
+    yield pd.DataFrame(
+        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
+    )
+
+
 def stateful_user_totals(sdf: DataFrame) -> DataFrame:
     """J7: custom stateful per-key processing via ``applyInPandasWithState``
     — a running (count, total value) per user maintained in the state
     store."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = "user_id long, n_events long, total_value double"
     state_schema = "n long, total double"
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-        )
-
     return sdf.groupBy("user_id").applyInPandasWithState(
-        on_worker(update),
+        _user_totals_update,
         output_schema,
         state_schema,
         "update",
         GroupStateTimeout.NoTimeout,
+    )
+
+
+def _anomaly_flags_update(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState, *, z_thresh: float
+):
+    import math
+
+    n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
+    out_rows = []
+    for pdf in pdfs:
+        # within a batch, preserve event order for the online update
+        for ev, v in zip(
+            pdf.sort_values("event_id")["event_id"],
+            pdf.sort_values("event_id")["value"],
+        ):
+            v = float(v)
+            if n >= 2 and m2 > 0:
+                sd = math.sqrt(m2 / (n - 1))
+                z = (v - mean) / sd if sd > 0 else 0.0
+            else:
+                z = 0.0
+            out_rows.append(
+                (int(key[0]), int(ev), v, round(z, 4), abs(z) > z_thresh)
+            )
+            n += 1
+            d = v - mean
+            mean += d / n
+            m2 += d * (v - mean)
+    state.update((n, mean, m2))
+    yield pd.DataFrame(
+        out_rows,
+        columns=["user_id", "event_id", "value", "z", "is_anomaly"],
     )
 
 
@@ -166,49 +201,40 @@ def stateful_anomaly_flags(sdf: DataFrame, z_thresh: float = 3.0) -> DataFrame:
 
     Emits one row per event with the prior-stats z-score and flag.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = (
         "user_id long, event_id long, value double, z double, is_anomaly boolean"
     )
     state_schema = "n long, mean double, m2 double"
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        import math
-
-        n, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
-        out_rows = []
-        for pdf in pdfs:
-            # within a batch, preserve event order for the online update
-            for ev, v in zip(
-                pdf.sort_values("event_id")["event_id"],
-                pdf.sort_values("event_id")["value"],
-            ):
-                v = float(v)
-                if n >= 2 and m2 > 0:
-                    sd = math.sqrt(m2 / (n - 1))
-                    z = (v - mean) / sd if sd > 0 else 0.0
-                else:
-                    z = 0.0
-                out_rows.append(
-                    (int(key[0]), int(ev), v, round(z, 4), abs(z) > z_thresh)
-                )
-                n += 1
-                d = v - mean
-                mean += d / n
-                m2 += d * (v - mean)
-        state.update((n, mean, m2))
-        yield pd.DataFrame(
-            out_rows,
-            columns=["user_id", "event_id", "value", "z", "is_anomaly"],
-        )
-
     return sdf.groupBy("user_id").applyInPandasWithState(
-        on_worker(update),
+        functools.partial(_anomaly_flags_update, z_thresh=z_thresh),
         output_schema,
         state_schema,
         "append",
         GroupStateTimeout.NoTimeout,
+    )
+
+
+def _page_hinkley_update(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState, *,
+    delta: float, lam: float,
+):
+    n, total, m, m_min = state.get if state.exists else (0, 0.0, 0.0, 0.0)
+    out = []
+    for pdf in pdfs:
+        ordered = pdf.sort_values("event_id")
+        for ev, v in zip(ordered["event_id"], ordered["value"]):
+            cents = float(round(float(v) * 100))
+            n += 1
+            total += cents
+            m += cents - total / n - delta
+            m_min = min(m_min, m)
+            ph = m - m_min
+            out.append((key[0], int(ev), int(cents), round(ph, 4), ph > lam))
+    state.update((n, total, m, m_min))
+    yield pd.DataFrame(
+        out,
+        columns=["event_type", "event_id", "cents", "ph", "alarm"],
     )
 
 
@@ -232,39 +258,14 @@ def stateful_page_hinkley(
     row per event with the PH statistic and alarm flag; replay ≡ the
     same recursion run in plain Python, pinned in tests.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = (
         "event_type string, event_id long, cents long, "
         "ph double, alarm boolean"
     )
     state_schema = "n long, total double, m double, m_min double"
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        n, total, m, m_min = (
-            state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        )
-        out = []
-        for pdf in pdfs:
-            ordered = pdf.sort_values("event_id")
-            for ev, v in zip(ordered["event_id"], ordered["value"]):
-                cents = float(round(float(v) * 100))
-                n += 1
-                total += cents
-                m += cents - total / n - delta
-                m_min = min(m_min, m)
-                ph = m - m_min
-                out.append(
-                    (key[0], int(ev), int(cents), round(ph, 4), ph > lam)
-                )
-        state.update((n, total, m, m_min))
-        yield pd.DataFrame(
-            out,
-            columns=["event_type", "event_id", "cents", "ph", "alarm"],
-        )
-
     return sdf.groupBy("event_type").applyInPandasWithState(
-        on_worker(update),
+        functools.partial(_page_hinkley_update, delta=delta, lam=lam),
         output_schema,
         state_schema,
         "append",
@@ -835,6 +836,22 @@ def watermark_drop_stats(progress_list) -> dict:
             "per_batch": per_batch}
 
 
+def _debounce_update(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState, *, gap_us: int
+):
+    last_us = state.get[0] if state.exists else None
+    out = []
+    for pdf in pdfs:
+        ordered = pdf.sort_values(["ts", "event_id"])
+        for ev, ts in zip(ordered["event_id"], ordered["ts"]):
+            ts_us = int(ts.value) // 1000  # pandas ns -> µs
+            if last_us is None or ts_us - last_us > gap_us:
+                out.append((key[0], key[1], int(ev), ts))
+            last_us = ts_us
+    state.update((last_us,))
+    yield pd.DataFrame(out, columns=["user_id", "event_type", "event_id", "ts"])
+
+
 def stateful_debounce(
     sdf: DataFrame,
     gap_us: int = 300_000_000,
@@ -854,34 +871,43 @@ def stateful_debounce(
     boundaries too. Emits only the surviving burst-start events;
     replay ≡ the batch F105 keeper set, pinned in tests.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = (
         "user_id long, event_type string, event_id long, ts timestamp"
     )
     state_schema = "last_us long"
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        last_us = state.get[0] if state.exists else None
-        out = []
-        for pdf in pdfs:
-            ordered = pdf.sort_values(["ts", "event_id"])
-            for ev, ts in zip(ordered["event_id"], ordered["ts"]):
-                ts_us = int(ts.value) // 1000  # pandas ns -> µs
-                if last_us is None or ts_us - last_us > gap_us:
-                    out.append((key[0], key[1], int(ev), ts))
-                last_us = ts_us
-        state.update((last_us,))
-        yield pd.DataFrame(
-            out, columns=["user_id", "event_type", "event_id", "ts"]
-        )
-
     return sdf.groupBy("user_id", "event_type").applyInPandasWithState(
-        on_worker(update),
+        functools.partial(_debounce_update, gap_us=gap_us),
         output_schema,
         state_schema,
         "append",
         GroupStateTimeout.NoTimeout,
+    )
+
+
+def _heavy_hitters_update(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState, *,
+    counters: int, k: int,
+):
+    if state.exists:
+        items, counts, d = state.get
+        table = dict(zip(items, counts))
+    else:
+        table, d = {}, 0
+    for pdf in pdfs:
+        ordered = pdf.sort_values("event_id")
+        for u in ordered["user_id"]:
+            item = str(u % 100)  # bounded item domain: user bucket
+            table[item] = table.get(item, 0) + 1
+            if len(table) > counters:
+                dec = sorted(table.values(), reverse=True)[counters]
+                d += dec
+                table = {t: c - dec for t, c in table.items() if c - dec > 0}
+    state.update((list(table), [table[t] for t in table], d))
+    top = sorted(table.items(), key=lambda kv: (-(kv[1] + d), kv[0]))[:k]
+    yield pd.DataFrame(
+        [(key[0], t, c, c + d, i + 1) for i, (t, c) in enumerate(top)],
+        columns=["event_type", "item", "cnt_lower", "cnt_upper", "rnk"],
     )
 
 
@@ -908,45 +934,14 @@ def stateful_heavy_hitters(
     D18 sketch run with ONE partition. State schema is two parallel
     arrays + a long — no maps, so the state store schema stays flat.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = (
         "event_type string, item string, cnt_lower long, cnt_upper long, "
         "rnk int"
     )
     state_schema = "items array<string>, counts array<long>, d long"
 
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            items, counts, d = state.get
-            table = dict(zip(items, counts))
-        else:
-            table, d = {}, 0
-        for pdf in pdfs:
-            ordered = pdf.sort_values("event_id")
-            for u in ordered["user_id"]:
-                item = str(u % 100)  # bounded item domain: user bucket
-                table[item] = table.get(item, 0) + 1
-                if len(table) > counters:
-                    dec = sorted(table.values(), reverse=True)[counters]
-                    d += dec
-                    table = {
-                        t: c - dec for t, c in table.items() if c - dec > 0
-                    }
-        state.update((list(table), [table[t] for t in table], d))
-        top = sorted(
-            table.items(), key=lambda kv: (-(kv[1] + d), kv[0])
-        )[:k]
-        yield pd.DataFrame(
-            [
-                (key[0], t, c, c + d, i + 1)
-                for i, (t, c) in enumerate(top)
-            ],
-            columns=["event_type", "item", "cnt_lower", "cnt_upper", "rnk"],
-        )
-
     return sdf.groupBy("event_type").applyInPandasWithState(
-        on_worker(update),
+        functools.partial(_heavy_hitters_update, counters=counters, k=k),
         output_schema,
         state_schema,
         "append",
@@ -1046,6 +1041,35 @@ def read_sprt_decisions(spark, partials_path: str) -> DataFrame:
     ).orderBy("batch_id")
 
 
+def _token_bucket_update(
+    key, pdfs: Iterator[pd.DataFrame], state: GroupState, *,
+    period_us: int, cap_p: int,
+):
+    if state.exists:
+        last_us, stok = state.get
+    else:
+        last_us, stok = None, cap_p
+    out = []
+    for pdf in pdfs:
+        ordered = pdf.sort_values(["ts", "event_id"])
+        for eid, ts in zip(ordered["event_id"], ordered["ts"]):
+            ts_us = int(ts.value) // 1000
+            if last_us is not None:
+                stok = min(cap_p, stok + (ts_us - last_us))
+            last_us = ts_us
+            if stok >= period_us:
+                stok -= period_us
+                adm = 1
+            else:
+                adm = 0
+            out.append((key[0], int(eid), ts, adm, stok))
+    state.update((last_us, stok))
+    yield pd.DataFrame(
+        out,
+        columns=["user_id", "event_id", "ts", "admitted", "tokens_after_p"],
+    )
+
+
 def stateful_token_bucket(
     sdf: DataFrame,
     period_us: int = 21_600_000_000,
@@ -1062,44 +1086,18 @@ def stateful_token_bucket(
     J12's debounce too); a late event would refill negatively. The
     throttling/admission-control shape: bounded state forever,
     per-event admit/reject emitted downstream."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     output_schema = (
         "user_id long, event_id long, ts timestamp, admitted int,"
         " tokens_after_p long"
     )
     state_schema = "last_us long, stok long"
-    cap_p = capacity * period_us
-
-    def update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-        if state.exists:
-            last_us, stok = state.get
-        else:
-            last_us, stok = None, cap_p
-        out = []
-        for pdf in pdfs:
-            ordered = pdf.sort_values(["ts", "event_id"])
-            for eid, ts in zip(ordered["event_id"], ordered["ts"]):
-                ts_us = int(ts.value) // 1000
-                if last_us is not None:
-                    stok = min(cap_p, stok + (ts_us - last_us))
-                last_us = ts_us
-                if stok >= period_us:
-                    stok -= period_us
-                    adm = 1
-                else:
-                    adm = 0
-                out.append((key[0], int(eid), ts, adm, stok))
-        state.update((last_us, stok))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id", "event_id", "ts", "admitted", "tokens_after_p",
-            ],
-        )
 
     return sdf.groupBy("user_id").applyInPandasWithState(
-        on_worker(update),
+        functools.partial(
+            _token_bucket_update,
+            period_us=period_us,
+            cap_p=capacity * period_us,
+        ),
         output_schema,
         state_schema,
         "append",

@@ -25,12 +25,14 @@ archives under fresh paths, which are new importer instances and
 unaffected. The only behavior delta is skipping byte-identical
 re-parses of an unchanged file.
 
-The patch is installed from the package ``__init__`` ONLY inside
-PySpark worker processes (detected via the worker-factory socket
-environment the JVM sets for them), never in the driver or in plain
-Python programs importing this library. A worker that runs only closures
-pickled by value never imports the package; wrap such closures with
-:func:`on_worker`.
+The patch is installed only inside PySpark worker processes, never in
+the driver or in plain Python programs importing this library. On
+``local*`` sessions from ``session.get_spark``, the daemon module
+``workerd`` installs it before it forks, so every worker has it, also
+one that only runs user closures pickled by value. Elsewhere the package
+``__init__`` installs it (detecting a worker by the worker-factory
+environment the JVM sets) when a task loads a function of this package,
+as the stateful stream updates in ``streaming.jobs`` do.
 """
 
 from __future__ import annotations
@@ -115,38 +117,3 @@ def in_pyspark_worker() -> bool:
 def install_if_worker() -> None:
     if in_pyspark_worker():
         install()
-
-
-class _Guarded:
-    """A callable that pickles as ``_unpickle_guarded(fn)``."""
-
-    def __init__(self, fn):
-        self.fn = fn
-        # the UDF name Spark prints in plans
-        self.__name__ = getattr(fn, "__name__", type(fn).__name__)
-
-    def __call__(self, *args, **kwargs):
-        return self.fn(*args, **kwargs)
-
-    def __reduce__(self):
-        return _unpickle_guarded, (self.fn,)
-
-
-def _unpickle_guarded(fn):
-    install_if_worker()
-    return fn
-
-
-def on_worker(fn):
-    """Wrap ``fn``, a closure shipped to Python workers, so that unpickling
-    it imports this package and installs the guard there.
-
-    A closure is pickled by value, so a worker that runs only closures
-    which never import the package (the ``applyInPandasWithState``
-    updates in ``streaming.jobs``) never runs the package ``__init__``
-    and re-parses ``pyspark.zip`` on every task. The wrapper pickles as a
-    call to a function of this module, which a worker must import to
-    resolve; the worker then holds the bare ``fn``, so calls cost nothing
-    extra.
-    """
-    return _Guarded(fn)
