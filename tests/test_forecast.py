@@ -245,24 +245,50 @@ def test_multiplicative_mode_scales_seasonality_with_trend():
 
 
 def test_multi_rhs_cohort_matches_scalar_path():
-    """fit_forecast_multi (one factorized solve for a same-grid cohort)
-    must reproduce fit_forecast_series per column to fp noise — it is a
-    pure factorization-reuse optimization, not a model change."""
-    from time_series_spark_spark.operators.forecast import fit_forecast_multi
+    """fit_forecast_multi_stacked (one factorized solve for a same-grid
+    cohort) must reproduce fit_forecast_series per column to fp noise —
+    sharing the factorization across columns is not a model change."""
+    from time_series_spark_spark.operators.forecast import (
+        fit_forecast_multi_stacked,
+    )
 
     rng = np.random.default_rng(3)
     n, m = 250, 7
     ds = _dates(n)
     Y = 50 + np.cumsum(rng.normal(0, 2, (n, m)), axis=0)
     Y = np.abs(Y) + 1.0
-    multi = fit_forecast_multi(ds, Y, horizon=15)
+    stacked = fit_forecast_multi_stacked(ds, Y, horizon=15)
+    assert len(stacked) == 15 * m
     for j in range(m):
+        member = stacked.iloc[j * 15 : (j + 1) * 15]
         single = fit_forecast_series(ds, Y[:, j], horizon=15)
         for c in ("yhat", "yhat_lower", "yhat_upper"):
             np.testing.assert_allclose(
-                multi[j][c].to_numpy(), single[c].to_numpy(),
+                member[c].to_numpy(), single[c].to_numpy(),
                 rtol=1e-8, atol=1e-8,
             )
+
+
+def test_null_key_series_is_one_series(spark):
+    """A null key is one series, as in Spark's groupBy: Arrow hands a null
+    long key to pandas as NaN, and the null-key series must still yield
+    exactly ``horizon`` rows, equal to the local fit."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    rng = np.random.default_rng(4)
+    y = {k: rng.normal(100, 5, 30).round(3) for k in (1, None)}
+    rows = [(k, t0 + dt.timedelta(days=i), float(y[k][i]))
+            for k in (1, None) for i in range(30)]
+    df = spark.createDataFrame(rows, "k long, ds timestamp, y double")
+    got = forecast(df, ["k"], "ds", "y", horizon=5).toPandas()
+    assert got["k"].isna().sum() == 5
+    assert (got["k"] == 1).sum() == 5
+    local = fit_forecast_series(_dates(30, "2024-01-01"), y[None], horizon=5)
+    np.testing.assert_allclose(
+        got[got["k"].isna()].sort_values("ds")["yhat"].to_numpy(),
+        local["yhat"].to_numpy(), rtol=1e-9,
+    )
 
 
 # ---------------------------------------------------------------------------

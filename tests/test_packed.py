@@ -93,7 +93,8 @@ def test_key_slices_matches_pandas_groupby():
     """key_slices (the run-length group scanner the packed apply fns use
     instead of pandas groupby) must yield exactly the groupby(sort=False)
     blocks on a key-contiguous frame: same boundaries, same key order,
-    single- and multi-key, ragged sizes, object and int key dtypes."""
+    single- and multi-key, ragged sizes, object and int key dtypes, and
+    null float/datetime keys."""
     import numpy as np
 
     from time_series_spark_spark.operators.packed import key_slices
@@ -112,6 +113,28 @@ def test_key_slices_matches_pandas_groupby():
             for _, g in pdf.groupby(keys, sort=False)
         ]
         assert list(zip(starts.tolist(), ends.tolist())) == expect
+
+    # null keys (NaN in a float column, NaT in a datetime column) are one
+    # group each, as groupby(dropna=False) and Spark's groupBy have them
+    nulls = pd.DataFrame(
+        {
+            "f": [np.nan, np.nan, np.nan, 1.0, 1.0, 2.5],
+            "t": pd.to_datetime(
+                [None, None, "2024-01-01", "2024-01-01", None, "2024-01-02"]
+            ),
+            "u": pd.to_datetime(
+                [None, None, None, "2024-01-01", "2024-01-01", "2024-01-02"]
+            ),
+            "v": np.arange(6.0),
+        }
+    )
+    for keys in (["f"], ["u"], ["f", "t"]):
+        starts, ends = key_slices(nulls, keys)
+        expect = [
+            (nulls.index.get_indexer(g.index)[0], nulls.index.get_indexer(g.index)[-1] + 1)
+            for _, g in nulls.groupby(keys, sort=False, dropna=False)
+        ]
+        assert list(zip(starts.tolist(), ends.tolist())) == expect, keys
 
     # empty frame -> empty boundaries
     starts, ends = key_slices(pdf.iloc[:0], ["a"])
@@ -155,3 +178,108 @@ def test_split_estimate_follows_min_partition_num(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def test_per_series_operators_match_local_reference_across_batches(tiny_batches):
+    """Every per-series forecast operator over a dozen ragged series (one
+    with a null key) in 7-row Arrow batches equals its per-series
+    function, or fit_forecast_series, run on the driver. Series too short
+    for an operator are skipped; the null key is one series."""
+    import numpy as np
+
+    from time_series_spark_spark.operators import forecast as fc
+
+    spark = tiny_batches
+    rng = np.random.default_rng(9)
+    lengths = {None: 40, 0: 3, 1: 6, 2: 9, 3: 11, 4: 13, 5: 14, 6: 17,
+               7: 22, 8: 29, 9: 36, 10: 60}
+    series = {}
+    for k, n in lengths.items():
+        off = 2 if k is None else k % 5
+        ds = np.datetime64("2024-01-01", "us") + np.timedelta64(1, "D") * (
+            off + np.arange(n)
+        )
+        y = np.where(rng.random(n) < 0.4, 0.0, rng.integers(1, 9, n) * 1.0)
+        series[k] = (ds, y)
+    df = spark.createDataFrame(
+        [(k, d.item(), float(v)) for k, (ds, y) in series.items()
+         for d, v in zip(ds, y)],
+        "k long, ds timestamp, y double",
+    ).orderBy(F.rand(seed=5))
+    h, cutoffs = 4, ["2024-01-15", "2024-01-25"]
+
+    def future(ds):
+        return ds[-1] + np.timedelta64(1, "D") * np.arange(1, h + 1)
+
+    def check(got, rows, cols):
+        want = pd.DataFrame(rows, columns=["k", *cols])
+        want["k"] = want["k"].astype(float)
+        for c in ("ds", "cutoff"):
+            if c in want:
+                want[c] = want[c].astype("datetime64[ns]")
+        order = ["k", cols[0]]
+        got = got.toPandas().sort_values(order).reset_index(drop=True)
+        want = want.sort_values(order).reset_index(drop=True)
+        assert got["k"].isna().any()  # the null-key series is present
+        # BLAS in a Python worker may round the ridge solve differently
+        # from the driver's, in the last bits
+        pd.testing.assert_frame_equal(
+            got, want, check_dtype=False, rtol=1e-12, atol=1e-12
+        )
+
+    hw, theta, croston, bt, conf, sel = [], [], [], [], [], []
+    for k, (ds, y) in series.items():
+        actual = pd.DataFrame({"ds": ds, "y": y})
+        if len(y) >= 14:
+            yhat, sse = fc.holt_winters_series(y, 7, h)
+            hw += [(k, d, v, sse) for d, v in zip(future(ds), yhat)]
+        if len(y) >= 8:
+            yhat, a, _ = fc.theta_series(y, h)
+            theta += [(k, d, v, a) for d, v in zip(future(ds), yhat)]
+            rate, z, p, nd = fc.croston_series(y, 0.1)
+            croston.append((k, len(y), nd, round(rate, 6), round(z, 6), round(p, 6)))
+        add, hwm = [], []
+        for c in cutoffs:
+            co = np.datetime64(c, "us")
+            tr = ds <= co
+            if tr.sum() < 5:
+                continue
+            m = fc.fit_forecast_series(ds[tr], y[tr], h).merge(actual, on="ds")
+            if m.empty:  # no held-out actuals after this cutoff
+                continue
+            e = m["y"] - m["yhat"]
+            inside = (m["y"] >= m["yhat_lower"]) & (m["y"] <= m["yhat_upper"])
+            bt.append((k, co, len(m), float(e.abs().mean()),
+                       float(np.sqrt((e**2).mean())), float(inside.mean())))
+            if tr.sum() >= 14:
+                yh, _ = fc.holt_winters_series(y[tr], 7, h)
+                m2 = pd.DataFrame({"ds": future(ds[tr]), "yhat": yh}).merge(actual, on="ds")
+                add.append(float(e.abs().mean()))
+                hwm.append(float((m2["y"] - m2["yhat"]).abs().mean()))
+        if add:
+            ma, mh = float(np.mean(add)), float(np.mean(hwm))
+            sel.append((k, len(add), round(ma, 4), round(mh, 4),
+                        "additive" if ma <= mh else "holt_winters"))
+        n_tr = len(y) - max(5, int(round(len(y) * 0.25)))
+        if n_tr >= 5:
+            cal = fc.fit_forecast_series(ds[:n_tr], y[:n_tr], len(y) - n_tr).merge(
+                actual.iloc[n_tr:], on="ds")
+            res = np.sort(np.abs(cal["y"] - cal["yhat"]).to_numpy())
+            q = float(res[min(len(res) - 1, int(np.ceil((len(res) + 1) * 0.9)) - 1)])
+            yhat = fc.fit_forecast_series(ds, y, h)["yhat"].to_numpy()
+            conf += [(k, d, v, lo, hi, round(q, 4)) for d, v, lo, hi in zip(
+                future(ds), np.round(yhat, 4), np.round(yhat - q, 4),
+                np.round(yhat + q, 4))]
+
+    check(fc.holt_winters(df, ["k"], "ds", "y", 7, h), hw, ["ds", "yhat", "sse"])
+    check(fc.theta_forecast(df, ["k"], "ds", "y", h), theta, ["ds", "yhat", "alpha"])
+    check(fc.croston_forecast(df, ["k"], "ds", "y"), croston,
+          ["n_periods", "n_demands", "demand_rate", "z_hat", "p_hat"])
+    check(fc.backtest(df, ["k"], "ds", "y", cutoffs, h), bt,
+          ["cutoff", "n_test", "mae", "rmse", "coverage"])
+    check(fc.model_selection(df, ["k"], "ds", "y", cutoffs, h), sel,
+          ["n_folds", "mae_additive", "mae_hw", "champion"])
+    check(fc.conformal_forecast(df, ["k"], "ds", "y", h), conf,
+          ["ds", "yhat", "lo", "hi", "qhat"])
+    # the 3-row series is too short for every operator
+    assert all(r[0] != 0 for r in hw + theta + croston + bt + sel + conf)

@@ -29,7 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from time_series_spark_spark.operators.packed import packed_grouped_map
+from time_series_spark_spark.operators.packed import (
+    key_slices,
+    packed_grouped_map,
+)
 
 
 def _fourier(t_days: np.ndarray, period: float, order: int) -> np.ndarray:
@@ -75,6 +78,11 @@ def fit_forecast_series(
     holiday effects then scale WITH the trend level (Prophet's
     multiplicative mode via the standard log-link reduction). Requires
     strictly positive observations.
+
+    This function sorts the series and drops NaN observations, then fits
+    it as one column of :func:`fit_forecast_multi_stacked`. A series with
+    fewer than 5 observations gets a constant forecast (mean level,
+    max-deviation band) instead.
     """
     if seasonality_mode not in ("additive", "multiplicative"):
         raise ValueError("seasonality_mode must be additive | multiplicative")
@@ -83,116 +91,41 @@ def fit_forecast_series(
     ds, y = np.asarray(ds)[order], np.asarray(y, dtype=float)[order]
     keep = ~np.isnan(y)
     ds, y = ds[keep], y[keep]
-    if multiplicative:
-        if len(y) and np.min(y) <= 0:
-            raise ValueError(
-                "multiplicative seasonality requires y > 0 everywhere"
-            )
-        y = np.log(y)
-
-    def _delink(out: pd.DataFrame) -> pd.DataFrame:
-        if multiplicative:
-            for c in ("yhat", "yhat_lower", "yhat_upper"):
-                out[c] = np.exp(out[c])
-        return out
-
     n = len(y)
-
-    step = np.timedelta64(int(freq_days * 86400 * 1_000_000), "us")
     if n == 0:
         return pd.DataFrame(
             {"ds": np.array([], dtype="datetime64[us]"), "yhat": [],
              "yhat_lower": [], "yhat_upper": []}
         )
-    last = np.datetime64(ds[-1], "us")
-    future_ds = last + step * np.arange(1, horizon + 1)
-
-    if n < 5:  # too short for trend/seasonality — constant fallback
-        level = float(np.mean(y))
-        spread = float(np.max(np.abs(y - level))) if n > 1 else 0.0
-        return _delink(
-            pd.DataFrame(
-                {
-                    "ds": future_ds,
-                    "yhat": np.full(horizon, level),
-                    "yhat_lower": np.full(horizon, level - spread),
-                    "yhat_upper": np.full(horizon, level + spread),
-                }
+    if n >= 5:
+        return fit_forecast_multi_stacked(
+            ds, y[:, None], horizon, freq_days, n_changepoints,
+            changepoint_range, weekly_order, yearly_order, ridge_changepoint,
+            ridge_seasonal, interval_quantiles, interval_widening, holidays,
+            ridge_holiday, seasonality_mode,
+        )
+    # too short for trend/seasonality: constant fallback
+    if multiplicative:
+        if np.min(y) <= 0:
+            raise ValueError(
+                "multiplicative seasonality requires y > 0 everywhere"
             )
-        )
-
-    t0 = np.datetime64(ds[0], "us")
-    t_days = (ds.astype("datetime64[us]") - t0) / np.timedelta64(1, "D")
-    span = max(t_days[-1], 1.0)
-    t = t_days / span
-
-    n_cp = min(n_changepoints, max(n // 3 - 1, 0))
-    if n_cp > 0:
-        cps = np.quantile(
-            t[: max(int(changepoint_range * n), 2)],
-            np.linspace(0, 1, n_cp + 2)[1:-1],
-        )
-    else:
-        cps = np.empty(0)
-
-    yearly = yearly_order if t_days[-1] >= 365 else 0
-    weekly = weekly_order if t_days[-1] >= 14 else 0
-
-    hol_names = sorted(holidays) if holidays else []
-    hol_days = [
-        np.asarray(holidays[h], dtype="datetime64[D]") for h in hol_names
-    ]
-
-    def design(td: np.ndarray, dates: np.ndarray) -> np.ndarray:
-        tt = td / span
-        cols = [np.ones_like(tt), tt]
-        if n_cp > 0:
-            cols.append(np.maximum(tt[:, None] - cps[None, :], 0.0))
-        blocks = [np.column_stack(cols) if len(cols) > 1 else cols[0][:, None]]
-        blocks.append(_fourier(td, 7.0, weekly))
-        blocks.append(_fourier(td, 365.25, yearly))
-        if hol_names:
-            days = dates.astype("datetime64[D]")
-            blocks.append(
-                np.column_stack(
-                    [np.isin(days, hd).astype(float) for hd in hol_days]
-                )
-            )
-        return np.hstack([b for b in blocks if b.size or b.shape[1] == 0])
-
-    X = design(t_days, ds)
-    y_scale = max(float(np.max(np.abs(y))), 1e-9)
-    ys = y / y_scale
-
-    penalties = np.concatenate(
-        [
-            [1e-8, 1e-8],                       # intercept, base slope
-            np.full(n_cp, ridge_changepoint),   # changepoint deltas (≈ Laplace MAP)
-            np.full(2 * weekly, ridge_seasonal),
-            np.full(2 * yearly, ridge_seasonal),
-            np.full(len(hol_names), ridge_holiday),
-        ]
+        y = np.log(y)
+    step = np.timedelta64(int(freq_days * 86400 * 1_000_000), "us")
+    level = float(np.mean(y))
+    spread = float(np.max(np.abs(y - level))) if n > 1 else 0.0
+    out = pd.DataFrame(
+        {
+            "ds": np.datetime64(ds[-1], "us") + step * np.arange(1, horizon + 1),
+            "yhat": np.full(horizon, level),
+            "yhat_lower": np.full(horizon, level - spread),
+            "yhat_upper": np.full(horizon, level + spread),
+        }
     )
-    A = X.T @ X + np.diag(penalties)
-    beta = np.linalg.solve(A, X.T @ ys)
-
-    resid = (ys - X @ beta) * y_scale
-    q_lo = min(float(np.quantile(resid, interval_quantiles[0])), 0.0)
-    q_hi = max(float(np.quantile(resid, interval_quantiles[1])), 0.0)
-
-    future_t_days = (future_ds - t0) / np.timedelta64(1, "D")
-    yhat = design(future_t_days, future_ds) @ beta * y_scale
-    widen = 1.0 + interval_widening * np.arange(1, horizon + 1) / max(horizon, 1)
-    return _delink(
-        pd.DataFrame(
-            {
-                "ds": future_ds,
-                "yhat": yhat,
-                "yhat_lower": yhat + q_lo * widen,
-                "yhat_upper": yhat + q_hi * widen,
-            }
-        )
-    )
+    if multiplicative:
+        for c in ("yhat", "yhat_lower", "yhat_upper"):
+            out[c] = np.exp(out[c])
+    return out
 
 
 def fit_forecast_multi_stacked(
@@ -212,17 +145,18 @@ def fit_forecast_multi_stacked(
     ridge_holiday: float = 0.01,
     seasonality_mode: str = "additive",
 ) -> pd.DataFrame:
-    """Fit MANY series that share one observation grid with ONE factorized
-    solve: the ridge normal matrix ``XᵀX + diag(λ)`` depends only on the
-    grid, so m same-grid series reduce to a single multi-right-hand-side
+    """The additive-model kernel: fit every column of ``Y`` on the shared
+    observation grid ``ds`` and forecast ``horizon`` steps. The ridge
+    normal matrix ``XᵀX + diag(λ)`` depends only on the grid, so m
+    same-grid series reduce to a single multi-right-hand-side
     ``solve(A, XᵀY)`` — the LAPACK factorization is paid once instead of
-    m times. Numerically identical to calling
-    :func:`fit_forecast_series` per column (same LU, same order of
-    operations per RHS); the packed executor batch routes same-grid
-    cohorts here and ragged/NaN/short series to the scalar path.
+    m times. :func:`fit_forecast_series` cleans one series and calls this
+    with a single column; the packed executor batch calls it once per
+    same-grid cohort. Model and parameters as in
+    :func:`fit_forecast_series`.
 
-    ``ds`` must be sorted and NaN-free in every column of ``Y``
-    (callers guarantee it); ``Y`` has one column per series. Returns ONE
+    ``ds`` must be sorted, ``Y`` NaN-free with at least 5 rows (callers
+    guarantee it); ``Y`` has one column per series. Returns ONE
     member-major stacked ``(ds, yhat, yhat_lower, yhat_upper)`` frame
     (horizon rows per column, in column order) — per-member frame
     construction was the measured pandas hot spot for wide cohorts.
@@ -282,8 +216,8 @@ def fit_forecast_multi_stacked(
     Ys = Y / y_scales
     penalties = np.concatenate(
         [
-            [1e-8, 1e-8],
-            np.full(n_cp, ridge_changepoint),
+            [1e-8, 1e-8],                       # intercept, base slope
+            np.full(n_cp, ridge_changepoint),   # changepoint deltas (≈ Laplace MAP)
             np.full(2 * weekly, ridge_seasonal),
             np.full(2 * yearly, ridge_seasonal),
             np.full(len(hol_names), ridge_holiday),
@@ -322,21 +256,75 @@ def fit_forecast_multi_stacked(
     )
 
 
-def fit_forecast_multi(
-    ds: np.ndarray,
-    Y: np.ndarray,
-    horizon: int,
-    freq_days: float = 1.0,
-    **fit_kwargs,
-) -> list[pd.DataFrame]:
-    """Per-member view of :func:`fit_forecast_multi_stacked` (the m-frame
-    API the property tests exercise); numbers identical to calling
-    :func:`fit_forecast_series` per column."""
-    stacked = fit_forecast_multi_stacked(ds, Y, horizon, freq_days, **fit_kwargs)
-    return [
-        stacked.iloc[j * horizon : (j + 1) * horizon].reset_index(drop=True)
-        for j in range(Y.shape[1])
-    ]
+def _series(pdf: pd.DataFrame, keys: list[str], ds_col: str, y_col: str):
+    """Walk a packed batch: yields ``(key values, ds, y)`` per series, in
+    batch order, cut at :func:`key_slices` boundaries. Each series is
+    already ds-ascending: ``packed_grouped_map`` sorts each partition by
+    ``keys + [ds_col]``, so no per-series sort is needed."""
+    starts, ends = key_slices(pdf, keys)
+    karrs = [pdf[k].to_numpy() for k in keys]
+    ds_all = pdf[ds_col].to_numpy()
+    y_all = pdf[y_col].to_numpy(dtype=float)
+    for s, e in zip(starts, ends):
+        yield tuple(a[s] for a in karrs), ds_all[s:e], y_all[s:e]
+
+
+def _with_keys(
+    out: pd.DataFrame, kvs: list[tuple], lens: list[int], keys: list[str]
+) -> pd.DataFrame:
+    """Put the key columns in front of ``out``, whose rows are the series'
+    outputs back to back: series i owns ``lens[i]`` rows with key values
+    ``kvs[i]``. One ``np.repeat`` per key column, not one setitem per
+    series."""
+    for i, k in enumerate(keys):
+        out.insert(i, k, np.repeat(np.array([kv[i] for kv in kvs]), lens))
+    return out
+
+
+def _key_schema(df: DataFrame, keys: list[str]) -> str:
+    """DDL of ``df``'s key columns, the leading fields of every output."""
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in df.schema.fields
+        if f.name in keys
+    )
+
+
+def _per_series(
+    df: DataFrame,
+    keys: list[str],
+    ds_col: str,
+    y_col: str,
+    fit,
+    out_schema: str,
+) -> DataFrame:
+    """Run ``fit(ds, y)`` on every series of ``df`` on the packed
+    grouped-map path; the output is ``keys…`` followed by ``out_schema``'s
+    fields. ``fit`` returns a dict of equal-length 1-D columns named as
+    in ``out_schema``, or None to emit nothing for the series."""
+    cols = [f.split()[0] for f in out_schema.split(",")]
+
+    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        kvs, parts = [], []
+        for kv, ds, y in _series(pdf, keys, ds_col, y_col):
+            part = fit(ds, y)
+            if part is not None:
+                kvs.append(kv)
+                parts.append(part)
+        if not parts:
+            return pd.DataFrame(columns=[*keys, *cols])
+        out = pd.DataFrame(
+            {c: np.concatenate([p[c] for p in parts]) for c in cols}
+        )
+        return _with_keys(out, kvs, [len(p[cols[0]]) for p in parts], keys)
+
+    return packed_grouped_map(
+        df.select(*keys, ds_col, y_col),
+        keys,
+        [ds_col],
+        _batch,
+        f"{_key_schema(df, keys)}, {out_schema}",
+    )
 
 
 def _fit_series_cohorts(
@@ -349,11 +337,12 @@ def _fit_series_cohorts(
     """Fit an iterable of ``(kv, ds_arr, y_arr)`` series (the shared core
     of :func:`forecast` and :func:`forecast_on_grid`). Series sharing an
     identical observation grid (the overwhelmingly common case for
-    aggregated daily series) are fit as ONE multi-RHS solve
-    (:func:`fit_forecast_multi_stacked`); ragged, NaN-bearing, or short
-    series fall back to the scalar path. Both produce identical numbers.
+    aggregated daily series) are fit as ONE multi-RHS solve of
+    :func:`fit_forecast_multi_stacked`; a ragged, NaN-bearing or short
+    series goes through :func:`fit_forecast_series`, which cleans it and
+    calls the same kernel with one column.
     """
-    outs = []
+    frames, kvs, lens = [], [], []
     cohorts: dict[bytes, list] = {}
     for kv, ds_arr, y_arr in series:
         if len(y_arr) >= 5 and not np.isnan(y_arr).any():
@@ -364,41 +353,24 @@ def _fit_series_cohorts(
             out = fit_forecast_series(
                 ds_arr, y_arr, horizon, freq_days, **fit_kwargs
             )
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(
-                out[[*keys, "ds", "yhat", "yhat_lower", "yhat_upper"]]
-            )
+            frames.append(out)
+            kvs.append(kv)
+            lens.append(len(out))
     for members in cohorts.values():
-        ds_arr = members[0][1]
         Y = np.column_stack([y for _, _, y in members])
-        cohort = fit_forecast_multi_stacked(
-            ds_arr, Y, horizon, freq_days, **fit_kwargs
-        )
-        # the whole cohort arrives as ONE member-major frame; keys
-        # attach as np.repeat columns — per-member frame construction
-        # + per-key setitem was the measured pandas hot spot once the
-        # solve itself became shared (round 6)
-        for idx, k in enumerate(keys):
-            cohort[k] = np.repeat(
-                np.array([kv[idx] for kv, _, _ in members]), horizon
+        frames.append(
+            fit_forecast_multi_stacked(
+                members[0][1], Y, horizon, freq_days, **fit_kwargs
             )
-        outs.append(
-            cohort[[*keys, "ds", "yhat", "yhat_lower", "yhat_upper"]]
         )
-    return pd.concat(outs, ignore_index=True)
+        kvs += [kv for kv, _, _ in members]
+        lens += [horizon] * len(members)
+    return _with_keys(pd.concat(frames, ignore_index=True), kvs, lens, keys)
 
 
-def _forecast_schema(df: DataFrame, keys: list[str]) -> str:
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
-    return (
-        f"{key_schema}, ds timestamp, yhat double, "
-        "yhat_lower double, yhat_upper double"
-    )
+_FORECAST_SCHEMA = (
+    "ds timestamp, yhat double, yhat_lower double, yhat_upper double"
+)
 
 
 def forecast(
@@ -415,33 +387,21 @@ def forecast(
     Output schema: ``keys…, ds timestamp, yhat double, yhat_lower double,
     yhat_upper double`` — the published Prophet output contract.
     """
-    schema = _forecast_schema(df, keys)
 
     def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
         # Packed batch: many complete series per invocation (see
         # operators/packed.py), routed through the shared cohort core.
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        ds_all = pdf[ds_col].to_numpy()
-        y_all = pdf[y_col].to_numpy(dtype=float)
-
-        def _series():
-            for s, e in zip(starts, ends):
-                # already ds-ascending: packed_grouped_map sorts each
-                # partition by keys + [ds_col] (round 14, guide §1.2 —
-                # the per-series argsort re-sorted sorted data and
-                # forced two fancy-index copies per series)
-                yield tuple(a[s] for a in karrs), ds_all[s:e], y_all[s:e]
-
         return _fit_series_cohorts(
-            _series(), keys, horizon, freq_days, fit_kwargs
+            _series(pdf, keys, ds_col, y_col),
+            keys, horizon, freq_days, fit_kwargs,
         )
 
     # project early: the UDF is a pushdown barrier (SURVEY.md §4.3)
     slim = df.select(*keys, ds_col, y_col)
-    return packed_grouped_map(slim, keys, [ds_col], _fit_batch, schema)
+    return packed_grouped_map(
+        slim, keys, [ds_col], _fit_batch,
+        f"{_key_schema(df, keys)}, {_FORECAST_SCHEMA}",
+    )
 
 
 def forecast_on_grid(
@@ -481,14 +441,11 @@ def forecast_on_grid(
     divide the span. Keys with no observed rows produce no output —
     identical to the join form, whose key universe is the observed keys.
     """
-    schema = _forecast_schema(df, keys)
     step_us = int(freq_days * 86_400_000_000)
     lo64 = None if lo is None else np.datetime64(lo, "us")
     hi64 = None if hi is None else np.datetime64(hi, "us")
 
     def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
         if lo64 is None:
             b_lo = pdf["__lo"].to_numpy().astype("datetime64[us]")[0]
             b_hi = pdf["__hi"].to_numpy().astype("datetime64[us]")[0]
@@ -526,7 +483,8 @@ def forecast_on_grid(
     # stage paid more per-task Python round-trip than the whole fit
     # (0.33 s vs 0.19 s timed, measured round 14)
     return packed_grouped_map(
-        slim, keys, [ds_col], _fit_batch, schema, num_partitions=0
+        slim, keys, [ds_col], _fit_batch,
+        f"{_key_schema(df, keys)}, {_FORECAST_SCHEMA}", num_partitions=0,
     )
 
 
@@ -550,21 +508,12 @@ def backtest(
 
     Output: one row per (series, cutoff) with MAE/RMSE/coverage.
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
-    schema = (
-        f"{key_schema}, cutoff timestamp, n_test bigint, mae double, "
-        "rmse double, coverage double"
-    )
-    cutoff_ts = [np.datetime64(c) for c in cutoffs]
+    cutoff_ts = [np.datetime64(c, "us") for c in cutoffs]
 
-    def _bt_one(pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = pdf[ds_col].to_numpy().astype("datetime64[us]")
-        y = pdf[y_col].to_numpy().astype(float)
-        rows = []
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        ds = ds.astype("datetime64[us]")
+        actual = pd.DataFrame({"ds": ds, "y": y})
+        folds = []
         for co in cutoff_ts:
             train = ds <= co
             if train.sum() < 5:
@@ -572,43 +521,28 @@ def backtest(
             fc = fit_forecast_series(
                 ds[train], y[train], horizon, freq_days, **fit_kwargs
             )
-            merged = fc.merge(
-                pd.DataFrame({"ds": ds, "y": y}), on="ds", how="inner"
-            )
+            merged = fc.merge(actual, on="ds", how="inner")
             if merged.empty:
                 continue
             err = merged["y"] - merged["yhat"]
-            rows.append(
-                {
-                    "cutoff": pd.Timestamp(co),
-                    "n_test": len(merged),
-                    "mae": float(err.abs().mean()),
-                    "rmse": float(np.sqrt((err**2).mean())),
-                    "coverage": float(
-                        (
-                            (merged["y"] >= merged["yhat_lower"])
-                            & (merged["y"] <= merged["yhat_upper"])
-                        ).mean()
-                    ),
-                }
+            covered = (merged["y"] >= merged["yhat_lower"]) & (
+                merged["y"] <= merged["yhat_upper"]
             )
-        return pd.DataFrame(
-            rows, columns=["cutoff", "n_test", "mae", "rmse", "coverage"]
+            folds.append(
+                (co, len(merged), float(err.abs().mean()),
+                 float(np.sqrt((err**2).mean())), float(covered.mean()))
+            )
+        if not folds:
+            return None
+        return dict(
+            zip(["cutoff", "n_test", "mae", "rmse", "coverage"], zip(*folds))
         )
 
-    def _bt_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            out = _bt_one(g)
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(out[[*keys, "cutoff", "n_test", "mae", "rmse", "coverage"]])
-        return pd.concat(outs, ignore_index=True)
-
-    slim = df.select(*keys, ds_col, y_col)
-    return packed_grouped_map(slim, keys, [ds_col], _bt_batch, schema)
+    return _per_series(
+        df, keys, ds_col, y_col, _one,
+        "cutoff timestamp, n_test bigint, mae double, rmse double, "
+        "coverage double",
+    )
 
 
 def daily_series(
@@ -687,43 +621,22 @@ def holt_winters(
 
     Output: ``keys…, ds timestamp, yhat double, sse double``.
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
-    def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            ds_arr = g[ds_col].to_numpy()
-            y_arr = g[y_col].to_numpy(dtype=float)
-            order = np.argsort(ds_arr)
-            ds_arr, y_arr = ds_arr[order], y_arr[order]
-            if len(y_arr) < 2 * season_length or np.isnan(y_arr).any():
-                continue
-            yhat, sse = holt_winters_series(
-                y_arr, season_length, horizon, alpha, beta, gamma
-            )
-            future = ds_arr[-1] + step * np.arange(1, horizon + 1)
-            out = pd.DataFrame({"ds": future, "yhat": yhat, "sse": sse})
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(out[[*keys, "ds", "yhat", "sse"]])
-        if not outs:
-            return pd.DataFrame(columns=[*keys, "ds", "yhat", "sse"])
-        return pd.concat(outs, ignore_index=True)
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        if len(y) < 2 * season_length or np.isnan(y).any():
+            return None
+        yhat, sse = holt_winters_series(
+            y, season_length, horizon, alpha, beta, gamma
+        )
+        return {
+            "ds": ds[-1] + step * np.arange(1, horizon + 1),
+            "yhat": yhat,
+            "sse": np.full(horizon, sse),
+        }
 
-    slim = df.select(*keys, ds_col, y_col)
-    return packed_grouped_map(
-        slim,
-        keys,
-        [ds_col],
-        _fit_batch,
-        f"{key_schema}, ds timestamp, yhat double, sse double",
+    return _per_series(
+        df, keys, ds_col, y_col, _one, "ds timestamp, yhat double, sse double"
     )
 
 
@@ -749,26 +662,18 @@ def model_selection(
 
     Output: ``keys…, n_folds, mae_additive, mae_hw, champion``.
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     cutoff_ts = [np.datetime64(c) for c in cutoffs]
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = pdf[ds_col].to_numpy().astype("datetime64[us]")
-        y = pdf[y_col].to_numpy().astype(float)
-        order = np.argsort(ds)
-        ds, y = ds[order], y[order]
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        ds = ds.astype("datetime64[us]")
+        actual = pd.DataFrame({"ds": ds, "y": y})
         add_maes, hw_maes = [], []
         for co in cutoff_ts:
             train = ds <= co
             n_tr = int(train.sum())
             if n_tr < max(5, 2 * season_length):
                 continue
-            actual = pd.DataFrame({"ds": ds, "y": y})
             fc = fit_forecast_series(ds[train], y[train], horizon, freq_days)
             m1 = fc.merge(actual, on="ds", how="inner")
             hw_yhat, _ = holt_winters_series(
@@ -783,41 +688,18 @@ def model_selection(
             add_maes.append(float((m1["y"] - m1["yhat"]).abs().mean()))
             hw_maes.append(float((m2["y"] - m2["yhat"]).abs().mean()))
         if not add_maes:
-            return pd.DataFrame(
-                columns=["n_folds", "mae_additive", "mae_hw", "champion"]
-            )
+            return None
         ma, mh = float(np.mean(add_maes)), float(np.mean(hw_maes))
-        return pd.DataFrame(
-            [
-                {
-                    "n_folds": len(add_maes),
-                    "mae_additive": round(ma, 4),
-                    "mae_hw": round(mh, 4),
-                    "champion": "additive" if ma <= mh else "holt_winters",
-                }
-            ]
-        )
+        return {
+            "n_folds": [len(add_maes)],
+            "mae_additive": [round(ma, 4)],
+            "mae_hw": [round(mh, 4)],
+            "champion": ["additive" if ma <= mh else "holt_winters"],
+        }
 
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            out = _one(g)
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(
-                out[[*keys, "n_folds", "mae_additive", "mae_hw", "champion"]]
-            )
-        return pd.concat(outs, ignore_index=True)
-
-    return packed_grouped_map(
-        df.select(*keys, ds_col, y_col),
-        keys,
-        [ds_col],
-        _batch,
-        f"{key_schema}, n_folds long, mae_additive double, mae_hw double, "
-        "champion string",
+    return _per_series(
+        df, keys, ds_col, y_col, _one,
+        "n_folds long, mae_additive double, mae_hw double, champion string",
     )
 
 
@@ -844,61 +726,37 @@ def conformal_forecast(
 
     Output: ``keys…, ds, yhat, lo, hi, qhat`` (one qhat per series).
     """
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
 
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        ds = pdf[ds_col].to_numpy().astype("datetime64[us]")
-        y = pdf[y_col].to_numpy().astype(float)
-        order = np.argsort(ds)
-        ds, y = ds[order], y[order]
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        ds = ds.astype("datetime64[us]")
         n = len(y)
         n_cal = max(5, int(round(n * calib_frac)))
         n_tr = n - n_cal
         if n_tr < 5:
-            return pd.DataFrame(columns=["ds", "yhat", "lo", "hi", "qhat"])
+            return None
         fc_cal = fit_forecast_series(ds[:n_tr], y[:n_tr], n_cal, freq_days)
         merged = fc_cal.merge(
             pd.DataFrame({"ds": ds[n_tr:], "y": y[n_tr:]}), on="ds", how="inner"
         )
         if len(merged) < 3:
-            return pd.DataFrame(columns=["ds", "yhat", "lo", "hi", "qhat"])
+            return None
         res = np.sort(np.abs(merged["y"] - merged["yhat"]).to_numpy())
         m = len(res)
         rank = min(m - 1, int(np.ceil((m + 1) * (1 - alpha))) - 1)
         qhat = float(res[rank])
         fc = fit_forecast_series(ds, y, horizon, freq_days)
-        return pd.DataFrame(
-            {
-                "ds": fc["ds"],
-                "yhat": np.round(fc["yhat"], 4),
-                "lo": np.round(fc["yhat"] - qhat, 4),
-                "hi": np.round(fc["yhat"] + qhat, 4),
-                "qhat": round(qhat, 4),
-            }
-        )
+        yhat = fc["yhat"].to_numpy()
+        return {
+            "ds": fc["ds"].to_numpy(),
+            "yhat": np.round(yhat, 4),
+            "lo": np.round(yhat - qhat, 4),
+            "hi": np.round(yhat + qhat, 4),
+            "qhat": np.full(len(yhat), round(qhat, 4)),
+        }
 
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            out = _one(g)
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(out[[*keys, "ds", "yhat", "lo", "hi", "qhat"]])
-        return pd.concat(outs, ignore_index=True)
-
-    return packed_grouped_map(
-        df.select(*keys, ds_col, y_col),
-        keys,
-        [ds_col],
-        _batch,
-        f"{key_schema}, ds timestamp, yhat double, lo double, hi double, "
-        "qhat double",
+    return _per_series(
+        df, keys, ds_col, y_col, _one,
+        "ds timestamp, yhat double, lo double, hi double, qhat double",
     )
 
 
@@ -950,40 +808,20 @@ def theta_forecast(
     shuffle shape: one hash partitioning by key, thousands of series per
     Arrow batch, O(n·|grid|) numpy per series). Short series skipped.
     Output: ``keys…, ds timestamp, yhat double, alpha double``."""
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
     step = np.timedelta64(int(freq_days * 86_400_000_000), "us")
 
-    def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            ds_arr = g[ds_col].to_numpy()
-            y_arr = g[y_col].to_numpy(dtype=float)
-            order = np.argsort(ds_arr)
-            ds_arr, y_arr = ds_arr[order], y_arr[order]
-            if len(y_arr) < min_len or np.isnan(y_arr).any():
-                continue
-            yhat, a, _ = theta_series(y_arr, horizon)
-            future = ds_arr[-1] + step * np.arange(1, horizon + 1)
-            out = pd.DataFrame({"ds": future, "yhat": yhat, "alpha": a})
-            for k, v in zip(keys, kv):
-                out[k] = v
-            outs.append(out[[*keys, "ds", "yhat", "alpha"]])
-        if not outs:
-            return pd.DataFrame(columns=[*keys, "ds", "yhat", "alpha"])
-        return pd.concat(outs, ignore_index=True)
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        if len(y) < min_len or np.isnan(y).any():
+            return None
+        yhat, a, _ = theta_series(y, horizon)
+        return {
+            "ds": ds[-1] + step * np.arange(1, horizon + 1),
+            "yhat": yhat,
+            "alpha": np.full(horizon, a),
+        }
 
-    return packed_grouped_map(
-        df.select(*keys, ds_col, y_col),
-        keys,
-        [ds_col],
-        _fit_batch,
-        f"{key_schema}, ds timestamp, yhat double, alpha double",
+    return _per_series(
+        df, keys, ds_col, y_col, _one, "ds timestamp, yhat double, alpha double"
     )
 
 
@@ -1033,42 +871,26 @@ def croston_forecast(
     half-ties (…5 at the next digit) that different engines break
     differently (round-half-even vs half-away) — the round-13 lesson
     from this query's oracle upgrade."""
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
+    rnd = (
+        (lambda x: round(x, round_digits))
+        if round_digits is not None
+        else (lambda x: x)
     )
 
-    def _fit_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        rnd = (
-            (lambda x: round(x, round_digits))
-            if round_digits is not None
-            else (lambda x: x)
-        )
-        rows = []
-        for kv, g in pdf.groupby(keys, sort=False):
-            if not isinstance(kv, tuple):
-                kv = (kv,)
-            g2 = g
-            y_arr = g2[y_col].to_numpy(dtype=float)
-            if len(y_arr) < min_len:
-                continue
-            rate, z_hat, p_hat, n_dem = croston_series(y_arr, alpha)
-            rows.append(
-                (*kv, len(y_arr), n_dem, rnd(rate),
-                 rnd(z_hat), rnd(p_hat))
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "n_periods", "n_demands", "demand_rate",
-                     "z_hat", "p_hat"],
-        )
+    def _one(ds: np.ndarray, y: np.ndarray) -> dict | None:
+        if len(y) < min_len:
+            return None
+        rate, z_hat, p_hat, n_dem = croston_series(y, alpha)
+        return {
+            "n_periods": [len(y)],
+            "n_demands": [n_dem],
+            "demand_rate": [rnd(rate)],
+            "z_hat": [rnd(z_hat)],
+            "p_hat": [rnd(p_hat)],
+        }
 
-    return packed_grouped_map(
-        df.select(*keys, ds_col, y_col),
-        keys,
-        [ds_col],
-        _fit_batch,
-        f"{key_schema}, n_periods long, n_demands long, demand_rate double, "
-        "z_hat double, p_hat double",
+    return _per_series(
+        df, keys, ds_col, y_col, _one,
+        "n_periods long, n_demands long, demand_rate double, z_hat double, "
+        "p_hat double",
     )

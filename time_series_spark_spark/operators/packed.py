@@ -116,6 +116,12 @@ def key_slices(
     per-batch work should be vectorized, the per-group residue minimal).
     Callers slice whole-batch numpy arrays with ``arr[s:e]``; group key
     values are ``arr[s]``. Empty frames yield empty boundary arrays.
+
+    A null key is one group, as in Spark's ``groupBy``: Arrow hands a null
+    ``long``/``double``/timestamp key to pandas as NaN or NaT, which
+    compare unequal to themselves, so two missing values count as equal
+    in float and datetime columns (object columns hold ``None``, which
+    already compares equal).
     """
     n = len(pdf)
     if not n:
@@ -124,7 +130,11 @@ def key_slices(
     change = np.zeros(n - 1, dtype=bool)
     for k in keys:
         a = pdf[k].to_numpy()
-        change |= a[1:] != a[:-1]
+        differ = a[1:] != a[:-1]
+        if a.dtype.kind in "fmM":
+            na = pd.isna(a)
+            differ &= ~(na[1:] & na[:-1])
+        change |= differ
     cuts = np.flatnonzero(change) + 1
     starts = np.concatenate(([0], cuts))
     ends = np.concatenate((cuts, [n]))
@@ -142,8 +152,10 @@ def packed_grouped_map(
     """Grouped map over key-packed Arrow batches (see module docstring).
 
     ``apply_fn(pdf) -> pdf`` sees ≥1 complete groups sorted by
-    ``keys + order_cols``; it must handle every group in ``pdf``
-    (e.g. via ``pdf.groupby(keys, sort=False)``).
+    ``keys + order_cols``; it must handle every group in ``pdf``. Cut the
+    groups with :func:`key_slices` (slice whole-batch arrays by its
+    boundaries), not ``pdf.groupby(keys, sort=False)``, which hashes
+    every row and drops null-key groups.
 
     ``num_partitions``: None (default) pins the exchange to the session's
     shuffle parallelism; 0 leaves it AQE-coalescible (byte-sized). Pin
@@ -166,15 +178,6 @@ def packed_grouped_map(
         parted = df.repartition(num_partitions, *keys)
     parted = parted.sortWithinPartitions(*keys, *order_cols)
 
-    def _trailing_group_len(pdf: pd.DataFrame) -> int:
-        """Rows of the final key at the tail of a key-sorted frame."""
-        tail = np.ones(len(pdf), dtype=bool)
-        last = pdf.iloc[-1]
-        for k in keys:
-            tail &= pdf[k].to_numpy() == last[k]
-        rev = tail[::-1]
-        return len(pdf) if rev.all() else int(np.argmin(rev))
-
     def _mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         pending: pd.DataFrame | None = None
         for pdf in batches:
@@ -183,8 +186,8 @@ def packed_grouped_map(
                 pending = None
             if not len(pdf):
                 continue
-            split = len(pdf) - _trailing_group_len(pdf)
             # the tail group may continue in the next batch — hold it back
+            split = int(key_slices(pdf, keys)[0][-1])
             pending = pdf.iloc[split:].reset_index(drop=True)
             if split:
                 yield apply_fn(pdf.iloc[:split].reset_index(drop=True))

@@ -18,6 +18,7 @@ the input, so the report is stable run-to-run (pinned by tests).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 
 from time_series_spark_spark.session import local_df
@@ -42,7 +43,7 @@ def _walk(node, depth=0, out=None):
         kv = it.next()
         try:
             metrics[kv._1()] = kv._2().value()
-        except Exception:  # noqa: BLE001 — a metric without a value yet
+        except Py4JError:  # a metric without a value yet
             pass
     out.append((depth, node.nodeName(), metrics))
     children = node.children()

@@ -23,7 +23,7 @@ from __future__ import annotations
 
 import functools
 import uuid
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -346,6 +346,24 @@ def _write_partials_idempotent(df: DataFrame, batch_id: int, path: str) -> None:
     )
 
 
+def _run_partial_log(
+    stream: DataFrame,
+    fold_batch: Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None,
+) -> None:
+    """Run ``fold_batch`` on every micro-batch of ``stream`` until all
+    available input is consumed (``availableNow``). With a checkpoint, a
+    RESTARTED stream resumes after the last committed micro-batch
+    (source offsets + batch ids persist), so only newly arrived files are
+    processed — the recovery semantics a long-lived ingestion job needs.
+    Without one, availableNow replays from scratch and the idempotent
+    sink (:func:`_write_partials_idempotent`) absorbs it."""
+    writer = stream.writeStream.foreachBatch(fold_batch)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def incremental_bitmap_partials(
     stream_events: DataFrame,
     partials_path: str,
@@ -378,16 +396,7 @@ def incremental_bitmap_partials(
         )
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        # With a checkpoint, a RESTARTED stream resumes after the last
-        # committed micro-batch (source offsets + batch ids persist), so
-        # only newly arrived files are processed — the recovery semantics
-        # a long-lived ingestion job needs. Without one, availableNow
-        # replays from scratch and the idempotent sink absorbs it.
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def incremental_cm_partials(
@@ -408,16 +417,7 @@ def incremental_cm_partials(
             cm_partials(batch_df, F.col("user_id")), batch_id, partials_path
         )
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        # With a checkpoint, a RESTARTED stream resumes after the last
-        # committed micro-batch (source offsets + batch ids persist), so
-        # only newly arrived files are processed — the recovery semantics
-        # a long-lived ingestion job needs. Without one, availableNow
-        # replays from scratch and the idempotent sink absorbs it.
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def incremental_hist_partials(
@@ -449,16 +449,7 @@ def incremental_hist_partials(
         )
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        # With a checkpoint, a RESTARTED stream resumes after the last
-        # committed micro-batch (source offsets + batch ids persist), so
-        # only newly arrived files are processed — the recovery semantics
-        # a long-lived ingestion job needs. Without one, availableNow
-        # replays from scratch and the idempotent sink absorbs it.
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def read_incremental_hist(spark: SparkSession, partials_path: str) -> DataFrame:
@@ -490,6 +481,36 @@ def read_incremental_distinct(spark: SparkSession, partials_path: str) -> DataFr
     )
 
 
+def _interval_join(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    interval: str,
+    watermark: str,
+    how: str,
+) -> DataFrame:
+    """Watermarked stream-stream join of ``left`` to the ``right`` events
+    of the same ``key`` in ``[l_ts, l_ts + interval]``; ``how`` is the
+    join type. Output columns ``l_key, l_ts, l_id, r_key, r_ts, r_id``."""
+    l = left.withWatermark("ts", watermark).select(
+        F.col(key).alias("l_key"),
+        F.col("ts").alias("l_ts"),
+        F.col("event_id").alias("l_id"),
+    )
+    r = right.withWatermark("ts", watermark).select(
+        F.col(key).alias("r_key"),
+        F.col("ts").alias("r_ts"),
+        F.col("event_id").alias("r_id"),
+    )
+    return l.join(
+        r,
+        F.expr(
+            f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {interval}"
+        ),
+        how,
+    )
+
+
 def stream_stream_interval_join(
     left: DataFrame,
     right: DataFrame,
@@ -508,23 +529,7 @@ def stream_stream_interval_join(
     stream-stream join alive at production scale. Inner join emits on
     match; no result waits for watermark advancement.
     """
-    l = left.withWatermark("ts", watermark).select(
-        F.col(key).alias("l_key"),
-        F.col("ts").alias("l_ts"),
-        F.col("event_id").alias("l_id"),
-    )
-    r = right.withWatermark("ts", watermark).select(
-        F.col(key).alias("r_key"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_id"),
-    )
-    return l.join(
-        r,
-        F.expr(
-            f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {interval}"
-        ),
-        "inner",
-    )
+    return _interval_join(left, right, key, interval, watermark, "inner")
 
 
 def incremental_mg_partials(
@@ -548,13 +553,7 @@ def incremental_mg_partials(
             mg_partials(batch_df, item_col, counters), batch_id, partials_path
         )
 
-    (
-        sdf.writeStream.foreachBatch(fold_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", partials_path + "_ckpt")
-        .start()
-        .awaitTermination()
-    )
+    _run_partial_log(sdf, fold_batch, partials_path + "_ckpt")
 
 
 def read_incremental_mg(
@@ -605,23 +604,7 @@ def stream_stream_left_outer_join(
     pairs ≡ the batch inner join exactly; emitted null rows ≡ the batch
     anti-join restricted to the provably-expired region.
     """
-    l = left.withWatermark("ts", watermark).select(
-        F.col(key).alias("l_key"),
-        F.col("ts").alias("l_ts"),
-        F.col("event_id").alias("l_id"),
-    )
-    r = right.withWatermark("ts", watermark).select(
-        F.col(key).alias("r_key"),
-        F.col("ts").alias("r_ts"),
-        F.col("event_id").alias("r_id"),
-    )
-    return l.join(
-        r,
-        F.expr(
-            f"l_key = r_key AND r_ts >= l_ts AND r_ts <= l_ts + interval {interval}"
-        ),
-        "leftOuter",
-    )
+    return _interval_join(left, right, key, interval, watermark, "leftOuter")
 
 
 def incremental_hll_partials(
@@ -643,11 +626,7 @@ def incremental_hll_partials(
         ).agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def read_incremental_hll_7d(
@@ -692,11 +671,7 @@ def incremental_kll_partials(
         p = kll_partials(batch_df, ["event_type"], "value")
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def read_incremental_kll_quantiles(
@@ -735,11 +710,7 @@ def incremental_fd_partials(
         )
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_embeddings.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_embeddings, fold_batch, checkpoint_dir)
 
 
 def read_incremental_fd(spark: SparkSession, partials_path: str, ell: int = 16):
@@ -995,11 +966,7 @@ def incremental_sprt_partials(
         )
         _write_partials_idempotent(p, batch_id, partials_path)
 
-    writer = stream_events.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_events, fold_batch, checkpoint_dir)
 
 
 def read_sprt_decisions(spark, partials_path: str) -> DataFrame:
