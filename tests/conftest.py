@@ -12,3 +12,13 @@ def spark():
 
     spark = get_spark("pytest", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture()
+def tiny_batches(spark):
+    """7-row Arrow batches, so packed groups straddle batch boundaries."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield spark
+    spark.conf.set(key, old)

@@ -12,19 +12,9 @@ from __future__ import annotations
 
 import pandas as pd
 import pyspark.sql.functions as F
-import pytest
 
 from time_series_spark_spark.operators.packed import packed_grouped_map
 from time_series_spark_spark.operators.timeseries import ewma
-
-
-@pytest.fixture()
-def tiny_batches(spark):
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "7")
-    yield spark
-    spark.conf.set(key, old)
 
 
 def _mixed_groups(spark):
@@ -63,24 +53,29 @@ def test_groups_arrive_complete_and_sorted(tiny_batches):
 
 
 def test_ewma_correct_across_batch_boundaries(tiny_batches):
+    """ewma per series in 7-row batches, including a null-key series longer
+    than one batch: Spark sorts it first, so one batch holds only it."""
     spark = tiny_batches
     pdf = pd.DataFrame(
         {
-            "key": ["a"] * 20 + ["b"] * 3 + ["c"] * 1,
-            "t": list(range(20)) + list(range(3)) + [0],
-            "v": [float(x) for x in range(24)],
+            "key": ["a"] * 20 + ["b"] * 3 + ["c"] * 1 + [None] * 9,
+            "t": list(range(20)) + list(range(3)) + [0] + list(range(9)),
+            "v": [float(x) for x in range(33)],
         }
     )
-    df = spark.createDataFrame(pdf).orderBy(F.rand(seed=3))
+    df = spark.createDataFrame(pdf, "key string, t long, v double").orderBy(
+        F.rand(seed=3)
+    )
     got = (
         ewma(df, ["key"], "t", "v", alpha=0.25)
         .toPandas()
         .sort_values(["key", "t"])
         .reset_index(drop=True)
     )
+    assert got["key"].isna().sum() == 9
     expected = (
         pdf.sort_values(["key", "t"])
-        .groupby("key")["v"]
+        .groupby("key", dropna=False)["v"]
         .transform(lambda s: s.ewm(alpha=0.25, adjust=True).mean())
         .reset_index(drop=True)
     )
@@ -283,3 +278,87 @@ def test_per_series_operators_match_local_reference_across_batches(tiny_batches)
           ["ds", "yhat", "lo", "hi", "qhat"])
     # the 3-row series is too short for every operator
     assert all(r[0] != 0 for r in hw + theta + croston + bt + sel + conf)
+
+
+def test_mining_operators_match_local_reference_across_batches(tiny_batches):
+    """The per-series mining operators (matrix_profile, kleinberg_bursts,
+    dominant_periods, lomb_scargle_periods, pelt_changepoints,
+    change_points) over ragged irregular series, one with a null key, in
+    7-row Arrow batches equal their per-series functions run on the
+    driver. Series too short for an operator are skipped; the null key is
+    one series."""
+    import numpy as np
+
+    from time_series_spark_spark.operators import timeseries as tso
+    from time_series_spark_spark.operators import tsmining as tsm
+
+    spark = tiny_batches
+    rng = np.random.default_rng(11)
+    lengths = {None: 40, 0: 3, 1: 9, 2: 17, 3: 24, 4: 33, 5: 50}
+    series = {}
+    for k, n in lengths.items():
+        # hours apart, with a run one minute apart (a burst), and a mean
+        # shift half way (a change point)
+        gaps = 3600 * rng.integers(1, 9, n)
+        gaps[n // 3 : n // 3 + n // 4] = 60
+        ts = np.datetime64("2024-01-01", "us") + np.timedelta64(1, "s") * np.cumsum(gaps)
+        shift = np.where(np.arange(n) >= n // 2, 6.0, 0.0)
+        series[k] = (ts, np.round(shift + rng.normal(size=n), 3))
+    df = spark.createDataFrame(
+        [(k, t.item(), float(v)) for k, (ts, v) in series.items()
+         for t, v in zip(ts, v)],
+        "k long, ts timestamp, v double",
+    ).orderBy(F.rand(seed=5))
+
+    def ns(t):
+        return t.astype("datetime64[ns]")
+
+    mp, bursts, dom, ls, pelt, cusum = [], [], [], [], [], []
+    for k, (ts, v) in series.items():
+        n = len(v)
+        if n >= 8:
+            prof, pidx = tsm._mass_distance_profile(v, 4)
+            mot, dis = int(np.argmin(prof)), int(np.argmax(prof))
+            mp.append((k, n, mot, int(pidx[mot]), round(float(prof[mot]), 6),
+                       dis, round(float(prof[dis]), 6)))
+            period, frac = tsm.estimate_period_series(v)
+            dom.append((k, n, round(period, 4), round(frac, 4)))
+        t_us = ts.astype(np.int64)
+        for i, j, cnt in tsm.kleinberg_bursts_series(t_us):
+            bursts.append((k, ns(ts[i]), ns(ts[j]), cnt))
+        if n >= 16:
+            t_s = ns(ts).astype(np.int64).astype(np.float64) / 1e9
+            period, power = tsm._lomb_scargle_one(t_s - t_s[0], v)
+            ls.append((k, n, period, round(power, 4)))
+        b = [0, *tsm._pelt_one(v), n]
+        pelt += [(k, i, ns(ts[b[i]]), b[i + 1] - b[i],
+                  round(float(v[b[i]:b[i + 1]].mean()), 4))
+                 for i in range(len(b) - 1)]
+        cusum += [(k, ns(t), d, st) for t, d, st in tso._cusum_one(ts, v, 0.5, 5.0)]
+
+    def check(got, rows, cols):
+        want = pd.DataFrame(rows, columns=["k", *cols])
+        want["k"] = want["k"].astype(float)
+        order = ["k", cols[0]]
+        got = got.toPandas().sort_values(order).reset_index(drop=True)
+        want = want.sort_values(order).reset_index(drop=True)
+        assert got["k"].isna().any()  # the null-key series is present
+        pd.testing.assert_frame_equal(
+            got, want, check_dtype=False, rtol=1e-12, atol=1e-12
+        )
+
+    check(tsm.matrix_profile(df, ["k"], "ts", "v", 4), mp,
+          ["n_points", "motif_idx", "motif_nn_idx", "motif_dist",
+           "discord_idx", "discord_dist"])
+    check(tsm.kleinberg_bursts(df, ["k"], "ts"), bursts,
+          ["burst_start", "burst_end", "n_events"])
+    check(tsm.dominant_periods(df, ["k"], "ts", "v"), dom,
+          ["n_points", "period", "power_frac"])
+    check(tsm.lomb_scargle_periods(df, ["k"], "ts", "v"), ls,
+          ["n_points", "best_period_hours", "ls_power"])
+    check(tsm.pelt_changepoints(df, ["k"], "ts", "v"), pelt,
+          ["seg_idx", "start_ts", "n_points", "seg_mean"])
+    check(tso.change_points(df, ["k"], "ts", "v"), cusum,
+          ["ts", "direction", "stat"])
+    # the 3-row series is too short for the length-gated operators
+    assert all(r[0] != 0 for r in mp + dom + ls)

@@ -175,17 +175,20 @@ def test_dtw_sparse_matches_dense(spark):
     ]
 
 
-def test_dtw_sparse_self_matches_sparse(spark):
+def test_dtw_sparse_self_matches_sparse(tiny_batches):
     """dtw_topk_sparse_self (query series folded into the plan via
     per-partition replication, round 15) must return exactly what
     dtw_topk_sparse returns with the same query collected driver-side —
-    including when the query key's rows sit among the candidates and
-    when the per-pid query copies collide into one partition."""
+    including when the query key's rows sit among the candidates, when
+    the per-pid query copies collide into one partition, and when the
+    nearest candidate has a null key (one series, as in dtw_topk_sparse)
+    and spans 7-row Arrow batches."""
     from time_series_spark_spark.operators.tsmining import (
         dtw_topk_sparse,
         dtw_topk_sparse_self,
     )
 
+    spark = tiny_batches
     n = 24
     rows = []
     rng = np.random.default_rng(23)
@@ -201,15 +204,18 @@ def test_dtw_sparse_self_matches_sparse(spark):
         ]
         if not any(r[0] == s for r in rows):
             rows.append((s, 0, 0.0, n))
-    long_df = spark.createDataFrame(rows, "sid long, i int, v double, n int")
     q = dense[0]
+    # a null-key candidate with the query's shape: DTW 0, the nearest
+    rows += [(None, i, float(2 * q[i] + 1), n) for i in range(n)]
+    long_df = spark.createDataFrame(rows, "sid long, i int, v double, n int")
     sparse = dtw_topk_sparse(
-        long_df.filter(F.col("sid") != 0).select("sid", "i", "v"),
+        long_df.filter(~F.col("sid").eqNullSafe(0)).select("sid", "i", "v"),
         "sid", "i", "v", n, q, k=5, band_frac=0.2,
     ).collect()
     selfed = dtw_topk_sparse_self(
         long_df, "sid", "i", "v", "n", query_key=0, k=5, band_frac=0.2
     ).collect()
+    assert sparse[0]["sid"] is None
     assert [(r["sid"], r["dtw"]) for r in selfed] == [
         (r["sid"], r["dtw"]) for r in sparse
     ]

@@ -26,13 +26,20 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from time_series_spark_spark.operators.packed import packed_grouped_map
+from time_series_spark_spark.operators.packed import (
+    key_schema,
+    key_slices,
+    packed_grouped_map,
+    per_series,
+)
 
 
 def event_order_key(ts_col: str = "ts", id_col: str = "event_id") -> Column:
@@ -641,6 +648,45 @@ def lttb_batch(
     return keep
 
 
+def _packed_keep(
+    df: DataFrame,
+    ts: str,
+    value: str,
+    keys: list[str],
+    keep,
+) -> DataFrame:
+    """The rows (``keys…, ts, value``) of ``df`` that a downsampler keeps,
+    on the packed grouped-map path: ``keep(t, v, starts, ends)`` gets one
+    Arrow batch's µs times and values as doubles, cut into series at
+    :func:`key_slices` boundaries, and returns a boolean mask or
+    ascending positions over the batch rows. Shared by :func:`lttb` and
+    :func:`swinging_door`."""
+    base = df.select(
+        *keys,
+        F.unix_micros(F.col(ts)).alias("__t"),
+        F.col(value).cast("double").alias("__v"),
+    )
+
+    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
+        starts, ends = key_slices(pdf, keys)
+        t = pdf["__t"].to_numpy(np.float64)
+        take = keep(t, pdf["__v"].to_numpy(), starts, ends)
+        return pdf.iloc[take].reset_index(drop=True)
+
+    out = packed_grouped_map(
+        base,
+        keys,
+        ["__t"],
+        _apply,
+        f"{key_schema(df, keys)}, __t long, __v double",
+    )
+    return out.select(
+        *keys,
+        F.timestamp_micros(F.col("__t")).alias(ts),
+        F.col("__v").alias(value),
+    )
+
+
 def lttb(
     df: DataFrame,
     ts: str,
@@ -659,42 +705,8 @@ def lttb(
     SQL-expressible (sequential dependence on the previously selected
     point) → rows-only + property tests.
     """
-    base = df.select(
-        *keys, F.unix_micros(F.col(ts)).alias("__t"), F.col(value).alias("__v")
-    )
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Series boundaries come from a run-length scan of the key
-        # columns (the packed batch is key-contiguous by contract); one
-        # keep-mask over the batch keeps the input row order.
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, keys)
-        keep = lttb_batch(
-            pdf["__t"].to_numpy(np.float64),
-            pdf["__v"].to_numpy(np.float64),
-            starts,
-            ends,
-            n_out,
-        )
-        return pdf[keep].reset_index(drop=True)
-
-    key_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in base.schema.fields
-        if f.name in keys
-    )
-    out = packed_grouped_map(
-        base,
-        keys,
-        ["__t"],
-        _apply,
-        f"{key_schema}, __t long, __v double",
-    )
-    return out.select(
-        *keys,
-        F.timestamp_micros(F.col("__t")).alias(ts),
-        F.col("__v").alias(value),
+    return _packed_keep(
+        df, ts, value, keys, functools.partial(lttb_batch, n_out=n_out)
     )
 
 
@@ -1004,35 +1016,8 @@ def swinging_door(
     many series per Arrow batch). Rows-only + the reconstruction-bound
     property test in tests/test_analytics.py.
     """
-    from time_series_spark_spark.operators.packed import packed_grouped_map
-
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(ts)).alias("__t"),
-        F.col(value).cast("double").alias("__v"),
-    )
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
-        if not len(pdf):
-            return pdf.iloc[:0]
-        starts, ends = key_slices(pdf, keys)
-        t_all = pdf["__t"].to_numpy()
-        v_all = pdf["__v"].to_numpy()
-        take = _sd_batch(t_all, v_all, starts, ends, tolerance)
-        return pdf.iloc[take].reset_index(drop=True)
-
-    key_schema = ", ".join(
-        f"{k} {dict(base.dtypes)[k]}" for k in keys
-    )
-    out = packed_grouped_map(
-        base, keys, ["__t"], _apply, f"{key_schema}, __t long, __v double"
-    )
-    return out.select(
-        *keys,
-        F.timestamp_micros(F.col("__t")).alias(ts),
-        F.col("__v").alias(value),
+    return _packed_keep(
+        df, ts, value, keys, functools.partial(_sd_batch, tolerance=tolerance)
     )
 
 
@@ -1042,6 +1027,28 @@ def swinging_door(
 
 RL_PERIOD_US = 21_600_000_000  # one token per 6 hours
 RL_CAPACITY = 2                # burst capacity (tokens)
+
+
+def token_bucket_replay(
+    ts_us: list[int], last_us: int | None, stok: int, period_us: int,
+    cap_p: int,
+) -> tuple[list[int], list[int], tuple[int | None, int]]:
+    """Replay one key's events (µs times, in time order) through the
+    token bucket from state ``(last_us, stok)``: refill ``stok`` by the
+    gap since ``last_us`` (none before the first event) capped at
+    ``cap_p``, then admit when at least ``period_us`` is banked. Returns
+    the per-event ``admitted`` flags and ``tokens_after_p``, and the
+    state ``(last_us, stok)`` after the last event. The one recurrence of
+    :func:`token_bucket_flags` and the streaming J15 job."""
+    admitted, after = [], []
+    for t in ts_us:
+        if last_us is not None:
+            stok = min(cap_p, stok + (t - last_us))
+        last_us = t
+        admitted.append(int(stok >= period_us))
+        stok -= period_us * admitted[-1]
+        after.append(stok)
+    return admitted, after, (last_us, stok)
 
 
 def token_bucket_flags(
@@ -1064,46 +1071,22 @@ def token_bucket_flags(
     with (last_us, stok) as the two state scalars, and the two paths
     are equivalence-pinned in tests.
     Output: key, id, ts, admitted (int), tokens_after_p (stok)."""
-    from time_series_spark_spark.operators.packed import packed_grouped_map
-
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     cap_p = capacity * period_us
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, [key])
-        k_all = pdf[key].to_numpy()
-        ids = pdf[id_col].to_numpy()
-        ts_objs = list(pdf[ts_col])  # pandas Timestamps, as before
-        rows = []
-        for s, e in zip(starts, ends):
-            kv = k_all[s]
-            stok = cap_p
-            last_us = None
-            for i in range(s, e):
-                ts = ts_objs[i]
-                ts_us = int(ts.value) // 1000
-                if last_us is not None:
-                    stok = min(cap_p, stok + (ts_us - last_us))
-                last_us = ts_us
-                if stok >= period_us:
-                    stok -= period_us
-                    adm = 1
-                else:
-                    adm = 0
-                rows.append((kv, int(ids[i]), ts, adm, stok))
-        return pd.DataFrame(
-            rows,
-            columns=[key, id_col, ts_col, "admitted", "tokens_after_p"],
+    def _fit(ids: np.ndarray, ts: np.ndarray) -> dict:
+        ts_us = ts.astype("datetime64[us]").astype(np.int64).tolist()
+        admitted, after, _ = token_bucket_replay(
+            ts_us, None, cap_p, period_us, cap_p
         )
+        return {
+            id_col: ids,
+            ts_col: ts,
+            "admitted": admitted,
+            "tokens_after_p": after,
+        }
 
-    return packed_grouped_map(
-        df.select(key, id_col, ts_col),
-        [key],
-        [ts_col, id_col],
-        _apply,
-        f"{key} {in_fields[key]}, {id_col} {in_fields[id_col]},"
-        f" {ts_col} {in_fields[ts_col]}, admitted int,"
+    return per_series(
+        df, [key], [ts_col, id_col], [id_col, ts_col], _fit,
+        f"{key_schema(df, [id_col, ts_col])}, admitted int,"
         " tokens_after_p long",
     )

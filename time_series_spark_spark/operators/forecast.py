@@ -30,8 +30,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from time_series_spark_spark.operators.packed import (
+    key_schema,
     key_slices,
     packed_grouped_map,
+    per_series,
+    series,
+    with_keys,
 )
 
 
@@ -256,75 +260,11 @@ def fit_forecast_multi_stacked(
     )
 
 
-def _series(pdf: pd.DataFrame, keys: list[str], ds_col: str, y_col: str):
-    """Walk a packed batch: yields ``(key values, ds, y)`` per series, in
-    batch order, cut at :func:`key_slices` boundaries. Each series is
-    already ds-ascending: ``packed_grouped_map`` sorts each partition by
-    ``keys + [ds_col]``, so no per-series sort is needed."""
-    starts, ends = key_slices(pdf, keys)
-    karrs = [pdf[k].to_numpy() for k in keys]
-    ds_all = pdf[ds_col].to_numpy()
-    y_all = pdf[y_col].to_numpy(dtype=float)
-    for s, e in zip(starts, ends):
-        yield tuple(a[s] for a in karrs), ds_all[s:e], y_all[s:e]
-
-
-def _with_keys(
-    out: pd.DataFrame, kvs: list[tuple], lens: list[int], keys: list[str]
-) -> pd.DataFrame:
-    """Put the key columns in front of ``out``, whose rows are the series'
-    outputs back to back: series i owns ``lens[i]`` rows with key values
-    ``kvs[i]``. One ``np.repeat`` per key column, not one setitem per
-    series."""
-    for i, k in enumerate(keys):
-        out.insert(i, k, np.repeat(np.array([kv[i] for kv in kvs]), lens))
-    return out
-
-
-def _key_schema(df: DataFrame, keys: list[str]) -> str:
-    """DDL of ``df``'s key columns, the leading fields of every output."""
-    return ", ".join(
-        f"{f.name} {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name in keys
-    )
-
-
-def _per_series(
-    df: DataFrame,
-    keys: list[str],
-    ds_col: str,
-    y_col: str,
-    fit,
-    out_schema: str,
-) -> DataFrame:
-    """Run ``fit(ds, y)`` on every series of ``df`` on the packed
-    grouped-map path; the output is ``keys…`` followed by ``out_schema``'s
-    fields. ``fit`` returns a dict of equal-length 1-D columns named as
-    in ``out_schema``, or None to emit nothing for the series."""
-    cols = [f.split()[0] for f in out_schema.split(",")]
-
-    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        kvs, parts = [], []
-        for kv, ds, y in _series(pdf, keys, ds_col, y_col):
-            part = fit(ds, y)
-            if part is not None:
-                kvs.append(kv)
-                parts.append(part)
-        if not parts:
-            return pd.DataFrame(columns=[*keys, *cols])
-        out = pd.DataFrame(
-            {c: np.concatenate([p[c] for p in parts]) for c in cols}
-        )
-        return _with_keys(out, kvs, [len(p[cols[0]]) for p in parts], keys)
-
-    return packed_grouped_map(
-        df.select(*keys, ds_col, y_col),
-        keys,
-        [ds_col],
-        _batch,
-        f"{_key_schema(df, keys)}, {out_schema}",
-    )
+def _y_double(df: DataFrame, y_col: str) -> DataFrame:
+    """``df`` with ``y_col`` cast to double, the type every kernel here
+    computes in (Arrow hands a decimal column to pandas as objects, a
+    null-free integer column as int64)."""
+    return df.withColumn(y_col, F.col(y_col).cast("double"))
 
 
 def _fit_series_cohorts(
@@ -365,7 +305,7 @@ def _fit_series_cohorts(
         )
         kvs += [kv for kv, _, _ in members]
         lens += [horizon] * len(members)
-    return _with_keys(pd.concat(frames, ignore_index=True), kvs, lens, keys)
+    return with_keys(pd.concat(frames, ignore_index=True), kvs, lens, keys)
 
 
 _FORECAST_SCHEMA = (
@@ -392,15 +332,15 @@ def forecast(
         # Packed batch: many complete series per invocation (see
         # operators/packed.py), routed through the shared cohort core.
         return _fit_series_cohorts(
-            _series(pdf, keys, ds_col, y_col),
+            series(pdf, keys, [ds_col, y_col]),
             keys, horizon, freq_days, fit_kwargs,
         )
 
     # project early: the UDF is a pushdown barrier (SURVEY.md §4.3)
-    slim = df.select(*keys, ds_col, y_col)
+    slim = _y_double(df, y_col).select(*keys, ds_col, y_col)
     return packed_grouped_map(
         slim, keys, [ds_col], _fit_batch,
-        f"{_key_schema(df, keys)}, {_FORECAST_SCHEMA}",
+        f"{key_schema(df, keys)}, {_FORECAST_SCHEMA}",
     )
 
 
@@ -460,14 +400,14 @@ def forecast_on_grid(
         grid = b_lo + step * np.arange(n)
         idx_all = ((ds_all - b_lo) // step).astype(np.int64)
 
-        def _series():
+        def _dense():
             for s, e in zip(starts, ends):
                 dense = np.zeros(n)
                 dense[idx_all[s:e]] = y_all[s:e]
                 yield tuple(a[s] for a in karrs), grid, dense
 
         return _fit_series_cohorts(
-            _series(), keys, horizon, freq_days, fit_kwargs
+            _dense(), keys, horizon, freq_days, fit_kwargs
         )
 
     slim = df.select(*keys, ds_col, y_col)
@@ -484,7 +424,7 @@ def forecast_on_grid(
     # (0.33 s vs 0.19 s timed, measured round 14)
     return packed_grouped_map(
         slim, keys, [ds_col], _fit_batch,
-        f"{_key_schema(df, keys)}, {_FORECAST_SCHEMA}", num_partitions=0,
+        f"{key_schema(df, keys)}, {_FORECAST_SCHEMA}", num_partitions=0,
     )
 
 
@@ -538,8 +478,8 @@ def backtest(
             zip(["cutoff", "n_test", "mae", "rmse", "coverage"], zip(*folds))
         )
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one,
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
         "cutoff timestamp, n_test bigint, mae double, rmse double, "
         "coverage double",
     )
@@ -635,8 +575,9 @@ def holt_winters(
             "sse": np.full(horizon, sse),
         }
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one, "ds timestamp, yhat double, sse double"
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
+        "ds timestamp, yhat double, sse double",
     )
 
 
@@ -697,8 +638,8 @@ def model_selection(
             "champion": ["additive" if ma <= mh else "holt_winters"],
         }
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one,
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
         "n_folds long, mae_additive double, mae_hw double, champion string",
     )
 
@@ -754,8 +695,8 @@ def conformal_forecast(
             "qhat": np.full(len(yhat), round(qhat, 4)),
         }
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one,
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
         "ds timestamp, yhat double, lo double, hi double, qhat double",
     )
 
@@ -820,8 +761,9 @@ def theta_forecast(
             "alpha": np.full(horizon, a),
         }
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one, "ds timestamp, yhat double, alpha double"
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
+        "ds timestamp, yhat double, alpha double",
     )
 
 
@@ -889,8 +831,8 @@ def croston_forecast(
             "p_hat": [rnd(p_hat)],
         }
 
-    return _per_series(
-        df, keys, ds_col, y_col, _one,
+    return per_series(
+        _y_double(df, y_col), keys, [ds_col], [ds_col, y_col], _one,
         "n_periods long, n_demands long, demand_rate double, z_hat double, "
         "p_hat double",
     )

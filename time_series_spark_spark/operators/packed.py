@@ -9,8 +9,9 @@ dominates the actual per-series compute by 10-100×.
 ``packed_grouped_map`` keeps the same single hash shuffle but streams
 each partition through ``mapInPandas`` in bounded Arrow batches
 (``spark.sql.execution.arrow.maxRecordsPerBatch`` rows), so thousands of
-groups share one Python invocation and the per-group cost falls to a
-pandas-level groupby step. Groups that straddle a batch boundary are
+groups share one Python invocation and the per-group cost falls to one
+run-length scan of the key columns (:func:`key_slices`) and a slice of
+whole-batch numpy arrays. Groups that straddle a batch boundary are
 carried over to the next batch, so memory is O(batch + largest group),
 never O(partition) — the property that keeps this shape viable on a
 1000-executor cluster where a partition can hold millions of rows.
@@ -20,6 +21,12 @@ Contract: rows for one key combination land in one partition
 (``sortWithinPartitions(keys + order_cols)``); ``apply_fn`` receives a
 pandas DataFrame holding only COMPLETE groups, pre-sorted, and may
 return any number of rows matching ``schema``.
+
+An operator that runs one function per series calls :func:`per_series`,
+which owns the whole walk: projection, key DDL, batch cut and output
+frame. An operator whose kernel works on a whole batch at once (Kalman,
+Hurst, LTTB, DTW) calls ``packed_grouped_map`` and cuts the batch with
+:func:`key_slices`; both take their key DDL from :func:`key_schema`.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ import numpy as np
 import pandas as pd
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType
 
 
 def shuffle_parallelism(df: DataFrame) -> int:
@@ -152,9 +160,10 @@ def packed_grouped_map(
     """Grouped map over key-packed Arrow batches (see module docstring).
 
     ``apply_fn(pdf) -> pdf`` sees ≥1 complete groups sorted by
-    ``keys + order_cols``; it must handle every group in ``pdf``. Cut the
-    groups with :func:`key_slices` (slice whole-batch arrays by its
-    boundaries), not ``pdf.groupby(keys, sort=False)``, which hashes
+    ``keys + order_cols``; it must handle every group in ``pdf``. A
+    function of one series belongs in :func:`per_series`; a batch kernel
+    cuts the groups with :func:`key_slices` (slice whole-batch arrays by
+    its boundaries), not ``pdf.groupby(keys, sort=False)``, which hashes
     every row and drops null-key groups.
 
     ``num_partitions``: None (default) pins the exchange to the session's
@@ -195,3 +204,75 @@ def packed_grouped_map(
             yield apply_fn(pending)
 
     return parted.mapInPandas(_mapper, schema)
+
+
+def key_schema(df: DataFrame, cols: list[str]) -> str:
+    """DDL of ``df``'s columns ``cols``, in ``cols`` order: the leading
+    fields of a packed operator's output, which keep their input types."""
+    types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    return ", ".join(f"{c} {types[c]}" for c in cols)
+
+
+def series(pdf: pd.DataFrame, keys: list[str], cols: list[str]):
+    """Walk a packed batch: yields ``(key values, *slices)`` per series, in
+    batch order, cut at :func:`key_slices` boundaries, where the slices
+    are of ``pdf[c].to_numpy()`` for each ``c`` in ``cols``. Each series
+    is already in order: ``packed_grouped_map`` sorts each partition by
+    ``keys + order_cols``, so no per-series sort is needed."""
+    starts, ends = key_slices(pdf, keys)
+    karrs = [pdf[k].to_numpy() for k in keys]
+    arrs = [pdf[c].to_numpy() for c in cols]
+    for s, e in zip(starts, ends):
+        yield (tuple(a[s] for a in karrs), *(a[s:e] for a in arrs))
+
+
+def with_keys(
+    out: pd.DataFrame, kvs: list[tuple], lens: list[int], keys: list[str]
+) -> pd.DataFrame:
+    """Put the key columns in front of ``out``, whose rows are the series'
+    outputs back to back: series i owns ``lens[i]`` rows with key values
+    ``kvs[i]``. One ``np.repeat`` per key column, not one setitem per
+    series."""
+    for i, k in enumerate(keys):
+        out.insert(i, k, np.repeat(np.array([kv[i] for kv in kvs]), lens))
+    return out
+
+
+def per_series(
+    df: DataFrame,
+    keys: list[str],
+    order_cols: list[str],
+    cols: list[str],
+    fit: Callable[..., dict | None],
+    out_schema: str,
+) -> DataFrame:
+    """Run ``fit(*slices)`` once per series of ``df`` on the packed
+    grouped-map path, where the slices are the series' rows of the
+    ``cols`` columns (see :func:`series`), sorted by ``order_cols``. Only
+    ``keys + order_cols + cols`` cross into Python. ``fit`` returns a dict
+    of equal-length 1-D columns named as in ``out_schema``, or None to
+    emit nothing for the series. The output is ``keys…`` (input types)
+    followed by ``out_schema``'s fields, one frame per batch."""
+    out_cols = DataType.fromDDL(out_schema).names
+
+    def _batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        kvs, parts = [], []
+        for kv, *slices in series(pdf, keys, cols):
+            part = fit(*slices)
+            if part is not None:
+                kvs.append(kv)
+                parts.append(part)
+        if not parts:
+            return pd.DataFrame(columns=[*keys, *out_cols])
+        out = pd.DataFrame(
+            {c: np.concatenate([p[c] for p in parts]) for c in out_cols}
+        )
+        return with_keys(out, kvs, [len(p[out_cols[0]]) for p in parts], keys)
+
+    return packed_grouped_map(
+        df.select(*dict.fromkeys([*keys, *order_cols, *cols])),
+        keys,
+        order_cols,
+        _batch,
+        f"{key_schema(df, keys)}, {out_schema}",
+    )

@@ -3,8 +3,9 @@
 Every operator is a composition of declarative DataFrame primitives — the
 plans shuffle exactly once on the series key and then stay within a single
 window sort, which is the minimal physical plan for per-series semantics on
-a cluster. The only Python-side operator is EWMA (inherently recursive →
-``applyInPandas``); everything else is JVM-side and whole-stage codegen'd.
+a cluster. The Python-side operators are EWMA and CUSUM change points
+(inherently recursive → the packed grouped map of ``operators/packed.py``);
+everything else is JVM-side and whole-stage codegen'd.
 
 Scale notes (100 TB):
 - ``sessionize``/``ffill``/``asof_join`` shuffle once by key and sort within
@@ -19,9 +20,18 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from time_series_spark_spark.operators.packed import (
+    key_schema,
+    key_slices,
+    packed_grouped_map,
+    per_series,
+    pin_partitions,
+)
 
 
 # --------------------------------------------------------------------------
@@ -154,8 +164,6 @@ def sessionize(
     coalesce the window/serialization stage to a single task (measured:
     events_sessionize 0.33 -> 0.12 s; bytes shuffled unchanged).
     """
-    from time_series_spark_spark.operators.packed import pin_partitions
-
     df = pin_partitions(df, key)
     w = Window.partitionBy(key).orderBy(ts_col)
     prev_ts = F.lag(ts_col).over(w)
@@ -405,23 +413,20 @@ def ewma(
     so the UDF runs through :func:`packed_grouped_map` — one hash shuffle,
     thousands of series per Arrow batch, cython ``GroupBy.ewm`` inside the
     batch — instead of one applyInPandas round trip per key (measured 6.6 s
-    → packed at sf0.1's 1 500 users; the per-group dispatch dominated)."""
-    from time_series_spark_spark.operators.packed import packed_grouped_map
-
-    schema_fields = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
-    )
-    schema = f"{schema_fields}, {out_col} double"
-    cols = [f.name for f in df.schema.fields]
+    → packed at sf0.1's 1 500 users; the per-group dispatch dominated).
+    A null key is one series, as in Spark's ``groupBy``."""
+    schema = f"{key_schema(df, df.columns)}, {out_col} double"
 
     def _ewma_packed(pdf):
-        # pdf arrives sorted by keys+order; ewm result carries the original
-        # row index in its last level — align by index, order-independent.
-        ew = pdf.groupby(keys, sort=False)[value_col].ewm(
+        # group by a series id from key_slices (pandas groupby on the keys
+        # drops null keys); the ewm result carries the original row index
+        # in its last level — align by index, order-independent.
+        starts, ends = key_slices(pdf, keys)
+        sid = np.repeat(np.arange(len(starts)), ends - starts)
+        ew = pdf[value_col].groupby(sid, sort=False).ewm(
             alpha=alpha, adjust=True
         ).mean()
-        pdf = pdf[cols].copy()
-        pdf[out_col] = ew.reset_index(level=list(range(len(keys))), drop=True)
+        pdf[out_col] = ew.reset_index(level=0, drop=True)
         return pdf
 
     return packed_grouped_map(df, keys, [order_col], _ewma_packed, schema)
@@ -610,48 +615,41 @@ def change_points(
     path (operators/packed.py): one hash shuffle on the series key,
     thousands of series per Arrow batch, O(n) per series.
     """
-    import pandas as pd
 
-    from time_series_spark_spark.operators.packed import packed_grouped_map
+    def _fit(ts, y) -> dict | None:
+        alarms = _cusum_one(ts, y, k_sigmas, h_sigmas)
+        if not alarms:
+            return None
+        return dict(zip(["ts", "direction", "stat"], zip(*alarms)))
 
-    dtypes = dict(df.dtypes)
-    key_schema = ", ".join(f"{k} {dtypes[k]}" for k in keys)
-    schema = f"{key_schema}, ts timestamp, direction string, stat double"
+    return per_series(
+        df, keys, [order_col], [order_col, value_col], _fit,
+        "ts timestamp, direction string, stat double",
+    )
 
-    def _cusum_one(g: pd.DataFrame) -> list[tuple]:
-        import numpy as np
 
-        y = g[value_col].to_numpy(dtype=float)
-        ts = g[order_col].to_numpy()
-        mu, sd = float(np.mean(y)), float(np.std(y))
-        if sd == 0.0 or len(y) < 3:
-            return []
-        z = (y - mu) / sd
-        out, s_hi, s_lo = [], 0.0, 0.0
-        for i in range(len(z)):
-            s_hi = max(0.0, s_hi + z[i] - k_sigmas)
-            s_lo = max(0.0, s_lo - z[i] - k_sigmas)
-            if s_hi > h_sigmas:
-                out.append((ts[i], "up", s_hi))
-                s_hi = s_lo = 0.0
-            elif s_lo > h_sigmas:
-                out.append((ts[i], "down", s_lo))
-                s_hi = s_lo = 0.0
-        return out
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        rows = []
-        for s, e in zip(starts, ends):
-            kt = tuple(a[s] for a in karrs)
-            rows.extend(kt + alarm for alarm in _cusum_one(pdf.iloc[s:e]))
-        cols = keys + ["ts", "direction", "stat"]
-        return pd.DataFrame(rows, columns=cols)
-
-    return packed_grouped_map(df, keys, [order_col], _apply, schema)
+def _cusum_one(
+    ts: np.ndarray, y: np.ndarray, k_sigmas: float, h_sigmas: float
+) -> list[tuple]:
+    """Two-sided CUSUM alarms ``(ts, direction, stat)`` of ONE series in
+    order (the per-series core of :func:`change_points`); none for a
+    constant series or one shorter than 3 points."""
+    y = np.asarray(y, dtype=float)
+    mu, sd = float(np.mean(y)), float(np.std(y))
+    if sd == 0.0 or len(y) < 3:
+        return []
+    z = (y - mu) / sd
+    out, s_hi, s_lo = [], 0.0, 0.0
+    for i in range(len(z)):
+        s_hi = max(0.0, s_hi + z[i] - k_sigmas)
+        s_lo = max(0.0, s_lo - z[i] - k_sigmas)
+        if s_hi > h_sigmas:
+            out.append((ts[i], "up", s_hi))
+            s_hi = s_lo = 0.0
+        elif s_lo > h_sigmas:
+            out.append((ts[i], "down", s_lo))
+            s_hi = s_lo = 0.0
+    return out
 
 
 # --------------------------------------------------------------------------

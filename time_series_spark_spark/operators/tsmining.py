@@ -40,7 +40,13 @@ from pyspark.sql import functions as F
 from time_series_spark_spark.session import local_df
 from pyspark.sql.window import Window
 
-from time_series_spark_spark.operators.packed import packed_grouped_map
+from time_series_spark_spark.operators.packed import (
+    key_schema,
+    key_slices,
+    packed_grouped_map,
+    per_series,
+    shuffle_parallelism,
+)
 
 # ---------------------------------------------------------------------------
 # M4 downsampling
@@ -352,6 +358,32 @@ def _topk_batch_update(
     return top
 
 
+def _topk_sparse_update(
+    top: list,
+    pdf: pd.DataFrame,
+    key: str,
+    idx: str,
+    value: str,
+    n: int,
+    q: np.ndarray,
+    q_lo: np.ndarray,
+    q_hi: np.ndarray,
+    band: int,
+    k: int,
+) -> list:
+    """:func:`_topk_batch_update` over the complete SPARSE series of one
+    packed batch: each key's ``(idx, value)`` rows are scattered into a
+    zero row of width ``n`` (shared by :func:`dtw_topk_sparse` and
+    :func:`dtw_topk_sparse_self`)."""
+    starts, ends = key_slices(pdf, [key])
+    M = np.zeros((len(starts), n))
+    M[np.repeat(np.arange(len(starts)), ends - starts), pdf[idx].to_numpy()] = (
+        pdf[value].to_numpy(dtype=np.float64)
+    )
+    keys_arr = pdf[key].to_numpy()[starts]
+    return _topk_batch_update(top, M, keys_arr, q, q_lo, q_hi, band, k)
+
+
 def dtw_topk(
     series: DataFrame,
     key: str,
@@ -382,12 +414,6 @@ def dtw_topk(
     band = max(1, int(round(band_frac * len(q))))
     q_lo, q_hi = query_envelope(q, band)
     nq = len(q)
-
-    key_type = next(
-        f.dataType.simpleString()
-        for f in series.schema.fields
-        if f.name == key
-    )
 
     def _local_topk(batches) -> "pd.DataFrame":
         # Partition-local exact top-k, vectorized (round 14, guide §4.2):
@@ -423,7 +449,9 @@ def dtw_topk(
                 {key: [t[1] for t in top], "dtw": [t[0] for t in top]}
             )
 
-    local = series.mapInPandas(_local_topk, f"{key} {key_type}, dtw double")
+    local = series.mapInPandas(
+        _local_topk, f"{key_schema(series, [key])}, dtw double"
+    )
     return (
         local.orderBy("dtw", key)
         .limit(k)
@@ -457,36 +485,15 @@ def dtw_topk_sparse(
     idx-sorted), emitting ≤ k rows per batch — a TakeOrdered superset of
     the exact global top-k. Returns (key, dtw) rows ordered by (dtw, key).
     """
-    from time_series_spark_spark.operators.packed import (
-        key_slices,
-        packed_grouped_map,
-    )
-
     q = _znorm(np.asarray(query_vals, dtype=np.float64))
     assert len(q) == n
     band = max(1, int(round(band_frac * len(q))))
     q_lo, q_hi = query_envelope(q, band)
 
-    key_type = next(
-        f.dataType.simpleString()
-        for f in series_long.schema.fields
-        if f.name == key
-    )
-
     def _apply(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        top: list[tuple[float, object]] = []
-        if len(pdf):
-            starts, ends = key_slices(pdf, [key])
-            keys_arr = pdf[key].to_numpy()
-            idx_all = pdf[idx].to_numpy()
-            v_all = pdf[value].to_numpy(dtype=np.float64)
-            m = len(starts)
-            M = np.zeros((m, n))
-            rows = np.repeat(np.arange(m), ends - starts)
-            M[rows, idx_all] = v_all
-            top = _topk_batch_update(
-                top, M, keys_arr[starts], q, q_lo, q_hi, band, k
-            )
+        top = _topk_sparse_update(
+            [], pdf, key, idx, value, n, q, q_lo, q_hi, band, k
+        )
         top.sort()
         return pd.DataFrame(
             {key: [t[1] for t in top], "dtw": [t[0] for t in top]}
@@ -497,7 +504,7 @@ def dtw_topk_sparse(
         [key],
         [idx],
         _apply,
-        f"{key} {key_type}, dtw double",
+        f"{key_schema(series_long, [key])}, dtw double",
     )
     return (
         local.orderBy("dtw", key)
@@ -539,19 +546,10 @@ def dtw_topk_sparse_self(
     ordered by (dtw, key); exactness is partition-layout-independent
     because each candidate's DTW is computed from its own rows only.
     """
-    from time_series_spark_spark.operators.packed import (
-        key_slices,
-        shuffle_parallelism,
-    )
-
     P = shuffle_parallelism(series_long)
-    key_type = next(
-        f.dataType.simpleString()
-        for f in series_long.schema.fields
-        if f.name == key
-    )
     slim = series_long.select(key, idx, value, n_col)
-    isq = F.col(key) == F.lit(query_key)
+    # null-safe, so ~isq keeps a null-key candidate (one series)
+    isq = F.col(key).eqNullSafe(F.lit(query_key))
     qrows = slim.filter(isq).crossJoin(
         series_long.sparkSession.range(P).select(
             F.col("id").cast("int").alias("__pid")
@@ -575,21 +573,6 @@ def dtw_topk_sparse_self(
         q_val: list[np.ndarray] = []
         n = None
         pending: pd.DataFrame | None = None
-
-        def crunch(pdf: pd.DataFrame) -> None:
-            nonlocal top
-            starts, ends = key_slices(pdf, [key])
-            keys_arr = pdf[key].to_numpy()
-            idx_all = pdf[idx].to_numpy()
-            v_all = pdf[value].to_numpy(dtype=np.float64)
-            m = len(starts)
-            M = np.zeros((m, n))
-            rows = np.repeat(np.arange(m), ends - starts)
-            M[rows, idx_all] = v_all
-            top = _topk_batch_update(
-                top, M, keys_arr[starts], q, q_lo, q_hi, band, k
-            )
-
         for pdf in batches:
             if pending is not None and len(pending):
                 pdf = pd.concat([pending, pdf], ignore_index=True)
@@ -619,20 +602,25 @@ def dtw_topk_sparse_self(
                 if not len(pdf):
                     continue
             # hold back the possibly-straddling tail group
-            tail_key = pdf[key].iloc[-1]
-            tail_len = int((pdf[key].to_numpy() == tail_key).sum())
-            split = len(pdf) - tail_len
+            split = int(key_slices(pdf, [key])[0][-1])
             pending = pdf.iloc[split:].reset_index(drop=True)
             if split:
-                crunch(pdf.iloc[:split].reset_index(drop=True))
+                top = _topk_sparse_update(
+                    top, pdf.iloc[:split].reset_index(drop=True), key, idx,
+                    value, n, q, q_lo, q_hi, band, k,
+                )
         if pending is not None and len(pending) and q is not None:
-            crunch(pending)
+            top = _topk_sparse_update(
+                top, pending, key, idx, value, n, q, q_lo, q_hi, band, k
+            )
         top.sort()
         yield pd.DataFrame(
             {key: [t[1] for t in top], "dtw": [t[0] for t in top]}
         )
 
-    local = parted.mapInPandas(_mapper, f"{key} {key_type}, dtw double")
+    local = parted.mapInPandas(
+        _mapper, f"{key_schema(series_long, [key])}, dtw double"
+    )
     return (
         local.orderBy("dtw", key)
         .limit(k)
@@ -721,39 +709,25 @@ def matrix_profile(
     map — thousands of series per Arrow batch, per-series O(n² log n)
     numpy, embarrassingly parallel across series. Key columns keep their
     input Spark types."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
+    def _fit(v: np.ndarray) -> dict | None:
+        if len(v) < 2 * m:
+            return None
+        prof, pidx = _mass_distance_profile(np.asarray(v, dtype=np.float64), m)
+        mot = int(np.argmin(prof))
+        dis = int(np.argmax(prof))
+        return {
+            "n_points": [len(v)],
+            "motif_idx": [mot],
+            "motif_nn_idx": [int(pidx[mot])],
+            "motif_dist": [round(float(prof[mot]), 6)],
+            "discord_idx": [dis],
+            "discord_dist": [round(float(prof[dis]), 6)],
+        }
 
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        v_all = pdf[value].to_numpy(dtype=np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            v = v_all[s:e]
-            if len(v) < 2 * m:
-                continue
-            prof, pidx = _mass_distance_profile(v, m)
-            mot = int(np.argmin(prof))
-            dis = int(np.argmax(prof))
-            rows.append(
-                (*(a[s] for a in karrs), len(v), mot, int(pidx[mot]),
-                 round(float(prof[mot]), 6), dis, round(float(prof[dis]), 6))
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "n_points", "motif_idx", "motif_nn_idx",
-                     "motif_dist", "discord_idx", "discord_dist"],
-        )
-
-    return packed_grouped_map(
-        df.select(*keys, ts, value),
-        keys,
-        [ts],
-        _apply,
-        f"{key_schema}, n_points long, motif_idx long, motif_nn_idx long, "
+    return per_series(
+        df, keys, [ts], [value], _fit,
+        "n_points long, motif_idx long, motif_nn_idx long, "
         "motif_dist double, discord_idx long, discord_dist double",
     )
 
@@ -860,12 +834,8 @@ def kalman_smooth(
     """Per-series Kalman/RTS smoothing on the packed grouped-map path
     (one hash shuffle by key; O(n) numpy per series). Output keeps every
     input row and appends smoothed ``level`` / ``level_var``."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
     def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
         starts, ends = key_slices(pdf, keys)
         v_all = pdf[value].to_numpy(dtype=np.float64)
         lens = ends - starts
@@ -886,8 +856,7 @@ def kalman_smooth(
         keys,
         [ts],
         _apply,
-        f"{key_schema}, {ts} {in_fields[ts]}, {value} {in_fields[value]}, "
-        "level double, level_var double",
+        f"{key_schema(df, [*keys, ts, value])}, level double, level_var double",
     )
 
 
@@ -963,39 +932,22 @@ def kleinberg_bursts(
     """Per-key burst intervals via the 2-state Kleinberg automaton —
     packed grouped map, O(n) per series. Output: keys…, burst_start /
     burst_end timestamps, n_events in the burst."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
+    def _fit(t: np.ndarray) -> dict | None:
+        t = np.sort(t.astype("datetime64[us]").astype(np.int64))
+        bursts = kleinberg_bursts_series(t, s, gamma)
+        if not bursts:
+            return None
+        i, j, cnt = (np.array(c) for c in zip(*bursts))
+        return {
+            "burst_start": t[i].astype("datetime64[us]"),
+            "burst_end": t[j].astype("datetime64[us]"),
+            "n_events": cnt,
+        }
 
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        ts_all = pdf[ts].to_numpy().astype("datetime64[us]").astype(np.int64)
-        rows = []
-        for st, en in zip(starts, ends):
-            kv = tuple(a[st] for a in karrs)
-            t = np.sort(ts_all[st:en])
-            for i, j, cnt in kleinberg_bursts_series(t, s, gamma):
-                rows.append(
-                    (
-                        *kv,
-                        np.datetime64(int(t[i]), "us"),
-                        np.datetime64(int(t[j]), "us"),
-                        cnt,
-                    )
-                )
-        return pd.DataFrame(
-            rows, columns=[*keys, "burst_start", "burst_end", "n_events"]
-        )
-
-    return packed_grouped_map(
-        df.select(*keys, ts),
-        keys,
-        [ts],
-        _apply,
-        f"{key_schema}, burst_start timestamp, burst_end timestamp, "
-        "n_events long",
+    return per_series(
+        df, keys, [ts], [ts], _fit,
+        "burst_start timestamp, burst_end timestamp, n_events long",
     )
 
 
@@ -1157,35 +1109,20 @@ def dominant_periods(
     """Per-series dominant period via the periodogram (packed grouped
     map; O(n log n) per series). Output: keys…, n_points, period
     (in samples), power_frac."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
+    def _fit(v: np.ndarray) -> dict | None:
+        if len(v) < 8:
+            return None
+        period, frac = estimate_period_series(np.asarray(v, dtype=np.float64))
+        return {
+            "n_points": [len(v)],
+            "period": [round(period, 4)],
+            "power_frac": [round(frac, 4)],
+        }
 
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        v_all = pdf[value].to_numpy(dtype=np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            v = v_all[s:e]
-            if len(v) < 8:
-                continue
-            period, frac = estimate_period_series(v)
-            rows.append(
-                (*(a[s] for a in karrs), len(v),
-                 round(period, 4), round(frac, 4))
-            )
-        return pd.DataFrame(
-            rows, columns=[*keys, "n_points", "period", "power_frac"]
-        )
-
-    return packed_grouped_map(
-        df.select(*keys, ts, value),
-        keys,
-        [ts],
-        _apply,
-        f"{key_schema}, n_points long, period double, power_frac double",
+    return per_series(
+        df, keys, [ts], [value], _fit,
+        "n_points long, period double, power_frac double",
     )
 
 
@@ -1361,12 +1298,8 @@ def hurst_rs(
     embarrassingly parallel across keys (the F48/K-mining shape). Series
     shorter than ``min_len`` are skipped (too few R/S scales for a
     meaningful log-log fit)."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
     def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
         starts, ends = key_slices(pdf, keys)
         lens = ends - starts
         pos = np.arange(len(pdf)) - np.repeat(starts, lens)
@@ -1378,7 +1311,7 @@ def hurst_rs(
         keys,
         [ts],
         _apply,
-        f"{key_schema}, n_points long, hurst double, fit_r2 double, "
+        f"{key_schema(df, keys)}, n_points long, hurst double, fit_r2 double, "
         "n_scales long",
     )
 
@@ -1399,12 +1332,8 @@ def hurst_rs_sparse(
     the dense left join, and the dense-row shuffle/sort/Arrow transfer
     never happen — only the non-zero cells move (11× fewer rows for the
     events corpus, and the gap widens with series sparsity at scale)."""
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
 
     def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
         starts, ends = key_slices(pdf, keys)
         return _hurst_frame(
             pdf,
@@ -1422,7 +1351,7 @@ def hurst_rs_sparse(
         keys,
         [idx],
         _apply,
-        f"{key_schema}, n_points long, hurst double, fit_r2 double, "
+        f"{key_schema(df, keys)}, n_points long, hurst double, fit_r2 double, "
         "n_scales long",
     )
 
@@ -1479,41 +1408,25 @@ def lomb_scargle_periods(
     One hash shuffle on keys -> packed grouped map (many series per
     Arrow batch), numpy-vectorized over the whole frequency grid.
     Output: keys..., n_points, best_period_hours, ls_power."""
-    from time_series_spark_spark.operators.packed import packed_grouped_map
 
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
-
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        t_all = pdf[ts].astype("int64").to_numpy(dtype=np.float64) / 1e9
-        y_all = pdf[value].to_numpy(dtype=np.float64)
-        rows = []
-        for s, e in zip(starts, ends):
-            if e - s < min_points:
-                continue
-            t_sec = t_all[s:e] - t_all[s]
-            period, power = _lomb_scargle_one(t_sec, y_all[s:e])
-            if period != period:  # constant series -> NaN
-                continue
-            rows.append(
-                (*(a[s] for a in karrs), e - s, period, round(power, 4))
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "n_points", "best_period_hours", "ls_power"],
+    def _fit(t: np.ndarray, y: np.ndarray) -> dict | None:
+        if len(t) < min_points:
+            return None
+        t_s = t.astype(np.int64).astype(np.float64) / 1e9
+        period, power = _lomb_scargle_one(
+            t_s - t_s[0], np.asarray(y, dtype=np.float64)
         )
+        if period != period:  # constant series -> NaN
+            return None
+        return {
+            "n_points": [len(t)],
+            "best_period_hours": [period],
+            "ls_power": [round(power, 4)],
+        }
 
-    return packed_grouped_map(
-        df.select(*keys, ts, value),
-        keys,
-        [ts],
-        _apply,
-        f"{key_schema}, n_points long, best_period_hours double,"
-        " ls_power double",
+    return per_series(
+        df, keys, [ts], [ts, value], _fit,
+        "n_points long, best_period_hours double, ls_power double",
     )
 
 
@@ -1578,46 +1491,20 @@ def pelt_changepoints(
     per detected segment: keys..., seg_idx, start_ts, n_points,
     seg_mean. Exact optimum of the penalized cost — the optimal
     counterpart to the greedy 2-level F108 binseg."""
-    from time_series_spark_spark.operators.packed import packed_grouped_map
 
-    in_fields = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    key_schema = ", ".join(f"{k} {in_fields[k]}" for k in keys)
-    ts_type = in_fields[ts]
+    def _fit(t: np.ndarray, v: np.ndarray) -> dict:
+        x = np.asarray(v, dtype=np.float64)
+        bounds = np.array([0, *_pelt_one(x), len(x)])
+        a, b = bounds[:-1], bounds[1:]
+        return {
+            "seg_idx": np.arange(len(a)),
+            "start_ts": t[a],
+            "n_points": b - a,
+            "seg_mean": [round(float(x[i:j].mean()), 4) for i, j in zip(a, b)],
+        }
 
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        from time_series_spark_spark.operators.packed import key_slices
-
-        starts, ends = key_slices(pdf, keys)
-        karrs = [pdf[k].to_numpy() for k in keys]
-        v_all = pdf[value].to_numpy(dtype=np.float64)
-        ts_col = pdf[ts]
-        rows = []
-        for s, e in zip(starts, ends):
-            kv = tuple(a[s] for a in karrs)
-            x = v_all[s:e]
-            cps = _pelt_one(x)
-            bounds = [0, *cps, len(x)]
-            for i in range(len(bounds) - 1):
-                a, b = bounds[i], bounds[i + 1]
-                rows.append(
-                    (
-                        *kv,
-                        i,
-                        ts_col.iloc[s + a],
-                        b - a,
-                        round(float(x[a:b].mean()), 4),
-                    )
-                )
-        return pd.DataFrame(
-            rows,
-            columns=[*keys, "seg_idx", "start_ts", "n_points", "seg_mean"],
-        )
-
-    return packed_grouped_map(
-        df.select(*keys, ts, value),
-        keys,
-        [ts],
-        _apply,
-        f"{key_schema}, seg_idx int, start_ts {ts_type}, n_points long,"
+    return per_series(
+        df, keys, [ts], [ts, value], _fit,
+        f"seg_idx int, start_ts {dict(df.dtypes)[ts]}, n_points long,"
         " seg_mean double",
     )

@@ -1012,24 +1012,23 @@ def _token_bucket_update(
     key, pdfs: Iterator[pd.DataFrame], state: GroupState, *,
     period_us: int, cap_p: int,
 ):
-    if state.exists:
-        last_us, stok = state.get
-    else:
-        last_us, stok = None, cap_p
+    # imported here, not at the top: the other stateful jobs' workers
+    # load this module and need none of the batch operators
+    from time_series_spark_spark.operators.analytics import (
+        token_bucket_replay,
+    )
+
+    last_us, stok = state.get if state.exists else (None, cap_p)
     out = []
     for pdf in pdfs:
         ordered = pdf.sort_values(["ts", "event_id"])
-        for eid, ts in zip(ordered["event_id"], ordered["ts"]):
-            ts_us = int(ts.value) // 1000
-            if last_us is not None:
-                stok = min(cap_p, stok + (ts_us - last_us))
-            last_us = ts_us
-            if stok >= period_us:
-                stok -= period_us
-                adm = 1
-            else:
-                adm = 0
-            out.append((key[0], int(eid), ts, adm, stok))
+        ts = list(ordered["ts"])
+        admitted, after, (last_us, stok) = token_bucket_replay(
+            [int(t.value) // 1000 for t in ts], last_us, stok, period_us,
+            cap_p,
+        )
+        out += zip([key[0]] * len(ts), map(int, ordered["event_id"]), ts,
+                   admitted, after)
     state.update((last_us, stok))
     yield pd.DataFrame(
         out,
