@@ -12,6 +12,7 @@ from __future__ import annotations
 import random
 
 import pyspark.sql.functions as F
+import pytest
 
 from time_series_spark_spark.operators.graph import connected_components, dup_clusters
 
@@ -46,9 +47,10 @@ def _check(spark, pairs):
 
 
 def test_path_graph_needs_pointer_jumping(spark):
-    # a 40-node path: plain min-propagation needs ~40 rounds; hook+jump
-    # must finish within the operator's max_iter=25
+    # paths are the round-count worst case: plain min-propagation needs
+    # ~n rounds; hook+jump must finish within the operator's max_iter=25
     _check(spark, [(i, i + 1) for i in range(40)])
+    _check(spark, [(i, i + 1) for i in range(299)])
 
 
 def test_clique_and_stars(spark):
@@ -76,26 +78,127 @@ def test_dup_clusters_keep_list(spark):
     assert keep == [0, 1, 2, 3, 5, 6, 8]
 
 
-def test_reliable_checkpoint_dir_parameter(spark, tmp_path):
-    """checkpoint_dir switches lineage truncation to reliable
-    checkpoint(): same components, and checkpoint data actually lands in
-    the given directory (the cluster-correct mode — localCheckpoint
-    blocks die with their executor)."""
-    import os
-
-    ckpt = str(tmp_path / "cc_ckpt")
+def test_connected_components_raises_at_max_iter(spark):
     pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
     )
-    out = connected_components(pairs, checkpoint_dir=ckpt).collect()
-    assert {r["component"] for r in out} == {0}
-    assert len(out) == 31
-    found = [
-        os.path.join(dp, f)
-        for dp, _, fns in os.walk(ckpt)
-        for f in fns
-    ]
-    assert found, "no checkpoint files written to checkpoint_dir"
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(pairs, max_iter=2)
+
+
+def test_k_core_raises_at_max_rounds(spark):
+    from time_series_spark_spark.operators.graph import k_core
+
+    # one round peels only the two ends; the true 2-core of a path is empty
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(8)], "a long, b long"
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        k_core(edges, 2, max_rounds=1)
+
+
+def test_iterative_loops_build_without_actions(spark, monkeypatch):
+    """Each loop takes its convergence test from the metric observed in
+    its checkpoint job: building the result runs no action."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from time_series_spark_spark.operators.graph import (
+        bfs_hops,
+        k_core,
+        label_propagation,
+    )
+
+    k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
+    edges = spark.createDataFrame(
+        k4 + [(3, 10), (10, 11), (11, 12)], "a long, b long"
+    )
+
+    def _action(*args, **kwargs):
+        raise AssertionError("action inside an iterative graph loop")
+
+    with monkeypatch.context() as m:
+        for name in ("collect", "count", "isEmpty", "first", "take", "toPandas"):
+            m.setattr(DataFrame, name, _action)
+        cc = connected_components(edges, "a", "b")
+        core = k_core(edges, 3)
+        hops = bfs_hops(edges, 0)
+        lpa = label_propagation(edges, "a", "b")
+    assert {tuple(r) for r in cc.collect()} == {
+        (n, 0) for n in (0, 1, 2, 3, 10, 11, 12)
+    }
+    assert {tuple(r) for r in core.collect()} == {(n, 3) for n in range(4)}
+    assert {tuple(r) for r in hops.collect()} == {
+        (0, 0), (1, 1), (2, 1), (3, 1), (10, 2), (11, 3), (12, 4)
+    }
+    assert {r["id"] for r in lpa.collect()} == {0, 1, 2, 3, 10, 11, 12}
+
+
+_LOOPS_WITH_CHECKPOINT_DIR = """
+import json, os, sys
+
+from time_series_spark_spark.operators import graph
+from time_series_spark_spark.session import get_spark
+
+spark = get_spark("graph-reliable-checkpoint", master="local[2]", shuffle_partitions=2)
+c1 = [(i, j) for i in range(5) for j in range(5) if i < j]
+c2 = [(i + 10, j + 10) for i in range(5) for j in range(5) if i < j]
+path = [(i, i + 1) for i in range(20, 40)]
+edges = spark.createDataFrame(c1 + c2 + [(4, 10)] + path, "a long, b long")
+
+
+def rows(df):
+    return sorted(
+        [round(v, 12) if isinstance(v, float) else v for v in r]
+        for r in df.collect()
+    )
+
+
+def n_files():
+    return sum(len(fs) for _, _, fs in os.walk(sys.argv[1]))
+
+
+LOOPS = {
+    "connected_components": lambda: graph.connected_components(edges, "a", "b"),
+    "k_core": lambda: graph.k_core(edges, 3),
+    "bfs_hops": lambda: graph.bfs_hops(edges, 0),
+    "label_propagation": lambda: graph.label_propagation(edges, "a", "b"),
+    "pagerank": lambda: graph.pagerank(edges, "a", "b"),
+}
+local = {name: rows(loop()) for name, loop in LOOPS.items()}
+spark.sparkContext.setCheckpointDir(sys.argv[1])
+out = {}
+for name, loop in LOOPS.items():
+    before = n_files()
+    out[name] = {"same": rows(loop()) == local[name], "wrote": n_files() > before}
+print(json.dumps(out))
+"""
+
+
+def test_reliable_checkpoint_when_session_has_checkpoint_dir(tmp_path):
+    """With a session checkpoint directory every loop cuts with reliable
+    checkpoint(), writes its checkpoint files there and returns the same
+    rows as with localCheckpoint(). Its own process: a checkpoint
+    directory cannot be unset, and the shared test session must keep
+    cutting locally."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    ckpt = tmp_path / "ckpt"
+    env = {**os.environ, "PYTHONPATH": str(repo), "SPARK_GRAFT_DRIVER_MEM": "1g"}
+    out = subprocess.run(
+        [sys.executable, "-c", _LOOPS_WITH_CHECKPOINT_DIR, str(ckpt)],
+        cwd=tmp_path, env=env, capture_output=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    got = json.loads(out.stdout.decode().strip().splitlines()[-1])
+    assert got == dict.fromkeys(
+        ("connected_components", "k_core", "bfs_hops", "label_propagation", "pagerank"),
+        {"same": True, "wrote": True},
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -803,8 +803,8 @@ def markov_attribution(
     by channels², never journeys). The absorption solve — P(conv from
     start) = solving (I − Q)x = R_conv on the tiny dense matrix — runs
     on the driver over the COLLECTED transition matrix (channels² cells,
-    the same bounded-scalar discipline as connected_components'
-    convergence check), once per channel removal.
+    bounded by the vocabulary, never by journeys), once per channel
+    removal.
 
     Removal of channel c follows the standard convention: transitions
     into c are redirected to the null absorber (the journey dies where

@@ -22,19 +22,56 @@ Scale posture: everything is DataFrame joins/aggregations — no driver
 materialization of nodes or edges; the driver holds only the per-round
 convergence scalar. Labels decrease monotonically, so the fixpoint test
 "sum of labels unchanged" (computed as decimal(38,0) — immune to int64
-overflow at any node count) is exact, not heuristic. Lineage is cut each
-round: with ``checkpoint_dir`` set, via reliable ``checkpoint()``
-(cluster-correct — survives executor loss and truncates lineage in the
-persisted plan); otherwise via ``localCheckpoint`` (fine on local[n],
-NOT fault-tolerant on a cluster).
+overflow at any node count) is exact, not heuristic.
+
+Every iterative loop in this module cuts its lineage through
+:func:`_checkpoint`, one eager Spark job per cut, and a loop with a
+convergence test reads it from a metric observed in that same job: no
+round runs a separate probe action. The cut is reliable ``checkpoint``
+when the SparkContext has a checkpoint directory (Spark's own rule, as
+for ALS's ``checkpointInterval``: cluster-correct, survives executor
+loss) and ``localCheckpoint`` otherwise (fine on local[n], NOT
+fault-tolerant on a cluster). The directory is a deployment setting,
+``SparkContext.setCheckpointDir``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from time_series_spark_spark.session import local_df
+
+# pagerank runs a fixed number of rounds and has no convergence test:
+# an eager cut every few rounds keeps its plan constant-size
+_PAGERANK_CUT_EVERY = 4
+
+
+def _checkpoint(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Cut ``df``'s lineage eagerly and return it with ``metrics`` (named
+    aggregate columns) computed by ``DataFrame.observe`` in the same job."""
+    obs = Observation()
+    if metrics:
+        df = df.observe(obs, *metrics)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=True)
+    return df, obs.get if metrics else {}
+
+
+def _undirected(df: DataFrame, src: str, dst: str) -> DataFrame:
+    """Both directions of every non-loop edge, once each, as a cut
+    ``(src long, dst long)`` frame."""
+    e = df.select(
+        F.col(src).cast("long").alias("src"),
+        F.col(dst).cast("long").alias("dst"),
+    )
+    return _checkpoint(
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .dropDuplicates(["src", "dst"])
+    )[0]
 
 
 def connected_components(
@@ -42,53 +79,24 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 25,
-    checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Resolve components of the undirected pair graph.
 
     Returns ``(id long, component long)`` — one row per node appearing in
     ``pairs``, ``component`` = smallest node id reachable from ``id``.
-
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable ``checkpoint()`` against that directory (the cluster-correct
-    choice — a lost executor replays from the checkpoint files, not from
-    the full join lineage); when None, ``localCheckpoint`` (local-mode
-    default; its blocks die with an executor). If the SparkContext already
-    has a checkpoint dir configured, it is NOT overwritten — the caller's
-    session-level choice wins.
+    Raises ``RuntimeError`` if the labels are not seen at a fixpoint
+    within ``max_iter`` hook-and-jump rounds.
     """
-    if checkpoint_dir is not None:
-        sc = pairs.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(checkpoint_dir)
-
-    def _cut(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if checkpoint_dir is not None else df.localCheckpoint()
-
-    edges = pairs.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    # symmetrize once; dropDuplicates keeps the per-node neighbor scan tight
-    edges = _cut(
-        edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-
-    labels = _cut(
+    edges = _undirected(pairs, src_col, dst_col)
+    label_sum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
+    labels, m = _checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
-        .withColumn("label", F.col("id"))
+        .withColumn("label", F.col("id")),
+        label_sum,
     )
-
-    def _label_sum(lbl: DataFrame):
-        return lbl.agg(
-            F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-        ).collect()[0]["s"]
-
-    prev_sum = _label_sum(labels)
     for _ in range(max_iter):
+        prev_sum = m["s"]
         # hook: pull the min label across each node's neighborhood
         nbr_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -109,18 +117,18 @@ def connected_components(
         parent = hooked.select(
             F.col("id").alias("p_id"), F.col("label").alias("p_label")
         )
-        labels = _cut(
+        labels, m = _checkpoint(
             hooked.join(parent, hooked.label == parent.p_id, "left").select(
                 "id",
                 F.coalesce(F.col("p_label"), F.col("label")).alias("label"),
-            )
+            ),
+            label_sum,
         )
-        cur_sum = _label_sum(labels)
-        if cur_sum == prev_sum:  # labels only decrease -> exact fixpoint
-            break
-        prev_sum = cur_sum
-
-    return labels.select("id", F.col("label").alias("component"))
+        if m["s"] == prev_sum:  # labels only decrease -> exact fixpoint
+            return labels.select("id", F.col("label").alias("component"))
+    raise RuntimeError(
+        f"connected_components: labels still changing after max_iter={max_iter} rounds"
+    )
 
 
 def dup_clusters(
@@ -158,7 +166,6 @@ def pagerank(
     dst_col: str = "id_b",
     damping: float = 0.85,
     iters: int = 15,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """PageRank over the UNDIRECTED pair graph (each pair contributes
     both directions — the right reading for similarity graphs, where
@@ -173,11 +180,9 @@ def pagerank(
 
     Scale posture: ranks/degrees are (node, value) frames co-shuffled
     on the node key; the teleport scalar n rides a 1-row broadcast;
-    lineage is truncated every ``checkpoint_every`` rounds
-    (localCheckpoint — swap for reliable checkpoint() on a cluster, as
-    in :func:`connected_components`) so the plan stays constant-size
-    instead of growing per iteration. Returns ``(id, rank)`` with
-    Σrank = 1 up to fp.
+    lineage is cut (:func:`_checkpoint`) every ``_PAGERANK_CUT_EVERY``
+    rounds so the plan stays constant-size instead of growing per
+    iteration. Returns ``(id, rank)`` with Σrank = 1 up to fp.
     """
     a = pairs.select(
         F.col(src_col).cast("long").alias("src"),
@@ -210,12 +215,12 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if (i + 1) % checkpoint_every == 0:
-            # eager: materialize NOW, so at most checkpoint_every rounds
+        if (i + 1) % _PAGERANK_CUT_EVERY == 0:
+            # eager: materialize NOW, so at most _PAGERANK_CUT_EVERY rounds
             # of joins are ever in one plan — a lazy checkpoint would let
             # the full iteration stack materialize at once (dozens of
             # concurrent AQE broadcast builds, an OOM on small drivers)
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = _checkpoint(ranks)[0]
     return ranks
 
 
@@ -292,7 +297,6 @@ def bfs_hops(
     src: str = "a",
     dst: str = "b",
     max_hops: int = 6,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """Minimum hop count from ``source`` to every reachable vertex within
     ``max_hops``, by iterative frontier expansion (the DataFrame BFS):
@@ -304,11 +308,9 @@ def bfs_hops(
 
     Scale posture: each round is one hash-join on the frontier (small) vs
     edges (partitioned by vertex) plus an anti-join on the visited set —
-    the standard Pregel-style expansion; lineage is truncated with an
-    eager ``localCheckpoint`` every ``checkpoint_every`` rounds (the same
-    discipline as :func:`pagerank`). The per-round emptiness check is a
-    1-row scalar action, like :func:`connected_components`' convergence
-    test. Output: ``node, hops``.
+    the standard Pregel-style expansion. Each new layer is cut
+    (:func:`_checkpoint`), and the cut's job also counts its rows: the
+    loop stops at the first empty layer. Output: ``node, hops``.
     """
     sym = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v")
@@ -319,16 +321,15 @@ def bfs_hops(
     )
     frontier = visited
     for h in range(1, max_hops + 1):
-        nxt = (
+        nxt, m = _checkpoint(
             frontier.join(sym, frontier.node == sym.u)
             .select(F.col("v").alias("node"))
             .distinct()
             .join(visited.select("node"), on="node", how="left_anti")
-            .withColumn("hops", F.lit(h).cast("long"))
+            .withColumn("hops", F.lit(h).cast("long")),
+            F.count(F.lit(1)).alias("n"),
         )
-        if h % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
+        if m["n"] == 0:
             break
         visited = visited.unionAll(nxt)
         frontier = nxt
@@ -345,7 +346,6 @@ def k_core(
     src: str = "a",
     dst: str = "b",
     max_rounds: int = 50,
-    checkpoint_every: int = 3,
 ) -> DataFrame:
     """The k-core subgraph: vertices surviving repeated removal of every
     vertex with degree < k (Seidman 1983) — the standard density filter
@@ -356,16 +356,23 @@ def k_core(
     set with one hash aggregation, anti-joins the sub-k vertex list out
     of both edge endpoints (AQE picks broadcast when the peel layer is
     small — the common case after round 1; early mass-peels stay a
-    shuffle join, since the weak set can be O(V)), and checks a 1-row
-    scalar for convergence (the connected-components discipline). Rounds are bounded
+    shuffle join, since the weak set can be O(V)), and cuts the remaining
+    edges (:func:`_checkpoint`), counting them in the same job. A vertex
+    with degree < k has an edge, so "the edge count did not change" is
+    exactly "nothing was peeled": the fixpoint test. Rounds are bounded
     by the peeling depth (≤ degeneracy ordering layers), not |V| — dense
-    cores converge in a handful of rounds. Eager ``localCheckpoint``
-    every ``checkpoint_every`` rounds truncates the iterative lineage.
+    cores converge in a handful of rounds.
 
     Output: ``node, core_degree`` (degree within the k-core; ≥ k).
+    Raises ``RuntimeError`` if peeling has not stopped within
+    ``max_rounds`` rounds.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    for r in range(1, max_rounds + 1):
+    n_edges = F.count(F.lit(1)).alias("n")
+    e, m = _checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), n_edges
+    )
+    for _ in range(max_rounds):
+        prev_n = m["n"]
         deg = (
             e.select(F.col("u").alias("node"))
             .unionAll(e.select(F.col("v").alias("node")))
@@ -373,29 +380,23 @@ def k_core(
             .agg(F.count(F.lit(1)).alias("d"))
         )
         weak = deg.filter(F.col("d") < k).select("node")
-        if weak.isEmpty():
-            return deg.select(
-                "node", F.col("d").cast("long").alias("core_degree")
-            )
-        e = (
+        e, m = _checkpoint(
             e.join(
                 weak.withColumnRenamed("node", "u"), on="u", how="left_anti"
             ).join(
                 weak.withColumnRenamed("node", "v"), on="v", how="left_anti"
-            )
+            ),
+            n_edges,
         )
-        if r % checkpoint_every == 0:
-            e = e.localCheckpoint(eager=True)
-    # ran out of rounds: return whatever currently qualifies (callers pick
-    # max_rounds >= peeling depth; tests pin convergence on real graphs)
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    return deg.filter(F.col("d") >= k).select(
-        "node", F.col("d").cast("long").alias("core_degree")
+        if m["n"] == prev_n:
+            # nothing peeled: deg is the degree over the remaining edges
+            # (a null endpoint is never peeled, so filter rather than trust
+            # that the weak set is empty)
+            return deg.filter(F.col("d") >= k).select(
+                "node", F.col("d").cast("long").alias("core_degree")
+            )
+    raise RuntimeError(
+        f"k_core: still peeling after max_rounds={max_rounds} rounds"
     )
 
 
@@ -421,27 +422,18 @@ def label_propagation(
     Scale shape: per sweep ONE join (labels ⋈ edges, both hash-keyed on
     node) + one two-level agg (count labels per (node, label), then
     max_by with the (count desc, label asc) tie-break via min(struct)).
-    State is |V| rows; lineage truncated per sweep like the CC loop.
+    State is |V| rows; each sweep's labels are cut (:func:`_checkpoint`),
+    and the cut's job also counts the labels that changed.
     Synchronous LPA can 2-cycle on bipartite-ish graphs, so the loop is
     capped at ``max_iter`` sweeps rather than run to a fixpoint that may
     not exist.
     """
-    e = edges.select(
-        F.col(src_col).cast("long").alias("src"),
-        F.col(dst_col).cast("long").alias("dst"),
-    )
-    e = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .localCheckpoint()
-    )
-    labels = (
+    e = _undirected(edges, src_col, dst_col)
+    labels = _checkpoint(
         e.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("community", F.col("id"))
-        .localCheckpoint()
-    )
+    )[0]
     for _ in range(max_iter):
         votes = (
             e.join(labels, e.dst == labels.id)
@@ -458,15 +450,14 @@ def label_propagation(
             )
             .select("id", F.col("best.community").alias("community"))
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="id")
-            .filter(F.col("n.community") != F.col("o.community"))
-            .limit(1)
-            .count()
+        swept, m = _checkpoint(
+            new_labels.join(
+                labels.withColumnRenamed("community", "old"), on="id", how="left"
+            ),
+            F.sum((F.col("community") != F.col("old")).cast("long")).alias("changed"),
         )
-        labels = new_labels.localCheckpoint()
-        if changed == 0:
+        labels = swept.select("id", "community")
+        if not m["changed"]:  # None on an empty graph
             break
     return labels
 
@@ -486,14 +477,14 @@ def sssp_bounded(
 
     Each round is one hash join (current distances x edges, partitioned
     by vertex) followed by a min-reduce per node — the frontier never
-    re-materializes on the driver and there is NO per-round scalar
-    action (unlike :func:`bfs_hops`'s emptiness probe): the whole
+    re-materializes on the driver and there is NO per-round cut (unlike
+    :func:`bfs_hops`, which cuts each layer and counts it): the whole
     expansion is a single declarative plan, so Catalyst/AQE schedules
     it like any other query. Fixed rounds make the result well-defined
     and ORACLE-CHECKABLE ("shortest distance using <= max_rounds
     edges") and bound the plan depth; for full convergence semantics
     compose rounds of log2(diameter) doublings or fall back to the
-    loop-with-checkpoint discipline of :func:`connected_components`.
+    observed-checkpoint loop of :func:`connected_components`.
     Output: ``node, dist`` (unreachable-within-bound nodes absent).
 
     ``nodes`` (optional): a 1-column frame whose ids are a SUPERSET of

@@ -1992,8 +1992,8 @@ def _mor_commit(
     conflict; an optimize winner conflicts any tombstoning loser via the
     targets⊆files check (its rewrite dropped the old files) but passes
     an insert-only one. Two writers MoR-merging DISJOINT key ranges in
-    different files both land — the multi-writer CDC case, measured in
-    scripts/stress_contention.py."""
+    different files both land — the multi-writer CDC case, measured by
+    the stress script ``git show 0d8b744:scripts/stress_contention.py``."""
     import json as _json
 
     from time_series_spark_spark.sources.fsio import (

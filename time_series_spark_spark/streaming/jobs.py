@@ -28,6 +28,7 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from time_series_spark_spark.sources.io import events_ts_to_timestamp
@@ -278,6 +279,18 @@ def stream_static_join(sdf: DataFrame, static_dim: DataFrame, on: str) -> DataFr
     return sdf.join(F.broadcast(static_dim), on)
 
 
+def _drain(
+    writer: DataStreamWriter, checkpoint_dir: str | None
+) -> StreamingQuery:
+    """Start ``writer`` with an ``availableNow`` trigger (and the
+    checkpoint, if any) and wait until all available input is consumed."""
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
 def run_available_now(
     stream_df: DataFrame,
     output_mode: str = "append",
@@ -285,16 +298,7 @@ def run_available_now(
 ) -> DataFrame:
     """Execute a streaming plan to completion over all available input
     (replay), materialize via the memory sink, return the result table."""
-    name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+    return run_available_now_checkpointed(stream_df, None, output_mode, name)[0]
 
 
 def read_rate_stream(
@@ -318,12 +322,7 @@ def foreach_batch_collect(stream_df: DataFrame, path: str) -> None:
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_partial_log(stream_df, write_batch, None)
 
 
 # --------------------------------------------------------------------------
@@ -358,10 +357,7 @@ def _run_partial_log(
     processed — the recovery semantics a long-lived ingestion job needs.
     Without one, availableNow replays from scratch and the idempotent
     sink (:func:`_write_partials_idempotent`) absorbs it."""
-    writer = stream.writeStream.foreachBatch(fold_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    writer.trigger(availableNow=True).start().awaitTermination()
+    _drain(stream.writeStream.foreachBatch(fold_batch), checkpoint_dir)
 
 
 def incremental_bitmap_partials(
@@ -732,7 +728,7 @@ def read_incremental_fd(spark: SparkSession, partials_path: str, ell: int = 16):
 # ---------------------------------------------------------------------------
 def run_available_now_checkpointed(
     stream_df: DataFrame,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None,
     output_mode: str = "append",
     name: str | None = None,
 ):
@@ -741,17 +737,15 @@ def run_available_now_checkpointed(
     run inspectable afterwards: the state-store reader (below) and a
     restarted stream both resolve it. ``progress_list`` holds the
     per-microbatch ``StreamingQueryProgress`` objects — the ops feed
-    (input rates, state sizes, watermark drops)."""
+    (input rates, state sizes, watermark drops). ``checkpoint_dir=None``
+    runs without a checkpoint (:func:`run_available_now`)."""
     name = name or f"stream_{uuid.uuid4().hex[:12]}"
-    q = (
+    q = _drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        checkpoint_dir,
     )
-    q.awaitTermination()
     return stream_df.sparkSession.table(name), list(q.recentProgress)
 
 
@@ -1140,6 +1134,35 @@ def _resolve_stream_identity(
     return norm, alias_ids
 
 
+def _redelivered(
+    table_path: str, scopes: list[str | None], batch_id: int
+) -> bool:
+    """MONOTONE redelivery check (correct on compacted ledgers, where old
+    ids are no longer individually enumerable): batch ids are monotone per
+    checkpoint identity and committed in order, so ``batch_id`` <= the
+    latest id committed under any of ``scopes`` ⇔ redelivery.
+
+    ``scopes`` is the stream id plus its alias ids (possibly none): the
+    ADDITIONAL ledger scopes this checkpoint's history may have committed
+    under — the legacy None-scope and/or a raw (un-normalized) path
+    spelling. :func:`_resolve_stream_identity` returns them only for
+    checkpoints that actually predate the marker migration: a brand-new
+    stream (fresh checkpoint, batch ids restarting at 0) must NOT absorb
+    a stranger's None-scoped ledger, or its first micro-batches would be
+    silently dropped as phantom "redeliveries"."""
+    from time_series_spark_spark.sources.io import latest_committed_batch_id
+
+    latest = max(
+        (
+            bid
+            for scope in scopes
+            if (bid := latest_committed_batch_id(table_path, scope)) is not None
+        ),
+        default=None,
+    )
+    return latest is not None and batch_id <= latest
+
+
 def stream_to_versioned_table(
     stream_df: DataFrame,
     table_path: str,
@@ -1172,37 +1195,13 @@ def stream_to_versioned_table(
     absorb (nothing persists to replay from), so each run gets a fresh
     UUID identity and never collides with prior runs' ledger entries.
     """
-    from time_series_spark_spark.sources.io import (
-        latest_committed_batch_id,
-        write_versioned,
-    )
+    from time_series_spark_spark.sources.io import write_versioned
 
     stream_id, alias_ids = _resolve_stream_identity(checkpoint_dir)
     committed: list[int] = []
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        # MONOTONE redelivery check (round 13 — correct on compacted
-        # ledgers, where old ids are no longer individually enumerable):
-        # batch ids are monotone per checkpoint identity and committed in
-        # order, so batch_id <= the stream's watermark ⇔ redelivery.
-        # alias_ids (possibly empty) are the ADDITIONAL ledger scopes this
-        # checkpoint's history may have committed under — the legacy
-        # None-scope and/or a raw (un-normalized) path spelling. They are
-        # resolved ONCE at identity resolution and only for checkpoints
-        # that actually predate the marker migration: a brand-new stream
-        # (fresh checkpoint, batch ids restarting at 0) must NOT absorb a
-        # stranger's None-scoped ledger, or its first micro-batches would
-        # be silently dropped as phantom "redeliveries".
-        latest = max(
-            (
-                bid
-                for scope in [stream_id, *alias_ids]
-                if (bid := latest_committed_batch_id(table_path, scope))
-                is not None
-            ),
-            default=None,
-        )
-        if latest is not None and batch_id <= latest:
+        if _redelivered(table_path, [stream_id, *alias_ids], batch_id):
             return  # redelivered micro-batch: already a committed version
         committed.append(
             write_versioned(
@@ -1214,11 +1213,7 @@ def stream_to_versioned_table(
             )
         )
 
-    writer = stream_df.writeStream.foreachBatch(commit)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_df, commit, checkpoint_dir)
     return committed
 
 
@@ -1256,11 +1251,7 @@ def stream_merge_to_versioned_table(
         as_table_fs,
         latest_version,
     )
-    from time_series_spark_spark.sources.io import (
-        latest_committed_batch_id,
-        merge_versioned,
-        write_versioned,
-    )
+    from time_series_spark_spark.sources.io import merge_versioned, write_versioned
 
     stream_id, alias_ids = _resolve_stream_identity(checkpoint_dir)
     committed: list[int] = []
@@ -1280,17 +1271,7 @@ def stream_merge_to_versioned_table(
         return [f["name"] for f in schema["fields"] if f["name"] not in keys]
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # monotone redelivery watermark — see stream_to_versioned_table
-        latest = max(
-            (
-                bid
-                for scope in [stream_id, *alias_ids]
-                if (bid := latest_committed_batch_id(table_path, scope))
-                is not None
-            ),
-            default=None,
-        )
-        if latest is not None and batch_id <= latest:
+        if _redelivered(table_path, [stream_id, *alias_ids], batch_id):
             return  # redelivered micro-batch: already committed
         from pyspark.sql.window import Window
 
@@ -1332,11 +1313,7 @@ def stream_merge_to_versioned_table(
         )
         committed.append(rep["version"])
 
-    writer = stream_df.writeStream.foreachBatch(upsert)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    q.awaitTermination()
+    _run_partial_log(stream_df, upsert, checkpoint_dir)
     return committed
 
 
