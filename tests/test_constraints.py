@@ -62,12 +62,12 @@ def test_establish_enforce_and_refuse(spark, tmp_path):
     assert read_versioned(spark, path).count() == 3
     # no orphaned staging dirs from the refused commits
     tfs = as_table_fs(path)
-    from time_series_spark_spark.sources.fsio import manifest_files
+    from time_series_spark_spark.sources.fsio import Snapshot
 
     referenced = {
         f.split("/")[0]
         for v in range(before + 1)
-        for f in manifest_files(tfs, v)
+        for f in Snapshot(tfs, v).files
     }
     assert {d for d in tfs.ls() if d.startswith("v=")} == referenced
 

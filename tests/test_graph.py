@@ -507,3 +507,30 @@ def test_sssp_bounded_fractional_weights_stay_double(spark):
     assert got == {0: 0.0, 1: 0.5, 2: 0.75}
     fields = dict(sssp_bounded(edges, 0, max_rounds=1).dtypes)
     assert fields == {"node": "bigint", "dist": "double"}
+
+
+def test_loop_invariant_edges_are_cut_once(spark):
+    """bfs_hops and pagerank cut their symmetrized edges before the loop:
+    a counting UDF on the edge input runs as often for 2 hops as for 8,
+    and for 4 rounds as for 16."""
+    from time_series_spark_spark.operators.graph import bfs_hops, pagerank
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(12)], "a long, b long")
+    edges = path.select(counted("a").alias("a"), "b")
+
+    def evaluations(build):
+        before = calls.value
+        build().collect()
+        return calls.value - before
+
+    bfs = [evaluations(lambda h=h: bfs_hops(edges, 0, max_hops=h)) for h in (2, 4, 8)]
+    pr = [evaluations(lambda n=n: pagerank(edges, "a", "b", iters=n)) for n in (4, 8, 16)]
+    assert bfs[0] > 0 and len(set(bfs)) == 1, bfs
+    assert pr[0] > 0 and len(set(pr)) == 1, pr

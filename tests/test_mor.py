@@ -13,9 +13,8 @@ import pytest
 
 from time_series_spark_spark.sources import io as io_mod
 from time_series_spark_spark.sources.fsio import (
+    Snapshot,
     as_table_fs,
-    manifest_dvs,
-    manifest_files,
 )
 from time_series_spark_spark.sources.io import (
     ConcurrentCommitError,
@@ -71,14 +70,14 @@ def test_mor_point_delete_write_amplification(spark, tmp_path):
     manifest reference, and only the manifest/DV metadata grows."""
     path = _two_file_table(spark, tmp_path)
     tfs = as_table_fs(path)
-    before = manifest_files(tfs, 1)
+    before = Snapshot(tfs, 1).files
     rep = delete_versioned(spark, path, "k = 7", strategy="mor")
     assert rep["bytes_staged"] == 0
     assert rep["n_files_added"] == 0
     assert rep["n_files_tombstoned"] == 1
     assert rep["n_rows_tombstoned"] == 1
     # the snapshot's file list is IDENTICAL — nothing was rewritten
-    assert manifest_files(tfs, rep["version"]) == before
+    assert Snapshot(tfs, rep["version"]).files == before
     got = sorted(r["k"] for r in read_versioned(spark, path).collect())
     assert got == [0, 1, 2, 3, 4, 5, 6, 8, 9]
     # the manifest records the MoR conflict-class marker
@@ -143,7 +142,7 @@ def test_mor_tombstones_accumulate_and_time_travel(spark, tmp_path):
     r1 = delete_versioned(spark, path, "k = 1", strategy="mor")
     r2 = delete_versioned(spark, path, "k = 2", strategy="mor")
     tfs = as_table_fs(path)
-    dv = manifest_dvs(tfs, r2["version"])
+    dv = Snapshot(tfs, r2["version"]).dvs
     assert sum(len(ps) for ps in dv.values()) == 2
     # idempotent re-delete: rows already tombstoned add nothing
     r3 = delete_versioned(spark, path, "k <= 2", strategy="mor")
@@ -165,7 +164,7 @@ def test_cow_after_mor_does_not_resurrect(spark, tmp_path):
     rep = update_versioned(spark, path, "k = 2", {"val": "998"})
     got = {r["k"]: r["val"] for r in read_versioned(spark, path).collect()}
     assert 1 not in got and got[2] == 998 and len(got) == 9
-    assert manifest_dvs(as_table_fs(path), rep["version"]) == {}
+    assert Snapshot(as_table_fs(path), rep["version"]).dvs == {}
 
 
 def test_mor_compaction_materializes_and_restore_resurrects(
@@ -182,7 +181,7 @@ def test_mor_compaction_materializes_and_restore_resurrects(
     )
     rep = compact_versioned(spark, path, target_file_bytes=1 << 30)
     tfs = as_table_fs(path)
-    assert manifest_dvs(tfs, rep["version"]) == {}
+    assert Snapshot(tfs, rep["version"]).dvs == {}
     assert (
         sorted(r["k"] for r in read_versioned(spark, path).collect())
         == rows_before
@@ -191,7 +190,7 @@ def test_mor_compaction_materializes_and_restore_resurrects(
     assert m["mode"] == "optimize"
     # restore to the pre-optimize DV version: tombstones come back
     v = restore_versioned(path, r1["version"])
-    assert manifest_dvs(tfs, v) != {}
+    assert Snapshot(tfs, v).dvs != {}
     assert (
         sorted(r["k"] for r in read_versioned(spark, path).collect())
         == rows_before
@@ -211,7 +210,7 @@ def test_mor_dv_sidecar_spill_roundtrip(spark, tmp_path, monkeypatch):
     m = tfs.read_json(f"_manifest.{rep['version']}.json")
     assert "dv" not in m and m["dv_parquet"].startswith("_dv.")
     assert tfs.exists(m["dv_parquet"])
-    dv = manifest_dvs(tfs, rep["version"])
+    dv = Snapshot(tfs, rep["version"]).dvs
     assert sum(len(ps) for ps in dv.values()) == 5
     assert sorted(
         r["k"] for r in read_versioned(spark, path).collect()
@@ -327,7 +326,7 @@ def test_optimize_rebase_past_streaming_append(spark, tmp_path, monkeypatch):
     referenced = {
         f.split("/")[0]
         for v in range(5)
-        for f in manifest_files(tfs, v)
+        for f in Snapshot(tfs, v).files
     }
     assert {d for d in tfs.ls() if d.startswith("v=")} == referenced
 
@@ -514,7 +513,7 @@ def test_two_process_mor_race_disjoint(spark, tmp_path):
     ]
     # both MoR commits' tombstones are live in the final dv state (the
     # rebase merged the loser's positions onto the winner's state)
-    dv = manifest_dvs(as_table_fs(path), 3)
+    dv = Snapshot(as_table_fs(path), 3).dvs
     assert sum(len(ps_) for ps_ in dv.values()) == 6  # 3 keys per writer
 
 

@@ -12,10 +12,8 @@ import pytest
 
 from time_series_spark_spark.sources import io as io_mod
 from time_series_spark_spark.sources.fsio import (
+    Snapshot,
     as_table_fs,
-    manifest_col_stats,
-    manifest_file_stats,
-    manifest_files,
 )
 from time_series_spark_spark.sources.io import (
     describe_versioned_history,
@@ -56,12 +54,12 @@ def test_sidecar_written_and_resolves_identically(
     assert "files" not in m and "file_stats" not in m and "col_stats" not in m
     assert tfs.exists(m["files_parquet"])
 
-    files = manifest_files(tfs, 0)
+    files = Snapshot(tfs, 0).files
     assert len(files) == 8 == m["n_files"]
-    stats = manifest_file_stats(tfs, 0)
+    stats = Snapshot(tfs, 0).file_stats
     assert set(stats) == set(files)
     assert all(isinstance(v, list) and v for v in stats.values())
-    cstats = manifest_col_stats(tfs, 0)
+    cstats = Snapshot(tfs, 0).col_stats
     assert set(cstats) == set(files)
     assert all("k" in env and "v" in env for env in cstats.values())
     # the table reads back whole
@@ -78,8 +76,8 @@ def test_sidecar_written_and_resolves_identically(
     )
     tfs2 = as_table_fs(path2)
     assert "files" in tfs2.read_json("_manifest.0.json")
-    assert len(manifest_files(tfs2, 0)) == 8
-    assert set(manifest_col_stats(tfs2, 0)) == set(manifest_files(tfs2, 0))
+    assert len(Snapshot(tfs2, 0).files) == 8
+    assert set(Snapshot(tfs2, 0).col_stats) == set(Snapshot(tfs2, 0).files)
 
 
 def test_sidecar_composes_with_cow_vacuum_restore_history(

@@ -166,16 +166,15 @@ def test_write_versioned_records_row_group_stats(spark, tmp_path):
     row-group byte sizes in the manifest (`add_stats`; full-snapshot
     manifests also carry `file_stats` for the whole list), read once at
     commit time from the footers the writer just produced — and
-    `fsio.manifest_file_stats` resolves the full map through the delta
+    `fsio.Snapshot.file_stats` resolves the full map through the delta
     chain."""
     import json
 
     import pyarrow.parquet as pq
 
     from time_series_spark_spark.sources.fsio import (
+        Snapshot,
         as_table_fs,
-        manifest_file_stats,
-        manifest_files,
     )
     from time_series_spark_spark.sources.io import write_versioned
 
@@ -199,8 +198,8 @@ def test_write_versioned_records_row_group_stats(spark, tmp_path):
     assert "files" not in m1 and set(m1["add_stats"]) == set(m1["adds"])
     # ...and the chain resolver covers the FULL snapshot file list
     tfs = as_table_fs(str(table))
-    stats = manifest_file_stats(tfs, 1)
-    assert set(stats) >= set(manifest_files(tfs, 1))
+    stats = Snapshot(tfs, 1).file_stats
+    assert set(stats) >= set(Snapshot(tfs, 1).files)
 
 
 def test_versioned_stream_plans_without_datafile_io(spark, tmp_path, monkeypatch):
@@ -584,10 +583,7 @@ def test_compact_versioned_zorder_preserves_and_prunes(spark, tmp_path):
     via parquet_rowgroup_stats_report)."""
     from pyspark.sql import functions as F
 
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import Snapshot, as_table_fs
     from time_series_spark_spark.sources.io import (
         compact_versioned,
         parquet_rowgroup_stats_report,
@@ -603,13 +599,13 @@ def test_compact_versioned_zorder_preserves_and_prunes(spark, tmp_path):
     )
     write_versioned(df.repartition(8), path)
     tfs = as_table_fs(path)
-    before = [tfs.spark_path(f) for f in manifest_files(tfs, 0)]
+    before = [tfs.spark_path(f) for f in Snapshot(tfs, 0).files]
     rep = compact_versioned(
         spark, path, target_file_bytes=25_000, zorder_by=["a", "b"]
     )
     assert rep["zorder_by"] == ["a", "b"]
     after = [
-        tfs.spark_path(f) for f in manifest_files(tfs, rep["version"])
+        tfs.spark_path(f) for f in Snapshot(tfs, rep["version"]).files
     ]
     # data preserved bit-for-bit (same multiset of rows)
     assert read_versioned(spark, path).exceptAll(df).count() == 0
@@ -939,3 +935,102 @@ def test_vacuum_deletes_orphan_sidecars(spark, tmp_path, monkeypatch):
     for name in referenced:
         assert tfs.exists(name)  # manifest-referenced sidecars kept
     assert read_versioned(spark, path).count() == 15
+
+
+def test_versioned_reads_resolve_each_manifest_once(spark, tmp_path, monkeypatch):
+    """A version is resolved through one ``fsio.Snapshot``: reading a
+    snapshot plus four carry-forward appends reads each manifest of the
+    chain once, and the streaming planner reads each manifest of its
+    range at most once — the snapshot start's chain, then one read per
+    later version."""
+    from time_series_spark_spark.sources.fsio import TableFS
+    from time_series_spark_spark.sources.io import read_versioned, write_versioned
+    from time_series_spark_spark.sources.pydatasource import (
+        VersionedTableStreamReader,
+    )
+
+    path = str(tmp_path / "vt")
+    write_versioned(spark.range(10).coalesce(1), path)
+    for i in range(1, 5):
+        write_versioned(
+            spark.range(10 * i, 10 * (i + 1)).coalesce(1), path, carry_forward=True
+        )
+    reads = []
+    real = TableFS.read_json
+
+    def counting(self, *rel):
+        if rel[-1].startswith("_manifest."):
+            reads.append(rel[-1])
+        return real(self, *rel)
+
+    monkeypatch.setattr(TableFS, "read_json", counting)
+    df = read_versioned(spark, path)
+    assert sorted(reads) == [f"_manifest.{v}.json" for v in range(5)]
+    assert df.count() == 50
+
+    reads.clear()
+    rd = VersionedTableStreamReader({"path": path})
+    parts = rd.partitions(
+        {"version": 2, "snapshot": True}, {"version": 4, "snapshot": False}
+    )
+    assert sorted(reads) == [f"_manifest.{v}.json" for v in range(5)]
+    assert sorted(v for p in parts for _, v, _ in p.chunks) == [2, 2, 2, 3, 4]
+
+
+_LOAD_STREAM_SOURCE = """
+import json, pickle, sys
+
+try:
+    import time_series_spark_spark  # noqa: F401
+    sys.exit("the package is importable here")
+except ModuleNotFoundError:
+    pass
+with open(sys.argv[1], "rb") as fh:
+    source = pickle.load(fh)({"path": sys.argv[2]})
+schema = source.schema()
+reader = source.streamReader(schema)
+end = reader.latestOffset()
+parts = reader.partitions(reader.initialOffset(), end)
+rows = sum(b.num_rows for p in parts for b in reader.read(p))
+print(json.dumps({"fields": schema.fieldNames(), "end": end, "rows": rows}))
+"""
+
+
+def test_versioned_stream_source_loads_without_the_package(spark, tmp_path):
+    """The registered ``versioned_table`` source, cloudpickled the way
+    Spark ships it to its streaming planner worker, plans and reads a
+    three-version table in a Python process that cannot import this
+    package: ``pydatasource`` and ``fsio`` both travel by value."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from time_series_spark_spark.sources.io import write_versioned
+    from time_series_spark_spark.sources.pydatasource import (
+        VersionedTableStreamDataSource,
+        register_versioned_table_stream_source,
+    )
+
+    path = str(tmp_path / "vt")
+    for i in range(3):
+        write_versioned(
+            spark.range(10 * i, 10 * (i + 1)).coalesce(1), path, carry_forward=True
+        )
+    register_versioned_table_stream_source(spark)
+    blob = tmp_path / "source.pkl"
+    blob.write_bytes(cloudpickle.dumps(VersionedTableStreamDataSource))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _LOAD_STREAM_SOURCE, str(blob), path],
+        cwd="/tmp", env=env, capture_output=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr.decode()[-2000:]
+    got = json.loads(out.stdout.decode().strip().splitlines()[-1])
+    assert got == {
+        "fields": ["id", "_commit_version"],
+        "end": {"version": 2, "snapshot": False},
+        "rows": 30,
+    }

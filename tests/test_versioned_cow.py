@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pytest
 
-from time_series_spark_spark.sources.fsio import as_table_fs, manifest_files
+from time_series_spark_spark.sources.fsio import Snapshot, as_table_fs
 from time_series_spark_spark.sources.io import (
     delete_versioned,
     describe_versioned_history,
@@ -75,14 +75,14 @@ def test_merge_rewrites_only_touched_files(spark, tmp_path):
     manifest, zero I/O) and records the replaced files in `removes`."""
     path = _two_file_table(spark, tmp_path)
     tfs = as_table_fs(path)
-    before = manifest_files(tfs, 1)
-    file_b = [f for f in before if f not in manifest_files(tfs, 0)]
+    before = Snapshot(tfs, 1).files
+    file_b = [f for f in before if f not in Snapshot(tfs, 0).files]
     rep = merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 999, "g9")]), ["k"]
     )
     assert rep["n_files_rewritten"] == 1
     assert rep["n_files_carried"] == 1
-    after = manifest_files(tfs, rep["version"])
+    after = Snapshot(tfs, rep["version"]).files
     assert set(file_b) <= set(after)  # carried, not rewritten
     m = tfs.read_json(f"_manifest.{rep['version']}.json")
     assert m["mode"] == "merge"
@@ -283,7 +283,7 @@ def test_writer_unique_staging_and_loser_cleanup(spark, tmp_path, monkeypatch):
     path = str(tmp_path / "vt")
     write_versioned(spark.range(5).selectExpr("id"), path)
     tfs = as_table_fs(path)
-    winner_files = manifest_files(tfs, 0)
+    winner_files = Snapshot(tfs, 0).files
     # steal version 1: publish a manifest the racing writer will lose to
     stolen = dict(tfs.read_json("_manifest.0.json"))
     stolen["version"] = 1
@@ -330,7 +330,7 @@ def test_two_process_commit_race(spark, tmp_path):
     assert tfs.exists("_manifest.1.json")
     assert not tfs.exists("_manifest.2.json")  # exactly one commit landed
     # every staging dir still on disk is referenced by a manifest
-    referenced = set(manifest_files(tfs, 1)) | set(manifest_files(tfs, 0))
+    referenced = set(Snapshot(tfs, 1).files) | set(Snapshot(tfs, 0).files)
     ref_dirs = {f.split("/")[0] for f in referenced}
     disk_dirs = {d for d in tfs.ls() if d.startswith("v=")}
     assert disk_dirs == ref_dirs
@@ -579,7 +579,7 @@ def test_vacuum_grace_period(spark, tmp_path, monkeypatch):
     write_versioned(spark.range(9).selectExpr("id"), path)   # v1 replace
     write_versioned(spark.range(3).selectExpr("id"), path)   # v2 replace
     tfs = as_table_fs(path)
-    v0_files = manifest_files(tfs, 0)
+    v0_files = Snapshot(tfs, 0).files
 
     # young unreference → deferred, but the floor rises and below-floor
     # reads refuse while the file is still physically present
@@ -860,7 +860,7 @@ def test_merge_rebase_disjoint_merges_both_land(spark, tmp_path, monkeypatch):
     referenced = {
         f.split("/")[0]
         for v in range(4)
-        for f in manifest_files(tfs, v)
+        for f in Snapshot(tfs, v).files
     }
     disk = {d for d in tfs.ls() if d.startswith("v=")}
     assert disk == referenced
@@ -888,7 +888,7 @@ def test_merge_rebase_overlapping_files_refuses(spark, tmp_path, monkeypatch):
     referenced = {
         f.split("/")[0]
         for v in range(3)
-        for f in manifest_files(tfs, v)
+        for f in Snapshot(tfs, v).files
     }
     assert {d for d in tfs.ls() if d.startswith("v=")} == referenced
     got = {r["k"]: r["val"] for r in read_versioned(spark, path).collect()}
@@ -1203,10 +1203,6 @@ def test_rebased_merge_manifest_carries_rival_stats(
     their row-group stats and column envelopes (stats resolution runs
     against the rebased base, not the stale snapshot), so data skipping
     and the streaming planner stay exact after a rebase."""
-    from time_series_spark_spark.sources.fsio import (
-        manifest_col_stats,
-        manifest_file_stats,
-    )
     from time_series_spark_spark.sources.io import prune_files_by_stats
 
     path = _two_file_table(spark, tmp_path)
@@ -1220,9 +1216,9 @@ def test_rebased_merge_manifest_carries_rival_stats(
     monkeypatch.undo()
     assert rep["version"] == 3
     tfs = as_table_fs(path)
-    files = manifest_files(tfs, 3)
-    stats = manifest_file_stats(tfs, 3)
-    cstats = manifest_col_stats(tfs, 3)
+    files = Snapshot(tfs, 3).files
+    stats = Snapshot(tfs, 3).file_stats
+    cstats = Snapshot(tfs, 3).col_stats
     assert set(stats) == set(files) and set(cstats) == set(files)
     # skipping on the rebased version sees BOTH rewrites' envelopes:
     # k=7 (rival's file) and k=2 (loser's file) each prune to one file

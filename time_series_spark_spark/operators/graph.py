@@ -180,20 +180,27 @@ def pagerank(
 
     Scale posture: ranks/degrees are (node, value) frames co-shuffled
     on the node key; the teleport scalar n rides a 1-row broadcast;
-    lineage is cut (:func:`_checkpoint`) every ``_PAGERANK_CUT_EVERY``
-    rounds so the plan stays constant-size instead of growing per
-    iteration. Returns ``(id, rank)`` with Σrank = 1 up to fp.
+    the symmetrized edges and degrees are cut once before the loop, and
+    the ranks' lineage is cut (:func:`_checkpoint`) every
+    ``_PAGERANK_CUT_EVERY`` rounds so the plan stays constant-size
+    instead of growing per iteration. Returns ``(id, rank)`` with Σrank = 1 up to fp.
     """
     a = pairs.select(
         F.col(src_col).cast("long").alias("src"),
         F.col(dst_col).cast("long").alias("dst"),
     )
-    edges = a.unionByName(
-        a.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    # the loop-invariant inputs are cut once, so no round re-runs the
+    # caller's pair pipeline
+    edges = _checkpoint(
+        a.unionByName(
+            a.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        ).distinct()
+    )[0]
     nodes = edges.select(F.col("src").alias("id")).distinct()
     n_row = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    deg = _checkpoint(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )[0]
     ranks = nodes.crossJoin(F.broadcast(n_row)).select(
         "id", (F.lit(1.0) / F.col("n")).alias("rank")
     )
@@ -308,13 +315,17 @@ def bfs_hops(
 
     Scale posture: each round is one hash-join on the frontier (small) vs
     edges (partitioned by vertex) plus an anti-join on the visited set —
-    the standard Pregel-style expansion. Each new layer is cut
-    (:func:`_checkpoint`), and the cut's job also counts its rows: the
-    loop stops at the first empty layer. Output: ``node, hops``.
+    the standard Pregel-style expansion. The symmetrized edges are cut
+    once (:func:`_checkpoint`), so no layer re-runs the caller's edge
+    pipeline; each new layer is cut too, and the cut's job also counts
+    its rows: the loop stops at the first empty layer. Output:
+    ``node, hops``.
     """
-    sym = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+    sym = _checkpoint(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionAll(
+            edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
+        )
+    )[0]
     spark = edges.sparkSession
     visited = local_df(spark, 
         [(int(source), 0)], "node long, hops long"

@@ -905,10 +905,7 @@ def orders_versioned_layout_health(
     import shutil
     import tempfile
 
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import Snapshot, as_table_fs
     from time_series_spark_spark.sources.io import (
         parquet_layout_report,
         write_versioned,
@@ -926,7 +923,7 @@ def orders_versioned_layout_health(
         # version 1 is a carry-forward DELTA manifest (adds + base, no
         # 'files' key — round 10): resolve the full snapshot through the
         # chain walk, never the raw manifest key
-        files = manifest_files(as_table_fs(path), 1)
+        files = Snapshot(as_table_fs(path), 1).files
         rep = parquet_layout_report(
             spark, [os.path.join(path, f) for f in files]
         )
@@ -1463,10 +1460,7 @@ def orders_versioned_zorder_report(
     import shutil
     import tempfile
 
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import Snapshot, as_table_fs
     from time_series_spark_spark.sources.io import (
         compact_versioned,
         parquet_rowgroup_stats_report,
@@ -1484,15 +1478,16 @@ def orders_versioned_zorder_report(
     try:
         write_versioned(t.repartition(8), path)  # shuffled baseline
         tfs = as_table_fs(path)
-        before = [tfs.spark_path(f) for f in manifest_files(tfs, 0)]
+        v0_files = Snapshot(tfs, 0).files
+        before = [tfs.spark_path(f) for f in v0_files]
         rep = compact_versioned(
             spark,
             path,
-            target_file_bytes=max(4096, sum(tfs.size(f) for f in manifest_files(tfs, 0)) // 8),
+            target_file_bytes=max(4096, sum(tfs.size(f) for f in v0_files) // 8),
             zorder_by=["o_custkey", "cents"],
         )
         after = [
-            tfs.spark_path(f) for f in manifest_files(tfs, rep["version"])
+            tfs.spark_path(f) for f in Snapshot(tfs, rep["version"]).files
         ]
         preserved = read_versioned(spark, path).count() == n_total
 

@@ -25,6 +25,14 @@ location that Spark's reader/writer understands (for the local default
 they are identical; for a ``SubTreeFileSystem`` over a local base the
 caller passes the composed local path; for s3a://-style deployments the
 caller passes the Hadoop-addressable URI).
+
+:class:`Snapshot` is the one resolver of a version: it walks the delta
+chain (``adds`` + ``base``) back to the nearest snapshot manifest once,
+and every batch read, commit, pruning plan and the ``versioned_table``
+streaming source take the version's files, stats and deletion vectors
+from it. The module imports only the stdlib and pyarrow, so
+``pydatasource`` pickles it by value into Spark's streaming planner
+worker, which cannot import this package.
 """
 
 from __future__ import annotations
@@ -199,6 +207,21 @@ def latest_version(tfs: TableFS) -> int | None:
     return versions[-1] if versions else None
 
 
+def read_manifest(tfs: TableFS, version: int) -> dict:
+    """One version's own manifest, as committed."""
+    return tfs.read_json(f"_manifest.{version}.json")
+
+
+def retention_floor(table_path: "str | TableFS") -> int:
+    """The oldest version whose data files are guaranteed present (0 when
+    vacuum has never run). Published atomically by
+    ``io.vacuum_versioned``."""
+    tfs = as_table_fs(table_path)
+    if not tfs.exists("_retention.json"):
+        return 0
+    return int(tfs.read_json("_retention.json")["floor"])
+
+
 def is_snapshot_manifest(m: dict) -> bool:
     """True when a manifest restates the full file list itself — inline
     (``files``) or via a parquet sidecar (``files_parquet``, round 13)
@@ -227,145 +250,137 @@ def snapshot_files(tfs: TableFS, m: dict) -> list[str]:
     return snapshot_sidecar(tfs, m, ["path"]).column("path").to_pylist()
 
 
-def manifest_files(tfs: TableFS, version: int) -> list[str]:
-    """Resolve the FULL file list of a version by walking the delta
-    chain (``adds`` + ``base``) back to the nearest full-snapshot
-    manifest (inline ``files`` or a parquet sidecar) — at most
-    ``checkpoint_every`` reads (see ``write_versioned``). Pre-round-10
-    manifests all carry ``files``, so the walk terminates immediately
-    on legacy tables."""
-    adds_stack: list[list[str]] = []
-    cur = version
-    while True:
-        m = tfs.read_json(f"_manifest.{cur}.json")
-        if is_snapshot_manifest(m):
-            files = set(snapshot_files(tfs, m))
-            break
-        adds_stack.append(m["adds"])
-        cur = m["base"]
-    for adds in adds_stack:
-        files |= set(adds)
-    return sorted(files)
+class _once:
+    """``functools.cached_property`` without its lock: this module is
+    pickled by value into Spark's streaming planner worker, and the
+    ``RLock`` that Python 3.11's ``cached_property`` holds does not
+    pickle."""
+
+    def __init__(self, fn):
+        self.fn = fn
+        self.__doc__ = fn.__doc__
+
+    def __get__(self, obj, cls=None):
+        if obj is None:
+            return self
+        val = obj.__dict__[self.fn.__name__] = self.fn(obj)
+        return val
 
 
-def manifest_file_stats(tfs: TableFS, version: int) -> dict:
-    """Best-effort per-file row-group BYTE SIZES (``rel → [bytes, ...]``)
-    for the files visible at ``version``, resolved by walking the same
-    delta chain as :func:`manifest_files` and merging each manifest's
-    commit-time ``add_stats`` (and the terminal snapshot's
-    ``file_stats``), oldest first so later rewrites win. Round-11
-    manifests record these at commit (the writer reads the footers it
-    just produced ONCE), so planners — the J11e streaming source above
-    all — split files at row-group boundaries with zero data-file I/O.
-    Files from legacy manifests are simply absent: callers fall back to
-    one footer read for exactly those files."""
-    chain = []
-    cur = version
-    while True:
-        m = tfs.read_json(f"_manifest.{cur}.json")
-        chain.append(m)
-        if is_snapshot_manifest(m):
-            break
-        cur = m["base"]
-    stats: dict = {}
-    for m in reversed(chain):
-        if "files_parquet" in m:
-            t = snapshot_sidecar(tfs, m, ["path", "rg_bytes"])
-            stats.update(
-                {
-                    p: rb
-                    for p, rb in zip(
+class Snapshot:
+    """One committed version of the table, resolved once.
+
+    ``chain`` holds the manifests from ``version`` back through each
+    delta manifest's ``base`` to the nearest snapshot manifest (inline
+    ``files`` or a ``files_parquet`` sidecar), newest first — at most
+    ``_CHECKPOINT_INTERVAL`` reads (see ``io.write_versioned``), one on
+    pre-round-10 tables, whose manifests all restate ``files``.
+    ``manifest`` is ``chain[0]`` and ``terminal`` is ``chain[-1]``.
+
+    ``files``, ``file_stats``, ``col_stats`` and ``dvs`` are folds over
+    ``chain``, each computed on first use and kept; they are shared, so
+    a caller copies one before changing it. A fold that reads the
+    terminal's sidecar reads only its own columns."""
+
+    def __init__(self, tfs: TableFS, version: int):
+        self.tfs = tfs
+        self.version = version
+        self.chain = [read_manifest(tfs, version)]
+        while not is_snapshot_manifest(self.chain[-1]):
+            self.chain.append(read_manifest(tfs, self.chain[-1]["base"]))
+
+    @property
+    def manifest(self) -> dict:
+        return self.chain[0]
+
+    @property
+    def terminal(self) -> dict:
+        return self.chain[-1]
+
+    @_once
+    def files(self) -> list[str]:
+        """The FULL sorted file list: the terminal's own list plus every
+        later delta's ``adds``."""
+        files = set(snapshot_files(self.tfs, self.terminal))
+        for m in self.chain[:-1]:
+            files.update(m["adds"])
+        return sorted(files)
+
+    def _stats(self, column: str, parse, snapshot_key: str, add_key: str):
+        # oldest first, so a later commit's stats for a file win
+        stats: dict = {}
+        for m in reversed(self.chain):
+            if "files_parquet" in m:
+                t = snapshot_sidecar(self.tfs, m, ["path", column])
+                stats.update(
+                    (p, parse(v))
+                    for p, v in zip(
                         t.column("path").to_pylist(),
-                        t.column("rg_bytes").to_pylist(),
+                        t.column(column).to_pylist(),
                     )
-                    if rb is not None
-                }
-            )
-        stats.update(m.get("file_stats", {}))
-        stats.update(m.get("add_stats", {}))
-    return stats
+                    if v is not None
+                )
+            stats.update(m.get(snapshot_key, {}))
+            stats.update(m.get(add_key, {}))
+        return stats
 
+    @_once
+    def file_stats(self) -> dict:
+        """Per-file row-group BYTE SIZES (``rel → [bytes, ...]``),
+        recorded at commit (round 11) so planners — the streaming
+        source above all — split files at row-group boundaries with zero
+        data-file I/O. Files from legacy manifests are absent: callers
+        fall back to one footer read for exactly those."""
+        return self._stats("rg_bytes", lambda rb: rb, "file_stats", "add_stats")
 
-def manifest_col_stats(tfs: TableFS, version: int) -> dict:
-    """Best-effort per-file COLUMN MIN/MAX envelopes
-    (``rel → {col: [min, max]}``) for the files visible at ``version``,
-    resolved by the same delta-chain walk as :func:`manifest_file_stats`
-    (terminal snapshot's ``col_stats`` + each commit's
-    ``add_col_stats``, oldest first so rewrites win). Round-12 writers
-    record these at commit; files from older manifests are simply
-    absent — and ABSENT MEANS NEVER PRUNED (data skipping is an
-    optimization, not a correctness filter)."""
-    import json as _json
+    @_once
+    def col_stats(self) -> dict:
+        """Per-file COLUMN MIN/MAX envelopes (``rel → {col: [min, max]}``),
+        recorded at commit (round 12). Files from older manifests are
+        absent — and ABSENT MEANS NEVER PRUNED (data skipping is an
+        optimization, not a correctness filter)."""
+        return self._stats("col_stats", json.loads, "col_stats", "add_col_stats")
 
-    chain = []
-    cur = version
-    while True:
-        m = tfs.read_json(f"_manifest.{cur}.json")
-        chain.append(m)
-        if is_snapshot_manifest(m):
-            break
-        cur = m["base"]
-    stats: dict = {}
-    for m in reversed(chain):
-        if "files_parquet" in m:
-            t = snapshot_sidecar(tfs, m, ["path", "col_stats"])
-            stats.update(
-                {
-                    p: _json.loads(cs)
-                    for p, cs in zip(
-                        t.column("path").to_pylist(),
-                        t.column("col_stats").to_pylist(),
-                    )
-                    if cs is not None
-                }
-            )
-        stats.update(m.get("col_stats", {}))
-        stats.update(m.get("add_col_stats", {}))
-    return stats
-
-
-def manifest_dvs(tfs: TableFS, version: int) -> dict:
-    """Merge-on-read DELETION-VECTOR state visible at ``version``
-    (round 14 — Delta deletion vectors / Iceberg v2 position deletes):
-    ``rel → sorted row positions`` of rows logically deleted from each
-    data file without rewriting it. Resolution walks the same delta
-    chain as :func:`manifest_files`: carry-forward APPEND commits never
-    change tombstones, so the nearest full-snapshot manifest's recorded
-    state (inline ``dv`` below the spill threshold, else a ``dv_parquet``
-    sidecar) is authoritative — every snapshot publisher (MoR commits,
-    CoW commits, checkpoints, restore) restates it; replace/optimize
-    clear it (fresh data / materialized). Empty dict = no tombstones,
-    the plain-read fast path."""
-    cur = version
-    while True:
-        m = tfs.read_json(f"_manifest.{cur}.json")
-        if is_snapshot_manifest(m):
-            break
-        cur = m["base"]
-    if m.get("dv_parquet"):
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(
-            tfs.path(m["dv_parquet"]), filesystem=tfs.fs
+    @property
+    def has_dvs(self) -> bool:
+        """Whether the version carries deletion vectors, from the
+        terminal's keys alone — the DV sidecar is never opened."""
+        return bool(self.terminal.get("dv")) or bool(
+            self.terminal.get("dv_parquet")
         )
-        return {
-            p: [int(x) for x in ps]
-            for p, ps in zip(
-                t.column("path").to_pylist(),
-                t.column("positions").to_pylist(),
-            )
-        }
-    return {
-        rel: [int(p) for p in ps] for rel, ps in m.get("dv", {}).items()
-    }
+
+    @_once
+    def dvs(self) -> dict:
+        """Merge-on-read DELETION-VECTOR state (round 14 — Delta deletion
+        vectors / Iceberg v2 position deletes): ``rel → sorted row
+        positions`` of rows logically deleted from each data file
+        without rewriting it. Carry-forward appends never change
+        tombstones, so the terminal's recorded state (inline ``dv``
+        below the spill threshold, else a ``dv_parquet`` sidecar) is
+        authoritative — every snapshot publisher (MoR commits, CoW
+        commits, checkpoints, restore) restates it; replace/optimize
+        clear it. Empty dict = no tombstones, the plain-read fast path."""
+        m = self.terminal
+        if m.get("dv_parquet"):
+            import pyarrow.parquet as pq
+
+            t = pq.read_table(self.tfs.path(m["dv_parquet"]), filesystem=self.tfs.fs)
+            return {
+                p: [int(x) for x in ps]
+                for p, ps in zip(
+                    t.column("path").to_pylist(),
+                    t.column("positions").to_pylist(),
+                )
+            }
+        return {rel: [int(p) for p in ps] for rel, ps in m.get("dv", {}).items()}
 
 
 def manifest_adds(tfs: TableFS, version: int) -> list[str]:
     """The files ADDED by one commit — directly from the manifest's
     ``adds`` when present (every round-10+ manifest), else the
     files(v) − files(v−1) difference (legacy manifests)."""
-    m = tfs.read_json(f"_manifest.{version}.json")
+    m = read_manifest(tfs, version)
     if "adds" in m:
         return sorted(m["adds"])
-    prev = set(manifest_files(tfs, version - 1)) if version > 0 else set()
+    prev = set(Snapshot(tfs, version - 1).files) if version > 0 else set()
     return sorted(set(snapshot_files(tfs, m)) - prev)

@@ -17,6 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from time_series_spark_spark.sources.fsio import (
+    Snapshot,
+    is_snapshot_manifest,
+    retention_floor,
+)
+
+
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """Read one test-corpus table; normalize ``events.ts`` to TimestampType."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -603,20 +610,7 @@ def latest_committed_batch_id(
     check that stays correct on compacted ledgers (round 13), where
     older bids are no longer individually enumerable; it is also O(1)
     cheaper than materializing the id set."""
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        latest_version,
-    )
-
-    tfs = as_table_fs(table_path)
-    latest = latest_version(tfs)
-    versions = list(range(latest + 1)) if latest is not None else []
-    bids = [
-        int(bid)
-        for sid, bid in _collect_ledger_pairs(tfs, versions)
-        if sid == stream_id
-    ]
-    return max(bids) if bids else None
+    return max(committed_batch_ids(table_path, stream_id), default=None)
 
 
 def write_versioned(
@@ -708,10 +702,6 @@ def write_versioned(
     from time_series_spark_spark.sources.fsio import (
         as_table_fs,
         latest_version,
-        manifest_col_stats,
-        manifest_dvs,
-        manifest_file_stats,
-        manifest_files,
     )
 
     tfs = as_table_fs(table_path)
@@ -819,29 +809,26 @@ def write_versioned(
             # ledger (reads at most _CHECKPOINT_INTERVAL prior
             # manifests — the amortized cost that keeps every OTHER
             # append O(Δ))
-            files = sorted(
-                set(manifest_files(tfs, existing[-1])) | set(adds)
-            )
+            snap = Snapshot(tfs, existing[-1])
+            files = sorted(set(snap.files) | set(adds))
             manifest["n_files"] = len(files)
-            stats = manifest_file_stats(tfs, existing[-1])
-            stats.update(add_stats)
             # restricted to the live list: stats of replaced files must
             # not accumulate forever across checkpoints; legacy files
             # without commit-time stats are simply absent (planner
             # footer-read fallback)
-            cstats = manifest_col_stats(tfs, existing[-1])
-            cstats.update(add_col_stats)
             sidecar = _publish_snapshot_fields(
-                tfs, manifest, files, stats, cstats
+                tfs,
+                manifest,
+                files,
+                {**snap.file_stats, **add_stats},
+                {**snap.col_stats, **add_col_stats},
             )
             # carry merge-on-read tombstone state (round 14): an append
             # never changes deletion vectors, but a CHECKPOINT restates
             # the full snapshot — dropping the dv fields here would
             # silently resurrect every tombstoned row at the next
             # chain-walk terminal
-            dv_sidecar = _publish_dv_fields(
-                tfs, manifest, manifest_dvs(tfs, existing[-1])
-            )
+            dv_sidecar = _publish_dv_fields(tfs, manifest, snap.dvs)
             ledger = _collect_ledger_pairs(tfs, existing)
             if batch_id is not None:
                 ledger.append([stream_id, int(batch_id)])
@@ -952,30 +939,24 @@ def prune_files_kept_distributed(
     A13m spill threshold — by construction a small table) falls back to
     the driver resolver wholesale. Same keep/skip decisions as the
     driver path by construction (equivalence pytest-pinned)."""
-    import json as _json
+    from time_series_spark_spark.sources.fsio import as_table_fs
 
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        is_snapshot_manifest,
+    return _kept_distributed(
+        spark, Snapshot(as_table_fs(table_path), version), column, lo, hi
     )
 
-    tfs = as_table_fs(table_path)
-    chain: list[dict] = []
-    cur = version
-    while True:
-        m = tfs.read_json(f"_manifest.{cur}.json")
-        chain.append(m)
-        if is_snapshot_manifest(m):
-            break
-        cur = m["base"]
-    term = chain[-1]
+
+def _kept_distributed(spark: SparkSession, snap, column: str, lo, hi) -> list[str]:
+    """:func:`prune_files_kept_distributed` over a resolved snapshot."""
+    import json as _json
+
+    tfs, term = snap.tfs, snap.terminal
     if "files_parquet" not in term:
-        kept, _ = prune_files_by_stats(tfs, version, column, lo, hi)
-        return kept
+        return _split_by_stats(snap, column, lo, hi)[0]
     # post-checkpoint adds: O(Δ) driver-side, exactly like the planner's
     # other delta walks
     kept: list[str] = []
-    for m in chain[:-1]:
+    for m in snap.chain[:-1]:
         stats = m.get("add_col_stats", {})
         for rel in m.get("adds", ()):
             if _env_keeps(stats.get(rel, {}).get(column), lo, hi):
@@ -1037,17 +1018,18 @@ def prune_files_by_stats(
     files without an envelope (legacy commits, stat-less columns,
     types the manifest can't carry) are always kept. Open-ended
     predicates: pass ``lo=None`` / ``hi=None``."""
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        manifest_col_stats,
-        manifest_files,
+    from time_series_spark_spark.sources.fsio import as_table_fs
+
+    return _split_by_stats(
+        Snapshot(as_table_fs(table_path), version), column, lo, hi
     )
 
-    tfs = as_table_fs(table_path)
-    files = manifest_files(tfs, version)
-    cstats = manifest_col_stats(tfs, version)
+
+def _split_by_stats(snap, column: str, lo, hi) -> tuple[list[str], list[str]]:
+    """:func:`prune_files_by_stats` over a resolved snapshot."""
+    cstats = snap.col_stats
     kept, skipped = [], []
-    for f in files:
+    for f in snap.files:
         if _env_keeps(cstats.get(f, {}).get(column), lo, hi):
             kept.append(f)
         else:
@@ -1125,7 +1107,6 @@ def read_versioned(
     from time_series_spark_spark.sources.fsio import (
         as_table_fs,
         latest_version,
-        manifest_files,
     )
 
     if as_of is not None and as_of_timestamp is not None:
@@ -1168,20 +1149,18 @@ def read_versioned(
             "vacuum_versioned; time travel is only valid for versions "
             f">= {floor}"
         )
-    manifest = tfs.read_json(f"_manifest.{pick}.json")
-    if prune is not None:
+    snap = Snapshot(tfs, pick)
+    if prune is None:
+        rels = snap.files
+    elif int(snap.manifest["n_files"]) >= _PRUNE_DISTRIBUTED_MIN_FILES:
         # at 10⁵+ files the skipping plan itself fans out (round 14):
         # the sidecar envelopes are evaluated by executors and only the
         # kept paths come back — driver plan time stays O(kept)
-        if int(manifest["n_files"]) >= _PRUNE_DISTRIBUTED_MIN_FILES:
-            rels = prune_files_kept_distributed(spark, tfs, pick, *prune)
-        else:
-            kept, _ = prune_files_by_stats(tfs, pick, *prune)
-            rels = kept
+        rels = _kept_distributed(spark, snap, *prune)
     else:
-        rels = manifest_files(tfs, pick)
+        rels = _split_by_stats(snap, *prune)[0]
     schema = _normalize_schema(
-        T.StructType.fromJson(json.loads(manifest["schema"]))
+        T.StructType.fromJson(json.loads(snap.manifest["schema"]))
     )
     if not rels:
         return spark.createDataFrame([], schema)
@@ -1190,9 +1169,7 @@ def read_versioned(
     # logically-deleted rows never reach the caller. The plain
     # zero-overhead read stays the fast path for DV-free versions (the
     # steady state after every OPTIMIZE, which materializes tombstones).
-    from time_series_spark_spark.sources.fsio import manifest_dvs
-
-    dv = manifest_dvs(tfs, pick)
+    dv = snap.dvs
     if any(dv.get(rel) for rel in rels):
         return _snapshot_frame(spark, tfs, rels, schema, dv=dv).drop(
             "__file"
@@ -1316,20 +1293,11 @@ def compact_versioned(
     """
     import math
 
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        latest_version,
-        manifest_col_stats,
-        manifest_dvs,
-        manifest_file_stats,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import latest_version
 
-    tfs = as_table_fs(table_path)
-    latest = latest_version(tfs)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions in {tfs.root}")
-    files = manifest_files(tfs, latest)
+    tfs, latest = _require_table(table_path)
+    head, schema = _table_meta(tfs, latest)
+    files = head.files
     if not files:
         # An empty snapshot (empty df committed) has nothing to rewrite;
         # spark.read.parquet() with zero paths would die with an opaque
@@ -1352,19 +1320,13 @@ def compact_versioned(
     # because the commit publishes mode="optimize" ("same logical
     # rows") streams would skip it, making the loss invisible
     # downstream. Reading under the manifest schema null-fills instead.
-    import json as _json
-
-    manifest = tfs.read_json(f"_manifest.{latest}.json")
-    schema = _normalize_schema(
-        T.StructType.fromJson(_json.loads(manifest["schema"]))
-    )
-    schema_json = manifest["schema"]
+    manifest = head.manifest
     # merge-on-read tombstones MATERIALIZE here (round 14 — Delta's
     # "purge" semantics): the rewrite reads DV-filtered, so
     # logically-deleted rows are physically dropped and the optimize
     # commit publishes with the dv fields cleared — same logical rows,
     # so dataChange=false stays truthful
-    dv = manifest_dvs(tfs, latest)
+    dv = head.dvs
     if any(dv.get(rel) for rel in files):
         df = _snapshot_frame(spark, tfs, files, schema, dv=dv).drop(
             "__file"
@@ -1407,8 +1369,8 @@ def compact_versioned(
         stats = dict(add_stats)
         cstats = dict(add_col_stats)
         if winner_adds:
-            base_stats = manifest_file_stats(tfs, base)
-            base_cstats = manifest_col_stats(tfs, base)
+            base_snap = Snapshot(tfs, base)
+            base_stats, base_cstats = base_snap.file_stats, base_snap.col_stats
             for rel in winner_adds:
                 if rel in base_stats:
                     stats[rel] = base_stats[rel]
@@ -1422,7 +1384,7 @@ def compact_versioned(
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,
             "n_rows_added": n_rows_added,
-            "schema": schema_json,
+            "schema": manifest["schema"],
             "n_files": len(new_files),
             "batch_id": None,
             "stream_id": None,
@@ -1467,8 +1429,8 @@ def compact_versioned(
                         "describes the table; re-run compact_versioned"
                     ) from None
                 winner_adds.extend(m.get("adds", ()))
-            _, schema_new, _ = _table_meta(tfs, new_latest)
-            if _normalize_schema(schema_new) != schema:
+            _, schema_new = _table_meta(tfs, new_latest)
+            if schema_new != schema:
                 tfs.delete_dir(stage)
                 raise ConcurrentCommitError(
                     "a concurrent commit changed the table schema"
@@ -1550,19 +1512,7 @@ def restore_versioned(table_path, to_version: int) -> int:
     Fails loudly when the target is below the retention floor (its data
     files may be vacuumed — same check as ``read_versioned``) or not
     committed. Returns the new version number."""
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        latest_version,
-        manifest_col_stats,
-        manifest_dvs,
-        manifest_file_stats,
-        manifest_files,
-    )
-
-    tfs = as_table_fs(table_path)
-    latest = latest_version(tfs)
-    if latest is None:
-        raise FileNotFoundError(f"no committed versions in {tfs.root}")
+    tfs, latest = _require_table(table_path)
     if not tfs.exists(f"_manifest.{to_version}.json"):
         raise ValueError(
             f"version {to_version} not committed (latest is {latest})"
@@ -1574,10 +1524,8 @@ def restore_versioned(table_path, to_version: int) -> int:
             f"retention floor {floor} of {tfs.root} — its data files "
             "were pruned by vacuum_versioned"
         )
-    target = tfs.read_json(f"_manifest.{to_version}.json")
-    files = manifest_files(tfs, to_version)
-    stats = manifest_file_stats(tfs, to_version)
-    cstats = manifest_col_stats(tfs, to_version)
+    snap = Snapshot(tfs, to_version)
+    target, files = snap.manifest, snap.files
     version = latest + 1
     ledger = _compact_ledger(
         _collect_ledger_pairs(tfs, list(range(latest + 1)))
@@ -1599,13 +1547,13 @@ def restore_versioned(table_path, to_version: int) -> int:
     }
     if target.get("constraints"):
         manifest["constraints"] = target["constraints"]
-    sidecar = _publish_snapshot_fields(tfs, manifest, files, stats, cstats)
+    sidecar = _publish_snapshot_fields(
+        tfs, manifest, files, snap.file_stats, snap.col_stats
+    )
     # the restored snapshot's merge-on-read tombstones come back with it
     # (round 14): restoring to a pre-OPTIMIZE DV-bearing version must
     # re-delete exactly the rows that version had deleted
-    dv_sidecar = _publish_dv_fields(
-        tfs, manifest, manifest_dvs(tfs, to_version)
-    )
+    dv_sidecar = _publish_dv_fields(tfs, manifest, snap.dvs)
     # PUT-IF-ABSENT publish (Delta LogStore contract): a concurrent
     # writer racing to the same version number loses LOUDLY with
     # FileExistsError — never a silent clobber of a committed manifest
@@ -1741,10 +1689,10 @@ def _cow_rebase_conflict(
         # winner's row — appends never conflict by the WriteSerializable
         # rule above; (c) a non-blind winner's row — that winner's own
         # adds are in nonblind_adds and get scanned directly.
-    files_new, schema_new, _ = _table_meta(tfs, new_latest)
-    if _normalize_schema(schema_new) != _normalize_schema(schema):
+    snap_new, schema_new = _table_meta(tfs, new_latest)
+    if schema_new != _normalize_schema(schema):
         return "a concurrent commit changed the table schema"
-    missing = touched_set - set(files_new)
+    missing = touched_set - set(snap_new.files)
     if missing:  # belt-and-braces; the removes check should have caught it
         return (
             f"{len(missing)} touched file(s) are no longer part of the "
@@ -1768,12 +1716,10 @@ def _cow_rebase_conflict(
 
 
 def _cow_commit(
-    tfs,
-    latest: int,
+    head,
     mode: str,
     rewritten: DataFrame,
     touched: list[str],
-    files: list[str],
     schema_json: str,
     batch_id: int | None = None,
     stream_id: str | None = None,
@@ -1807,23 +1753,16 @@ def _cow_commit(
 
     import pyarrow.parquet as pq
 
-    from time_series_spark_spark.sources.fsio import (
-        latest_version,
-        manifest_col_stats,
-        manifest_dvs,
-        manifest_file_stats,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import latest_version
 
+    tfs = head.tfs
     # table invariants (round 14) apply to the rewrite's output — the
     # untouched carried files passed them at their own commit time
-    table_cons = tfs.read_json(f"_manifest.{latest}.json").get(
-        "constraints", {}
-    )
+    table_cons = head.manifest.get("constraints", {})
     rewritten, _obs, _obs_labels = _observe_constraints(
         rewritten, table_cons
     )
-    stage, adds = _stage_data_files(rewritten, tfs, latest + 1)
+    stage, adds = _stage_data_files(rewritten, tfs, head.version + 1)
     _raise_if_violated(_obs, _obs_labels, tfs, stage)
     add_stats, n_rows_written, add_col_stats = _read_add_stats(tfs, adds)
     n_rows_touched = sum(
@@ -1833,22 +1772,18 @@ def _cow_commit(
     schema = _normalize_schema(
         T.StructType.fromJson(_json.loads(schema_json))
     )
-    base, cur_files = latest, files
+    base = head
     for attempt in range(max(1, max_attempts)):
-        version = base + 1
-        new_files = sorted((set(cur_files) - set(touched)) | set(adds))
-        stats = manifest_file_stats(tfs, base)
-        stats.update(add_stats)
-        cstats = manifest_col_stats(tfs, base)
-        cstats.update(add_col_stats)
+        version = base.version + 1
+        new_files = sorted((set(base.files) - set(touched)) | set(adds))
         ledger = _compact_ledger(
-            _collect_ledger_pairs(tfs, list(range(base + 1)))
+            _collect_ledger_pairs(tfs, list(range(version)))
             + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
         )
         manifest = {
             "version": version,
             "mode": mode,
-            "committed_at": _commit_stamp(tfs, base),
+            "committed_at": _commit_stamp(tfs, base.version),
             "adds": adds,
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,
@@ -1863,7 +1798,11 @@ def _cow_commit(
         if table_cons:
             manifest["constraints"] = table_cons
         sidecar = _publish_snapshot_fields(
-            tfs, manifest, new_files, stats, cstats
+            tfs,
+            manifest,
+            new_files,
+            {**base.file_stats, **add_stats},
+            {**base.col_stats, **add_col_stats},
         )
         # merge-on-read tombstone carry (round 14): dv entries of the
         # TOUCHED files die with them — the rewrite read those files
@@ -1876,7 +1815,7 @@ def _cow_commit(
             manifest,
             {
                 rel: ps
-                for rel, ps in manifest_dvs(tfs, base).items()
+                for rel, ps in base.dvs.items()
                 if rel not in set(touched)
             },
         )
@@ -1892,13 +1831,19 @@ def _cow_commit(
                 tfs.delete_dir(stage)
                 raise
             new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base:
+            if new_latest is None or new_latest <= base.version:
                 # the rival manifest exists but isn't resolvable as a
                 # later version — nothing sane to rebase onto
                 tfs.delete_dir(stage)
                 raise
             reason = _cow_rebase_conflict(
-                spark, tfs, base, new_latest, touched, read_marker, schema
+                spark,
+                tfs,
+                base.version,
+                new_latest,
+                touched,
+                read_marker,
+                schema,
             )
             if reason is not None:
                 tfs.delete_dir(stage)
@@ -1906,14 +1851,13 @@ def _cow_commit(
                     f"{mode} lost the commit race and cannot rebase: "
                     f"{reason} — re-read the table and redo the operation"
                 ) from None
-            base = new_latest
-            cur_files = manifest_files(tfs, new_latest)
+            base = Snapshot(tfs, new_latest)
             continue
         tfs.write_json_atomic({"version": version}, "_latest.json")
         return {
             "version": version,
             "n_files_rewritten": len(touched),
-            "n_files_carried": len(cur_files) - len(touched),
+            "n_files_carried": len(base.files) - len(touched),
             "n_files_added": len(adds),
             "n_rows_touched": n_rows_touched,
             "n_rows_written": n_rows_written,
@@ -1946,12 +1890,10 @@ def _collect_positions(matched, files: list[str]) -> dict:
 
 
 def _mor_commit(
-    tfs,
-    latest: int,
+    head,
     mode: str,
     appended: DataFrame | None,
     new_tombs: dict,
-    files: list[str],
     schema_json: str,
     batch_id: int | None = None,
     stream_id: str | None = None,
@@ -1996,24 +1938,17 @@ def _mor_commit(
     the stress script ``git show 0d8b744:scripts/stress_contention.py``."""
     import json as _json
 
-    from time_series_spark_spark.sources.fsio import (
-        latest_version,
-        manifest_col_stats,
-        manifest_dvs,
-        manifest_file_stats,
-        manifest_files,
-    )
+    from time_series_spark_spark.sources.fsio import latest_version
 
-    table_cons = tfs.read_json(f"_manifest.{latest}.json").get(
-        "constraints", {}
-    )
+    tfs = head.tfs
+    table_cons = head.manifest.get("constraints", {})
     if appended is not None:
         # table invariants (round 14) apply to the appended rows — the
         # tombstones only ever REMOVE rows
         appended, _obs, _obs_labels = _observe_constraints(
             appended, table_cons
         )
-        stage, adds = _stage_data_files(appended, tfs, latest + 1)
+        stage, adds = _stage_data_files(appended, tfs, head.version + 1)
         _raise_if_violated(_obs, _obs_labels, tfs, stage)
         add_stats, n_rows_written, add_col_stats = _read_add_stats(tfs, adds)
     else:
@@ -2027,31 +1962,25 @@ def _mor_commit(
         if stage is not None:
             tfs.delete_dir(stage)
 
-    base, cur_files = latest, files
+    base = head
     for attempt in range(max(1, max_attempts)):
-        version = base + 1
-        new_files = sorted(set(cur_files) | set(adds))
-        dv_state = {
-            rel: set(ps) for rel, ps in manifest_dvs(tfs, base).items()
-        }
+        version = base.version + 1
+        new_files = sorted(set(base.files) | set(adds))
+        dv_state = {rel: set(ps) for rel, ps in base.dvs.items()}
         n_rows_tombstoned = 0
         for rel, ps in new_tombs.items():
             old = dv_state.setdefault(rel, set())
             fresh = set(ps) - old
             n_rows_tombstoned += len(fresh)
             old |= fresh
-        stats = manifest_file_stats(tfs, base)
-        stats.update(add_stats)
-        cstats = manifest_col_stats(tfs, base)
-        cstats.update(add_col_stats)
         ledger = _compact_ledger(
-            _collect_ledger_pairs(tfs, list(range(base + 1)))
+            _collect_ledger_pairs(tfs, list(range(version)))
             + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
         )
         manifest = {
             "version": version,
             "mode": mode,
-            "committed_at": _commit_stamp(tfs, base),
+            "committed_at": _commit_stamp(tfs, base.version),
             "adds": adds,
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,
@@ -2068,7 +1997,11 @@ def _mor_commit(
         if table_cons:
             manifest["constraints"] = table_cons
         sidecar = _publish_snapshot_fields(
-            tfs, manifest, new_files, stats, cstats
+            tfs,
+            manifest,
+            new_files,
+            {**base.file_stats, **add_stats},
+            {**base.col_stats, **add_col_stats},
         )
         dv_sidecar = _publish_dv_fields(
             tfs, manifest, {rel: sorted(ps) for rel, ps in dv_state.items()}
@@ -2085,13 +2018,13 @@ def _mor_commit(
                 _cleanup_stage()
                 raise
             new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base or spark is None:
+            if new_latest is None or new_latest <= base.version or spark is None:
                 _cleanup_stage()
                 raise
             reason = _cow_rebase_conflict(
                 spark,
                 tfs,
-                base,
+                base.version,
                 new_latest,
                 sorted(new_tombs),
                 read_marker,
@@ -2104,15 +2037,14 @@ def _mor_commit(
                     f"cannot rebase: {reason} — re-read the table and "
                     "redo the operation"
                 ) from None
-            base = new_latest
-            cur_files = manifest_files(tfs, new_latest)
+            base = Snapshot(tfs, new_latest)
             continue
         tfs.write_json_atomic({"version": version}, "_latest.json")
         return {
             "version": version,
             "n_files_tombstoned": len(new_tombs),
             "n_files_added": len(adds),
-            "n_files_carried": len(cur_files),
+            "n_files_carried": len(base.files),
             "n_rows_tombstoned": n_rows_tombstoned,
             "n_rows_written": n_rows_written,
             "bytes_staged": sum(tfs.size(rel) for rel in adds),
@@ -2122,18 +2054,16 @@ def _mor_commit(
 
 
 def _table_meta(tfs, latest: int):
-    """(files, schema, schema_json) at ``latest`` — manifest reads only,
-    so CoW planning that PRUNES its candidate set never pays Spark's
+    """(Snapshot, read schema) at ``latest`` — manifest reads only, so
+    CoW planning that PRUNES its candidate set never pays Spark's
     file-listing job for files it will not scan."""
     import json
 
-    from time_series_spark_spark.sources.fsio import manifest_files
-
-    manifest = tfs.read_json(f"_manifest.{latest}.json")
+    snap = Snapshot(tfs, latest)
     schema = _normalize_schema(
-        T.StructType.fromJson(json.loads(manifest["schema"]))
+        T.StructType.fromJson(json.loads(snap.manifest["schema"]))
     )
-    return manifest_files(tfs, latest), schema, manifest["schema"]
+    return snap, schema
 
 
 def _snapshot_frame(
@@ -2287,7 +2217,8 @@ def merge_versioned(
     if strategy not in ("cow", "mor"):
         raise ValueError(f"strategy must be 'cow' or 'mor', got {strategy!r}")
     tfs, latest = _require_table(table_path)
-    files, schema, schema_json = _table_meta(tfs, latest)
+    head, schema = _table_meta(tfs, latest)
+    files, dvs, schema_json = head.files, head.dvs, head.manifest["schema"]
     known = {f.name for f in schema.fields}
     extras = sorted(
         c[len("new_"):]
@@ -2367,9 +2298,6 @@ def merge_versioned(
             )
             cand_set &= set(kept)
         candidates = sorted(cand_set)
-    from time_series_spark_spark.sources.fsio import manifest_dvs
-
-    dvs = manifest_dvs(tfs, latest)
     if strategy == "mor":
         snap = _snapshot_frame(
             spark, tfs, candidates, schema, dv=dvs, with_pos=True
@@ -2384,12 +2312,10 @@ def merge_versioned(
                 matched.drop("__file", "__pos"), changes, keys, cols
             ).select(*[f.name for f in schema.fields])
             return _mor_commit(
-                tfs,
-                latest,
+                head,
                 "merge",
                 appended,
                 new_tombs,
-                files,
                 schema_json,
                 batch_id=batch_id,
                 stream_id=stream_id,
@@ -2413,12 +2339,10 @@ def merge_versioned(
         *[f.name for f in schema.fields]
     )
     return _cow_commit(
-        tfs,
-        latest,
+        head,
         "merge",
         rewritten,
         touched,
-        files,
         schema_json,
         batch_id=batch_id,
         stream_id=stream_id,
@@ -2455,11 +2379,9 @@ def delete_versioned(
     :class:`ConcurrentCommitError` — see :func:`merge_versioned`."""
     if strategy not in ("cow", "mor"):
         raise ValueError(f"strategy must be 'cow' or 'mor', got {strategy!r}")
-    from time_series_spark_spark.sources.fsio import manifest_dvs
-
     tfs, latest = _require_table(table_path)
-    files, schema, schema_json = _table_meta(tfs, latest)
-    dvs = manifest_dvs(tfs, latest)
+    head, schema = _table_meta(tfs, latest)
+    files, dvs, schema_json = head.files, head.dvs, head.manifest["schema"]
     pred = F.expr(predicate)
     if strategy == "mor":
         snap = _snapshot_frame(
@@ -2470,12 +2392,10 @@ def delete_versioned(
         matched = snap.filter(pred.eqNullSafe(F.lit(True)))
         new_tombs = _collect_positions(matched, files)
         return _mor_commit(
-            tfs,
-            latest,
+            head,
             "delete",
             None,
             new_tombs,
-            files,
             schema_json,
             spark=spark,
             read_marker=pred,
@@ -2490,12 +2410,10 @@ def delete_versioned(
     # deleted (SQL DELETE semantics — only TRUE deletes)
     rewritten = base.filter(~pred.eqNullSafe(F.lit(True)))
     return _cow_commit(
-        tfs,
-        latest,
+        head,
         "delete",
         rewritten,
         touched,
-        files,
         schema_json,
         spark=spark,
         read_marker=pred,
@@ -2528,11 +2446,9 @@ def update_versioned(
     never rewritten."""
     if strategy not in ("cow", "mor"):
         raise ValueError(f"strategy must be 'cow' or 'mor', got {strategy!r}")
-    from time_series_spark_spark.sources.fsio import manifest_dvs
-
     tfs, latest = _require_table(table_path)
-    files, schema, schema_json = _table_meta(tfs, latest)
-    dvs = manifest_dvs(tfs, latest)
+    head, schema = _table_meta(tfs, latest)
+    files, dvs, schema_json = head.files, head.dvs, head.manifest["schema"]
     unknown = set(assignments) - {f.name for f in schema.fields}
     if unknown:
         raise ValueError(
@@ -2559,12 +2475,10 @@ def update_versioned(
                 ]
             )
             return _mor_commit(
-                tfs,
-                latest,
+                head,
                 "update",
                 appended,
                 new_tombs,
-                files,
                 schema_json,
                 spark=spark,
                 read_marker=pred,
@@ -2590,12 +2504,10 @@ def update_versioned(
         ]
     )
     return _cow_commit(
-        tfs,
-        latest,
+        head,
         "update",
         rewritten,
         touched,
-        files,
         schema_json,
         spark=spark,
         read_marker=pred,
@@ -2717,22 +2629,11 @@ def _history_row(m: dict, v: int) -> tuple:
         int(m["n_files"]),
         len(m["adds"]) if "adds" in m else None,
         int(m["n_rows_added"]) if "n_rows_added" in m else None,
-        "files" in m or "files_parquet" in m,
+        is_snapshot_manifest(m),
         m.get("stream_id"),
         int(m["batch_id"]) if m.get("batch_id") is not None else None,
         int(m["committed_at"]) if "committed_at" in m else None,
     )
-
-
-def retention_floor(table_path) -> int:
-    """The oldest version whose data files are guaranteed present (0 when
-    vacuum has never run). Published atomically by vacuum_versioned."""
-    from time_series_spark_spark.sources.fsio import as_table_fs
-
-    tfs = as_table_fs(table_path)
-    if not tfs.exists("_retention.json"):
-        return 0
-    return int(tfs.read_json("_retention.json")["floor"])
 
 
 def vacuum_versioned(
@@ -2795,7 +2696,6 @@ def vacuum_versioned(
 
     from time_series_spark_spark.sources.fsio import (
         as_table_fs,
-        is_snapshot_manifest,
         manifest_versions,
         snapshot_files,
     )

@@ -36,6 +36,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from time_series_spark_spark.sources import fsio
+
 SCHEMA = "series_id bigint, ts timestamp, value double"
 _EPOCH_US = 1_700_000_000_000_000  # fixed base so output is reproducible
 
@@ -208,15 +210,17 @@ def _pickle_module_by_value() -> None:
     sources (``python_streaming_source_runner``) does not — a class
     pickled by reference to ``time_series_spark_spark`` raises
     ModuleNotFoundError there when the repo isn't on that interpreter's
-    path. Registering the module for pickle-BY-VALUE embeds the class
-    definition in the pickle itself, so no worker needs the package
-    importable. Idempotent; uses pyspark's vendored cloudpickle (the one
-    the engine serializes with)."""
+    path. Registering this module and ``fsio`` (the versioned table's
+    reader, which imports only the stdlib and pyarrow) for pickle-BY-VALUE
+    embeds their definitions in the pickle itself, so no worker needs the
+    package importable. Idempotent; uses pyspark's vendored cloudpickle
+    (the one the engine serializes with)."""
     import sys
 
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    cloudpickle.register_pickle_by_value(fsio)
 
 
 def register_tick_stream_source(spark) -> None:
@@ -227,95 +231,22 @@ def register_tick_stream_source(spark) -> None:
 # ---------------------------------------------------------------------------
 # J11e (round 9): streaming source OVER the A13 manifest-versioned table —
 # the read-side complement of the J11d sink (Delta's streaming read /
-# incremental version feed, from first principles).
+# incremental version feed, from first principles). It resolves versions
+# through ``fsio`` — both modules are pickled by value into the planner
+# worker (see _pickle_module_by_value).
 # ---------------------------------------------------------------------------
-def _normalize_table_path(path: str) -> str:
-    """Absolute-ize plain local paths (relative spellings must resolve
-    the same table from the driver and the planner worker); leave
-    scheme-qualified URIs (s3://…, hdfs://…) untouched."""
-    if "://" in path:
-        return path.rstrip("/")
+def _table_fs(path: str) -> fsio.TableFS:
+    """The table at ``path`` on the pyarrow filesystem its scheme names
+    (local, s3://, hdfs://, gs://…). A plain local path is made absolute,
+    so the driver and the planner worker resolve the same table."""
     import os
 
-    return os.path.abspath(path)
-
-
-def _fs_for_path(path: str):
-    """(pyarrow FileSystem, fs-native root) for a table path/URI."""
     from pyarrow import fs as pafs
 
-    return pafs.FileSystem.from_uri(path)
-
-
-def _list_manifest_versions(fs, root: str) -> list:
-    import re
-
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(root, recursive=False, allow_not_found=True)
-    out = []
-    for info in fs.get_file_info(sel):
-        m = re.match(r"^_manifest\.(\d+)\.json$", info.path.rsplit("/", 1)[-1])
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _read_manifest(fs, root: str, v: int) -> dict:
-    import json
-
-    with fs.open_input_stream(f"{root}/_manifest.{v}.json") as f:
-        return json.loads(f.read().decode("utf-8"))
-
-
-def _snapshot_sidecar(fs, root: str, m: dict, columns: list[str]):
-    """Requested columns of a snapshot's parquet sidecar
-    (``files_parquet``, round 13 — Delta's parquet checkpoints; mirrors
-    ``fsio.snapshot_sidecar`` with standalone (fs, root) plumbing)."""
-    import pyarrow.parquet as pq
-
-    return pq.read_table(
-        f"{root}/{m['files_parquet']}", filesystem=fs, columns=columns
-    )
-
-
-def _snapshot_file_list(fs, root: str, m: dict) -> list[str]:
-    """A snapshot manifest's own full file list — inline or sidecar."""
-    if "files" in m:
-        return list(m["files"])
-    return (
-        _snapshot_sidecar(fs, root, m, ["path"]).column("path").to_pylist()
-    )
-
-
-def _latest_version(fs, root: str):
-    """Latest committed version: O(1) via the ``_latest.json`` hint with
-    probe-forward (a crash between manifest publish and hint publish
-    only leaves the hint stale-LOW); one directory listing as fallback
-    for pre-hint tables. Mirrors ``fsio.latest_version`` — this module
-    keeps standalone (fs, root) helpers because they run inside Spark's
-    Python planner worker."""
-    import json
-
-    from pyarrow import fs as pafs
-
-    hint = f"{root}/_latest.json"
-    if fs.get_file_info(hint).type != pafs.FileType.NotFound:
-        with fs.open_input_stream(hint) as f:
-            v = int(json.loads(f.read().decode("utf-8"))["version"])
-
-        def _has(u):
-            return (
-                fs.get_file_info(f"{root}/_manifest.{u}.json").type
-                != pafs.FileType.NotFound
-            )
-
-        if _has(v):
-            while _has(v + 1):
-                v += 1
-            return v
-    versions = _list_manifest_versions(fs, root)
-    return versions[-1] if versions else None
+    if "://" not in path:
+        path = os.path.abspath(path)
+    fs, root = pafs.FileSystem.from_uri(path.rstrip("/"))
+    return fsio.TableFS(root, fs)
 
 
 class _VersionFileSlice(InputPartition):
@@ -367,10 +298,9 @@ class VersionedTableStreamReader(DataSourceStreamReader):
 
     Scale/semantics notes, in the order they matter at 100 TB:
 
-    - **Planning is manifest-only.** latestOffset() lists manifests;
-      partitions() takes per-version file-set differences — never opens
-      a data file. Carry-forward manifests make `added(v) = files(v) −
-      files(v−1)` exactly the commit's appended files.
+    - **Planning is manifest-only.** latestOffset() reads the
+      latest-version hint; partitions() reads each version's manifest
+      once (its ``adds``) — never opens a data file.
     - **One InputPartition per added file** → Spark schedules reads in
       parallel; read() streams pyarrow record batches (Arrow path, no
       per-row Python), cast to the table's committed schema.
@@ -408,7 +338,9 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         path = options.get("path")
         if not path:
             raise ValueError("versioned_table source requires .option('path', ...)")
-        self.table_path = _normalize_table_path(path)
+        # options carry strings only, so the filesystem is resolved from
+        # the path's scheme rather than injected
+        self.tfs = _table_fs(path)
         # onReplace: what to do when the feed range contains a REPLACE
         # commit (overwrite). "added" (default, the documented behavior)
         # emits the replace's files as adds without retracting replaced
@@ -427,124 +359,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # batch read (A13c)
         self._schema = schema
 
-    # -- manifest helpers (driver-side planner worker). All storage access
-    # goes through pyarrow.fs resolved from the path's scheme (local,
-    # s3://, hdfs://, gs://…) — the J11e half of the round-10 filesystem
-    # seam; options carry strings only, so the fs is re-resolved from the
-    # URI rather than injected. --
-    def _fs(self):
-        if not hasattr(self, "_fs_cached"):
-            self._fs_cached = _fs_for_path(self.table_path)
-        return self._fs_cached
-
-    def _manifest(self, v: int) -> dict:
-        # manifests are IMMUTABLE once published, so a per-reader memo is
-        # safe; it keeps the chain walks below from re-reading the same
-        # manifest across _files_of/_adds_of/_stats_at within one
-        # partitions() call (the memo is dropped from the pickle sent to
-        # executors — read() never touches manifests)
-        if not hasattr(self, "_manifest_memo"):
-            self._manifest_memo = {}
-        if v not in self._manifest_memo:
-            fs, root = self._fs()
-            self._manifest_memo[v] = _read_manifest(fs, root, v)
-        return self._manifest_memo[v]
-
-    def __getstate__(self):
-        state = dict(self.__dict__)
-        state.pop("_manifest_memo", None)
-        return state
-
-    def _files_of(self, v: int) -> set:
-        """FULL file set of one version, walking the ``adds`` + ``base``
-        delta chain to the nearest full-snapshot manifest — round-10
-        carry-forward commits between checkpoints carry no ``files``
-        key (mirrors ``fsio.manifest_files``; ≤ checkpoint-interval
-        manifest reads, memoized)."""
-        adds_stack: list = []
-        cur = v
-        while True:
-            m = self._manifest(cur)
-            if "files" in m or "files_parquet" in m:
-                fs, root = self._fs()
-                files = set(_snapshot_file_list(fs, root, m))
-                break
-            adds_stack.append(m["adds"])
-            cur = m["base"]
-        for adds in adds_stack:
-            files |= set(adds)
-        return files
-
-    def _snapshot_has_dv(self, v: int) -> bool:
-        """Whether the snapshot visible at ``v`` carries merge-on-read
-        deletion vectors (round 14) — same chain walk as ``_files_of``;
-        appends never change tombstones, so the terminal snapshot
-        manifest's dv fields are authoritative. Existence check only —
-        the sidecar itself is never read."""
-        cur = v
-        while True:
-            m = self._manifest(cur)
-            if "files" in m or "files_parquet" in m:
-                return bool(m.get("dv")) or bool(m.get("dv_parquet"))
-            cur = m["base"]
-
-    def _adds_of(self, v: int) -> list:
-        """The files one commit ADDED — straight from the manifest's
-        ``adds`` (every round-10+ manifest records it, so planning an
-        increment is one manifest read, no per-version set diffs); the
-        files(v) − files(v−1) difference only for legacy manifests."""
-        m = self._manifest(v)
-        if "adds" in m:
-            return sorted(m["adds"])
-        prev = self._files_of(v - 1) if v > 0 else set()
-        fs, root = self._fs()
-        return sorted(set(_snapshot_file_list(fs, root, m)) - prev)
-
-    def _stats_at(self, v: int) -> dict:
-        """``rel → [row-group bytes]`` for files visible at ``v``, from
-        the manifests' commit-time ``add_stats``/``file_stats`` (mirrors
-        ``fsio.manifest_file_stats``). Files committed before stats were
-        recorded are absent — partitions() falls back to one footer read
-        for exactly those."""
-        chain: list = []
-        cur = v
-        while True:
-            m = self._manifest(cur)
-            chain.append(m)
-            if "files" in m or "files_parquet" in m:
-                break
-            cur = m["base"]
-        stats: dict = {}
-        for m in reversed(chain):
-            if "files_parquet" in m:
-                fs, root = self._fs()
-                t = _snapshot_sidecar(fs, root, m, ["path", "rg_bytes"])
-                stats.update(
-                    {
-                        p: rb
-                        for p, rb in zip(
-                            t.column("path").to_pylist(),
-                            t.column("rg_bytes").to_pylist(),
-                        )
-                        if rb is not None
-                    }
-                )
-            stats.update(m.get("file_stats", {}))
-            stats.update(m.get("add_stats", {}))
-        return stats
-
-    def _floor(self) -> int:
-        import json
-
-        from pyarrow import fs as pafs
-
-        fs, root = self._fs()
-        p = f"{root}/_retention.json"
-        if fs.get_file_info(p).type == pafs.FileType.NotFound:
-            return 0
-        with fs.open_input_stream(p) as f:
-            return int(json.loads(f.read().decode("utf-8"))["floor"])
-
     def initialOffset(self) -> dict:
         # Fresh consumer: begin with the FULL SNAPSHOT of the retention
         # floor version (Delta's isStartingVersion), then increments.
@@ -552,18 +366,15 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # manifests mean the floor version REFERENCES files first added
         # by pruned versions — a fresh consumer must still see those
         # rows (they are part of every readable snapshot).
-        return {"version": self._floor(), "snapshot": True}
+        return {"version": fsio.retention_floor(self.tfs), "snapshot": True}
 
     def latestOffset(self) -> dict:
         # once per micro-batch → must not LIST the manifest directory
-        # (O(versions) at streaming cadence): the _latest.json hint makes
-        # this O(1) on every table the round-10+ writer touched
-        fs, root = self._fs()
-        latest = _latest_version(fs, root)
+        # (O(versions) at streaming cadence): the latest-version hint
+        # makes this O(1) on every table the round-10+ writer touched
+        latest = fsio.latest_version(self.tfs)
         if latest is None:
-            raise FileNotFoundError(
-                f"no committed versions in {self.table_path}"
-            )
+            raise FileNotFoundError(f"no committed versions in {self.tfs.root}")
         return {"version": latest, "snapshot": False}
 
     # pack row-group runs into input partitions of roughly this many
@@ -593,28 +404,23 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         surfacing a partial scan; files added at versions ≥ floor are
         referenced by a retained manifest and therefore never pruned."""
         import pyarrow.parquet as pq
-        from pyarrow import fs as pafs
         from pyarrow.lib import ArrowIOError
 
-        fs, root = self._fs()
-        # fresh memo per plan: manifests are immutable so caching is
-        # safe, but an unbounded cross-batch cache would grow O(versions)
-        # on a long-lived stream — within one plan is where the reuse is
-        # (_files_of/_adds_of/_stats_at walk overlapping chains)
-        self._manifest_memo = {}
+        tfs = self.tfs
         v0 = int(start["version"])
         v1 = int(end["version"])
-        floor = self._floor()
+        floor = fsio.retention_floor(tfs)
         stats: dict = {}
         if start.get("snapshot", False):
             if v0 < floor:
                 raise ValueError(
                     f"snapshot version {v0} was pruned by vacuum "
-                    f"(retention floor {floor} of {self.table_path}): "
+                    f"(retention floor {floor} of {self.tfs.root}): "
                     "restart from a fresh checkpoint to read the floor "
                     "snapshot"
                 )
-            if self._snapshot_has_dv(v0):
+            snap = fsio.Snapshot(tfs, v0)
+            if snap.has_dvs:
                 # merge-on-read tombstones (round 14): the snapshot read
                 # here is raw pyarrow row-group slices — emitting it
                 # would resurrect every logically-deleted row for the
@@ -623,27 +429,28 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 # then start the stream. Failing loudly beats silently
                 # feeding deleted rows downstream.
                 raise ValueError(
-                    f"snapshot version {v0} of {self.table_path} carries "
+                    f"snapshot version {v0} of {self.tfs.root} carries "
                     "merge-on-read deletion vectors; a fresh stream "
                     "would emit logically-deleted rows — run "
                     "compact_versioned (OPTIMIZE materializes the "
                     "tombstones as a dataChange=false commit) and start "
                     "the stream after it"
                 )
-            todo = [(v0, rel) for rel in sorted(self._files_of(v0))]
-            stats.update(self._stats_at(v0))
+            todo = [(v0, rel) for rel in snap.files]
+            stats.update(snap.file_stats)
         else:
             if v0 + 1 < floor:
                 raise ValueError(
                     f"versions {v0 + 1}..{min(v1, floor - 1)} may have "
                     f"data files pruned by vacuum (retention floor "
-                    f"{floor} of {self.table_path}): this checkpoint "
+                    f"{floor} of {self.tfs.root}): this checkpoint "
                     "cannot be resumed — restart from a fresh "
                     "checkpoint to read the floor snapshot"
                 )
             todo = []
         for v in range(v0 + 1, v1 + 1):
-            mode = self._manifest(v).get("mode")
+            m = fsio.read_manifest(tfs, v)
+            mode = m.get("mode")
             if mode == "optimize":
                 # dataChange=false (round 13 — Delta's OPTIMIZE posture):
                 # a pure layout rewrite of the SAME logical rows emits
@@ -657,33 +464,34 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 # replace re-emits rows as adds, restore logically
                 # REMOVES rows without retracting them
                 raise ValueError(
-                    f"version {v} of {self.table_path} is a "
+                    f"version {v} of {self.tfs.root} is a "
                     f"{(mode or 'replace').upper()} commit and this "
                     "stream was started with onReplace=fail: downstream "
                     "state would silently diverge — restart from a "
                     "fresh checkpoint (snapshot-at-floor) or read with "
                     "onReplace=added to accept it"
                 )
-            todo += [(v, rel) for rel in self._adds_of(v)]
-            stats.update(self._manifest(v).get("add_stats", {}))
+            adds = sorted(m["adds"]) if "adds" in m else fsio.manifest_adds(tfs, v)
+            todo += [(v, rel) for rel in adds]
+            stats.update(m.get("add_stats", {}))
         # (1) split each file into row-group runs of ≤ TARGET_SLICE_BYTES
         chunks: list = []  # (path, version, [row groups], bytes)
         for v, rel in todo:
-            p = f"{root}/{rel}"
+            p = tfs.path(rel)
             rg_bytes = stats.get(rel)
             if rg_bytes is None:
                 # legacy manifest without commit-time stats: pay one
                 # footer read (and existence probe) for THIS file only
-                if fs.get_file_info(p).type == pafs.FileType.NotFound:
+                if not tfs.exists(rel):
                     raise ValueError(
                         f"data file {rel} of version {v} was pruned by "
                         f"vacuum (retention floor {floor} of "
-                        f"{self.table_path}): this checkpoint cannot be "
+                        f"{self.tfs.root}): this checkpoint cannot be "
                         "resumed — restart from a fresh checkpoint to "
                         "read the floor snapshot"
                     )
                 try:
-                    md = pq.ParquetFile(p, filesystem=fs).metadata
+                    md = pq.ParquetFile(p, filesystem=tfs.fs).metadata
                 except ArrowIOError as exc:
                     raise ValueError(
                         f"unreadable data file {rel} of version {v}: {exc}"
@@ -725,7 +533,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        fs, _ = self._fs()
         target = None
         if self._schema is not None:
             # pad/cast to the declared schema (minus the version stamp):
@@ -746,7 +553,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             )
         for file_path, version, row_groups in partition.chunks:
             table = pq.ParquetFile(
-                file_path, filesystem=fs
+                file_path, filesystem=self.tfs.fs
             ).read_row_groups(row_groups)
             if target is not None:
                 arrays = [
@@ -777,13 +584,12 @@ class VersionedTableStreamDataSource(DataSource):
 
         from pyspark.sql.types import LongType, StructField, StructType
 
-        path = _normalize_table_path(self.options["path"])
-        fs, root = _fs_for_path(path)
-        latest = _latest_version(fs, root)
+        tfs = _table_fs(self.options["path"])
+        latest = fsio.latest_version(tfs)
         if latest is None:
-            raise FileNotFoundError(f"no committed versions in {path}")
+            raise FileNotFoundError(f"no committed versions in {tfs.root}")
         st = StructType.fromJson(
-            json.loads(_read_manifest(fs, root, latest)["schema"])
+            json.loads(fsio.read_manifest(tfs, latest)["schema"])
         )
         # the feed schema is NULLABLE everywhere: files committed before
         # an additive schema change are null-padded for the added
