@@ -977,6 +977,48 @@ def test_versioned_reads_resolve_each_manifest_once(spark, tmp_path, monkeypatch
     assert sorted(v for p in parts for _, v, _ in p.chunks) == [2, 2, 2, 3, 4]
 
 
+def test_write_versioned_reads_each_manifest_once(spark, tmp_path, monkeypatch):
+    """An append reads only the previous manifest; the version-20
+    checkpoint reads the delta chain back to version 0 once, for the
+    file list and the redelivery ledger alike. On a legacy table, whose
+    snapshot manifests carry no ledger, the ledger fold walks on down
+    through every older version."""
+    from time_series_spark_spark.sources.fsio import TableFS
+    from time_series_spark_spark.sources.io import (
+        committed_batch_ids,
+        write_versioned,
+    )
+
+    reads = []
+    real = TableFS.read_json
+
+    def counting(self, *rel):
+        if rel[-1].startswith("_manifest."):
+            reads.append(rel[-1])
+        return real(self, *rel)
+
+    path = str(tmp_path / "vt")
+    one = spark.range(1).coalesce(1)
+    write_versioned(one, path, batch_id=0, stream_id="s")
+    monkeypatch.setattr(TableFS, "read_json", counting)
+    per_commit = []
+    for b in range(1, 21):
+        reads.clear()
+        write_versioned(one, path, batch_id=b, stream_id="s", carry_forward=True)
+        per_commit.append(sorted(reads))
+    assert per_commit[:19] == [[f"_manifest.{v}.json"] for v in range(19)]
+    assert per_commit[19] == sorted(f"_manifest.{v}.json" for v in range(20))
+    assert real(TableFS(path), "_manifest.20.json")["ledger"] == [["s", 20]]
+
+    legacy = TableFS(str(tmp_path / "legacy"))
+    for b in range(3):
+        write_versioned(one, legacy.root, batch_id=b, stream_id="s")
+        m = real(legacy, f"_manifest.{b}.json")
+        del m["ledger"]
+        legacy.write_json_atomic(m, f"_manifest.{b}.json")
+    assert committed_batch_ids(legacy.root, "s") == {0, 1, 2}
+
+
 _LOAD_STREAM_SOURCE = """
 import json, pickle, sys
 

@@ -9,6 +9,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
+from pyspark.sql.window import Window
 
 from time_series_spark_spark.operators.timeseries import session_summary
 from time_series_spark_spark.sources.io import load
@@ -73,7 +74,28 @@ def test_stream_session_equals_batch_sessionize(spark, batch_events):
     assert g.exceptAll(e).count() == 0 and e.exceptAll(g).count() == 0
 
 
+def _plan_nodes(df):
+    """``(node name, child output column names)`` for every node of
+    ``df``'s analyzed plan, walked through the JVM plan tree (a streaming
+    plan is not optimized until a query runs it)."""
+    nodes, todo = [], [df._jdf.queryExecution().analyzed()]
+    while todo:
+        node = todo.pop()
+        kids = [node.children().apply(i) for i in range(node.children().size())]
+        cols = [
+            k.output().apply(i).name()
+            for k in kids[:1]
+            for i in range(k.output().size())
+        ]
+        nodes.append((node.nodeName(), cols))
+        todo += kids
+    return nodes
+
+
 def test_stateful_totals_multibatch(spark, batch_events, chunked_dir):
+    """The running per-user totals are a native streaming aggregate: no
+    Python node in the plan, and over a four-batch replay the last
+    update per user equals the batch GROUP BY on both columns."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     sdf = (
         spark.readStream.schema(
@@ -84,14 +106,51 @@ def test_stateful_totals_multibatch(spark, batch_events, chunked_dir):
         .parquet(chunked_dir)
         .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     )
-    table = run_available_now(stateful_user_totals(sdf), output_mode="update")
-    # last update per user holds the final running state
-    final = (
-        table.groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events"))
+    totals = stateful_user_totals(sdf)
+    names = [name for name, _ in _plan_nodes(totals)]
+    assert "Aggregate" in names
+    assert not [n for n in names if "Python" in n or "Pandas" in n], names
+    assert totals.schema.simpleString() == (
+        "struct<user_id:bigint,n_events:bigint,total_value:double>"
     )
-    exp = batch_events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
+    table = run_available_now(totals, output_mode="update")
+    assert table.count() > table.select("user_id").distinct().count()
+    # last update per user holds the final running state
+    last = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    final = (
+        table.withColumn("r", F.row_number().over(last))
+        .filter("r = 1")
+        .drop("r")
+    )
+    exp = batch_events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 4).alias("total_value"),
+    )
     assert final.exceptAll(exp).count() == 0 and exp.exceptAll(final).count() == 0
+
+
+@pytest.mark.parametrize(
+    "job, inputs",
+    [
+        ("anomaly_flags", ["user_id", "event_id", "value"]),
+        ("page_hinkley", ["event_type", "event_id", "value"]),
+        ("debounce", ["user_id", "event_type", "ts", "event_id"]),
+        ("heavy_hitters", ["event_type", "event_id", "user_id"]),
+        ("token_bucket", ["user_id", "ts", "event_id"]),
+    ],
+)
+def test_stateful_python_updates_read_only_their_columns(spark, job, inputs):
+    """Spark cannot prune columns through an opaque pandas function, so
+    each ``applyInPandasWithState`` job selects its keys and the columns
+    its update reads: exactly those cross to the Python worker."""
+    from time_series_spark_spark.streaming import jobs
+
+    out = getattr(jobs, f"stateful_{job}")(read_events_stream(spark, SF))
+    fed = [
+        cols for name, cols in _plan_nodes(out)
+        if name == "FlatMapGroupsInPandasWithState"
+    ]
+    assert fed == [inputs]
 
 
 @pytest.mark.parametrize(
@@ -159,7 +218,7 @@ def test_stateful_totals_resume_from_checkpoint(
             .start()
         )
         q.awaitTermination()
-        return pd.concat(batches)
+        return pd.concat(batches, ignore_index=True)
 
     def final(pdf):
         last = pdf.loc[pdf.groupby("user_id")["n_events"].idxmax()]
@@ -183,7 +242,7 @@ def test_stateful_totals_resume_from_checkpoint(
     )
     # users seen in both runs: their second-run totals carry restored state
     assert set(first.user_id) & set(second.user_id)
-    resumed = final(pd.concat([first, second]))
+    resumed = final(pd.concat([first, second], ignore_index=True))
     full = final(replay(chunked_dir, str(tmp_path / "ck_full")))
     exp = batch_events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_events"),

@@ -149,12 +149,12 @@ def test_stateful_updates_pickle_by_reference_and_install_guard():
     from time_series_spark_spark.streaming import jobs
 
     sdf = mock.Mock()
-    sdf.groupBy.return_value = sdf
-    for name in ("user_totals", "anomaly_flags", "page_hinkley",
-                 "debounce", "heavy_hitters", "token_bucket"):
+    sdf.select.return_value = sdf.groupBy.return_value = sdf
+    for name in ("anomaly_flags", "page_hinkley", "debounce",
+                 "heavy_hitters", "token_bucket"):
         getattr(jobs, f"stateful_{name}")(sdf)
     updates = [c.args[0] for c in sdf.applyInPandasWithState.call_args_list]
-    assert len(updates) == 6
+    assert len(updates) == 5
     for fn in updates:
         assert _unpickle_in_worker(cloudpickle.dumps(fn)) == _GUARD, fn
     # control: a closure pickled by value leaves zipimport's own method

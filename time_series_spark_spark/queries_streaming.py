@@ -145,7 +145,8 @@ def stream_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 4)      AS total_value
     FROM events GROUP BY 1
     """,
-    doc="J7 applyInPandasWithState: running per-user (count, value) state; "
+    doc="J7 native streaming aggregate: running per-user (count, value) "
+    "state in the state store, no Python worker; "
     "the single-batch update-mode replay emits exactly one final row per "
     "user ≡ the batch GROUP BY (values are 2-decimal, so sums are exact "
     "multiples of 0.01 and round-4 cannot straddle an engine boundary)",

@@ -280,12 +280,13 @@ class Snapshot:
     ``files``, ``file_stats``, ``col_stats`` and ``dvs`` are folds over
     ``chain``, each computed on first use and kept; they are shared, so
     a caller copies one before changing it. A fold that reads the
-    terminal's sidecar reads only its own columns."""
+    terminal's sidecar reads only its own columns. A caller that has
+    already read ``version``'s own manifest passes it as ``head``."""
 
-    def __init__(self, tfs: TableFS, version: int):
+    def __init__(self, tfs: TableFS, version: int, head: dict | None = None):
         self.tfs = tfs
         self.version = version
-        self.chain = [read_manifest(tfs, version)]
+        self.chain = [read_manifest(tfs, version) if head is None else head]
         while not is_snapshot_manifest(self.chain[-1]):
             self.chain.append(read_manifest(tfs, self.chain[-1]["base"]))
 

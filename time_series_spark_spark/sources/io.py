@@ -20,6 +20,7 @@ from pyspark.sql import types as T
 from time_series_spark_spark.sources.fsio import (
     Snapshot,
     is_snapshot_manifest,
+    read_manifest,
     retention_floor,
 )
 
@@ -452,23 +453,19 @@ def _now_us() -> int:
     return int(_time.time() * 1_000_000)
 
 
-def _commit_stamp(tfs, prev_version: int | None) -> int:
-    """Epoch-µs commit stamp for the next manifest, STRICTLY INCREASING
-    across versions: ``max(prev.committed_at + 1, now)``. A raw wall
-    clock can regress (NTP step, cross-host skew), which would make
+def _commit_stamp(prev: dict | None) -> int:
+    """Epoch-µs commit stamp for the manifest that follows ``prev`` (the
+    previous version's manifest, None for a first commit), STRICTLY
+    INCREASING across versions: ``max(prev.committed_at + 1, now)``. A
+    raw wall clock can regress (NTP step, cross-host skew), which would make
     TIMESTAMP AS OF's "latest commit at or before the instant" ambiguous
     — Delta's in-commit timestamps enforce monotonicity for exactly this
     reason (round-12, ADVICE item 2). Commits from writers predating the
     stamp (committed_at absent) contribute nothing; the clamp is only
     ever forward in time."""
     now = _now_us()
-    if prev_version is not None:
-        prev_ca = tfs.read_json(f"_manifest.{prev_version}.json").get(
-            "committed_at"
-        )
-        if prev_ca is not None:
-            return max(int(prev_ca) + 1, now)
-    return now
+    prev_ca = prev.get("committed_at") if prev is not None else None
+    return now if prev_ca is None else max(int(prev_ca) + 1, now)
 
 
 def _stage_data_files(df: DataFrame, tfs, version: int) -> tuple[str, list[str]]:
@@ -551,13 +548,24 @@ def _read_add_stats(tfs, adds: list[str]) -> tuple[dict, int, dict]:
     return add_stats, n_rows, col_stats
 
 
-def _collect_ledger_pairs(tfs, versions: list[int]) -> list:
-    """All (stream_id, batch_id) pairs committed up to the given versions,
-    walking DESCENDING and stopping at the first ledger-snapshot manifest
-    — bounded by _CHECKPOINT_INTERVAL reads on round-10+ tables, full
-    walk on legacy tables (which have no snapshots to stop at)."""
+def _ledger_pairs(snap: Snapshot | None) -> list:
+    """All (stream_id, batch_id) pairs committed up to ``snap.version``
+    (none for an empty table): a fold over ``snap.chain``, newest first,
+    that stops at the first manifest carrying a ``ledger`` snapshot.
+    Every snapshot manifest since round 10 carries one, so the fold
+    reads no manifest beyond the chain; on legacy tables, whose
+    snapshots carry no ledger, it walks on down through every older
+    version."""
     pairs: list = []
     seen: set = set()
+    if snap is None:
+        return pairs
+
+    def manifests():
+        yield from snap.chain
+        terminal = snap.chain[-2]["base"] if len(snap.chain) > 1 else snap.version
+        for v in range(terminal - 1, -1, -1):
+            yield read_manifest(snap.tfs, v)
 
     def _absorb(sid, bid):
         key = (sid, int(bid))
@@ -565,8 +573,7 @@ def _collect_ledger_pairs(tfs, versions: list[int]) -> list:
             seen.add(key)
             pairs.append([sid, int(bid)])
 
-    for v in reversed(versions):
-        m = tfs.read_json(f"_manifest.{v}.json")
+    for m in manifests():
         if m.get("batch_id") is not None:
             _absorb(m.get("stream_id"), m["batch_id"])
         if "ledger" in m:
@@ -754,7 +761,7 @@ def write_versioned(
     # previous commit's — powers AS OF TIMESTAMP time travel and DESCRIBE
     # HISTORY; deliberately NOT part of any registered query's hashed
     # output (wall clocks are not oracles)
-    committed_at = _commit_stamp(tfs, existing[-1] if existing else None)
+    committed_at = _commit_stamp(prev)
     if carry_forward and existing:
         # A13c schema evolution, additive-only (round 9): a carry-forward
         # commit whose schema differs from the previous manifest's must
@@ -809,7 +816,7 @@ def write_versioned(
             # ledger (reads at most _CHECKPOINT_INTERVAL prior
             # manifests — the amortized cost that keeps every OTHER
             # append O(Δ))
-            snap = Snapshot(tfs, existing[-1])
+            snap = Snapshot(tfs, existing[-1], prev)
             files = sorted(set(snap.files) | set(adds))
             manifest["n_files"] = len(files)
             # restricted to the live list: stats of replaced files must
@@ -829,7 +836,7 @@ def write_versioned(
             # silently resurrect every tombstoned row at the next
             # chain-walk terminal
             dv_sidecar = _publish_dv_fields(tfs, manifest, snap.dvs)
-            ledger = _collect_ledger_pairs(tfs, existing)
+            ledger = _ledger_pairs(snap)
             if batch_id is not None:
                 ledger.append([stream_id, int(batch_id)])
             # O(streams), not O(batches): see _compact_ledger
@@ -840,7 +847,7 @@ def write_versioned(
         # replace commit (or very first version): a full snapshot — by
         # construction also a checkpoint for both resolution walks
         ledger = _compact_ledger(
-            _collect_ledger_pairs(tfs, existing)
+            _ledger_pairs(Snapshot(tfs, existing[-1], prev) if existing else None)
             + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
         )
         manifest = {
@@ -1362,15 +1369,14 @@ def compact_versioned(
     # this rewrite describes no longer exists.
     stage, adds = _stage_data_files(df, tfs, latest + 1)
     add_stats, n_rows_added, add_col_stats = _read_add_stats(tfs, adds)
-    base, winner_adds = latest, []
+    base, winner_adds = head, []
     for attempt in range(max(1, max_attempts)):
-        version = base + 1
+        version = base.version + 1
         new_files = sorted(set(adds) | set(winner_adds))
         stats = dict(add_stats)
         cstats = dict(add_col_stats)
         if winner_adds:
-            base_snap = Snapshot(tfs, base)
-            base_stats, base_cstats = base_snap.file_stats, base_snap.col_stats
+            base_stats, base_cstats = base.file_stats, base.col_stats
             for rel in winner_adds:
                 if rel in base_stats:
                     stats[rel] = base_stats[rel]
@@ -1379,7 +1385,7 @@ def compact_versioned(
         new_manifest = {
             "version": version,
             "mode": "optimize",
-            "committed_at": _commit_stamp(tfs, base),
+            "committed_at": _commit_stamp(base.manifest),
             "adds": adds,
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,
@@ -1388,9 +1394,7 @@ def compact_versioned(
             "n_files": len(new_files),
             "batch_id": None,
             "stream_id": None,
-            "ledger": _compact_ledger(
-                _collect_ledger_pairs(tfs, list(range(base + 1)))
-            ),
+            "ledger": _compact_ledger(_ledger_pairs(base)),
         }
         if manifest.get("constraints"):
             # carried, not enforced: OPTIMIZE rewrites the SAME rows,
@@ -1410,10 +1414,10 @@ def compact_versioned(
                 tfs.delete_dir(stage)
                 raise
             new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base:
+            if new_latest is None or new_latest <= base.version:
                 tfs.delete_dir(stage)
                 raise
-            for v in range(base + 1, new_latest + 1):
+            for v in range(base.version + 1, new_latest + 1):
                 m = tfs.read_json(f"_manifest.{v}.json")
                 if (
                     m.get("mode", "append") != "append"
@@ -1429,13 +1433,12 @@ def compact_versioned(
                         "describes the table; re-run compact_versioned"
                     ) from None
                 winner_adds.extend(m.get("adds", ()))
-            _, schema_new = _table_meta(tfs, new_latest)
+            base, schema_new = _table_meta(tfs, new_latest)
             if schema_new != schema:
                 tfs.delete_dir(stage)
                 raise ConcurrentCommitError(
                     "a concurrent commit changed the table schema"
                 ) from None
-            base = new_latest
             continue
         tfs.write_json_atomic({"version": version}, "_latest.json")
         return {
@@ -1486,12 +1489,8 @@ def committed_batch_ids(
 
     tfs = as_table_fs(table_path)
     latest = latest_version(tfs)
-    versions = list(range(latest + 1)) if latest is not None else []
-    return {
-        int(bid)
-        for sid, bid in _collect_ledger_pairs(tfs, versions)
-        if sid == stream_id
-    }
+    head = Snapshot(tfs, latest) if latest is not None else None
+    return {int(bid) for sid, bid in _ledger_pairs(head) if sid == stream_id}
 
 
 def restore_versioned(table_path, to_version: int) -> int:
@@ -1527,13 +1526,12 @@ def restore_versioned(table_path, to_version: int) -> int:
     snap = Snapshot(tfs, to_version)
     target, files = snap.manifest, snap.files
     version = latest + 1
-    ledger = _compact_ledger(
-        _collect_ledger_pairs(tfs, list(range(latest + 1)))
-    )
+    head = Snapshot(tfs, latest)
+    ledger = _compact_ledger(_ledger_pairs(head))
     manifest = {
         "version": version,
         "mode": "restore",
-        "committed_at": _commit_stamp(tfs, latest),
+        "committed_at": _commit_stamp(head.manifest),
         "restored_from": int(to_version),
         "adds": [],
         "add_stats": {},
@@ -1777,13 +1775,13 @@ def _cow_commit(
         version = base.version + 1
         new_files = sorted((set(base.files) - set(touched)) | set(adds))
         ledger = _compact_ledger(
-            _collect_ledger_pairs(tfs, list(range(version)))
+            _ledger_pairs(base)
             + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
         )
         manifest = {
             "version": version,
             "mode": mode,
-            "committed_at": _commit_stamp(tfs, base.version),
+            "committed_at": _commit_stamp(base.manifest),
             "adds": adds,
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,
@@ -1974,13 +1972,13 @@ def _mor_commit(
             n_rows_tombstoned += len(fresh)
             old |= fresh
         ledger = _compact_ledger(
-            _collect_ledger_pairs(tfs, list(range(version)))
+            _ledger_pairs(base)
             + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
         )
         manifest = {
             "version": version,
             "mode": mode,
-            "committed_at": _commit_stamp(tfs, base.version),
+            "committed_at": _commit_stamp(base.manifest),
             "adds": adds,
             "add_stats": add_stats,
             "add_col_stats": add_col_stats,

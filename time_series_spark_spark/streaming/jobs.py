@@ -8,15 +8,21 @@ pytest asserts stream ≡ batch.
 
 Scale notes: watermarks bound state (J2); session windows and dedup keep
 per-key state that AQE/state-store partitioning spreads by key; the
-stateful per-user counter (J7) uses ``applyInPandasWithState`` — state
+per-user running totals (J7) are a native streaming aggregate — state
 lives in the state store, partitioned by user, exactly how a 100 TB
-stream would shard.
+stream would shard, and no Python worker runs. The stateful jobs whose
+update Spark cannot express (anomaly flags, Page-Hinkley, debounce,
+heavy hitters, token bucket) use ``applyInPandasWithState``. Spark
+cannot prune columns through an opaque pandas function, so each of
+them selects its keys and the columns its update reads before
+``groupBy``; the rest never cross to Python.
 
 Spark 4's newer ``transformWithStateInPandas`` was evaluated and is NOT
 usable in this environment: its driver-side Python runner imports
 ``google.protobuf``, which is broken here and cannot be installed
-(no network). ``applyInPandasWithState`` carries the J7 surface instead;
-swap in a ``StatefulProcessor`` when protobuf is available.
+(no network). ``applyInPandasWithState`` carries the Python stateful
+jobs instead; swap in a ``StatefulProcessor`` when protobuf is
+available.
 """
 
 from __future__ import annotations
@@ -124,36 +130,21 @@ def dedup_stream(sdf: DataFrame, watermark: str = "1 hour") -> DataFrame:
     return sdf.withWatermark("ts", watermark).dropDuplicates(["event_id"])
 
 
+def stateful_user_totals(sdf: DataFrame) -> DataFrame:
+    """J7: stateful per-key processing — a running (count, total value)
+    per user, as a native streaming aggregate. The partial sums live in
+    the state store, partitioned by user; in ``update`` mode each
+    micro-batch emits one row per user it touched, carrying the running
+    totals."""
+    return sdf.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.round(F.sum("value"), 4).alias("total_value"),
+    )
+
+
 # The applyInPandasWithState updates are module-level functions (parameters
 # bound with functools.partial): they pickle by reference, so a worker that
 # loads one imports this package, whose __init__ installs the zipcache guard.
-
-
-def _user_totals_update(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 4)]}
-    )
-
-
-def stateful_user_totals(sdf: DataFrame) -> DataFrame:
-    """J7: custom stateful per-key processing via ``applyInPandasWithState``
-    — a running (count, total value) per user maintained in the state
-    store."""
-    output_schema = "user_id long, n_events long, total_value double"
-    state_schema = "n long, total double"
-
-    return sdf.groupBy("user_id").applyInPandasWithState(
-        _user_totals_update,
-        output_schema,
-        state_schema,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
 
 
 def _anomaly_flags_update(
@@ -165,10 +156,8 @@ def _anomaly_flags_update(
     out_rows = []
     for pdf in pdfs:
         # within a batch, preserve event order for the online update
-        for ev, v in zip(
-            pdf.sort_values("event_id")["event_id"],
-            pdf.sort_values("event_id")["value"],
-        ):
+        ordered = pdf.sort_values("event_id")
+        for ev, v in zip(ordered["event_id"], ordered["value"]):
             v = float(v)
             if n >= 2 and m2 > 0:
                 sd = math.sqrt(m2 / (n - 1))
@@ -207,7 +196,9 @@ def stateful_anomaly_flags(sdf: DataFrame, z_thresh: float = 3.0) -> DataFrame:
     )
     state_schema = "n long, mean double, m2 double"
 
-    return sdf.groupBy("user_id").applyInPandasWithState(
+    return sdf.select("user_id", "event_id", "value").groupBy(
+        "user_id"
+    ).applyInPandasWithState(
         functools.partial(_anomaly_flags_update, z_thresh=z_thresh),
         output_schema,
         state_schema,
@@ -265,7 +256,9 @@ def stateful_page_hinkley(
     )
     state_schema = "n long, total double, m double, m_min double"
 
-    return sdf.groupBy("event_type").applyInPandasWithState(
+    return sdf.select("event_type", "event_id", "value").groupBy(
+        "event_type"
+    ).applyInPandasWithState(
         functools.partial(_page_hinkley_update, delta=delta, lam=lam),
         output_schema,
         state_schema,
@@ -841,7 +834,9 @@ def stateful_debounce(
     )
     state_schema = "last_us long"
 
-    return sdf.groupBy("user_id", "event_type").applyInPandasWithState(
+    return sdf.select("user_id", "event_type", "ts", "event_id").groupBy(
+        "user_id", "event_type"
+    ).applyInPandasWithState(
         functools.partial(_debounce_update, gap_us=gap_us),
         output_schema,
         state_schema,
@@ -905,7 +900,9 @@ def stateful_heavy_hitters(
     )
     state_schema = "items array<string>, counts array<long>, d long"
 
-    return sdf.groupBy("event_type").applyInPandasWithState(
+    return sdf.select("event_type", "event_id", "user_id").groupBy(
+        "event_type"
+    ).applyInPandasWithState(
         functools.partial(_heavy_hitters_update, counters=counters, k=k),
         output_schema,
         state_schema,
@@ -1052,7 +1049,9 @@ def stateful_token_bucket(
     )
     state_schema = "last_us long, stok long"
 
-    return sdf.groupBy("user_id").applyInPandasWithState(
+    return sdf.select("user_id", "ts", "event_id").groupBy(
+        "user_id"
+    ).applyInPandasWithState(
         functools.partial(
             _token_bucket_update,
             period_us=period_us,
