@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import types as T
 
 
 def test_parquet_layout_report_multifile_and_flag(spark, tmp_path):
@@ -161,53 +163,118 @@ def test_versioned_table_through_subtree_filesystem(spark, tmp_path):
     assert committed_batch_ids(tfs, "s1") == {0}
 
 
-def test_write_versioned_records_row_group_stats(spark, tmp_path):
-    """Round 11 (r10 verdict item 4): every commit records per-added-file
-    row-group byte sizes in the manifest (`add_stats`; full-snapshot
-    manifests also carry `file_stats` for the whole list), read once at
-    commit time from the footers the writer just produced — and
-    `fsio.Snapshot.file_stats` resolves the full map through the delta
-    chain."""
-    import json
+class _IdFrame:
+    """Stands in for the DataFrame ``write_versioned`` commits when its
+    staging is ``_stage_with_pyarrow``: only the schema is read."""
 
-    import pyarrow.parquet as pq
+    schema = T.StructType([T.StructField("id", T.LongType())])
 
+
+def _count_manifest_reads(monkeypatch) -> list[str]:
+    """From now on, record every manifest ``TableFS.read_json`` reads."""
+    from time_series_spark_spark.sources.fsio import TableFS
+
+    reads, real = [], TableFS.read_json
+
+    def counting(self, *rel):
+        if rel[-1].startswith("_manifest."):
+            reads.append(rel[-1])
+        return real(self, *rel)
+
+    monkeypatch.setattr(TableFS, "read_json", counting)
+    return reads
+
+
+def _stage_with_pyarrow(df, tfs, version):
+    """Stand-in for ``io._stage_data_files`` that writes one one-row
+    parquet file with pyarrow: many commits without a Spark job each."""
+    import uuid
+
+    stage = f"v={version}-{uuid.uuid4().hex[:8]}"
+    tfs.mkdirs(stage)
+    pq.write_table(
+        pa.table({"id": pa.array([version], type=pa.int64())}),
+        tfs.path(stage, "part-0.parquet"),
+    )
+    return stage, [f"{stage}/part-0.parquet"]
+
+
+@pytest.mark.parametrize("kind", [
+    "append", "checkpoint", "replace", "optimize", "restore", "cow_merge", "mor_delete"])
+def test_write_versioned_records_row_group_stats(spark, tmp_path, monkeypatch, kind):
+    """Every writer kind publishes the current manifest format, which the
+    readers take without a fallback: ``adds`` with ``add_stats`` for each
+    add (row-group byte sizes read once at commit from the footers the
+    writer just produced), a ``committed_at`` stamp strictly above the
+    previous version's, and on every snapshot manifest a ``ledger`` plus
+    ``file_stats`` (inline, or the ``files_parquet`` sidecar's
+    ``rg_bytes``) for every file of ``Snapshot.files``."""
+    from time_series_spark_spark.sources import io as io_mod
     from time_series_spark_spark.sources.fsio import (
         Snapshot,
-        as_table_fs,
+        TableFS,
+        is_snapshot_manifest,
+        latest_version,
     )
     from time_series_spark_spark.sources.io import write_versioned
 
     table = tmp_path / "vt"
-    write_versioned(spark.range(100).repartition(2).selectExpr("id"), str(table))
-    with open(table / "_manifest.0.json") as fh:
-        m0 = json.load(fh)
-    assert set(m0["add_stats"]) == set(m0["adds"]) and len(m0["adds"]) == 2
+    path = str(table)
+    write_versioned(spark.range(100).repartition(2).selectExpr("id"), path)
+    m0 = TableFS(path).read_json("_manifest.0.json")
+    assert len(m0["adds"]) == 2
     assert m0["file_stats"] == m0["add_stats"]  # first commit: files == adds
     for rel, rg_bytes in m0["add_stats"].items():
         md = pq.ParquetFile(table / rel).metadata
         assert rg_bytes == [
             md.row_group(g).total_byte_size for g in range(md.num_row_groups)
         ]
-    # a carry-forward DELTA manifest records stats for ITS adds only...
-    write_versioned(
-        spark.range(100, 150).selectExpr("id"), str(table), carry_forward=True
-    )
-    with open(table / "_manifest.1.json") as fh:
-        m1 = json.load(fh)
-    assert "files" not in m1 and set(m1["add_stats"]) == set(m1["adds"])
-    # ...and the chain resolver covers the FULL snapshot file list
-    tfs = as_table_fs(str(table))
-    stats = Snapshot(tfs, 1).file_stats
-    assert set(stats) >= set(Snapshot(tfs, 1).files)
+    # a carry-forward DELTA manifest records stats for ITS adds only
+    df = spark.range(100, 150).selectExpr("id")
+    write_versioned(df, path, carry_forward=True, batch_id=0, stream_id="s")
+    if kind == "checkpoint":
+        # the version-20 checkpoint spills its 22 files to a sidecar
+        monkeypatch.setattr(io_mod, "_PARQUET_SNAPSHOT_MIN_FILES", 20)
+        monkeypatch.setattr(io_mod, "_stage_data_files", _stage_with_pyarrow)
+        for b in range(1, 20):
+            write_versioned(
+                _IdFrame(), path, carry_forward=True, batch_id=b, stream_id="s"
+            )
+        monkeypatch.undo()
+    elif kind == "replace":
+        write_versioned(spark.range(7).selectExpr("id"), path)
+    elif kind == "optimize":
+        io_mod.compact_versioned(spark, path, target_file_bytes=1 << 30)
+    elif kind == "restore":
+        io_mod.restore_versioned(path, 0)
+    elif kind == "cow_merge":
+        changes = spark.createDataFrame([(3, "delete"), (500, "insert")], "id long, op string")
+        io_mod.merge_versioned(spark, path, changes, ["id"], batch_id=1, stream_id="s")
+    elif kind == "mor_delete":
+        io_mod.delete_versioned(spark, path, "id < 10", strategy="mor")
+
+    tfs = TableFS(path)
+    latest = latest_version(tfs)
+    assert latest == {"append": 1, "checkpoint": 20}.get(kind, 2)
+    prev_ca = -1
+    for v in range(latest + 1):
+        m = tfs.read_json(f"_manifest.{v}.json")
+        assert set(m["add_stats"]) == set(m["adds"]), (kind, v)
+        assert isinstance(m["committed_at"], int) and m["committed_at"] > prev_ca
+        prev_ca = m["committed_at"]
+        if is_snapshot_manifest(m):
+            assert "ledger" in m, (kind, v)
+            assert "files_parquet" in m or set(m["file_stats"]) == set(m["files"])
+        # every file's stats resolve through the chain, sidecar included
+        snap = Snapshot(tfs, v)
+        assert set(snap.file_stats) == set(snap.files), (kind, v)
+    assert ("files_parquet" in m) == (kind == "checkpoint")
 
 
 def test_versioned_stream_plans_without_datafile_io(spark, tmp_path, monkeypatch):
     """Round 11 (r10 verdict item 4): `partitions()` splits a
     multi-row-group file into multiple slices from the manifest's
-    commit-time stats alone — no data-file open at plan time (the
-    legacy footer-read fallback stays for manifests without stats,
-    pinned by the vt4 case in test_streaming.py)."""
+    commit-time stats alone — no data-file open at plan time."""
     import json
 
     import pyarrow as pa
@@ -337,10 +404,7 @@ def test_versioned_stream_on_replace_option(spark, tmp_path):
 def test_describe_versioned_history(spark, tmp_path):
     """A13d (round 11): DESCRIBE HISTORY reads manifests only — one row
     per version with mode / file+row deltas / checkpoint flag / stream
-    provenance; fields a legacy writer never recorded surface as NULL
-    rather than a guess."""
-    import json
-
+    provenance."""
     from time_series_spark_spark.sources.io import (
         describe_versioned_history,
         write_versioned,
@@ -365,18 +429,6 @@ def test_describe_versioned_history(spark, tmp_path):
     assert hist[1]["stream_id"] == "s1" and hist[1]["batch_id"] == 7
     assert hist[2]["mode"] == "replace" and hist[2]["n_rows_added"] == 3
     assert hist[2]["is_checkpoint"] and hist[2]["stream_id"] is None
-
-    # legacy manifest (pre-round-11 writer): mode / n_rows_added NULL
-    m_path = table / "_manifest.1.json"
-    with open(m_path) as fh:
-        m = json.load(fh)
-    for k in ("mode", "n_rows_added", "add_stats"):
-        m.pop(k, None)
-    with open(m_path, "w") as fh:
-        json.dump(m, fh)
-    hist = {r["version"]: r for r in describe_versioned_history(spark, str(table)).collect()}
-    assert hist[1]["mode"] is None and hist[1]["n_rows_added"] is None
-    assert hist[1]["n_adds"] == 1  # adds still present in the manifest
 
 
 def test_restore_versioned(spark, tmp_path):
@@ -445,10 +497,7 @@ def test_versioned_as_of_timestamp(spark, tmp_path):
     """Round 11: TIMESTAMP AS OF time travel — every commit stamps
     committed_at (epoch µs); a timestamp resolves to the LATEST version
     committed at or before it. Boundary-exact (resolution uses the
-    recorded stamps themselves), loud on pre-history instants and on
-    tables written before stamps existed."""
-    import json
-
+    recorded stamps themselves), loud on pre-history instants."""
     import pytest as _pytest
 
     from time_series_spark_spark.sources.io import (
@@ -481,16 +530,35 @@ def test_versioned_as_of_timestamp(spark, tmp_path):
         read_versioned(spark, str(table), as_of_timestamp=ts[0] - 1)
     with _pytest.raises(ValueError, match="not both"):
         read_versioned(spark, str(table), as_of=0, as_of_timestamp=ts[0])
-    # legacy manifests (no stamp) cannot match a timestamp
-    for v in (0, 1):
-        p = table / f"_manifest.{v}.json"
-        with open(p) as fh:
-            m = json.load(fh)
-        m.pop("committed_at", None)
-        with open(p, "w") as fh:
-            json.dump(m, fh)
-    with _pytest.raises(ValueError, match="predates commit timestamps"):
-        read_versioned(spark, str(table), as_of_timestamp=ts[1])
+
+
+def test_as_of_timestamp_bisects_the_stamps(spark, tmp_path, monkeypatch):
+    """TIMESTAMP AS OF bisects the strictly increasing commit stamps: over
+    N versions it reads at most ceil(log2(N + 1)) manifests to find the
+    version, plus that version's own manifest to read it."""
+    import math
+
+    from time_series_spark_spark.sources import io as io_mod
+    from time_series_spark_spark.sources.fsio import TableFS
+
+    monkeypatch.setattr(io_mod, "_stage_data_files", _stage_with_pyarrow)
+    path = str(tmp_path / "vt")
+    n = 100
+    for _ in range(n):
+        io_mod.write_versioned(_IdFrame(), path)  # replaces: one-manifest chains
+    monkeypatch.undo()
+    tfs = TableFS(path)
+    stamps = [tfs.read_json(f"_manifest.{v}.json")["committed_at"] for v in range(n)]
+    reads = _count_manifest_reads(monkeypatch)
+    # each stamp resolves to its own version; the instant just before a
+    # stamp resolves to the version before it
+    cases = [(stamps[v], v) for v in (0, 37, n - 1)]
+    cases += [(stamps[v] - 1, v - 1) for v in (1, 38, n - 1)]
+    for ts, want in cases:
+        reads.clear()
+        df = io_mod.read_versioned(spark, path, as_of_timestamp=ts)
+        assert len(reads) <= math.ceil(math.log2(n + 1)) + 1
+        assert [r["id"] for r in df.collect()] == [want]
 
 
 def test_vacuum_dry_run(spark, tmp_path):
@@ -654,10 +722,6 @@ def test_ledger_compaction_flat_over_200_batches(tmp_path, monkeypatch):
     pattern) so all 200 commits run the REAL write_versioned."""
     import json
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import types as T
-
     from time_series_spark_spark.sources import io as io_mod
     from time_series_spark_spark.sources.fsio import as_table_fs
     from time_series_spark_spark.sources.io import (
@@ -665,26 +729,12 @@ def test_ledger_compaction_flat_over_200_batches(tmp_path, monkeypatch):
         latest_committed_batch_id,
     )
 
-    class _FakeDF:
-        schema = T.StructType([T.StructField("id", T.LongType())])
-
-    def _stage(df, tfs_, version):
-        import uuid
-
-        stage = f"v={version}-{uuid.uuid4().hex[:8]}"
-        tfs_.mkdirs(stage)
-        pq.write_table(
-            pa.table({"id": pa.array([version], type=pa.int64())}),
-            tfs_.path(stage, "part-0.parquet"),
-        )
-        return stage, [f"{stage}/part-0.parquet"]
-
-    monkeypatch.setattr(io_mod, "_stage_data_files", _stage)
+    monkeypatch.setattr(io_mod, "_stage_data_files", _stage_with_pyarrow)
     table = str(tmp_path / "vt")
     tfs = as_table_fs(table)
     for b in range(200):
         v = io_mod.write_versioned(
-            _FakeDF(), table, batch_id=b, carry_forward=True, stream_id="s"
+            _IdFrame(), table, batch_id=b, carry_forward=True, stream_id="s"
         )
         assert v == b
     ledger_sizes = []
@@ -703,35 +753,9 @@ def test_ledger_compaction_flat_over_200_batches(tmp_path, monkeypatch):
     assert {181, 190, 199} <= ids and 199 in ids
 
 
-def test_legacy_full_pair_ledger_migrates_on_next_snapshot(spark, tmp_path):
-    """A table whose checkpoint manifests still carry the round-12 FULL
-    (stream_id, batch_id) pair list compacts on the first new snapshot
-    commit, and the monotone redelivery watermark is preserved."""
-    from time_series_spark_spark.sources.fsio import as_table_fs
-    from time_series_spark_spark.sources.io import (
-        latest_committed_batch_id,
-        write_versioned,
-    )
-
-    table = str(tmp_path / "vt")
-    write_versioned(
-        spark.range(3).selectExpr("id"), table, batch_id=0, stream_id="s"
-    )
-    tfs = as_table_fs(table)
-    legacy = dict(tfs.read_json("_manifest.0.json"))
-    legacy["ledger"] = [["s", b] for b in range(100)]  # pre-compaction form
-    tfs.write_json_atomic(legacy, "_manifest.0.json")
-    assert latest_committed_batch_id(table, "s") == 99
-    # next snapshot commit (replace) migrates: one pair per stream
-    write_versioned(spark.range(5).selectExpr("id"), table)
-    m = tfs.read_json("_manifest.1.json")
-    assert m["ledger"] == [["s", 99]]
-    assert latest_committed_batch_id(table, "s") == 99  # watermark kept
-
-
 def test_compact_ledger_multi_stream_and_none_scope():
-    """_compact_ledger keeps one max per scope, including the legacy
-    None scope, with deterministic output order."""
+    """_compact_ledger keeps one max per scope, including the None scope
+    of batch writes, with deterministic output order."""
     from time_series_spark_spark.sources.io import _compact_ledger
 
     pairs = [
@@ -821,8 +845,8 @@ def test_optimize_data_change_false_posture(spark, tmp_path):
 def test_compact_ledger_properties():
     """Hypothesis laws for _compact_ledger: one entry per scope, each the
     max; idempotent; insensitive to input order; compact(a + b) ==
-    compact(compact(a) + b) (the migration path: a legacy full-pair
-    ledger followed by new pairs compacts to the same watermarks)."""
+    compact(compact(a) + b) (a checkpoint's compacted ledger followed by
+    later pairs compacts to the same watermarks)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -847,7 +871,7 @@ def test_compact_ledger_properties():
         # idempotent and order-insensitive
         assert _compact_ledger(out) == out
         assert _compact_ledger(list(reversed(a))) == out
-        # incremental migration ≡ batch compaction
+        # incremental compaction ≡ batch compaction
         assert _compact_ledger(_compact_ledger(a) + b) == _compact_ledger(
             a + b
         )
@@ -943,7 +967,6 @@ def test_versioned_reads_resolve_each_manifest_once(spark, tmp_path, monkeypatch
     chain once, and the streaming planner reads each manifest of its
     range at most once — the snapshot start's chain, then one read per
     later version."""
-    from time_series_spark_spark.sources.fsio import TableFS
     from time_series_spark_spark.sources.io import read_versioned, write_versioned
     from time_series_spark_spark.sources.pydatasource import (
         VersionedTableStreamReader,
@@ -955,15 +978,7 @@ def test_versioned_reads_resolve_each_manifest_once(spark, tmp_path, monkeypatch
         write_versioned(
             spark.range(10 * i, 10 * (i + 1)).coalesce(1), path, carry_forward=True
         )
-    reads = []
-    real = TableFS.read_json
-
-    def counting(self, *rel):
-        if rel[-1].startswith("_manifest."):
-            reads.append(rel[-1])
-        return real(self, *rel)
-
-    monkeypatch.setattr(TableFS, "read_json", counting)
+    reads = _count_manifest_reads(monkeypatch)
     df = read_versioned(spark, path)
     assert sorted(reads) == [f"_manifest.{v}.json" for v in range(5)]
     assert df.count() == 50
@@ -980,27 +995,14 @@ def test_versioned_reads_resolve_each_manifest_once(spark, tmp_path, monkeypatch
 def test_write_versioned_reads_each_manifest_once(spark, tmp_path, monkeypatch):
     """An append reads only the previous manifest; the version-20
     checkpoint reads the delta chain back to version 0 once, for the
-    file list and the redelivery ledger alike. On a legacy table, whose
-    snapshot manifests carry no ledger, the ledger fold walks on down
-    through every older version."""
+    file list and the redelivery ledger alike."""
     from time_series_spark_spark.sources.fsio import TableFS
-    from time_series_spark_spark.sources.io import (
-        committed_batch_ids,
-        write_versioned,
-    )
-
-    reads = []
-    real = TableFS.read_json
-
-    def counting(self, *rel):
-        if rel[-1].startswith("_manifest."):
-            reads.append(rel[-1])
-        return real(self, *rel)
+    from time_series_spark_spark.sources.io import write_versioned
 
     path = str(tmp_path / "vt")
     one = spark.range(1).coalesce(1)
     write_versioned(one, path, batch_id=0, stream_id="s")
-    monkeypatch.setattr(TableFS, "read_json", counting)
+    reads = _count_manifest_reads(monkeypatch)
     per_commit = []
     for b in range(1, 21):
         reads.clear()
@@ -1008,15 +1010,7 @@ def test_write_versioned_reads_each_manifest_once(spark, tmp_path, monkeypatch):
         per_commit.append(sorted(reads))
     assert per_commit[:19] == [[f"_manifest.{v}.json"] for v in range(19)]
     assert per_commit[19] == sorted(f"_manifest.{v}.json" for v in range(20))
-    assert real(TableFS(path), "_manifest.20.json")["ledger"] == [["s", 20]]
-
-    legacy = TableFS(str(tmp_path / "legacy"))
-    for b in range(3):
-        write_versioned(one, legacy.root, batch_id=b, stream_id="s")
-        m = real(legacy, f"_manifest.{b}.json")
-        del m["ledger"]
-        legacy.write_json_atomic(m, f"_manifest.{b}.json")
-    assert committed_batch_ids(legacy.root, "s") == {0, 1, 2}
+    assert TableFS(path).read_json("_manifest.20.json")["ledger"] == [["s", 20]]
 
 
 _LOAD_STREAM_SOURCE = """

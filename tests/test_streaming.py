@@ -1686,7 +1686,7 @@ def test_series_source_values_oracle_rederived_in_numpy():
     assert got == expect
 
 
-def test_versioned_sink_stream_identity_normalized_and_legacy_migration(
+def test_versioned_sink_stream_identity_normalized_and_fresh_stream(
     spark, tmp_path
 ):
     """Two hardening rules for the (stream_id, batch_id) redelivery
@@ -1697,14 +1697,10 @@ def test_versioned_sink_stream_identity_normalized_and_legacy_migration(
        identity. Spark's checkpoint resume treats them identically, so
        a resume under a different spelling must hit the same ledger —
        otherwise a redelivered micro-batch republishes as duplicates.
-    2. MIGRATION, gated by a checkpoint marker — manifests committed
-       BEFORE stream ids existed carry ``stream_id: null``. ONLY a
-       checkpoint that itself predates the migration (engine state
-       present, no identity marker) treats those batch ids as
-       committed; a BRAND-NEW stream (fresh checkpoint, batch ids
-       restarting at 0) must NOT absorb the None-scoped ledger — that
-       would silently drop its first micro-batches as phantom
-       redeliveries (round-9 advice).
+    2. A BRAND-NEW stream (fresh checkpoint, batch ids restarting at 0)
+       must NOT absorb the None-scoped ledger that batch writes with a
+       ``batch_id`` record — that would silently drop its first
+       micro-batches as phantom redeliveries (round-9 advice).
     """
     import os
 
@@ -1753,11 +1749,11 @@ def test_versioned_sink_stream_identity_normalized_and_legacy_migration(
     assert replay == []  # absorbed — same identity under both spellings
     assert read_versioned(spark, table1).count() == 2
 
-    # --- (2a) a BRAND-NEW stream does NOT absorb the legacy ledger ---
+    # --- (2) a BRAND-NEW stream does NOT absorb the None scope ---
     table2 = str(tmp_path / "t2")
-    legacy = spark.createDataFrame([(99, 990)], "id long, v long")
-    # pre-migration stream commit: batch_id recorded, no stream identity
-    assert write_versioned(legacy, table2, batch_id=0) == 0
+    batch = spark.createDataFrame([(99, 990)], "id long, v long")
+    # a batch commit: batch_id recorded, no stream identity
+    assert write_versioned(batch, table2, batch_id=0) == 0
     sdf2 = (
         spark.readStream.schema("id long, v long")
         .option("maxFilesPerTrigger", 1)
@@ -1767,38 +1763,66 @@ def test_versioned_sink_stream_identity_normalized_and_legacy_migration(
         sdf2, table2, checkpoint_dir=str(tmp_path / "ck2")
     )
     # ck2 is a FRESH checkpoint: its batch ids 0,1 are new work, not
-    # redeliveries of the legacy batch 0 — both must publish
+    # redeliveries of the batch write's batch 0 — both must publish
     assert got2 == [1, 2]
     rows = {
         (r["id"], r["v"]) for r in read_versioned(spark, table2).collect()
     }
     assert rows == {(99, 990), (1, 10), (2, 20)}
 
-    # --- (2b) a PRE-MIGRATION checkpoint (engine state, no marker)
-    # DOES absorb the None-scoped ledger ---
-    table3 = str(tmp_path / "t3")
-    assert write_versioned(legacy, table3, batch_id=0) == 0
-    ck3 = tmp_path / "ck3"
-    (ck3 / "offsets").mkdir(parents=True)  # looks like an old checkpoint
-    sdf3 = (
-        spark.readStream.schema("id long, v long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    got3 = stream_to_versioned_table(sdf3, table3, checkpoint_dir=str(ck3))
-    # batch 0 matches the legacy ledger -> skipped; batch 1 publishes
-    assert got3 == [1]
-    rows3 = {
-        (r["id"], r["v"]) for r in read_versioned(spark, table3).collect()
-    }
-    assert (99, 990) in rows3 and len(rows3) == 2
-    # the marker persists the resolved aliases, so a RESUME keeps
-    # absorbing the legacy scope even though engine state now exists
-    import json
 
-    with open(ck3 / "_versioned_sink_identity.json") as fh:
-        m = json.load(fh)
-    assert m["stream_id"] == str(ck3) and m["alias_ids"] == [None]
+@pytest.mark.parametrize("sink", ["append", "merge"])
+def test_versioned_sink_reads_each_head_manifest_once(
+    spark, tmp_path, monkeypatch, sink
+):
+    """One micro-batch on a non-checkpoint version resolves the table's
+    head once: the redelivery check and the commit (and the merge sink's
+    column projection) share one snapshot, so the latest-version hint
+    and each manifest of the head's chain are read exactly once."""
+    from time_series_spark_spark.sources.fsio import TableFS
+    from time_series_spark_spark.sources.io import (
+        read_versioned,
+        write_versioned,
+    )
+    from time_series_spark_spark.streaming.jobs import (
+        stream_merge_to_versioned_table,
+        stream_to_versioned_table,
+    )
+
+    table = str(tmp_path / "vt")
+    for i in range(5):  # a snapshot at 0, then four delta manifests
+        write_versioned(
+            spark.createDataFrame([(i, i)], "id long, v long"),
+            table,
+            carry_forward=i > 0,
+        )
+    src = tmp_path / "src"
+    src.mkdir()
+    pd.DataFrame({"id": [2, 9], "v": [20, 90]}).to_parquet(src / "a.parquet")
+    sdf = spark.readStream.schema("id long, v long").parquet(str(src))
+    reads = []
+    real = TableFS.read_json
+
+    def counting(self, *rel):
+        reads.append(rel[-1])
+        return real(self, *rel)
+
+    monkeypatch.setattr(TableFS, "read_json", counting)
+    ck = str(tmp_path / "ck")
+    if sink == "append":
+        got = stream_to_versioned_table(sdf, table, checkpoint_dir=ck)
+    else:
+        got = stream_merge_to_versioned_table(
+            sdf, table, ["id"], ["v"], checkpoint_dir=ck
+        )
+    monkeypatch.undo()
+    assert got == [5]
+    assert sorted(reads) == ["_latest.json"] + [
+        f"_manifest.{v}.json" for v in range(5)
+    ]
+    rows = {(r["id"], r["v"]) for r in read_versioned(spark, table).collect()}
+    kept = {(i, i) for i in range(5)} - ({(2, 2)} if sink == "merge" else set())
+    assert rows == kept | {(2, 20), (9, 90)}
 
 
 def test_versioned_stream_source_snapshot_incremental_prune(
@@ -1959,11 +1983,17 @@ def test_versioned_stream_source_snapshot_incremental_prune(
         table4 / "v=0" / "big.parquet",
         row_group_size=1000,  # 5 groups — 5 parquet split points
     )
+    md4 = pq.ParquetFile(table4 / "v=0" / "big.parquet").metadata
     with open(table4 / "_manifest.0.json", "w") as fh:
         json.dump(
             {
                 "version": 0,
                 "files": ["v=0/big.parquet"],
+                "file_stats": {
+                    "v=0/big.parquet": [
+                        md4.row_group(g).total_byte_size for g in range(5)
+                    ]
+                },
                 "schema": spark.range(1).schema.json(),
                 "n_files": 1,
                 "batch_id": None,

@@ -568,10 +568,8 @@ def test_vacuum_grace_period(spark, tmp_path, monkeypatch):
     """Delta's deletedFileRetentionDuration: under a nonzero grace, a
     doomed file is deleted only once the commit that unreferenced it is
     old enough — young files are deferred (still on disk) while the
-    floor still rises; aged files go on the next run; files
-    unreferenced by UNSTAMPED legacy commits are deferred forever."""
-    import json
-
+    floor still rises; aged files go on the next run; grace_us=0
+    deletes at once."""
     import time_series_spark_spark.sources.io as io_mod
 
     path = str(tmp_path / "vt")
@@ -600,21 +598,13 @@ def test_vacuum_grace_period(spark, tmp_path, monkeypatch):
     assert rep2["n_files_deferred"] == 0
     monkeypatch.undo()
 
-    # legacy commits without stamps: conservatively deferred forever
+    # grace_us=0 keeps the original immediate-delete contract
     path2 = str(tmp_path / "vt2")
     write_versioned(spark.range(4).selectExpr("id"), path2)
     write_versioned(spark.range(2).selectExpr("id"), path2)
     write_versioned(spark.range(1).selectExpr("id"), path2)
-    tfs2 = as_table_fs(path2)
-    for v in range(3):
-        m = tfs2.read_json(f"_manifest.{v}.json")
-        m.pop("committed_at", None)
-        (tmp_path / "vt2" / f"_manifest.{v}.json").write_text(json.dumps(m))
-    rep3 = vacuum_versioned(path2, keep_last=2, grace_us=1)
-    assert rep3["n_files_deleted"] == 0 and rep3["n_files_deferred"] >= 1
-    # grace_us=0 keeps the original immediate-delete contract
-    rep4 = vacuum_versioned(path2, keep_last=2)
-    assert rep4["n_files_deleted"] >= 1
+    rep3 = vacuum_versioned(path2, keep_last=2)
+    assert rep3["n_files_deleted"] >= 1 and rep3["n_files_deferred"] == 0
 
 
 def test_stream_merge_upsert_multibatch_and_redelivery(spark, tmp_path):
@@ -752,14 +742,14 @@ def test_merge_prunes_candidates_from_envelopes(spark, tmp_path, monkeypatch):
             carry_forward=True,
         )
     calls = []
-    real = io_mod.prune_files_by_stats
+    real = io_mod._split_by_stats
 
     def probe(*a, **kw):
         kept, skipped = real(*a, **kw)
         calls.append((len(kept), len(skipped)))
         return kept, skipped
 
-    monkeypatch.setattr(io_mod, "prune_files_by_stats", probe)
+    monkeypatch.setattr(io_mod, "_split_by_stats", probe)
     rep = merge_versioned(
         spark,
         path,

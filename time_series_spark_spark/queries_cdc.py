@@ -930,8 +930,8 @@ def orders_versioned_layout_health(
         out = (
             rep.withColumn(
                 "version",
-                # commit version from the staging-dir name v=N-<token>/
-                # (writer-unique since round 12; bare v=N/ on legacy tables)
+                # commit version from the writer-unique staging-dir
+                # name v=N-<token>/
                 F.regexp_extract("path", r"v=(\d+)", 1).cast("long"),
             )
             .groupBy("version")

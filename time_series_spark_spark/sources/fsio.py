@@ -196,7 +196,8 @@ def latest_version(tfs: TableFS) -> int | None:
     """Latest committed version in O(1) via the ``_latest.json`` hint
     (probe-forward covers a hint left stale-low by a crash between
     manifest publish and hint publish); falls back to the full listing
-    for tables written before the hint existed. ``None`` = no commits."""
+    when no hint was published yet (a crash between the first manifest
+    publish and its hint). ``None`` = no commits."""
     if tfs.exists("_latest.json"):
         v = int(tfs.read_json("_latest.json")["version"])
         if tfs.exists(f"_manifest.{v}.json"):
@@ -270,29 +271,30 @@ class _once:
 class Snapshot:
     """One committed version of the table, resolved once.
 
+    ``manifest`` is the version's own manifest, read on construction.
     ``chain`` holds the manifests from ``version`` back through each
     delta manifest's ``base`` to the nearest snapshot manifest (inline
     ``files`` or a ``files_parquet`` sidecar), newest first — at most
-    ``_CHECKPOINT_INTERVAL`` reads (see ``io.write_versioned``), one on
-    pre-round-10 tables, whose manifests all restate ``files``.
-    ``manifest`` is ``chain[0]`` and ``terminal`` is ``chain[-1]``.
+    ``_CHECKPOINT_INTERVAL`` reads (see ``io.write_versioned``), made on
+    first use, so a caller that needs only the head manifest reads no
+    more. ``terminal`` is ``chain[-1]``.
 
-    ``files``, ``file_stats``, ``col_stats`` and ``dvs`` are folds over
-    ``chain``, each computed on first use and kept; they are shared, so
-    a caller copies one before changing it. A fold that reads the
-    terminal's sidecar reads only its own columns. A caller that has
-    already read ``version``'s own manifest passes it as ``head``."""
+    ``chain``, ``files``, ``file_stats``, ``col_stats`` and ``dvs`` are
+    each computed on first use and kept; they are shared, so a caller
+    copies one before changing it. A fold that reads the terminal's
+    sidecar reads only its own columns."""
 
-    def __init__(self, tfs: TableFS, version: int, head: dict | None = None):
+    def __init__(self, tfs: TableFS, version: int):
         self.tfs = tfs
         self.version = version
-        self.chain = [read_manifest(tfs, version) if head is None else head]
-        while not is_snapshot_manifest(self.chain[-1]):
-            self.chain.append(read_manifest(tfs, self.chain[-1]["base"]))
+        self.manifest = read_manifest(tfs, version)
 
-    @property
-    def manifest(self) -> dict:
-        return self.chain[0]
+    @_once
+    def chain(self) -> list[dict]:
+        chain = [self.manifest]
+        while not is_snapshot_manifest(chain[-1]):
+            chain.append(read_manifest(self.tfs, chain[-1]["base"]))
+        return chain
 
     @property
     def terminal(self) -> dict:
@@ -328,17 +330,16 @@ class Snapshot:
     @_once
     def file_stats(self) -> dict:
         """Per-file row-group BYTE SIZES (``rel → [bytes, ...]``),
-        recorded at commit (round 11) so planners — the streaming
-        source above all — split files at row-group boundaries with zero
-        data-file I/O. Files from legacy manifests are absent: callers
-        fall back to one footer read for exactly those."""
+        recorded at commit (round 11) for every file, so planners — the
+        streaming source above all — split files at row-group boundaries
+        with zero data-file I/O."""
         return self._stats("rg_bytes", lambda rb: rb, "file_stats", "add_stats")
 
     @_once
     def col_stats(self) -> dict:
         """Per-file COLUMN MIN/MAX envelopes (``rel → {col: [min, max]}``),
-        recorded at commit (round 12). Files from older manifests are
-        absent — and ABSENT MEANS NEVER PRUNED (data skipping is an
+        recorded at commit (round 12). Files and columns without usable
+        parquet stats are absent — and ABSENT MEANS NEVER PRUNED (data skipping is an
         optimization, not a correctness filter)."""
         return self._stats("col_stats", json.loads, "col_stats", "add_col_stats")
 
@@ -374,14 +375,3 @@ class Snapshot:
                 )
             }
         return {rel: [int(p) for p in ps] for rel, ps in m.get("dv", {}).items()}
-
-
-def manifest_adds(tfs: TableFS, version: int) -> list[str]:
-    """The files ADDED by one commit — directly from the manifest's
-    ``adds`` when present (every round-10+ manifest), else the
-    files(v) − files(v−1) difference (legacy manifests)."""
-    m = read_manifest(tfs, version)
-    if "adds" in m:
-        return sorted(m["adds"])
-    prev = set(Snapshot(tfs, version - 1).files) if version > 0 else set()
-    return sorted(set(snapshot_files(tfs, m)) - prev)

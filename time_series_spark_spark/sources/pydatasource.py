@@ -346,8 +346,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # emits the replace's files as adds without retracting replaced
         # rows — Delta's ignoreChanges. "fail" raises at plan time —
         # Delta's default posture, for consumers whose downstream state
-        # would be silently corrupted by re-emitted data. Commits from
-        # writers predating the manifest 'mode' field count as appends.
+        # would be silently corrupted by re-emitted data.
         self.on_replace = str(options.get("onReplace", "added")).lower()
         if self.on_replace not in ("added", "fail"):
             raise ValueError(
@@ -371,7 +370,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
     def latestOffset(self) -> dict:
         # once per micro-batch → must not LIST the manifest directory
         # (O(versions) at streaming cadence): the latest-version hint
-        # makes this O(1) on every table the round-10+ writer touched
+        # makes this O(1)
         latest = fsio.latest_version(self.tfs)
         if latest is None:
             raise FileNotFoundError(f"no committed versions in {self.tfs.root}")
@@ -396,16 +395,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         version's ``adds``. Row-group split points come from the
         manifests' commit-time ``add_stats``/``file_stats`` (the writer
         read the footers it had just produced — round 11), so planning
-        does ZERO data-file I/O on round-11+ tables; a file from a
-        legacy manifest without stats costs one footer read, and only
-        that file. Offsets whose data files may have been vacuumed
-        (below the retention floor) fail loudly AT PLAN TIME — an O(1)
-        floor comparison, not a per-file existence probe — instead of
-        surfacing a partial scan; files added at versions ≥ floor are
-        referenced by a retained manifest and therefore never pruned."""
-        import pyarrow.parquet as pq
-        from pyarrow.lib import ArrowIOError
-
+        does ZERO data-file I/O. Offsets whose data files may have been
+        vacuumed (below the retention floor) fail loudly AT PLAN TIME —
+        an O(1) floor comparison, not a per-file existence probe —
+        instead of surfacing a partial scan; files added at versions ≥
+        floor are referenced by a retained manifest and therefore never
+        pruned."""
         tfs = self.tfs
         v0 = int(start["version"])
         v1 = int(end["version"])
@@ -450,7 +445,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             todo = []
         for v in range(v0 + 1, v1 + 1):
             m = fsio.read_manifest(tfs, v)
-            mode = m.get("mode")
+            mode = m["mode"]
             if mode == "optimize":
                 # dataChange=false (round 13 — Delta's OPTIMIZE posture):
                 # a pure layout rewrite of the SAME logical rows emits
@@ -459,50 +454,27 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 # failing would make compaction of a streamed table
                 # impossible
                 continue
-            if self.on_replace == "fail" and mode not in (None, "append"):
+            if self.on_replace == "fail" and mode != "append":
                 # replace AND restore both leave downstream state stale:
                 # replace re-emits rows as adds, restore logically
                 # REMOVES rows without retracting them
                 raise ValueError(
                     f"version {v} of {self.tfs.root} is a "
-                    f"{(mode or 'replace').upper()} commit and this "
+                    f"{mode.upper()} commit and this "
                     "stream was started with onReplace=fail: downstream "
                     "state would silently diverge — restart from a "
                     "fresh checkpoint (snapshot-at-floor) or read with "
                     "onReplace=added to accept it"
                 )
-            adds = sorted(m["adds"]) if "adds" in m else fsio.manifest_adds(tfs, v)
-            todo += [(v, rel) for rel in adds]
-            stats.update(m.get("add_stats", {}))
+            todo += [(v, rel) for rel in sorted(m["adds"])]
+            stats.update(m["add_stats"])
         # (1) split each file into row-group runs of ≤ TARGET_SLICE_BYTES
         chunks: list = []  # (path, version, [row groups], bytes)
         for v, rel in todo:
             p = tfs.path(rel)
-            rg_bytes = stats.get(rel)
-            if rg_bytes is None:
-                # legacy manifest without commit-time stats: pay one
-                # footer read (and existence probe) for THIS file only
-                if not tfs.exists(rel):
-                    raise ValueError(
-                        f"data file {rel} of version {v} was pruned by "
-                        f"vacuum (retention floor {floor} of "
-                        f"{self.tfs.root}): this checkpoint cannot be "
-                        "resumed — restart from a fresh checkpoint to "
-                        "read the floor snapshot"
-                    )
-                try:
-                    md = pq.ParquetFile(p, filesystem=tfs.fs).metadata
-                except ArrowIOError as exc:
-                    raise ValueError(
-                        f"unreadable data file {rel} of version {v}: {exc}"
-                    )
-                rg_bytes = [
-                    md.row_group(g).total_byte_size
-                    for g in range(md.num_row_groups)
-                ]
             run: list = []
             run_bytes = 0
-            for g, gb in enumerate(rg_bytes):
+            for g, gb in enumerate(stats[rel]):
                 if run and run_bytes + gb > self.TARGET_SLICE_BYTES:
                     chunks.append((p, v, run, run_bytes))
                     run, run_bytes = [], 0

@@ -1071,12 +1071,8 @@ def stateful_token_bucket(
 _IDENTITY_MARKER = "_versioned_sink_identity.json"
 
 
-def _resolve_stream_identity(
-    checkpoint_dir: str | None,
-) -> "tuple[str, list[str | None]]":
-    """Resolve the stream identity for the (stream_id, batch_id) ledger,
-    plus the ALIAS ledger scopes this checkpoint's history may also have
-    committed under.
+def _resolve_stream_identity(checkpoint_dir: str | None) -> str:
+    """Resolve the stream identity for the (stream_id, batch_id) ledger.
 
     The identity is the normalized (absolute) checkpoint path — relative
     vs absolute spellings of the SAME checkpoint dir are one stream:
@@ -1086,79 +1082,41 @@ def _resolve_stream_identity(
     redelivery to absorb, so each run gets a fresh UUID identity.
 
     A MARKER file inside the checkpoint dir records the identity the
-    first run resolved, which settles the one genuinely ambiguous case —
-    a checkpoint created before manifests carried stream ids at all:
-
-    - marker present → this checkpoint was created by marker-aware code;
-      its ledger lives entirely under the recorded stream_id (+ recorded
-      aliases). No legacy absorption.
-    - no marker, but the dir already holds engine checkpoint state
-      (``offsets``/``metadata``) → a PRE-MIGRATION checkpoint: its
-      earlier commits were recorded under stream_id=None (and possibly
-      under a raw un-normalized path spelling), so those scopes are
-      returned as aliases and persisted in the new marker.
-    - no marker, no engine state → a BRAND-NEW stream. Critically, it
-      absorbs NOTHING: its batch ids restart at 0, and merging the
-      None-scoped ledger of a table holding legacy manifests would
-      silently drop its first micro-batches as phantom redeliveries —
-      the exact failure the pair-keyed ledger exists to prevent.
+    first run resolved, so a checkpoint directory moved elsewhere keeps
+    its identity and its ledger. A brand-new stream absorbs nothing else:
+    its batch ids restart at 0, and absorbing the None-scoped ledger that
+    batch ``write_versioned(batch_id=…)`` calls record would silently
+    drop its first micro-batches as phantom redeliveries — the exact
+    failure the pair-keyed ledger exists to prevent.
     """
     import json
     import os
     import uuid
 
     if checkpoint_dir is None:
-        return f"ephemeral-{uuid.uuid4()}", []
+        return f"ephemeral-{uuid.uuid4()}"
     norm = os.path.abspath(checkpoint_dir)
     marker = os.path.join(norm, _IDENTITY_MARKER)
     if os.path.exists(marker):
         with open(marker) as fh:
-            m = json.load(fh)
-        return m["stream_id"], m.get("alias_ids", [])
-    pre_migration = os.path.exists(
-        os.path.join(norm, "offsets")
-    ) or os.path.exists(os.path.join(norm, "metadata"))
-    alias_ids: list[str | None] = []
-    if pre_migration:
-        alias_ids.append(None)
-        if checkpoint_dir != norm:
-            # older code keyed the ledger by the RAW spelling — a resume
-            # invoked with the same relative path must still match it
-            alias_ids.append(checkpoint_dir)
+            return json.load(fh)["stream_id"]
     os.makedirs(norm, exist_ok=True)
     tmp = marker + ".tmp"
     with open(tmp, "w") as fh:
-        json.dump({"stream_id": norm, "alias_ids": alias_ids}, fh)
+        json.dump({"stream_id": norm}, fh)
     os.rename(tmp, marker)
-    return norm, alias_ids
+    return norm
 
 
-def _redelivered(
-    table_path: str, scopes: list[str | None], batch_id: int
-) -> bool:
+def _redelivered(head, stream_id: str, batch_id: int) -> bool:
     """MONOTONE redelivery check (correct on compacted ledgers, where old
     ids are no longer individually enumerable): batch ids are monotone per
     checkpoint identity and committed in order, so ``batch_id`` <= the
-    latest id committed under any of ``scopes`` ⇔ redelivery.
+    latest id committed under ``stream_id`` up to ``head`` (the table's
+    latest ``Snapshot``, None when empty) ⇔ redelivery."""
+    from time_series_spark_spark.sources.io import _watermark
 
-    ``scopes`` is the stream id plus its alias ids (possibly none): the
-    ADDITIONAL ledger scopes this checkpoint's history may have committed
-    under — the legacy None-scope and/or a raw (un-normalized) path
-    spelling. :func:`_resolve_stream_identity` returns them only for
-    checkpoints that actually predate the marker migration: a brand-new
-    stream (fresh checkpoint, batch ids restarting at 0) must NOT absorb
-    a stranger's None-scoped ledger, or its first micro-batches would be
-    silently dropped as phantom "redeliveries"."""
-    from time_series_spark_spark.sources.io import latest_committed_batch_id
-
-    latest = max(
-        (
-            bid
-            for scope in scopes
-            if (bid := latest_committed_batch_id(table_path, scope)) is not None
-        ),
-        default=None,
-    )
+    latest = _watermark(head, stream_id)
     return latest is not None and batch_id <= latest
 
 
@@ -1194,18 +1152,24 @@ def stream_to_versioned_table(
     absorb (nothing persists to replay from), so each run gets a fresh
     UUID identity and never collides with prior runs' ledger entries.
     """
-    from time_series_spark_spark.sources.io import write_versioned
+    from time_series_spark_spark.sources.fsio import as_table_fs
+    from time_series_spark_spark.sources.io import _head, _write_versioned
 
-    stream_id, alias_ids = _resolve_stream_identity(checkpoint_dir)
+    tfs = as_table_fs(table_path)
+    stream_id = _resolve_stream_identity(checkpoint_dir)
     committed: list[int] = []
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
-        if _redelivered(table_path, [stream_id, *alias_ids], batch_id):
+        # one head per micro-batch, shared by the ledger check and the
+        # commit: each manifest of its chain is read once
+        head = _head(tfs)
+        if _redelivered(head, stream_id, batch_id):
             return  # redelivered micro-batch: already a committed version
         committed.append(
-            write_versioned(
+            _write_versioned(
                 batch_df,
-                table_path,
+                tfs,
+                head,
                 batch_id,
                 carry_forward=True,
                 stream_id=stream_id,
@@ -1246,16 +1210,20 @@ def stream_merge_to_versioned_table(
 
     Runs availableNow to completion; returns the versions committed by
     THIS run (empty when every batch was a redelivery)."""
-    from time_series_spark_spark.sources.fsio import (
-        as_table_fs,
-        latest_version,
-    )
-    from time_series_spark_spark.sources.io import merge_versioned, write_versioned
+    import json
 
-    stream_id, alias_ids = _resolve_stream_identity(checkpoint_dir)
+    from time_series_spark_spark.sources.fsio import as_table_fs
+    from time_series_spark_spark.sources.io import (
+        _head,
+        _merge_versioned,
+        _write_versioned,
+    )
+
+    tfs = as_table_fs(table_path)
+    stream_id = _resolve_stream_identity(checkpoint_dir)
     committed: list[int] = []
 
-    def _table_cols(tfs, latest_v: int) -> list[str]:
+    def _table_cols(head) -> list[str]:
         """Non-key columns OF THE TABLE (manifest-authoritative): the
         changelog must carry new_<c> for exactly these. Stream columns
         the table lacks (e.g. the order_cols used only for per-batch
@@ -1264,13 +1232,14 @@ def stream_merge_to_versioned_table(
         unknown new_<c> loudly since round 13, so the projection here
         is what keeps ordering-only columns ordering-only. A table
         column absent from the stream fails loudly at select time."""
-        import json
-
-        schema = json.loads(tfs.read_json(f"_manifest.{latest_v}.json")["schema"])
+        schema = json.loads(head.manifest["schema"])
         return [f["name"] for f in schema["fields"] if f["name"] not in keys]
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        if _redelivered(table_path, [stream_id, *alias_ids], batch_id):
+        # one head per micro-batch, shared by the ledger check, the
+        # column projection and the commit
+        head = _head(tfs)
+        if _redelivered(head, stream_id, batch_id):
             return  # redelivered micro-batch: already committed
         from pyspark.sql.window import Window
 
@@ -1282,29 +1251,21 @@ def stream_merge_to_versioned_table(
             .filter(F.col("__rk") == 1)
             .drop("__rk")
         )
-        tfs = as_table_fs(table_path)
-        latest_v = latest_version(tfs)
-        if latest_v is None:
+        if head is None:
             committed.append(
-                write_versioned(
-                    latest_rows,
-                    table_path,
-                    batch_id,
-                    stream_id=stream_id,
+                _write_versioned(
+                    latest_rows, tfs, None, batch_id, stream_id=stream_id
                 )
             )
             return
         changelog = latest_rows.select(
             *keys,
             F.lit("update").alias("op"),
-            *[
-                F.col(c).alias(f"new_{c}")
-                for c in _table_cols(tfs, latest_v)
-            ],
+            *[F.col(c).alias(f"new_{c}") for c in _table_cols(head)],
         )
-        rep = merge_versioned(
+        rep = _merge_versioned(
             batch_df.sparkSession,
-            table_path,
+            head,
             changelog,
             keys,
             batch_id=batch_id,
