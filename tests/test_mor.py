@@ -50,19 +50,6 @@ def _changelog(spark, rows):
     )
 
 
-def _stale_latest_once(monkeypatch, stale_value):
-    import time_series_spark_spark.sources.fsio as fsio_mod
-
-    real = fsio_mod.latest_version
-    calls = {"n": 0}
-
-    def stale_once(t):
-        calls["n"] += 1
-        return stale_value if calls["n"] == 1 else real(t)
-
-    monkeypatch.setattr(fsio_mod, "latest_version", stale_once)
-
-
 def test_mor_point_delete_write_amplification(spark, tmp_path):
     """The headline economics: a point delete on a multi-file table
     stages ZERO data bytes and rewrites ZERO files (CoW rewrites the
@@ -224,7 +211,7 @@ def test_mor_dv_sidecar_spill_roundtrip(spark, tmp_path, monkeypatch):
 
 
 def test_mor_rebase_past_blind_append_and_conflicts(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """A MoR commit losing its race applies the CoW conflict classes
     with its tombstone TARGET files as the touched set: blind appends
@@ -238,7 +225,7 @@ def test_mor_rebase_past_blind_append_and_conflicts(
         path,
         carry_forward=True,
     )  # blind append at v2
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = delete_versioned(spark, path, "k = 1", strategy="mor")
     monkeypatch.undo()
     assert rep["version"] == 3
@@ -250,7 +237,7 @@ def test_mor_rebase_past_blind_append_and_conflicts(
     merge_versioned(
         spark, path, _changelog(spark, [(7, "update", 777, "g7")]), ["k"]
     )  # v4, CoW merge on file B
-    _stale_latest_once(monkeypatch, 3)
+    stale_latest_once(3)
     rep2 = delete_versioned(spark, path, "k = 2", strategy="mor")
     monkeypatch.undo()
     assert rep2["version"] == 5 and rep2["n_rebases"] == 1
@@ -262,7 +249,7 @@ def test_mor_rebase_past_blind_append_and_conflicts(
     merge_versioned(
         spark, path, _changelog(spark, [(3, "update", 333, "g3")]), ["k"]
     )  # v6, CoW merge rewriting file A
-    _stale_latest_once(monkeypatch, 5)
+    stale_latest_once(5)
     with pytest.raises(ConcurrentCommitError, match="also touched"):
         delete_versioned(spark, path, "k = 0", strategy="mor")
     monkeypatch.undo()
@@ -271,14 +258,14 @@ def test_mor_rebase_past_blind_append_and_conflicts(
 
 
 def test_cow_rebase_conflicts_on_rival_dv_removes(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """The new conflict class: a CoW loser whose touched file was
     TOMBSTONED by a MoR winner must refuse to rebase — re-publishing its
     staged rewrite would resurrect the winner's deletes."""
     path = _two_file_table(spark, tmp_path)
     delete_versioned(spark, path, "k = 1", strategy="mor")  # v2 MoR winner
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="tombstoned rows"):
         merge_versioned(
             spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
@@ -288,7 +275,9 @@ def test_cow_rebase_conflicts_on_rival_dv_removes(
     assert 1 not in got and got[2] == 20  # winner applied, loser not
 
 
-def test_optimize_rebase_past_streaming_append(spark, tmp_path, monkeypatch):
+def test_optimize_rebase_past_streaming_append(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """r13 verdict item 3: OPTIMIZE racing a blind append lands at N+2
     carrying BOTH the compacted layout and the appended batch — no
     re-read, no re-write; racing a non-append winner still refuses."""
@@ -300,7 +289,7 @@ def test_optimize_rebase_past_streaming_append(spark, tmp_path, monkeypatch):
         path,
         carry_forward=True,
     )  # the "streaming" append at v2
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = compact_versioned(spark, path, target_file_bytes=1 << 30)
     monkeypatch.undo()
     assert rep["version"] == 3
@@ -318,7 +307,7 @@ def test_optimize_rebase_past_streaming_append(spark, tmp_path, monkeypatch):
     merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
     )  # v4
-    _stale_latest_once(monkeypatch, 3)
+    stale_latest_once(3)
     with pytest.raises(ConcurrentCommitError, match="non-append winner"):
         compact_versioned(spark, path, target_file_bytes=1 << 30)
     monkeypatch.undo()
@@ -402,7 +391,7 @@ def test_mor_merge_schema_evolution(spark, tmp_path):
 
 
 def test_mor_rebase_readset_and_rival_tombstone_conflicts(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """The two subtle MoR-vs-MoR races: a rival MoR UPDATE of a key this
     merge also touches conflicts via the exact read-set scan over the
@@ -421,7 +410,7 @@ def test_mor_rebase_readset_and_rival_tombstone_conflicts(
         ["k"],
         strategy="mor",
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="read set"):
         merge_versioned(
             spark,
@@ -438,7 +427,7 @@ def test_mor_rebase_readset_and_rival_tombstone_conflicts(
     # SAME file refuses conservatively (positional union cannot be
     # key-checked without scanning the old file)
     delete_versioned(spark, path, "k = 1", strategy="mor")  # v3
-    _stale_latest_once(monkeypatch, 2)
+    stale_latest_once(2)
     with pytest.raises(ConcurrentCommitError, match="tombstoned rows"):
         delete_versioned(spark, path, "k = 3", strategy="mor")
     monkeypatch.undo()

@@ -256,9 +256,29 @@ def test_write_versioned_records_row_group_stats(spark, tmp_path, monkeypatch, k
     tfs = TableFS(path)
     latest = latest_version(tfs)
     assert latest == {"append": 1, "checkpoint": 20}.get(kind, 2)
+    # the exact key set of every manifest the kind writes
+    delta = {
+        "version", "mode", "committed_at", "adds", "add_stats",
+        "add_col_stats", "n_rows_added", "schema", "n_files", "batch_id",
+        "stream_id", "base",
+    }
+    snapshot = delta - {"base"} | {"ledger", "files", "file_stats", "col_stats"}
+    keys = {0: snapshot, **{v: delta for v in range(1, latest)}}
+    keys[latest] = {
+        "append": delta,
+        "checkpoint": snapshot - {"files", "file_stats", "col_stats"}
+        | {"files_parquet"},
+        "replace": snapshot,
+        "optimize": snapshot,
+        "restore": snapshot | {"restored_from"},
+        "cow_merge": snapshot | {"removes"},
+        "mor_delete": snapshot
+        | {"removes", "dv_removes", "n_rows_tombstoned", "dv"},
+    }[kind]
     prev_ca = -1
     for v in range(latest + 1):
         m = tfs.read_json(f"_manifest.{v}.json")
+        assert set(m) == keys[v], (kind, v)
         assert set(m["add_stats"]) == set(m["adds"]), (kind, v)
         assert isinstance(m["committed_at"], int) and m["committed_at"] > prev_ca
         prev_ca = m["committed_at"]
@@ -770,11 +790,8 @@ def test_optimize_data_change_false_posture(spark, tmp_path):
     J11e source emits NOTHING for it under EITHER onReplace posture
     (re-emitting would duplicate every row; failing would forbid
     compacting a streamed table). Appends after the compaction stream
-    normally; history records the mode; data_change=False is refused
-    for commits that genuinely change data."""
+    normally; history records the mode."""
     import json
-
-    import pytest as _pytest
 
     from time_series_spark_spark.sources.io import (
         compact_versioned,
@@ -825,21 +842,6 @@ def test_optimize_data_change_false_posture(spark, tmp_path):
         .collect()
     ]
     assert modes == ["append", "append", "optimize", "append"]
-    # data_change=False only marks replace-shaped rewrites of an
-    # existing snapshot
-    with _pytest.raises(ValueError, match="data_change"):
-        write_versioned(
-            spark.range(3).selectExpr("id"),
-            str(tmp_path / "fresh"),
-            data_change=False,
-        )
-    with _pytest.raises(ValueError, match="data_change"):
-        write_versioned(
-            spark.range(3).selectExpr("id"),
-            str(table),
-            carry_forward=True,
-            data_change=False,
-        )
 
 
 def test_compact_ledger_properties():

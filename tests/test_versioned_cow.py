@@ -803,25 +803,9 @@ def test_merge_composite_key_pruning_and_semantics(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _stale_latest_once(monkeypatch, stale_value):
-    """Pin fsio.latest_version to ``stale_value`` for its FIRST call (the
-    planning read inside _require_table), then restore the real function —
-    the deterministic single-process equivalent of a writer that planned
-    before a rival's commit landed. The rebase path's re-resolution inside
-    _cow_commit then sees the true latest."""
-    import time_series_spark_spark.sources.fsio as fsio_mod
-
-    real = fsio_mod.latest_version
-    calls = {"n": 0}
-
-    def stale_once(t):
-        calls["n"] += 1
-        return stale_value if calls["n"] == 1 else real(t)
-
-    monkeypatch.setattr(fsio_mod, "latest_version", stale_once)
-
-
-def test_merge_rebase_disjoint_merges_both_land(spark, tmp_path, monkeypatch):
+def test_merge_rebase_disjoint_merges_both_land(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """Two merges over DISJOINT key ranges race: the rival lands first,
     the loser (planned against the stale snapshot) loses put-if-absent,
     proves the rival compatible, rebases its staged rewrite, and lands at
@@ -833,7 +817,7 @@ def test_merge_rebase_disjoint_merges_both_land(spark, tmp_path, monkeypatch):
         spark, path, _changelog(spark, [(7, "update", 777, "g7")]), ["k"]
     )
     # loser merge: key 2 (file A) planned against stale latest=1
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
     )
@@ -856,7 +840,9 @@ def test_merge_rebase_disjoint_merges_both_land(spark, tmp_path, monkeypatch):
     assert disk == referenced
 
 
-def test_merge_rebase_overlapping_files_refuses(spark, tmp_path, monkeypatch):
+def test_merge_rebase_overlapping_files_refuses(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """The rival rewrote the SAME file the loser touched (overlapping key
     neighborhoods): rebase is refused loudly — the loser's rewrite was
     computed from a file that no longer exists in the snapshot (Delta:
@@ -867,7 +853,7 @@ def test_merge_rebase_overlapping_files_refuses(spark, tmp_path, monkeypatch):
     merge_versioned(
         spark, path, _changelog(spark, [(1, "update", 111, "g1")]), ["k"]
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="rewrote .* also touched"):
         merge_versioned(
             spark, path, _changelog(spark, [(3, "update", 333, "g3")]), ["k"]
@@ -885,7 +871,9 @@ def test_merge_rebase_overlapping_files_refuses(spark, tmp_path, monkeypatch):
     assert got[1] == 111 and got[3] == 30  # loser's change did NOT apply
 
 
-def test_merge_rebase_readset_insert_conflict(spark, tmp_path, monkeypatch):
+def test_merge_rebase_readset_insert_conflict(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """The rival merge INSERTED a key the loser's merge also upserts: the
     loser's find-touched never saw it (stale snapshot), so rebasing would
     duplicate the key — the exact read-set scan over the rival's added
@@ -896,7 +884,7 @@ def test_merge_rebase_readset_insert_conflict(spark, tmp_path, monkeypatch):
     merge_versioned(
         spark, path, _changelog(spark, [(100, "insert", 1000, "gx")]), ["k"]
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="read set"):
         merge_versioned(
             spark,
@@ -909,7 +897,9 @@ def test_merge_rebase_readset_insert_conflict(spark, tmp_path, monkeypatch):
     assert got[100] == 1000 and len(got) == 11
 
 
-def test_merge_rebase_replace_and_restore_refuse(spark, tmp_path, monkeypatch):
+def test_merge_rebase_replace_and_restore_refuse(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """A replace (or restore) winner changes the snapshot wholesale — no
     rebase, ever."""
     from time_series_spark_spark.sources.io import ConcurrentCommitError
@@ -919,7 +909,7 @@ def test_merge_rebase_replace_and_restore_refuse(spark, tmp_path, monkeypatch):
         spark.createDataFrame([(1, 10, "g1")], "k long, val long, grp string"),
         path,
     )  # replace at v2
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="replace"):
         merge_versioned(
             spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
@@ -927,7 +917,9 @@ def test_merge_rebase_replace_and_restore_refuse(spark, tmp_path, monkeypatch):
     monkeypatch.undo()
 
 
-def test_merge_rebase_blind_append_ok(spark, tmp_path, monkeypatch):
+def test_merge_rebase_blind_append_ok(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """A blind-append winner never conflicts (WriteSerializable — Delta's
     default): the rebased merge lands and the appended rows survive, even
     when an appended key matches the merge's read set (the result equals
@@ -940,7 +932,7 @@ def test_merge_rebase_blind_append_ok(spark, tmp_path, monkeypatch):
         path,
         carry_forward=True,
     )  # blind append at v2
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
     )
@@ -950,21 +942,69 @@ def test_merge_rebase_blind_append_ok(spark, tmp_path, monkeypatch):
     assert got[2] == 222 and got[50] == 500 and len(got) == 11
 
 
-def test_delete_and_update_rebase_disjoint(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("op", ["cow_delete", "mor_delete", "compact"])
+def test_rebase_resolves_the_new_head_once(
+    spark, tmp_path, monkeypatch, stale_latest_once, op
+):
+    """A commit planned at version 1 (chain 1→0) loses version 2 to a
+    blind append, rebases and lands at version 3. The loser resolves the
+    new head once and its conflict rule reuses it: the latest-version
+    hint and the winner's manifest are read once, and the planned
+    head's chain once more for the rebased snapshot."""
+    from time_series_spark_spark.sources.fsio import TableFS
+    from time_series_spark_spark.sources.io import compact_versioned
+
+    path = _two_file_table(spark, tmp_path)
+    write_versioned(
+        spark.createDataFrame([(50, 500, "gz")], "k long, val long, grp string"),
+        path,
+        carry_forward=True,
+    )  # blind append at v2
+    reads = []
+    real = TableFS.read_json
+
+    def counting(self, *rel):
+        reads.append(rel[-1])
+        return real(self, *rel)
+
+    monkeypatch.setattr(TableFS, "read_json", counting)
+    stale_latest_once(1)
+    if op == "compact":
+        rep = compact_versioned(spark, path, target_file_bytes=1 << 30)
+    else:
+        strategy = "cow" if op == "cow_delete" else "mor"
+        rep = delete_versioned(spark, path, "k = 2", strategy=strategy)
+    monkeypatch.undo()
+    assert rep["version"] == 3
+    assert sorted(reads) == [
+        "_latest.json",
+        "_manifest.0.json",
+        "_manifest.0.json",
+        "_manifest.1.json",
+        "_manifest.1.json",
+        "_manifest.2.json",
+    ]
+    got = {r["k"] for r in read_versioned(spark, path).collect()}
+    assert got == set(range(10)) - ({2} if op != "compact" else set()) | {50}
+
+
+def test_delete_and_update_rebase_disjoint(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """DELETE and UPDATE get the same optimistic retry: racing a disjoint
     rival merge, both rebase and land; the rival's change survives."""
     path = _two_file_table(spark, tmp_path)
     merge_versioned(
         spark, path, _changelog(spark, [(7, "update", 777, "g7")]), ["k"]
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = delete_versioned(spark, path, "k = 1")  # file A; rival touched B
     monkeypatch.undo()
     assert rep["version"] == 3
     merge_versioned(
         spark, path, _changelog(spark, [(8, "update", 888, "g8")]), ["k"]
     )  # v4, rewrites file B's successor
-    _stale_latest_once(monkeypatch, 3)
+    stale_latest_once(3)
     rep2 = update_versioned(spark, path, "k = 2", {"val": "val + 1"})
     monkeypatch.undo()
     assert rep2["version"] == 5
@@ -972,7 +1012,9 @@ def test_delete_and_update_rebase_disjoint(spark, tmp_path, monkeypatch):
     assert 1 not in got and got[2] == 21 and got[7] == 777 and got[8] == 888
 
 
-def test_delete_rebase_readset_conflict(spark, tmp_path, monkeypatch):
+def test_delete_rebase_readset_conflict(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """A rival merge inserts a row MATCHING the loser DELETE's predicate:
     rebasing would leave a row the delete logically covers — refused."""
     from time_series_spark_spark.sources.io import ConcurrentCommitError
@@ -981,7 +1023,7 @@ def test_delete_rebase_readset_conflict(spark, tmp_path, monkeypatch):
     merge_versioned(
         spark, path, _changelog(spark, [(100, "insert", -5, "gx")]), ["k"]
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="read set"):
         delete_versioned(spark, path, "val < 0")
     monkeypatch.undo()
@@ -1124,7 +1166,9 @@ def test_merge_schema_evolution_roundtrips_through_second_merge(
     assert got[2] == (222, "eu") and got[7] == (777, None) and len(got) == 10
 
 
-def test_merge_schema_evolution_never_rebases(spark, tmp_path, monkeypatch):
+def test_merge_schema_evolution_never_rebases(
+    spark, tmp_path, monkeypatch, stale_latest_once
+):
     """An evolving merge that loses the commit race refuses to rebase —
     the schema-change conflict class fires (publishing old-schema staged
     files as the table's latest word on a different schema is never
@@ -1135,7 +1179,7 @@ def test_merge_schema_evolution_never_rebases(spark, tmp_path, monkeypatch):
     merge_versioned(
         spark, path, _changelog(spark, [(7, "update", 777, "g7")]), ["k"]
     )
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     with pytest.raises(ConcurrentCommitError, match="schema"):
         merge_versioned(
             spark,
@@ -1152,7 +1196,7 @@ def test_merge_schema_evolution_never_rebases(spark, tmp_path, monkeypatch):
 
 
 def test_merge_rebase_chains_past_multiple_winners(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """The rebase conflict check walks EVERY winner between the stale
     snapshot and the new latest: two rival commits (a disjoint merge AND
@@ -1170,7 +1214,7 @@ def test_merge_rebase_chains_past_multiple_winners(
         path,
         carry_forward=True,
     )  # v3 (blind append)
-    _stale_latest_once(monkeypatch, 1)  # loser planned against v1
+    stale_latest_once(1)  # loser planned against v1
     rep = merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
     )
@@ -1186,7 +1230,7 @@ def test_merge_rebase_chains_past_multiple_winners(
 
 
 def test_rebased_merge_manifest_carries_rival_stats(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """A rebased CoW manifest rebuilds its snapshot fields against the
     NEW latest: the rival's added files appear in the file list WITH
@@ -1199,7 +1243,7 @@ def test_rebased_merge_manifest_carries_rival_stats(
     merge_versioned(
         spark, path, _changelog(spark, [(7, "update", 777, "g7")]), ["k"]
     )  # rival rewrote file B at v2
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = merge_versioned(
         spark, path, _changelog(spark, [(2, "update", 222, "g2")]), ["k"]
     )  # loser rebases onto v2, lands v3
@@ -1218,7 +1262,7 @@ def test_rebased_merge_manifest_carries_rival_stats(
 
 
 def test_merge_rebase_past_optimize_skips_table_scan(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, stale_latest_once
 ):
     """Round 14 (ADVICE fix): an insert-only loser rebasing past an
     'optimize' winner must NOT read-set-scan the winner's adds — they
@@ -1244,7 +1288,7 @@ def test_merge_rebase_past_optimize_skips_table_scan(
         return real(spark_, tfs_, files_, schema_, **kw)
 
     monkeypatch.setattr(io_mod, "_snapshot_frame", spy)
-    _stale_latest_once(monkeypatch, 1)
+    stale_latest_once(1)
     rep = merge_versioned(
         spark, path, _changelog(spark, [(100, "insert", 1000, "gx")]), ["k"]
     )
@@ -1262,7 +1306,7 @@ def test_merge_rebase_past_optimize_skips_table_scan(
     # a loser whose rewrite touched pre-optimize files still refuses:
     # the optimize dropped those files from the snapshot
     compact_versioned(spark, path, target_file_bytes=1 << 30)  # v4 optimize
-    _stale_latest_once(monkeypatch, 3)
+    stale_latest_once(3)
     with pytest.raises(
         ConcurrentCommitError, match="no longer part of the latest snapshot"
     ):

@@ -406,7 +406,7 @@ def _observe_constraints(df: DataFrame, constraints: dict):
     return df, obs, [label for label, _ in terms]
 
 
-def _raise_if_violated(obs, labels: list[str], tfs, stage: str | None):
+def _raise_if_violated(obs, labels: list[str], tfs, stage: str):
     """Post-staging constraint verdict: any nonzero violation counter
     deletes the staged directory and refuses the commit loudly."""
     if obs is None:
@@ -418,8 +418,7 @@ def _raise_if_violated(obs, labels: list[str], tfs, stage: str | None):
         if got.get(f"v{i}") or 0
     ]
     if bad:
-        if stage is not None:
-            tfs.delete_dir(stage)
+        tfs.delete_dir(stage)
         raise ConstraintViolationError(
             "commit refused — staged data violates table constraints: "
             + "; ".join(bad)
@@ -490,10 +489,11 @@ def _stage_data_files(df: DataFrame, tfs, version: int) -> tuple[str, list[str]]
     return stage, adds
 
 
-def _read_add_stats(tfs, adds: list[str]) -> tuple[dict, int, dict]:
-    """Per-added-file row-group byte sizes, total row count, and
-    per-file COLUMN MIN/MAX envelopes, read ONCE from the footers the
-    commit just produced (O(Δ) reads of O(KB) metadata). The streaming
+def _read_add_stats(tfs, adds: list[str]) -> dict:
+    """The manifest's ``add_stats`` (per-added-file row-group byte
+    sizes), ``n_rows_added`` and ``add_col_stats`` (per-file COLUMN
+    MIN/MAX envelopes), read ONCE from the footers the commit just
+    produced (O(Δ) reads of O(KB) metadata). The streaming
     source (J11e) plans its row-group-split input partitions from the
     byte sizes, and ``read_versioned``'s data skipping (A13g, round 12)
     prunes files from the column envelopes — so both micro-batch
@@ -541,7 +541,29 @@ def _read_add_stats(tfs, adds: list[str]) -> tuple[dict, int, dict]:
                 envelopes[col] = [lo, hi]
         if envelopes:
             col_stats[rel] = envelopes
-    return add_stats, n_rows, col_stats
+    return {
+        "add_stats": add_stats,
+        "add_col_stats": col_stats,
+        "n_rows_added": n_rows,
+    }
+
+
+def _stage(
+    df: DataFrame | None, tfs, version: int, constraints: dict
+) -> tuple[str | None, dict]:
+    """Stage ``df`` as a commit's new data files: the table's
+    ``constraints`` ride the staging write as one Observation (a
+    violation deletes the stage and refuses the commit), then the new
+    footers give the manifest's ``adds``, ``add_stats``,
+    ``add_col_stats`` and ``n_rows_added``. Returns ``(stage,
+    fields)``; a commit that adds no rows (``df`` None) stages nothing."""
+    if df is None:
+        stage, adds = None, []
+    else:
+        df, obs, labels = _observe_constraints(df, constraints)
+        stage, adds = _stage_data_files(df, tfs, version)
+        _raise_if_violated(obs, labels, tfs, stage)
+    return stage, {"adds": adds, **_read_add_stats(tfs, adds)}
 
 
 def _ledger_pairs(snap: Snapshot | None) -> list:
@@ -614,18 +636,167 @@ def latest_committed_batch_id(
     return _watermark(_head(as_table_fs(table_path)), stream_id)
 
 
+def _carried(
+    base: Snapshot | None, added: dict, removes=(), tombs: dict | None = None
+) -> tuple[list, dict, dict, dict]:
+    """``(files, file_stats, col_stats, dvs)`` of the snapshot a commit
+    leaves: ``base``'s files less ``removes`` plus the commit's ``adds``
+    (``base`` None keeps nothing). Deletion vectors of removed files die
+    with them; the commit's new ``tombs`` (``rel → positions``) merge
+    into the kept ones."""
+    adds, add_stats, add_col_stats = (
+        added["adds"], added["add_stats"], added["add_col_stats"]
+    )
+    gone = set(removes)
+    kept = [] if base is None else [f for f in base.files if f not in gone]
+    dvs = {rel: set(ps) for rel, ps in (tombs or {}).items()}
+    if not kept:  # nothing of base survives: neither its stats nor its DVs
+        return adds, add_stats, add_col_stats, dvs
+    for rel, ps in base.dvs.items():
+        if rel not in gone:
+            dvs.setdefault(rel, set()).update(ps)
+    return (
+        sorted(set(kept) | set(adds)),
+        {**base.file_stats, **add_stats},
+        {**base.col_stats, **add_col_stats},
+        dvs,
+    )
+
+
+def _winners(base: Snapshot, new_head: Snapshot):
+    """``(version, manifest)`` of every commit after ``base`` up to
+    ``new_head``, whose own manifest is already read."""
+    for v in range(base.version + 1, new_head.version):
+        yield v, new_head.tfs.read_json(f"_manifest.{v}.json")
+    yield new_head.version, new_head.manifest
+
+
+def _commit(
+    tfs,
+    base: Snapshot | None,
+    fields: dict,
+    added: dict,
+    snapshot,
+    *,
+    stage: str | None = None,
+    constraints: dict | None = None,
+    batch_id: int | None = None,
+    stream_id: str | None = None,
+    conflict=None,
+    max_attempts: int = 1,
+) -> tuple[dict, Snapshot | None, int]:
+    """Publish the next version of the table — the one commit protocol
+    every writer goes through (Delta's optimistic transaction).
+
+    ``fields`` are the writer's own manifest fields (``mode``,
+    ``schema``, and per kind ``removes``, ``dv_removes``,
+    ``n_rows_tombstoned``, ``restored_from``); ``added`` are
+    :func:`_stage`'s. The core numbers the version after ``base`` (0
+    for an empty table), stamps ``committed_at`` and writes one of two
+    manifest shapes:
+
+    - a DELTA manifest (``base`` pointer, cost O(Δ files)) for an
+      append onto an existing table off a ``_CHECKPOINT_INTERVAL``
+      boundary — resolution walks at most that many manifests;
+    - otherwise a full snapshot: ``snapshot(base)``'s ``(files,
+      file_stats, col_stats, dvs)``, inline or spilled to sidecars
+      (:func:`_publish_snapshot_fields`, :func:`_publish_dv_fields`),
+      plus the redelivery ledger compacted with this commit's
+      ``(stream_id, batch_id)``.
+
+    ``constraints`` are restated on every manifest, like the schema.
+    The publish is a PUT-IF-ABSENT of ``_manifest.N.json`` (Delta's
+    LogStore contract): a writer racing to the same version loses
+    LOUDLY and deletes its sidecars. With no ``conflict`` rule, or on
+    the last of ``max_attempts``, it also deletes ``stage`` and
+    re-raises the FileExistsError. Otherwise the new head is resolved
+    once and ``conflict(base, new_head)`` decides: a message refuses the
+    commit with :class:`ConcurrentCommitError`, None REBASES — the same
+    staged files are re-published against the new head. The
+    ``_latest.json`` hint follows the manifest (a crash between the two
+    leaves it stale-low; readers probe forward).
+
+    Returns ``(manifest, base, n_rebases)``: the published manifest, the
+    snapshot it was built on, and how many lost races it rebased past."""
+    from time_series_spark_spark.sources import fsio
+
+    mine = [[stream_id, int(batch_id)]] if batch_id is not None else []
+    attempts = max(1, max_attempts)
+    for attempt in range(attempts):
+        prev = None if base is None else base.manifest
+        version = 0 if base is None else base.version + 1
+        manifest = {
+            "version": version,
+            **fields,
+            # strictly above the previous commit's; powers AS OF
+            # TIMESTAMP and DESCRIBE HISTORY, and is deliberately NOT
+            # part of any registered query's hashed output
+            "committed_at": _commit_stamp(prev),
+            **added,
+            "batch_id": batch_id,
+            "stream_id": stream_id,
+        }
+        sidecars = []
+        if (
+            fields["mode"] == "append"
+            and base is not None
+            and version % _CHECKPOINT_INTERVAL
+        ):
+            manifest["n_files"] = int(prev["n_files"]) + len(added["adds"])
+            manifest["base"] = base.version
+        else:
+            files, file_stats, col_stats, dvs = snapshot(base)
+            manifest["n_files"] = len(files)
+            # O(streams), not O(batches): see _compact_ledger
+            manifest["ledger"] = _compact_ledger(_ledger_pairs(base) + mine)
+            sidecars = [
+                _publish_snapshot_fields(
+                    tfs, manifest, files, file_stats, col_stats
+                ),
+                _publish_dv_fields(tfs, manifest, dvs),
+            ]
+        if constraints:
+            manifest["constraints"] = constraints
+        try:
+            tfs.write_json_atomic(
+                manifest, f"_manifest.{version}.json", if_absent=True
+            )
+        except FileExistsError:
+            for sc in sidecars:
+                if sc is not None:
+                    tfs.delete_file(sc)
+            reason = None
+            if conflict is not None and attempt + 1 < attempts:
+                latest = fsio.latest_version(tfs)
+                # a rival manifest that is not resolvable as a later
+                # version leaves nothing sane to rebase onto
+                if latest is not None and latest > base.version:
+                    new_head = Snapshot(tfs, latest)
+                    reason = conflict(base, new_head)
+                    if reason is None:
+                        base = new_head
+                        continue
+            if stage is not None:
+                tfs.delete_dir(stage)
+            if reason is None:
+                raise
+            raise ConcurrentCommitError(reason) from None
+        tfs.write_json_atomic({"version": version}, "_latest.json")
+        return manifest, base, attempt
+    raise AssertionError("unreachable: the loop either returns or raises")
+
+
 def write_versioned(
     df: DataFrame,
     table_path,
     batch_id: int | None = None,
     carry_forward: bool = False,
     stream_id: str | None = None,
-    data_change: bool = True,
     constraints: dict | None = None,
 ) -> int:
     """Commit ``df`` as the next version of a manifest-versioned table —
-    the table-format core (what Delta/Iceberg do) in ~30 lines, format
-    libraries not required:
+    the table-format core (what Delta/Iceberg do), format libraries not
+    required:
 
     - data files land under a WRITER-UNIQUE staging directory
       ``<path>/v=N-<token>/`` (invisible to readers until the manifest
@@ -662,28 +833,20 @@ def write_versioned(
     version remains a consistent time-travel point. Default (False) is
     replace semantics: the version is just this df.
 
-    ``data_change=False`` (round 13 — Delta's ``dataChange=false``
-    AddFile flag) marks a full-snapshot commit as a pure LAYOUT rewrite
-    of the SAME logical rows (OPTIMIZE / ZORDER): the manifest records
-    ``mode="optimize"``, and the J11e streaming source emits NOTHING
-    for it under either onReplace posture — today's `replace` mode
-    would double-emit every row under ``added`` and kill a running
-    ``fail`` pipeline, so compaction of a streamed table was previously
-    unsafe. Only valid for replace-shaped commits on an existing table
-    (a first commit or an append IS a data change — refused loudly).
-
     **Manifest scalability (round 10 — Delta's log-checkpoint idea):**
     a naive carry-forward manifest re-lists EVERY file, so manifest
     size and append cost grow O(total files) — quadratic-ish metadata
     at streaming append cadence. Instead, carry-forward commits between
     checkpoints write a DELTA manifest (``adds`` + ``base`` pointer,
-    cost O(Δ files)); every ``checkpoint_every``-th version (and every
-    replace commit) writes a full ``files`` snapshot plus a ``ledger``
-    snapshot of all (stream_id, batch_id) pairs committed so far, so
-    file-list resolution walks at most ``checkpoint_every`` manifests
-    and ledger reconstruction stops at the nearest checkpoint. Every
-    manifest also records ``adds`` — the incremental streaming source
-    plans a micro-batch from it without any per-version diffing.
+    cost O(Δ files)); every ``_CHECKPOINT_INTERVAL``-th version (and
+    every other commit kind) writes a full ``files`` snapshot plus a
+    ``ledger`` snapshot of all (stream_id, batch_id) pairs committed so
+    far, so file-list resolution walks at most ``_CHECKPOINT_INTERVAL``
+    manifests and ledger reconstruction stops at the nearest
+    checkpoint. Every manifest also records ``adds`` — the incremental
+    streaming source plans a micro-batch from it without any
+    per-version diffing. :func:`_commit` owns this format for every
+    writer.
 
     ``constraints`` (round 14 — Delta's NOT NULL / CHECK invariants):
     ``{"not_null": [col, ...], "check": {name: sql_expr}}``, declared on
@@ -707,14 +870,7 @@ def write_versioned(
     # per-commit metadata cost O(Δ), not O(versions) LIST calls
     # (round-11 hygiene item).
     return _write_versioned(
-        df,
-        tfs,
-        _head(tfs),
-        batch_id,
-        carry_forward,
-        stream_id,
-        data_change,
-        constraints,
+        df, tfs, _head(tfs), batch_id, carry_forward, stream_id, constraints
     )
 
 
@@ -725,7 +881,6 @@ def _write_versioned(
     batch_id: int | None = None,
     carry_forward: bool = False,
     stream_id: str | None = None,
-    data_change: bool = True,
     constraints: dict | None = None,
 ) -> int:
     """:func:`write_versioned` on an already-resolved ``head`` (None for
@@ -736,14 +891,7 @@ def _write_versioned(
     import json
 
     tfs.mkdirs()
-    if not data_change and (carry_forward or head is None):
-        raise ValueError(
-            "data_change=False marks a pure layout rewrite of an "
-            "existing snapshot — a first commit or a carry-forward "
-            "append always changes the data"
-        )
-    version = 0 if head is None else head.version + 1
-    prev = None if head is None else head.manifest
+    append = carry_forward and head is not None
     # Table-level write invariants (round 14 — Delta's NOT NULL / CHECK
     # constraints): declared at table definition (first commit or a
     # replace — adding constraints to a LIVE table would require
@@ -753,7 +901,7 @@ def _write_versioned(
     # Observation riding the staging write itself — zero extra scans.
     # Violations refuse the commit loudly; the table is unchanged.
     if constraints is not None:
-        if carry_forward and head is not None:
+        if append:
             raise ValueError(
                 "constraints are declared on the FIRST commit or a "
                 "REPLACE commit (table redefinition); adding them to a "
@@ -761,21 +909,11 @@ def _write_versioned(
                 "existing data"
             )
         _validate_constraints_decl(constraints, df.schema)
-        effective_constraints = constraints
     else:
-        effective_constraints = (
-            prev.get("constraints", {}) if prev is not None else {}
+        constraints = {} if head is None else head.manifest.get(
+            "constraints", {}
         )
-    df, _obs, _obs_labels = _observe_constraints(df, effective_constraints)
-    stage, adds = _stage_data_files(df, tfs, version)
-    _raise_if_violated(_obs, _obs_labels, tfs, stage)
-    add_stats, n_rows_added, add_col_stats = _read_add_stats(tfs, adds)
-    # wall-clock commit stamp (epoch µs, UTC), clamped strictly above the
-    # previous commit's — powers AS OF TIMESTAMP time travel and DESCRIBE
-    # HISTORY; deliberately NOT part of any registered query's hashed
-    # output (wall clocks are not oracles)
-    committed_at = _commit_stamp(prev)
-    if carry_forward and head is not None:
+    if append:
         # A13c schema evolution, additive-only (round 9): a carry-forward
         # commit whose schema differs from the previous manifest's must
         # be a pure COLUMN ADDITION — old files then read as NULL for the
@@ -787,7 +925,9 @@ def _write_versioned(
         # excluded deliberately — parquet footers keep the old physical
         # type and not every reader upcasts; Delta gates widening behind
         # an explicit table feature for the same reason.
-        prev_schema = T.StructType.fromJson(json.loads(prev["schema"]))
+        prev_schema = T.StructType.fromJson(
+            json.loads(head.manifest["schema"])
+        )
         # Compare NORMALIZED schemas: a nullability- or metadata-only
         # difference is NOT a schema change (schema_compat_report only
         # sees dataType, so such a change would otherwise pass the gate
@@ -809,115 +949,25 @@ def _write_versioned(
                         for r in bad
                     )
                 )
-        manifest = {
-            "version": version,
-            "mode": "append",
-            "committed_at": committed_at,
-            "adds": adds,
-            "add_stats": add_stats,
-            "add_col_stats": add_col_stats,
-            "n_rows_added": n_rows_added,
-            "schema": df.schema.json(),
-            "n_files": int(prev["n_files"]) + len(adds),
-            "batch_id": batch_id,
-            "stream_id": stream_id,
-        }
-        sidecar = dv_sidecar = None
-        if version % _CHECKPOINT_INTERVAL == 0:
-            # checkpoint commit: materialize the full resolved file
-            # list, its row-group stats, and the accumulated redelivery
-            # ledger (reads at most _CHECKPOINT_INTERVAL prior
-            # manifests — the amortized cost that keeps every OTHER
-            # append O(Δ))
-            files = sorted(set(head.files) | set(adds))
-            manifest["n_files"] = len(files)
-            # restricted to the live list: stats of replaced files must
-            # not accumulate forever across checkpoints
-            sidecar = _publish_snapshot_fields(
-                tfs,
-                manifest,
-                files,
-                {**head.file_stats, **add_stats},
-                {**head.col_stats, **add_col_stats},
-            )
-            # carry merge-on-read tombstone state (round 14): an append
-            # never changes deletion vectors, but a CHECKPOINT restates
-            # the full snapshot — dropping the dv fields here would
-            # silently resurrect every tombstoned row at the next
-            # chain-walk terminal
-            dv_sidecar = _publish_dv_fields(tfs, manifest, head.dvs)
-            ledger = _ledger_pairs(head)
-            if batch_id is not None:
-                ledger.append([stream_id, int(batch_id)])
-            # O(streams), not O(batches): see _compact_ledger
-            manifest["ledger"] = _compact_ledger(ledger)
-        else:
-            manifest["base"] = head.version  # delta manifest
-    else:
-        # replace commit (or very first version): a full snapshot — by
-        # construction also a checkpoint for both resolution walks
-        ledger = _compact_ledger(
-            _ledger_pairs(head)
-            + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
-        )
-        manifest = {
-            "version": version,
-            # the very first commit is an append by definition; anything
-            # later on this branch REPLACES the previous snapshot — the
-            # streaming source's onReplace option keys off this field —
-            # unless data_change=False marked it a pure layout rewrite
-            # ("optimize": same logical rows, streams emit nothing)
-            "mode": (
-                "append"
-                if version == 0
-                else ("replace" if data_change else "optimize")
-            ),
-            "committed_at": committed_at,
-            "adds": adds,
-            "add_stats": add_stats,
-            "add_col_stats": add_col_stats,
-            "n_rows_added": n_rows_added,
-            "schema": df.schema.json(),
-            "n_files": len(adds),
-            "batch_id": batch_id,
-            "stream_id": stream_id,
-            "ledger": ledger,
-        }
-        # replace commits carry NO dv fields by design: a replace is
-        # fresh data (old tombstones are void), an optimize
-        # (data_change=False) was read DV-aware by the caller, so the
-        # rewrite already materialized them
-        sidecar = _publish_snapshot_fields(
-            tfs, manifest, adds, add_stats, add_col_stats
-        )
-        dv_sidecar = None
-    if effective_constraints:
-        # restated on EVERY manifest like the schema — resolution is one
-        # manifest read, and each version time-travels with the
-        # declaration in force when it committed
-        manifest["constraints"] = effective_constraints
-    # PUT-IF-ABSENT publish (Delta LogStore contract): a concurrent
-    # writer racing to the same version number loses LOUDLY with
-    # FileExistsError — never a silent clobber of a committed manifest.
-    # The loser's data files live in its OWN staging directory (see
-    # _stage_data_files), so the winner's committed files were never at
-    # risk; drop the orphaned staging dir before re-raising.
-    try:
-        tfs.write_json_atomic(
-            manifest, f"_manifest.{version}.json", if_absent=True
-        )
-    except FileExistsError:
-        tfs.delete_dir(stage)
-        for sc in (sidecar, dv_sidecar):
-            if sc is not None:
-                tfs.delete_file(sc)
-        raise
-    # publish the latest-version HINT (after the manifest — readers probe
-    # forward from it, so a crash here only leaves the hint stale-low).
-    # Makes latest-version discovery O(1) instead of a directory listing
-    # over O(versions) manifests.
-    tfs.write_json_atomic({"version": version}, "_latest.json")
-    return version
+    version = 0 if head is None else head.version + 1
+    stage, added = _stage(df, tfs, version, constraints)
+    # the very first commit is an append by definition; a later
+    # non-carry-forward commit REPLACES the previous snapshot (fresh
+    # data: old tombstones are void) — the streaming source's onReplace
+    # option keys off the mode
+    mode = "append" if append or head is None else "replace"
+    manifest, _, _ = _commit(
+        tfs,
+        head,
+        {"mode": mode, "schema": df.schema.json()},
+        added,
+        lambda base: _carried(base if append else None, added),
+        stage=stage,
+        constraints=constraints,
+        batch_id=batch_id,
+        stream_id=stream_id,
+    )
+    return manifest["version"]
 
 
 def _env_keeps(env, lo, hi) -> bool:
@@ -1310,8 +1360,6 @@ def compact_versioned(
     """
     import math
 
-    from time_series_spark_spark.sources.fsio import latest_version
-
     tfs, latest = _require_table(table_path)
     head, schema = _table_meta(tfs, latest)
     files = head.files
@@ -1377,89 +1425,45 @@ def compact_versioned(
     # no re-write. Any non-append winner (row-level commit, replace,
     # restore, another optimize) still refuses loudly: the snapshot
     # this rewrite describes no longer exists.
-    stage, adds = _stage_data_files(df, tfs, latest + 1)
-    add_stats, n_rows_added, add_col_stats = _read_add_stats(tfs, adds)
-    base, winner_adds = head, []
-    for attempt in range(max(1, max_attempts)):
-        version = base.version + 1
-        new_files = sorted(set(adds) | set(winner_adds))
-        stats = dict(add_stats)
-        cstats = dict(add_col_stats)
-        if winner_adds:
-            base_stats, base_cstats = base.file_stats, base.col_stats
-            for rel in winner_adds:
-                if rel in base_stats:
-                    stats[rel] = base_stats[rel]
-                if rel in base_cstats:
-                    cstats[rel] = base_cstats[rel]
-        new_manifest = {
-            "version": version,
-            "mode": "optimize",
-            "committed_at": _commit_stamp(base.manifest),
-            "adds": adds,
-            "add_stats": add_stats,
-            "add_col_stats": add_col_stats,
-            "n_rows_added": n_rows_added,
-            "schema": manifest["schema"],
-            "n_files": len(new_files),
-            "batch_id": None,
-            "stream_id": None,
-            "ledger": _compact_ledger(_ledger_pairs(base)),
-        }
-        if manifest.get("constraints"):
-            # carried, not enforced: OPTIMIZE rewrites the SAME rows,
-            # which passed at their own commit time
-            new_manifest["constraints"] = manifest["constraints"]
-        sidecar = _publish_snapshot_fields(
-            tfs, new_manifest, new_files, stats, cstats
-        )
-        try:
-            tfs.write_json_atomic(
-                new_manifest, f"_manifest.{version}.json", if_absent=True
-            )
-        except FileExistsError:
-            if sidecar is not None:
-                tfs.delete_file(sidecar)
-            if attempt + 1 >= max(1, max_attempts):
-                tfs.delete_dir(stage)
-                raise
-            new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base.version:
-                tfs.delete_dir(stage)
-                raise
-            for v in range(base.version + 1, new_latest + 1):
-                m = tfs.read_json(f"_manifest.{v}.json")
-                if (
-                    m["mode"] != "append"
-                    or m.get("removes")
-                    or m.get("dv_removes")
-                ):
-                    tfs.delete_dir(stage)
-                    raise ConcurrentCommitError(
-                        "OPTIMIZE lost the commit race to a non-append "
-                        f"winner (version {v} is "
-                        f"{m['mode']!r}) — the snapshot "
-                        "this rewrite was planned against no longer "
-                        "describes the table; re-run compact_versioned"
-                    ) from None
-                winner_adds.extend(m["adds"])
-            base, schema_new = _table_meta(tfs, new_latest)
-            if schema_new != schema:
-                tfs.delete_dir(stage)
-                raise ConcurrentCommitError(
-                    "a concurrent commit changed the table schema"
-                ) from None
-            continue
-        tfs.write_json_atomic({"version": version}, "_latest.json")
-        return {
-            "version": version,
-            "n_files_before": len(files),
-            "n_files_after": len(new_files),
-            "bytes_before": bytes_before,
-            "zorder_by": list(zorder_by) if zorder_by else None,
-            "n_files_rebase_carried": len(winner_adds),
-        }
-    raise AssertionError("unreachable: the loop either returns or raises")
+    stage, added = _stage(df, tfs, latest + 1, {})
+
+    def conflict(base, new_head):
+        for v, m in _winners(base, new_head):
+            mode = m["mode"]
+            if mode != "append" or m.get("removes") or m.get("dv_removes"):
+                return (
+                    "OPTIMIZE lost the commit race to a non-append winner "
+                    f"(version {v} is {mode!r}) — the snapshot this "
+                    "rewrite was planned against no longer describes the "
+                    "table; re-run compact_versioned"
+                )
+        if _read_schema(new_head) != schema:
+            return "a concurrent commit changed the table schema"
+        return None
+
+    # the rewrite replaces every file of the planned snapshot; a rebase
+    # carries the append winners' files by reference
+    new, _, _ = _commit(
+        tfs,
+        head,
+        {"mode": "optimize", "schema": manifest["schema"]},
+        added,
+        lambda base: _carried(base, added, removes=files),
+        stage=stage,
+        # carried, not enforced: OPTIMIZE rewrites the SAME rows, which
+        # passed at their own commit time
+        constraints=manifest.get("constraints"),
+        conflict=conflict,
+        max_attempts=max_attempts,
+    )
+    return {
+        "version": new["version"],
+        "n_files_before": len(files),
+        "n_files_after": new["n_files"],
+        "bytes_before": bytes_before,
+        "zorder_by": list(zorder_by) if zorder_by else None,
+        "n_files_rebase_carried": new["n_files"] - len(added["adds"]),
+    }
 
 
 def committed_batch_ids(
@@ -1528,48 +1532,24 @@ def restore_versioned(table_path, to_version: int) -> int:
             "were pruned by vacuum_versioned"
         )
     snap = Snapshot(tfs, to_version)
-    target, files = snap.manifest, snap.files
-    version = latest + 1
-    head = Snapshot(tfs, latest)
-    ledger = _compact_ledger(_ledger_pairs(head))
-    manifest = {
-        "version": version,
-        "mode": "restore",
-        "committed_at": _commit_stamp(head.manifest),
-        "restored_from": int(to_version),
-        "adds": [],
-        "add_stats": {},
-        "add_col_stats": {},
-        "n_rows_added": 0,
-        "schema": target["schema"],
-        "n_files": len(files),
-        "batch_id": None,
-        "stream_id": None,
-        "ledger": ledger,
-    }
-    if target.get("constraints"):
-        manifest["constraints"] = target["constraints"]
-    sidecar = _publish_snapshot_fields(
-        tfs, manifest, files, snap.file_stats, snap.col_stats
-    )
+    target = snap.manifest
+    _, no_adds = _stage(None, tfs, latest + 1, {})  # metadata-only
     # the restored snapshot's merge-on-read tombstones come back with it
     # (round 14): restoring to a pre-OPTIMIZE DV-bearing version must
     # re-delete exactly the rows that version had deleted
-    dv_sidecar = _publish_dv_fields(tfs, manifest, snap.dvs)
-    # PUT-IF-ABSENT publish (Delta LogStore contract): a concurrent
-    # writer racing to the same version number loses LOUDLY with
-    # FileExistsError — never a silent clobber of a committed manifest
-    try:
-        tfs.write_json_atomic(
-            manifest, f"_manifest.{version}.json", if_absent=True
-        )
-    except FileExistsError:
-        for sc in (sidecar, dv_sidecar):
-            if sc is not None:
-                tfs.delete_file(sc)
-        raise
-    tfs.write_json_atomic({"version": version}, "_latest.json")
-    return version
+    manifest, _, _ = _commit(
+        tfs,
+        Snapshot(tfs, latest),
+        {
+            "mode": "restore",
+            "restored_from": int(to_version),
+            "schema": target["schema"],
+        },
+        no_adds,
+        lambda base: (snap.files, snap.file_stats, snap.col_stats, snap.dvs),
+        constraints=target.get("constraints"),
+    )
+    return manifest["version"]
 
 
 # --------------------------------------------------------------------------
@@ -1607,7 +1587,7 @@ def _touched_rels(snap_with_file, files: list[str], marker) -> list[str]:
 
 
 class ConcurrentCommitError(RuntimeError):
-    """A row-level copy-on-write commit lost its put-if-absent race to a
+    """A row-level commit or an OPTIMIZE lost its put-if-absent race to a
     winner it cannot safely rebase past — the winner rewrote a file this
     commit also touched, replaced/restored the snapshot wholesale,
     changed the schema, or added rows matching this commit's read set.
@@ -1617,12 +1597,12 @@ class ConcurrentCommitError(RuntimeError):
 
 
 def _cow_rebase_conflict(
-    spark, tfs, snapshot: int, new_latest: int, touched, read_marker, schema
+    spark, base: Snapshot, new_head: Snapshot, touched, read_marker, schema
 ) -> str | None:
-    """Decide whether a copy-on-write commit planned against ``snapshot``
-    can be REBASED onto ``new_latest`` after losing the put-if-absent
-    race, without redoing its find-touched scan or rewrite. Returns a
-    conflict reason string (→ fail loudly), or None (→ safe to rebase).
+    """Decide whether a row-level commit planned against ``base`` can be
+    REBASED onto ``new_head`` after losing the put-if-absent race,
+    without redoing its find-touched scan or rewrite. Returns a conflict
+    reason string (→ fail loudly), or None (→ safe to rebase).
 
     Delta's conflict classes, applied per winning commit:
 
@@ -1647,8 +1627,7 @@ def _cow_rebase_conflict(
     """
     touched_set = set(touched)
     nonblind_adds: list[str] = []
-    for v in range(snapshot + 1, new_latest + 1):
-        m = tfs.read_json(f"_manifest.{v}.json")
+    for v, m in _winners(base, new_head):
         mode = m["mode"]
         # "optimize" (dataChange=false layout rewrite of the SAME rows)
         # is rebase-compatible only for a zero-touched loser: it records
@@ -1691,10 +1670,9 @@ def _cow_rebase_conflict(
         # winner's row — appends never conflict by the WriteSerializable
         # rule above; (c) a non-blind winner's row — that winner's own
         # adds are in nonblind_adds and get scanned directly.
-    snap_new, schema_new = _table_meta(tfs, new_latest)
-    if schema_new != _normalize_schema(schema):
+    if _read_schema(new_head) != _normalize_schema(schema):
         return "a concurrent commit changed the table schema"
-    missing = touched_set - set(snap_new.files)
+    missing = touched_set - set(new_head.files)
     if missing:  # belt-and-braces; the removes check should have caught it
         return (
             f"{len(missing)} touched file(s) are no longer part of the "
@@ -1703,7 +1681,7 @@ def _cow_rebase_conflict(
     if nonblind_adds and read_marker is not None:
         from pyspark.sql import Column
 
-        snap = _snapshot_frame(spark, tfs, nonblind_adds, schema)
+        snap = _snapshot_frame(spark, new_head.tfs, nonblind_adds, schema)
         if isinstance(read_marker, Column):
             hit = snap.filter(read_marker)
         else:
@@ -1717,157 +1695,131 @@ def _cow_rebase_conflict(
     return None
 
 
-def _cow_commit(
-    head,
+def _row_level_commit(
+    spark: SparkSession,
+    head: Snapshot,
     mode: str,
-    rewritten: DataFrame,
-    touched: list[str],
+    staged: DataFrame | None,
     schema_json: str,
+    read_marker,
+    max_attempts: int,
+    removes: list[str] = (),
+    tombs: dict | None = None,
     batch_id: int | None = None,
     stream_id: str | None = None,
-    spark: SparkSession | None = None,
-    read_marker=None,
-    max_attempts: int = 1,
 ) -> dict:
-    """Publish a copy-on-write commit: stage ``rewritten`` (the touched
-    files' surviving/updated rows plus any inserts) under a writer-unique
-    directory, carry every untouched file, and put-if-absent the manifest
-    as the next version. Untouched files — the overwhelming majority at
-    100 TB — are never read or rewritten; per-file row counts for the
-    report come from O(touched) KB-sized footer reads.
+    """Publish a row-level MERGE/DELETE/UPDATE commit: stage ``staged``
+    under a writer-unique directory and carry every other file by
+    manifest reference — untouched files, the overwhelming majority at
+    100 TB, are never read or rewritten.
+
+    - **Copy-on-write** (``removes`` = the touched files): ``staged`` is
+      their surviving/updated rows plus any inserts. The touched files
+      leave the snapshot and their deletion vectors die with them — the
+      rewrite read them DV-filtered, so their tombstones are applied in
+      the staged output. Per-file row counts for the report come from
+      O(touched) KB-sized footer reads.
+    - **Merge-on-read** (``tombs`` = ``rel → row positions``; round 14 —
+      Delta deletion vectors / Iceberg v2 position deletes): the
+      matched positions are tombstoned in place and only the appended
+      rows (MERGE's inserts/updated copies; a pure DELETE stages
+      nothing) are staged, so write amplification drops from O(matched
+      files × file size) to O(matched rows). The manifest restates the
+      merged DV state (inline, or a ``_dv.*`` sidecar past the spill
+      threshold) plus ``dv_removes`` — the files gaining tombstones,
+      the conflict-class marker rival rewrites check against.
+      ``read_versioned`` anti-filters the tombstones and
+      :func:`compact_versioned` materializes them.
 
     **Optimistic concurrency (round 13 — Delta's transaction retry for
-    row-level operations):** with ``max_attempts > 1`` and ``spark`` +
-    ``read_marker`` supplied, losing the put-if-absent race does NOT
-    force the caller to redo the find-touched scan and rewrite. The
-    loser re-reads the winning commits since its snapshot and — when
-    :func:`_cow_rebase_conflict` proves them compatible (disjoint file
-    sets, no read-set overlap, schema unchanged) — REBASES: the same
-    already-staged data files are re-published in a fresh manifest
-    built against the new latest (untouched-file carry list, stats,
-    ledger, and commit stamp all recomputed). A real conflict raises
-    :class:`ConcurrentCommitError` immediately; exhausting attempts
-    re-raises the FileExistsError. The staged directory's ``v=N-``
-    prefix names the version PLANNED at staging time — manifests
-    reference files by path, so a rebased commit landing at a later
-    version is unaffected."""
-    import json as _json
+    row-level operations):** losing the put-if-absent race does NOT
+    force the caller to redo the find-touched scan and rewrite. When
+    :func:`_cow_rebase_conflict` proves the winners compatible (disjoint
+    file sets, no read-set overlap, schema unchanged; for merge-on-read
+    the tombstone target files are the touched set, and positions are
+    physical per file, so they re-apply verbatim) the same staged files
+    are REBASED onto the new head, up to ``max_attempts`` times. A real
+    conflict raises :class:`ConcurrentCommitError`; exhausting attempts
+    re-raises the FileExistsError. Two writers merging DISJOINT key
+    ranges both land — the multi-writer CDC case, measured by the
+    stress script ``git show 0d8b744:scripts/stress_contention.py``. The
+    staged directory's ``v=N-`` prefix names the version PLANNED at
+    staging time; manifests reference files by path, so a rebased
+    commit landing at a later version is unaffected."""
+    import json
 
     import pyarrow.parquet as pq
 
-    from time_series_spark_spark.sources.fsio import latest_version
-
     tfs = head.tfs
-    # table invariants (round 14) apply to the rewrite's output — the
-    # untouched carried files passed them at their own commit time
-    table_cons = head.manifest.get("constraints", {})
-    rewritten, _obs, _obs_labels = _observe_constraints(
-        rewritten, table_cons
-    )
-    stage, adds = _stage_data_files(rewritten, tfs, head.version + 1)
-    _raise_if_violated(_obs, _obs_labels, tfs, stage)
-    add_stats, n_rows_written, add_col_stats = _read_add_stats(tfs, adds)
-    n_rows_touched = sum(
-        pq.ParquetFile(tfs.path(rel), filesystem=tfs.fs).metadata.num_rows
-        for rel in touched
-    )
-    schema = _normalize_schema(
-        T.StructType.fromJson(_json.loads(schema_json))
-    )
-    base = head
-    for attempt in range(max(1, max_attempts)):
-        version = base.version + 1
-        new_files = sorted((set(base.files) - set(touched)) | set(adds))
-        ledger = _compact_ledger(
-            _ledger_pairs(base)
-            + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
+    # table invariants (round 14) apply to the staged rows — carried
+    # files passed them at their own commit time, and tombstones only
+    # ever REMOVE rows
+    constraints = head.manifest.get("constraints", {})
+    stage, added = _stage(staged, tfs, head.version + 1, constraints)
+    fields = {"mode": mode, "schema": schema_json, "removes": list(removes)}
+    touched = list(removes)
+    if tombs is not None:
+        touched = sorted(tombs)
+        fields["dv_removes"] = touched
+        # counted against the planned head: a rebase past a winner that
+        # tombstoned a target file conflicts, so the targets' tombstones
+        # are the same in every base this commit can land on
+        fields["n_rows_tombstoned"] = sum(
+            len(set(ps) - set(head.dvs.get(rel, ())))
+            for rel, ps in tombs.items()
         )
-        manifest = {
-            "version": version,
-            "mode": mode,
-            "committed_at": _commit_stamp(base.manifest),
-            "adds": adds,
-            "add_stats": add_stats,
-            "add_col_stats": add_col_stats,
-            "removes": touched,
-            "n_rows_added": n_rows_written,
-            "schema": schema_json,
-            "n_files": len(new_files),
-            "batch_id": batch_id,
-            "stream_id": stream_id,
-            "ledger": ledger,
-        }
-        if table_cons:
-            manifest["constraints"] = table_cons
-        sidecar = _publish_snapshot_fields(
-            tfs,
-            manifest,
-            new_files,
-            {**base.file_stats, **add_stats},
-            {**base.col_stats, **add_col_stats},
+    schema = _normalize_schema(T.StructType.fromJson(json.loads(schema_json)))
+    what = mode if tombs is None else f"merge-on-read {mode}"
+
+    def conflict(base, new_head):
+        reason = _cow_rebase_conflict(
+            spark, base, new_head, touched, read_marker, schema
         )
-        # merge-on-read tombstone carry (round 14): dv entries of the
-        # TOUCHED files die with them — the rewrite read those files
-        # DV-filtered, so their tombstones are applied in the staged
-        # output; every untouched file's tombstones survive verbatim.
-        # (Safe across a rebase too: a winner that tombstoned a touched
-        # file is a dv_removes conflict — see _cow_rebase_conflict.)
-        dv_sidecar = _publish_dv_fields(
-            tfs,
-            manifest,
-            {
-                rel: ps
-                for rel, ps in base.dvs.items()
-                if rel not in set(touched)
-            },
+        if reason is None:
+            return None
+        return (
+            f"{what} lost the commit race and cannot rebase: {reason} — "
+            "re-read the table and redo the operation"
         )
-        try:
-            tfs.write_json_atomic(
-                manifest, f"_manifest.{version}.json", if_absent=True
-            )
-        except FileExistsError:
-            for sc in (sidecar, dv_sidecar):
-                if sc is not None:
-                    tfs.delete_file(sc)
-            if attempt + 1 >= max(1, max_attempts) or spark is None:
-                tfs.delete_dir(stage)
-                raise
-            new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base.version:
-                # the rival manifest exists but isn't resolvable as a
-                # later version — nothing sane to rebase onto
-                tfs.delete_dir(stage)
-                raise
-            reason = _cow_rebase_conflict(
-                spark,
-                tfs,
-                base.version,
-                new_latest,
-                touched,
-                read_marker,
-                schema,
-            )
-            if reason is not None:
-                tfs.delete_dir(stage)
-                raise ConcurrentCommitError(
-                    f"{mode} lost the commit race and cannot rebase: "
-                    f"{reason} — re-read the table and redo the operation"
-                ) from None
-            base = Snapshot(tfs, new_latest)
-            continue
-        tfs.write_json_atomic({"version": version}, "_latest.json")
+
+    manifest, base, n_rebases = _commit(
+        tfs,
+        head,
+        fields,
+        added,
+        lambda b: _carried(b, added, removes, tombs),
+        stage=stage,
+        constraints=constraints,
+        batch_id=batch_id,
+        stream_id=stream_id,
+        conflict=conflict,
+        max_attempts=max_attempts,
+    )
+    report = {
+        "version": manifest["version"],
+        "n_files_added": len(added["adds"]),
+        "n_files_carried": len(base.files) - len(removes),
+        "n_rows_written": added["n_rows_added"],
+        # how many put-if-absent losses this commit REBASED past before
+        # landing (0 = won first try) — contention telemetry
+        "n_rebases": n_rebases,
+    }
+    if tombs is None:
         return {
-            "version": version,
-            "n_files_rewritten": len(touched),
-            "n_files_carried": len(base.files) - len(touched),
-            "n_files_added": len(adds),
-            "n_rows_touched": n_rows_touched,
-            "n_rows_written": n_rows_written,
-            # how many put-if-absent losses this commit REBASED past
-            # before landing (0 = won first try) — contention telemetry
-            "n_rebases": attempt,
+            **report,
+            "n_files_rewritten": len(removes),
+            "n_rows_touched": sum(
+                pq.ParquetFile(tfs.path(rel), filesystem=tfs.fs)
+                .metadata.num_rows
+                for rel in removes
+            ),
         }
-    raise AssertionError("unreachable: the loop either returns or raises")
+    return {
+        **report,
+        "n_files_tombstoned": len(tombs),
+        "n_rows_tombstoned": fields["n_rows_tombstoned"],
+        "bytes_staged": sum(tfs.size(rel) for rel in added["adds"]),
+    }
 
 
 def _collect_positions(matched, files: list[str]) -> dict:
@@ -1889,170 +1841,6 @@ def _collect_positions(matched, files: list[str]) -> dict:
         if rel is not None:
             out[rel] = sorted(int(p) for p in r["__ps"])
     return out
-
-
-def _mor_commit(
-    head,
-    mode: str,
-    appended: DataFrame | None,
-    new_tombs: dict,
-    schema_json: str,
-    batch_id: int | None = None,
-    stream_id: str | None = None,
-    spark: SparkSession | None = None,
-    read_marker=None,
-    max_attempts: int = 1,
-) -> dict:
-    """Publish a MERGE-ON-READ commit (round 14 — Delta deletion
-    vectors / Iceberg v2 position deletes): instead of rewriting every
-    file containing a matched row (copy-on-write), tombstone the
-    matched positions via per-file deletion vectors and stage ONLY the
-    appended rows (MERGE's inserts/updated copies; a pure DELETE stages
-    nothing). Write amplification drops from O(matched files × file
-    size) to O(matched rows) — the difference a GDPR point-delete or a
-    CDC-heavy table feels daily. Every pre-existing file is carried by
-    manifest reference; the commit's manifest restates the merged DV
-    state (inline or ``_dv.*`` sidecar past the spill threshold) plus
-    ``dv_removes`` — the files gaining tombstones — which is the
-    conflict-class marker rival rewrites check against.
-
-    Readers compose: ``read_versioned`` anti-filters tombstones,
-    ``compact_versioned`` MATERIALIZES them (reads DV-aware, publishes
-    dataChange=false with the dv fields cleared), restore re-publishes
-    the target's dv state, vacuum treats ``_dv.*`` like any metadata
-    sidecar, and the J11e feed applies the same posture rules as the
-    CoW row-level commits (mode names are identical).
-
-    Concurrency: losing the put-if-absent race applies the SAME
-    conflict classes as the CoW commits (:func:`_cow_rebase_conflict`)
-    with the tombstone TARGET files as the touched set — blind appends
-    always rebase (positions are physical per-file, so the staged dv
-    deltas re-apply verbatim); a winner that REWROTE or rival-tombstoned
-    a target file conflicts (the rewrite dropped the file / the
-    rival-vs-loser rows cannot be distinguished positionally without a
-    key check — conservative); a non-blind winner's adds are read-set
-    scanned exactly (a rival's updated copy of a key this commit also
-    touches would otherwise duplicate); replace/restore/schema-change
-    conflict; an optimize winner conflicts any tombstoning loser via the
-    targets⊆files check (its rewrite dropped the old files) but passes
-    an insert-only one. Two writers MoR-merging DISJOINT key ranges in
-    different files both land — the multi-writer CDC case, measured by
-    the stress script ``git show 0d8b744:scripts/stress_contention.py``."""
-    import json as _json
-
-    from time_series_spark_spark.sources.fsio import latest_version
-
-    tfs = head.tfs
-    table_cons = head.manifest.get("constraints", {})
-    if appended is not None:
-        # table invariants (round 14) apply to the appended rows — the
-        # tombstones only ever REMOVE rows
-        appended, _obs, _obs_labels = _observe_constraints(
-            appended, table_cons
-        )
-        stage, adds = _stage_data_files(appended, tfs, head.version + 1)
-        _raise_if_violated(_obs, _obs_labels, tfs, stage)
-        add_stats, n_rows_written, add_col_stats = _read_add_stats(tfs, adds)
-    else:
-        stage, adds = None, []
-        add_stats, n_rows_written, add_col_stats = {}, 0, {}
-    schema = _normalize_schema(
-        T.StructType.fromJson(_json.loads(schema_json))
-    )
-
-    def _cleanup_stage():
-        if stage is not None:
-            tfs.delete_dir(stage)
-
-    base = head
-    for attempt in range(max(1, max_attempts)):
-        version = base.version + 1
-        new_files = sorted(set(base.files) | set(adds))
-        dv_state = {rel: set(ps) for rel, ps in base.dvs.items()}
-        n_rows_tombstoned = 0
-        for rel, ps in new_tombs.items():
-            old = dv_state.setdefault(rel, set())
-            fresh = set(ps) - old
-            n_rows_tombstoned += len(fresh)
-            old |= fresh
-        ledger = _compact_ledger(
-            _ledger_pairs(base)
-            + ([[stream_id, int(batch_id)]] if batch_id is not None else [])
-        )
-        manifest = {
-            "version": version,
-            "mode": mode,
-            "committed_at": _commit_stamp(base.manifest),
-            "adds": adds,
-            "add_stats": add_stats,
-            "add_col_stats": add_col_stats,
-            "removes": [],
-            "dv_removes": sorted(new_tombs),
-            "n_rows_added": n_rows_written,
-            "n_rows_tombstoned": n_rows_tombstoned,
-            "schema": schema_json,
-            "n_files": len(new_files),
-            "batch_id": batch_id,
-            "stream_id": stream_id,
-            "ledger": ledger,
-        }
-        if table_cons:
-            manifest["constraints"] = table_cons
-        sidecar = _publish_snapshot_fields(
-            tfs,
-            manifest,
-            new_files,
-            {**base.file_stats, **add_stats},
-            {**base.col_stats, **add_col_stats},
-        )
-        dv_sidecar = _publish_dv_fields(
-            tfs, manifest, {rel: sorted(ps) for rel, ps in dv_state.items()}
-        )
-        try:
-            tfs.write_json_atomic(
-                manifest, f"_manifest.{version}.json", if_absent=True
-            )
-        except FileExistsError:
-            for sc in (sidecar, dv_sidecar):
-                if sc is not None:
-                    tfs.delete_file(sc)
-            if attempt + 1 >= max(1, max_attempts):
-                _cleanup_stage()
-                raise
-            new_latest = latest_version(tfs)
-            if new_latest is None or new_latest <= base.version or spark is None:
-                _cleanup_stage()
-                raise
-            reason = _cow_rebase_conflict(
-                spark,
-                tfs,
-                base.version,
-                new_latest,
-                sorted(new_tombs),
-                read_marker,
-                schema,
-            )
-            if reason is not None:
-                _cleanup_stage()
-                raise ConcurrentCommitError(
-                    f"merge-on-read {mode} lost the commit race and "
-                    f"cannot rebase: {reason} — re-read the table and "
-                    "redo the operation"
-                ) from None
-            base = Snapshot(tfs, new_latest)
-            continue
-        tfs.write_json_atomic({"version": version}, "_latest.json")
-        return {
-            "version": version,
-            "n_files_tombstoned": len(new_tombs),
-            "n_files_added": len(adds),
-            "n_files_carried": len(base.files),
-            "n_rows_tombstoned": n_rows_tombstoned,
-            "n_rows_written": n_rows_written,
-            "bytes_staged": sum(tfs.size(rel) for rel in adds),
-            "n_rebases": attempt,
-        }
-    raise AssertionError("unreachable: the loop either returns or raises")
 
 
 def _table_meta(tfs, latest: int):
@@ -2213,13 +2001,14 @@ def merge_versioned(
     is staged as new files; no pre-existing file is rewritten. Same
     semantics as CoW by construction (the oracle query pins MoR ≡ CoW ≡
     the closed-form relational merge); write amplification drops to
-    O(matched rows). See :func:`_mor_commit` for commit/concurrency
-    details; :func:`compact_versioned` materializes the tombstones.
+    O(matched rows). See :func:`_row_level_commit` for commit and
+    concurrency details; :func:`compact_versioned` materializes the
+    tombstones.
 
-    Returns the :func:`_cow_commit` report dict (version, files
-    rewritten/carried/added, rows touched/written) — or, under
-    ``strategy="mor"``, the :func:`_mor_commit` report (version, files
-    tombstoned/added/carried, rows tombstoned/written, bytes staged).
+    Returns the :func:`_row_level_commit` report dict: version, files
+    rewritten/carried/added, rows touched/written and rebases — or,
+    under ``strategy="mor"``, files tombstoned/added/carried, rows
+    tombstoned/written, bytes staged and rebases.
     """
     if strategy not in ("cow", "mor"):
         raise ValueError(f"strategy must be 'cow' or 'mor', got {strategy!r}")
@@ -2343,17 +2132,17 @@ def _merge_versioned(
             appended = apply_changes(
                 matched.drop("__file", "__pos"), changes, keys, cols
             ).select(*[f.name for f in schema.fields])
-            return _mor_commit(
+            return _row_level_commit(
+                spark,
                 head,
                 "merge",
                 appended,
-                new_tombs,
                 schema_json,
+                marker,
+                max_attempts,
+                tombs=new_tombs,
                 batch_id=batch_id,
                 stream_id=stream_id,
-                spark=spark,
-                read_marker=marker,
-                max_attempts=max_attempts,
             )
         finally:
             matched.unpersist()
@@ -2363,24 +2152,24 @@ def _merge_versioned(
     # the rewrite reads the touched files DV-FILTERED too: a row
     # tombstoned by an earlier merge-on-read commit must not be
     # resurrected by this copy-on-write rewrite (its file's dv entry
-    # dies with the rewrite — see _cow_commit)
+    # dies with the rewrite — see _row_level_commit)
     base = _snapshot_frame(spark, tfs, touched, schema, dv=dvs).drop(
         "__file"
     )
     rewritten = apply_changes(base, changes, keys, cols).select(
         *[f.name for f in schema.fields]
     )
-    return _cow_commit(
+    return _row_level_commit(
+        spark,
         head,
         "merge",
         rewritten,
-        touched,
         schema_json,
+        marker,
+        max_attempts,
+        removes=touched,
         batch_id=batch_id,
         stream_id=stream_id,
-        spark=spark,
-        read_marker=marker,
-        max_attempts=max_attempts,
     )
 
 
@@ -2423,15 +2212,15 @@ def delete_versioned(
         # survive), mirroring the CoW survivor filter below
         matched = snap.filter(pred.eqNullSafe(F.lit(True)))
         new_tombs = _collect_positions(matched, files)
-        return _mor_commit(
+        return _row_level_commit(
+            spark,
             head,
             "delete",
             None,
-            new_tombs,
             schema_json,
-            spark=spark,
-            read_marker=pred,
-            max_attempts=max_attempts,
+            pred,
+            max_attempts,
+            tombs=new_tombs,
         )
     snap = _snapshot_frame(spark, tfs, files, schema, dv=dvs)
     touched = _touched_rels(snap, files, pred)
@@ -2441,15 +2230,15 @@ def delete_versioned(
     # NULL-safe survival: rows where the predicate is NULL are NOT
     # deleted (SQL DELETE semantics — only TRUE deletes)
     rewritten = base.filter(~pred.eqNullSafe(F.lit(True)))
-    return _cow_commit(
+    return _row_level_commit(
+        spark,
         head,
         "delete",
         rewritten,
-        touched,
         schema_json,
-        spark=spark,
-        read_marker=pred,
-        max_attempts=max_attempts,
+        pred,
+        max_attempts,
+        removes=touched,
     )
 
 
@@ -2506,15 +2295,15 @@ def update_versioned(
                     for f in schema.fields
                 ]
             )
-            return _mor_commit(
+            return _row_level_commit(
+                spark,
                 head,
                 "update",
                 appended,
-                new_tombs,
                 schema_json,
-                spark=spark,
-                read_marker=pred,
-                max_attempts=max_attempts,
+                pred,
+                max_attempts,
+                tombs=new_tombs,
             )
         finally:
             matched.unpersist()
@@ -2535,15 +2324,15 @@ def update_versioned(
             for f in schema.fields
         ]
     )
-    return _cow_commit(
+    return _row_level_commit(
+        spark,
         head,
         "update",
         rewritten,
-        touched,
         schema_json,
-        spark=spark,
-        read_marker=pred,
-        max_attempts=max_attempts,
+        pred,
+        max_attempts,
+        removes=touched,
     )
 
 
